@@ -91,6 +91,12 @@ def lsh_band_keys(col: Column, bands: int = 8, rows_per_band: int = 1) -> Column
     return lsh_band_keys_from_sig(sig, bands, rows_per_band)
 
 
+# Secondary MinHash rows per hot-block member (hash family offset 101,
+# disjoint from the LSH bands): the key builder emits them as ``_ss`` and
+# :func:`candidate_pairs` re-keys hot blocks by them.
+SUB_ROWS = 4
+
+
 def blocking_keys(
     names: DataFrame,
     name_col: str = "name",
@@ -98,16 +104,14 @@ def blocking_keys(
     bands: int = 8,
     rows_per_band: int = 1,
     use_metaphone: bool = True,
-    sub_rows: int = 0,
 ) -> DataFrame:
-    """(key, name) pairs: one row per (blocking key, name) membership.
+    """(key, name, _ss) rows: one per (blocking key, name) membership.
 
-    ``sub_rows > 0`` additionally emits ``_ss`` — the secondary MinHash
-    signature (hash family offset 101, disjoint from the LSH bands) the
+    ``_ss`` is the :data:`SUB_ROWS` secondary MinHash signature the
     hot-block sub-blocking in :func:`candidate_pairs` consumes.  It is a
     pure function of the name, so computing it here (same projection,
-    same pass over the shingles) replaces the separate
-    distinct + MinHash + join pass the sub-block path used to pay.
+    same pass over the shingles) costs no separate distinct + MinHash +
+    join pass.
 
     Single-projection plan: every key family (token / soundex / metaphone
     / LSH band) is built as an ARRAY per name and deduplicated LOCALLY
@@ -159,25 +163,17 @@ def blocking_keys(
         )
     else:
         all_keys = F.concat(*[F.col(f"_f{i}") for i in range(len(fams))])
-    extra = []
-    if sub_rows > 0:
-        d = d.withColumn(
-            "_ss", minhash_signature(F.col("name"), num_hashes=sub_rows, offset=101)
-        )
-        extra = ["_ss"]
-    return d.select(
-        F.explode(F.array_distinct(all_keys)).alias("key"), "name", *extra
+    d = d.withColumn(
+        "_ss", minhash_signature(F.col("name"), num_hashes=SUB_ROWS, offset=101)
     )
+    return d.select(F.explode(F.array_distinct(all_keys)).alias("key"), "name", "_ss")
 
 
 def materialized_blocking_keys(
-    names: DataFrame,
-    name_col: str = "name",
-    sub_rows: int = 4,
-    with_sizes: bool = True,
-    **kw,
+    names: DataFrame, name_col: str = "name", **kw
 ) -> DataFrame:
-    """:func:`blocking_keys`, eagerly materialized (``localCheckpoint``).
+    """:func:`blocking_keys` with the sub-block signature and the per-key
+    ``block_size``, eagerly materialized (``localCheckpoint``).
 
     Every consumer references the keys table several times (both
     self-join sides + metrics), and Catalyst does not CSE across
@@ -185,20 +181,13 @@ def materialized_blocking_keys(
     aggregates re-execute per reference.  Compute it once and hand the
     SAME materialized frame to :func:`candidate_pairs` AND
     :func:`block_stats` (the pipeline does) so the key computation runs
-    exactly once per blocking pass.
-
-    ``with_sizes`` (default) folds the per-key ``block_size`` aggregate
-    and its join INTO the one materialization job, so the pair job and
-    the sub-block job both start from an already-sized, already
-    key-partitioned table instead of each re-paying the size shuffle.
-    ``sub_rows`` threads the secondary sub-block signature into the key
-    projection (see :func:`blocking_keys`); callers that pass the frame
-    to :func:`candidate_pairs` must use the same ``sub_rows`` there."""
-    k = blocking_keys(names, name_col=name_col, sub_rows=sub_rows, **kw)
-    if with_sizes:
-        sizes = k.groupBy("key").agg(F.count("*").alias("block_size"))
-        k = k.join(sizes, "key")
-    return k.localCheckpoint()
+    exactly once per blocking pass.  The size aggregate and its join run
+    inside the one materialization job, so the pair job and the
+    sub-block job both start from an already-sized, already
+    key-partitioned table."""
+    k = blocking_keys(names, name_col=name_col, **kw)
+    sizes = k.groupBy("key").agg(F.count("*").alias("block_size"))
+    return k.join(sizes, "key").localCheckpoint()
 
 
 def candidate_pairs(
@@ -210,25 +199,23 @@ def candidate_pairs(
     rows_per_band: int = 1,
     use_metaphone: bool = True,
     keys: DataFrame | None = None,
-    sub_block: bool = True,
-    sub_rows: int = 4,
 ) -> DataFrame:
     """Distinct candidate pairs (name_x < name_y) from the blocked self-join.
 
     Blocks within ``[2, max_block]`` pair quadratically (bounded at
     max_block^2/2 per block).  HOT blocks (> max_block) are NOT dropped:
-    with ``sub_block=True`` (default) their members are re-keyed by
-    ``sub_rows`` secondary MinHash rows — similarity-preserving sub-blocks
-    whose members pair under the same cap — and sub-blocks still over the
-    cap emit linear star pairs around the min-name hub.  Every block's
-    pair contribution is therefore O(members * max_block) worst case, and
-    no key family ever silently contributes zero candidates.
-    ``sub_block=False`` restores the old purge (drop oversized) semantics.
+    their members are re-keyed by :data:`SUB_ROWS` secondary MinHash rows
+    — similarity-preserving sub-blocks whose members pair under the same
+    cap — and sub-blocks still over the cap emit linear star pairs around
+    the min-name hub.  Every block's pair contribution is therefore
+    O(members * max_block) worst case, and no key family ever silently
+    contributes zero candidates.
 
     The key->size join and the self-join share the ``key`` partitioning, so
     Catalyst reuses the exchange; AQE handles residual skew at runtime.
     ``keys``: a pre-materialized :func:`materialized_blocking_keys` frame
-    to reuse (must have been built with the same blocking parameters).
+    to reuse (must have been built with the same blocking parameters);
+    raises ``ValueError`` when it lacks ``block_size`` or ``_ss``.
     """
     if keys is None:
         keys = materialized_blocking_keys(
@@ -238,74 +225,57 @@ def candidate_pairs(
             bands=bands,
             rows_per_band=rows_per_band,
             use_metaphone=use_metaphone,
-            sub_rows=sub_rows if sub_block else 0,
         )
-    if "block_size" in keys.columns:
-        keyed = keys  # sizes folded into the materialization job
-    else:
-        sizes = keys.groupBy("key").agg(F.count("*").alias("block_size"))
-        keyed = keys.join(sizes, "key")
-    ok = keyed.where(
+    missing = [c for c in ("block_size", "_ss") if c not in keys.columns]
+    if missing:
+        raise ValueError(
+            f"keys frame lacks column(s) {missing}: build it with "
+            "materialized_blocking_keys"
+        )
+    ok = keys.where(
         (F.col("block_size") >= 2) & (F.col("block_size") <= max_block)
     ).select("key", "name")
     pairs = _join_pairs(ok)
-    if sub_block:
-        # Secondary MinHash rows (a hash family DISJOINT from the LSH
-        # bands): a true alias pair with shingle-Jaccard J lands in the
-        # same sub-block on any given row with probability J, so with r
-        # rows the pair survives with 1-(1-J)^r — recall degrades
-        # gracefully instead of zeroing out when a whole key family goes
-        # hot (measured 0.502 truth-pair recall at 100k entities under
-        # the old purge).  The signature normally rides along in the keys
-        # frame (``_ss``, computed in the same projection as the keys —
-        # one pass over the shingles); a keys frame built without it
-        # falls back to the old distinct + MinHash + join pass.
-        hot = keyed.where(F.col("block_size") > max_block)
-        if "_ss" not in keys.columns:
-            sec = (
-                hot.select("name")
-                .distinct()
-                .withColumn(
-                    "_ss",
-                    minhash_signature(
-                        F.col("name"), num_hashes=sub_rows, offset=101
-                    ),
-                )
+    # Secondary MinHash rows (a hash family DISJOINT from the LSH bands):
+    # a true alias pair with shingle-Jaccard J lands in the same sub-block
+    # on any given row with probability J, so with r rows the pair
+    # survives with 1-(1-J)^r — recall degrades gracefully instead of
+    # zeroing out when a whole key family goes hot (measured 0.502
+    # truth-pair recall at 100k entities when hot blocks were purged).
+    hot = keys.where(F.col("block_size") > max_block)
+    sub_key = F.array(
+        *[
+            F.concat_ws(
+                "|", F.col("key"), F.lit(str(i)), F.col("_ss")[i].cast("string")
             )
-            hot = hot.select("key", "name").join(sec, "name")
-        sub_key = F.array(
-            *[
-                F.concat_ws(
-                    "|", F.col("key"), F.lit(str(i)), F.col("_ss")[i].cast("string")
-                )
-                for i in range(sub_rows)
-            ]
-        )
-        # Materialize the sub-keyed table: it feeds the size aggregate,
-        # both self-join sides and the star fallback — without this the
-        # hot filter + explode re-execute per reference.
-        sub = (
-            hot.select(F.explode(sub_key).alias("key"), "name")
-            .localCheckpoint()
-        )
-        ssizes = sub.groupBy("key").agg(F.count("*").alias("block_size"))
-        skeyed = sub.join(ssizes, "key")
-        sok = skeyed.where(
-            (F.col("block_size") >= 2) & (F.col("block_size") <= max_block)
-        ).select("key", "name")
-        # Sub-blocks STILL over the cap (low-entropy shingle mass — e.g.
-        # thousands of names sharing one dominant shingle) fall back to
-        # linear STAR pairs around the min-name hub, the same discipline as
-        # the LSH mega-bucket cap in dedup.py: O(size) pairs, hub-mediated
-        # transitive recall, never a quadratic and never zero work.
-        shot = skeyed.where(F.col("block_size") > max_block).select("key", "name")
-        hubs = shot.groupBy("key").agg(F.min("name").alias("hub"))
-        star = (
-            shot.join(hubs, "key")
-            .where(F.col("name") != F.col("hub"))
-            .select(F.col("hub").alias("name_x"), F.col("name").alias("name_y"))
-        )
-        pairs = pairs.unionByName(_join_pairs(sok)).unionByName(star)
+            for i in range(SUB_ROWS)
+        ]
+    )
+    # Materialize the sub-keyed table: it feeds the size aggregate,
+    # both self-join sides and the star fallback — without this the
+    # hot filter + explode re-execute per reference.
+    sub = (
+        hot.select(F.explode(sub_key).alias("key"), "name")
+        .localCheckpoint()
+    )
+    ssizes = sub.groupBy("key").agg(F.count("*").alias("block_size"))
+    skeyed = sub.join(ssizes, "key")
+    sok = skeyed.where(
+        (F.col("block_size") >= 2) & (F.col("block_size") <= max_block)
+    ).select("key", "name")
+    # Sub-blocks STILL over the cap (low-entropy shingle mass — e.g.
+    # thousands of names sharing one dominant shingle) fall back to
+    # linear STAR pairs around the min-name hub, the same discipline as
+    # the LSH mega-bucket cap in dedup.py: O(size) pairs, hub-mediated
+    # transitive recall, never a quadratic and never zero work.
+    shot = skeyed.where(F.col("block_size") > max_block).select("key", "name")
+    hubs = shot.groupBy("key").agg(F.min("name").alias("hub"))
+    star = (
+        shot.join(hubs, "key")
+        .where(F.col("name") != F.col("hub"))
+        .select(F.col("hub").alias("name_x"), F.col("name").alias("name_y"))
+    )
+    pairs = pairs.unionByName(_join_pairs(sok)).unionByName(star)
     return pairs.dropDuplicates(["name_x", "name_y"])
 
 

@@ -31,6 +31,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Evidence-rung defaults (shared with the pipeline's checkpoint params):
+# an edge may glue an OVERSIZED component only if cosine_sim >= the min
+# (a shared IDF-weighted informative token) or align_edit <= the max
+# (near-exact string relation: typo / merge / designator variant).
+EVIDENCE_MIN_COSINE = 0.05
+EVIDENCE_MAX_ALIGN = 1.0
+
 
 def _canon_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     return (
@@ -265,7 +272,6 @@ def _refine_driver(
     rows: list,
     max_component: int,
     ladder: tuple[float, ...],
-    final_louvain: bool,
     louvain_max_edges: int = 1_000_000,
     evidence: tuple[float, float] | None = None,
     evidence_min_size: int | None = None,
@@ -335,34 +341,31 @@ def _refine_driver(
             or (al is not None and al <= amax),
             bound=evidence_min_size,
         )
-    if final_louvain:
-        sizes = Counter(comps.values())
-        big = {lab for lab, c in sizes.items() if c > max_component}
-        if big:
-            from name_matching_spark.operators.louvain import louvain_driver
+    sizes = Counter(comps.values())
+    big = {lab for lab, c in sizes.items() if c > max_component}
+    if big:
+        from name_matching_spark.operators.louvain import louvain_driver
 
-            bign = {n for n, lab in comps.items() if lab in big}
-            internal = sorted(
-                {
-                    (min(a, b), max(a, b))
-                    for a, b, *_ in rows
-                    if a in bign and b in bign and a != b
-                }
-            )
-            # same per-internal-component eligibility gate as the
-            # distributed path: oversized webs keep their ladder labels
-            gcc = cc_local(internal)
-            from collections import Counter as _C
-
-            gedges = _C(gcc[a] for a, _ in internal)
-            ok = {g for g, ne in gedges.items() if ne <= louvain_max_edges}
-            elig = [e for e in internal if gcc[e[0]] in ok]
-            elig_nodes = {n for n, g in gcc.items() if g in ok}
-            labels = louvain_driver(iter(elig)) if elig else {}
-            comps = {
-                n: (labels.get(n, n) if n in elig_nodes else lab)
-                for n, lab in comps.items()
+        bign = {n for n, lab in comps.items() if lab in big}
+        internal = sorted(
+            {
+                (min(a, b), max(a, b))
+                for a, b, *_ in rows
+                if a in bign and b in bign and a != b
             }
+        )
+        # same per-internal-component eligibility gate as the
+        # distributed path: oversized webs keep their ladder labels
+        gcc = cc_local(internal)
+        gedges = Counter(gcc[a] for a, _ in internal)
+        ok = {g for g, ne in gedges.items() if ne <= louvain_max_edges}
+        elig = [e for e in internal if gcc[e[0]] in ok]
+        elig_nodes = {n for n, g in gcc.items() if g in ok}
+        labels = louvain_driver(iter(elig)) if elig else {}
+        comps = {
+            n: (labels.get(n, n) if n in elig_nodes else lab)
+            for n, lab in comps.items()
+        }
     return comps
 
 
@@ -387,45 +390,40 @@ def subsumption_edge_cond(
 def attach_subsumed(
     comp: DataFrame,
     sub_edges: DataFrame,
+    glue_edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     prob_col: str = "probability",
     rounds: int = 3,
     evidence_min_cosine: float | None = None,
     evidence_max_align: float | None = None,
-    singleton_attach: bool = True,
-    glue_edges: DataFrame | None = None,
-    absent_attach: str = "best",
 ) -> DataFrame:
     """Post-clustering attachment of subsumption-only names.
 
     ``comp``: (name, component) from clustering the GLUE edges only.
-    ``sub_edges``: the subsumption edges excluded from gluing.  A name is
+    ``sub_edges``: the subsumption edges excluded from gluing;
+    ``glue_edges``: the glue edges ``comp`` was clustered from.  A name is
     SETTLED only when its component has at least two members (anchored);
-    the un-anchored subsumption-edge endpoints attach by two rules,
-    matched to how each kind measured at the 10k/100k quality fixtures
-    (BENCH/QUALITY.md):
+    the un-anchored endpoints attach by two rules, matched to how each
+    kind measured at the 10k/100k quality fixtures (BENCH/QUALITY.md):
 
     * **comp-absent** (an initial/diminutive form whose every match is
       subsumption): attach to the component of the best-scoring anchored
-      partner — highest probability, ties to the smallest component label.
-      With ``absent_attach="vote"`` the key flips to component-level:
-      the target component with the MOST distinct anchored partners wins
-      (then best probability / margin / smallest label) — inside
-      probability-saturated webs a single 1.0000 edge is a coin flip,
-      while the true entity usually anchors several alias forms that all
-      match the floater.
+      partner — highest probability, then raw margin, ties to the
+      smallest component label.
     * **glue singletons** (every glue edge pruned by a refinement rung —
       the name sat inside a confusable web, so its prior of ambiguity is
       exactly why the rung isolated it): attach ONLY on a UNANIMOUS
-      evidence vote — every evidence-bearing subsumption edge
-      (``cosine_sim`` >= ``evidence_min_cosine`` or ``align_edit`` <=
-      ``evidence_max_align``, when those columns ride on ``sub_edges``)
-      to an anchored partner must point at ONE component.  Best-p attach
-      here crashed 100k pair precision 0.76 -> 0.59 (an ambiguous initial
-      form picks one of many same-surname clusters near-randomly);
-      unanimity keeps the measured 10k recall recovery while leaving
-      genuinely shared forms singleton.
+      evidence vote — every evidence-bearing edge (``cosine_sim`` >=
+      ``evidence_min_cosine`` or ``align_edit`` <= ``evidence_max_align``,
+      when those columns ride on the edges) to an anchored partner must
+      point at ONE component.  The vote pools the subsumption edges and
+      the rung-cut glue edges; glue-only votes need >= 2 distinct
+      anchored partners (one FP glue edge is trivially "unanimous").
+      Best-p attach here crashed 100k pair precision 0.76 -> 0.59 (an
+      ambiguous initial form picks one of many same-surname clusters
+      near-randomly); unanimity keeps the measured 10k recall recovery
+      while leaving genuinely shared forms singleton.
 
     Targets are anchored names only, so attachment maps names INTO
     multi-name components and can never weld two components — and two
@@ -451,19 +449,15 @@ def attach_subsumed(
             (F.col("margin") if "margin" in cols else null_d).alias("mg"),
         )
 
-    e = _side(sub_edges, src, dst).unionByName(
-        _side(sub_edges, dst, src)
-    ).localCheckpoint()
-    # Optional second vote pool for GLUE singletons (driver twin: gadj) —
-    # evidence-bearing glue edges a refinement rung cut participate in the
-    # unanimity vote alongside the subsumption edges.
-    ge = (
-        _side(glue_edges, src, dst)
-        .unionByName(_side(glue_edges, dst, src))
-        .localCheckpoint()
-        if glue_edges is not None
-        else None
-    )
+    def _both_sides(frame: DataFrame) -> DataFrame:
+        return (
+            _side(frame, src, dst)
+            .unionByName(_side(frame, dst, src))
+            .localCheckpoint()
+        )
+
+    e = _both_sides(sub_edges)
+    ge = _both_sides(glue_edges)
     # NULL-safe disjunction (a NULL side never qualifies), byte-matching
     # the driver twin's `_ev`; with no evidence columns or thresholds at
     # all the gate is inert (every edge votes).
@@ -491,104 +485,62 @@ def attach_subsumed(
                 "left",
             )
         )
-        cand = e.join(floaters, "name").join(
-            anchored.select(
-                F.col("name").alias("other"), F.col("component").alias("_tc")
-            ),
-            "other",
+        targets = anchored.select(
+            F.col("name").alias("other"), F.col("component").alias("_tc")
         )
-        absent_cand = cand.where(F.col("_sing").isNull())
-        if absent_attach == "vote":
-            # component-level vote: most distinct anchored partners first,
-            # then best p / margin / smallest label — byte-matching the
-            # driver twin's vote key
-            absent_best = (
-                absent_cand.groupBy("name", "_tc")
-                .agg(
-                    F.count_distinct("other").alias("_nv"),
-                    F.max("p").alias("_bp"),
-                    F.max(
-                        F.coalesce(F.col("mg"), F.lit(float("-inf")))
-                    ).alias("_bm"),
-                )
-                .groupBy("name")
-                .agg(
-                    F.min_by(
-                        "_tc",
-                        F.struct(
-                            -F.col("_nv"),
-                            -F.col("_bp"),
-                            -F.col("_bm"),
-                            F.col("_tc"),
-                        ),
-                    ).alias("component")
-                )
+        cand = e.join(floaters, "name").join(targets, "other")
+        absent_best = (
+            cand.where(F.col("_sing").isNull())
+            .groupBy("name")
+            .agg(
+                # probability first, raw margin as the tiebreak (the
+                # 4dp-rounded p ties across saturated webs; a missing
+                # margin sorts last) — byte-matching the driver twin's key
+                F.min_by(
+                    "_tc",
+                    F.struct(
+                        -F.col("p"),
+                        -F.coalesce(F.col("mg"), F.lit(float("-inf"))),
+                        F.col("_tc"),
+                    ),
+                ).alias("component")
             )
-        else:
-            absent_best = (
-                absent_cand.groupBy("name")
-                .agg(
-                    # probability first, raw margin as the tiebreak (the
-                    # 4dp-rounded p ties across saturated webs; a missing
-                    # margin sorts last) — byte-matching the driver twin's key
-                    F.min_by(
-                        "_tc",
-                        F.struct(
-                            -F.col("p"),
-                            -F.coalesce(F.col("mg"), F.lit(float("-inf"))),
-                            F.col("_tc"),
-                        ),
-                    ).alias("component")
-                )
+        )
+        sing_pool = cand.where(F.col("_sing") & ev_cond).select(
+            "name", "other", "_tc", F.lit(1).alias("_sub")
+        )
+        # glue singletons whose evidence-bearing GLUE edges reach anchored
+        # partners vote too (driver twin: gadj); every glue endpoint is in
+        # comp by construction, so _sing is implied — the anti-join
+        # against anchored suffices.
+        gcand = (
+            ge.join(anchored.select("name"), "name", "left_anti")
+            .join(targets, "other")
+            .where(ev_cond)
+            .select("name", "other", "_tc", F.lit(0).alias("_sub"))
+        )
+        # Unanimity over the union pool, PLUS a minimum-vote rule on
+        # glue-only votes: require either one subsumption edge or >= 2
+        # DISTINCT anchored glue partners agreeing (driver twin: the
+        # sub_t / glue_partners split).
+        sing_best = (
+            sing_pool.unionByName(gcand)
+            .groupBy("name")
+            .agg(
+                F.count_distinct("_tc").alias("_k"),
+                F.max("_sub").alias("_ns"),
+                F.count_distinct(
+                    F.when(F.col("_sub") == 0, F.col("other"))
+                ).alias("_ng"),
+                F.min("_tc").alias("component"),
             )
-        if singleton_attach:
-            sing_pool = cand.where(F.col("_sing") & ev_cond).select(
-                "name", "other", "_tc", F.lit(1).alias("_sub")
+            .where(
+                (F.col("_k") == 1)
+                & ((F.col("_ns") == 1) | (F.col("_ng") >= 2))
             )
-            if ge is not None:
-                # glue singletons whose evidence-bearing GLUE edges reach
-                # anchored partners vote too (driver twin: gadj); every
-                # glue endpoint is in comp by construction, so _sing is
-                # implied — the anti-join against anchored suffices.
-                gcand = (
-                    ge.join(anchored.select("name"), "name", "left_anti")
-                    .join(
-                        anchored.select(
-                            F.col("name").alias("other"),
-                            F.col("component").alias("_tc"),
-                        ),
-                        "other",
-                    )
-                    .where(ev_cond)
-                    .select("name", "other", "_tc", F.lit(0).alias("_sub"))
-                )
-                sing_pool = sing_pool.unionByName(gcand)
-            # Unanimity over the union pool, PLUS a minimum-vote rule on
-            # glue-only votes: a single evidence-bearing glue edge is
-            # trivially "unanimous" (the measured FP mode of the first
-            # glue-vote sweep) — require either one subsumption edge (the
-            # shipped round-4 semantics, unchanged) or >= 2 DISTINCT
-            # anchored glue partners agreeing (driver twin: the sub_t /
-            # glue_partners split).
-            sing_best = (
-                sing_pool.groupBy("name")
-                .agg(
-                    F.count_distinct("_tc").alias("_k"),
-                    F.max("_sub").alias("_ns"),
-                    F.count_distinct(
-                        F.when(F.col("_sub") == 0, F.col("other"))
-                    ).alias("_ng"),
-                    F.min("_tc").alias("component"),
-                )
-                .where(
-                    (F.col("_k") == 1)
-                    & ((F.col("_ns") == 1) | (F.col("_ng") >= 2))
-                )
-                .select("name", "component")
-            )
-            best = absent_best.unionByName(sing_best)
-        else:
-            best = absent_best
+            .select("name", "component")
+        )
+        best = absent_best.unionByName(sing_best)
         if best.limit(1).count() == 0:
             break
         comp = (
@@ -597,8 +549,6 @@ def attach_subsumed(
             .localCheckpoint()
         )
     for frame in (e, ge):
-        if frame is None:
-            continue
         try:
             frame.unpersist()
         except Exception:
@@ -621,18 +571,23 @@ def subsumption_aware_components(
     dst: str = "dst",
     prob_col: str = "probability",
     attach_rounds: int = 3,
-    singleton_attach: bool = True,
-    singleton_vote_glue: bool = True,
-    absent_attach: str = "best",
-    **refine_kw,
+    max_component: int = 100,
+    ladder: tuple[float, ...] = (0.90, 0.95, 0.99),
+    driver_max_edges: int = 1_000_000,
+    louvain_max_edges: int = 1_000_000,
+    evidence_min_cosine: float = EVIDENCE_MIN_COSINE,
+    evidence_max_align: float = EVIDENCE_MAX_ALIGN,
+    evidence_min_size: int | None = None,
 ) -> DataFrame:
     """The full subsumption-aware clustering composition:
 
     1. :func:`refined_components` over the GLUE edges only (subsumption
        edges — :func:`subsumption_edge_cond` — excluded);
     2. :func:`attach_subsumed`: subsumption-only names attach to their
-       best clustered partner's component (``attach_rounds`` passes so
-       chains resolve);
+       best clustered partner's component, and rung-isolated glue
+       singletons re-attach on a unanimous evidence vote over their
+       subsumption AND glue edges (``attach_rounds`` passes so chains
+       resolve);
     3. residual subsumption families whose members have NO clustered
        partner anywhere (an entity observed only as full + initial +
        diminutive forms has no glue-shaped pair at all) are clustered
@@ -643,26 +598,33 @@ def subsumption_aware_components(
     Measured (BENCH/QUALITY.md): at 100k entities this composition holds
     pair precision at 0.66 where gluing subsumption edges collapses to
     0.13 (800-name initial-form welds); at small scale step 3 restores
-    the isolated-family recall that attachment alone loses.
-
-    ``singleton_vote_glue`` (default on) widens the step-2 singleton
-    re-attach unanimity vote to rung-cut GLUE edges, under a min-vote
-    rule: glue-only votes need >= 2 distinct anchored partners (one FP
-    glue edge is trivially "unanimous" — the measured failure mode of
-    the unguarded vote).  Measured net-positive at all three sweep
-    scales (BENCH/QUALITY.md: 100k F1 .734 -> .743, 300k .763 -> .770).
+    the isolated-family recall that attachment alone loses.  The glue
+    edges' share of the singleton vote measured net-positive at all three
+    sweep scales (100k F1 .734 -> .743, 300k .763 -> .770).
 
     Size-adaptive like the rest of this module: below ``driver_max_edges``
     the whole composition (split, refine, attach rounds, residual) runs
     driver-side in one collect — the distributed path is ~15 Spark jobs
     of pure scheduling overhead on a graph that fits in memory.  Labels
-    are identical (the driver twin mirrors each step's tie-breaks)."""
+    are identical (the driver twin mirrors each step's tie-breaks).
+
+    The keywords after ``attach_rounds`` are :func:`refined_components`'s,
+    named here so an unknown option fails on both paths alike."""
+    refine_kw = dict(
+        src=src,
+        dst=dst,
+        prob_col=prob_col,
+        max_component=max_component,
+        ladder=ladder,
+        driver_max_edges=driver_max_edges,
+        louvain_max_edges=louvain_max_edges,
+        evidence_min_cosine=evidence_min_cosine,
+        evidence_max_align=evidence_max_align,
+        evidence_min_size=evidence_min_size,
+    )
     if not {"token_weakest_link", "align_edit"} <= set(matches.columns):
         # no subsumption evidence on this frame — plain refinement
-        return refined_components(
-            matches, src=src, dst=dst, prob_col=prob_col, **refine_kw
-        )
-    driver_max_edges = refine_kw.get("driver_max_edges", 1_000_000)
+        return refined_components(matches, **refine_kw)
     m = matches.select(
         F.col(src).alias("src"),
         F.col(dst).alias("dst"),
@@ -681,22 +643,13 @@ def subsumption_aware_components(
         rows = [t for t in collected if t[0] != t[1]]
         labels = _subsumption_aware_driver(
             rows,
-            max_component=refine_kw.get("max_component", 100),
-            ladder=tuple(refine_kw.get("ladder", (0.90, 0.95, 0.99))),
-            final_louvain=refine_kw.get("final_louvain", True),
-            louvain_max_edges=refine_kw.get("louvain_max_edges", 1_000_000),
-            evidence_rung=refine_kw.get("evidence_rung", True),
-            evidence_min_cosine=refine_kw.get(
-                "evidence_min_cosine", EVIDENCE_MIN_COSINE
-            ),
-            evidence_max_align=refine_kw.get(
-                "evidence_max_align", EVIDENCE_MAX_ALIGN
-            ),
-            evidence_min_size=refine_kw.get("evidence_min_size"),
+            max_component=max_component,
+            ladder=tuple(ladder),
+            louvain_max_edges=louvain_max_edges,
+            evidence_min_cosine=evidence_min_cosine,
+            evidence_max_align=evidence_max_align,
+            evidence_min_size=evidence_min_size,
             attach_rounds=attach_rounds,
-            singleton_attach=singleton_attach,
-            singleton_vote_glue=singleton_vote_glue,
-            absent_attach=absent_attach,
         )
         node_t = m.schema["src"].dataType
         return labels_frame(
@@ -705,40 +658,28 @@ def subsumption_aware_components(
     is_sub = subsumption_edge_cond()
     glue = matches.where(~is_sub)
     sub = matches.where(is_sub)
-    comp = refined_components(
-        glue, src=src, dst=dst, prob_col=prob_col, **refine_kw
-    )
+    comp = refined_components(glue, **refine_kw)
     comp = attach_subsumed(
         comp,
         sub,
+        glue,
         src=src,
         dst=dst,
         prob_col=prob_col,
         rounds=attach_rounds,
-        evidence_min_cosine=refine_kw.get(
-            "evidence_min_cosine", EVIDENCE_MIN_COSINE
-        ),
-        evidence_max_align=refine_kw.get("evidence_max_align", EVIDENCE_MAX_ALIGN),
-        singleton_attach=singleton_attach,
-        glue_edges=glue if singleton_vote_glue else None,
-        absent_attach=absent_attach,
+        evidence_min_cosine=evidence_min_cosine,
+        evidence_max_align=evidence_max_align,
     )
     # Mutual-floater families: subsumption edges both of whose endpoints
     # stayed un-anchored through every attach round (comp-absent OR glue
     # singletons) cluster among THEMSELVES under the same refinement
     # discipline, replacing any singleton labels they held.
-    anames = (
-        _anchored(comp).select("name")
-        if singleton_attach
-        else comp.select("name")
-    )
+    anames = _anchored(comp).select("name")
     residual = sub.join(
         anames.withColumnRenamed("name", src), src, "left_anti"
     ).join(anames.withColumnRenamed("name", dst), dst, "left_anti")
     if residual.limit(1).count() > 0:
-        rlab = refined_components(
-            residual, src=src, dst=dst, prob_col=prob_col, **refine_kw
-        )
+        rlab = refined_components(residual, **refine_kw)
         comp = comp.join(rlab.select("name"), "name", "left_anti").unionByName(
             rlab
         )
@@ -755,42 +696,35 @@ def _subsumption_aware_driver(
     rows: list,
     max_component: int,
     ladder: tuple[float, ...],
-    final_louvain: bool,
     louvain_max_edges: int,
-    evidence_rung: bool,
     evidence_min_cosine: float,
     evidence_max_align: float,
     attach_rounds: int,
     evidence_min_size: int | None = None,
-    singleton_attach: bool = True,
-    singleton_vote_glue: bool = True,
-    absent_attach: str = "best",
 ) -> dict:
     """Driver twin of the distributed composition.  ``rows``:
     (src, dst, p, cosine, align, twl, margin) tuples, self-loops
     pre-dropped."""
-    from collections import defaultdict
+    from collections import Counter, defaultdict
 
     glue = [(a, b, p, c, al, mg) for a, b, p, c, al, twl, mg in rows
             if not _is_sub_row(twl, al)]
     sub = [(a, b, p, c, al, mg) for a, b, p, c, al, twl, mg in rows
            if _is_sub_row(twl, al)]
+    evidence = (evidence_min_cosine, evidence_max_align)
     comp = _refine_driver(
         glue,
         max_component,
         ladder,
-        final_louvain,
         louvain_max_edges,
-        evidence=(evidence_min_cosine, evidence_max_align)
-        if evidence_rung
-        else None,
+        evidence=evidence,
         evidence_min_size=evidence_min_size,
     )
     # attach rounds (driver twin of attach_subsumed): anchored = member of
     # a >= 2-name component; comp-absent floaters attach to the best
-    # anchored partner (max prob, min component); rung-pruned glue
-    # singletons attach only on a UNANIMOUS evidence-bearing vote
-    from collections import Counter
+    # anchored partner (max prob, then margin, then min component);
+    # rung-pruned glue singletons attach only on a UNANIMOUS
+    # evidence-bearing vote
 
     def anchored_names(c: dict) -> set:
         sz = Counter(c.values())
@@ -805,70 +739,41 @@ def _subsumption_aware_driver(
     for a, b, p, c, al, mg in sub:
         adj[a].append((p, b, c, al, mg))
         adj[b].append((p, a, c, al, mg))
-    # Optional second vote pool for GLUE singletons: a name a refinement
-    # rung isolated can sit one evidence-bearing GLUE edge (not just a
+    # Second vote pool for GLUE singletons: a name a refinement rung
+    # isolated can sit one evidence-bearing GLUE edge (not just a
     # subsumption edge) away from its entity's cluster — e.g. a token-swap
     # typo pair cut by a margin rung inside an oversized web.  The vote
     # stays UNANIMOUS over the union of both pools: conflicting evidence
     # (sub pointing one way, glue another) is genuine ambiguity → abstain.
     gadj: dict = defaultdict(list)
-    if singleton_vote_glue:
-        for a, b, p, c, al, mg in glue:
-            gadj[a].append((p, b, c, al, mg))
-            gadj[b].append((p, a, c, al, mg))
+    for a, b, p, c, al, mg in glue:
+        gadj[a].append((p, b, c, al, mg))
+        gadj[b].append((p, a, c, al, mg))
     _NEG_INF = float("-inf")
     for _ in range(max(attach_rounds, 1)):
         anc = anchored_names(comp)
         newly = {}
-        vote_names = set(adj) | set(gadj)
-        for n in vote_names:
-            lst = adj.get(n, [])
+        for n in set(adj) | set(gadj):
             if n in anc:
                 continue
+            lst = adj.get(n, [])
             if n in comp:  # glue singleton: unanimity over evidence edges
-                if singleton_attach:
-                    sub_t = {
-                        comp[o]
-                        for p, o, c, al, mg in lst
-                        if o in anc and _ev(c, al)
-                    }
-                    glue_partners = {
-                        o
-                        for p, o, c, al, mg in gadj.get(n, [])
-                        if o in anc and _ev(c, al)
-                    }
-                    glue_t = {comp[o] for o in glue_partners}
-                    tcs = sub_t | glue_t
-                    # min-vote rule (matches the distributed _ns/_ng agg):
-                    # glue-only votes need >= 2 distinct anchored partners —
-                    # one FP glue edge is trivially "unanimous"
-                    if len(tcs) == 1 and (sub_t or len(glue_partners) >= 2):
-                        newly[n] = min(tcs)
-                continue
-            if absent_attach == "vote":
-                # component-level vote (distributed twin: the _nv/_bp/_bm
-                # aggregate): most distinct anchored partners first, then
-                # best p / margin / smallest label
-                per_tc: dict = {}
-                for p, o, c, al, mg in lst:
-                    if o not in anc:
-                        continue
-                    tc = comp[o]
-                    nv, bp, bm, ps = per_tc.get(tc, (0, _NEG_INF, _NEG_INF, set()))
-                    if o not in ps:
-                        ps.add(o)
-                        nv += 1
-                    per_tc[tc] = (
-                        nv,
-                        max(bp, p),
-                        max(bm, mg if mg is not None else _NEG_INF),
-                        ps,
-                    )
-                if per_tc:
-                    newly[n] = min(
-                        (-nv, -bp, -bm, tc)
-                        for tc, (nv, bp, bm, _ps) in per_tc.items()
-                    )[3]
+                sub_t = {
+                    comp[o]
+                    for p, o, c, al, mg in lst
+                    if o in anc and _ev(c, al)
+                }
+                glue_partners = {
+                    o
+                    for p, o, c, al, mg in gadj.get(n, [])
+                    if o in anc and _ev(c, al)
+                }
+                tcs = sub_t | {comp[o] for o in glue_partners}
+                # min-vote rule (matches the distributed _ns/_ng agg):
+                # glue-only votes need >= 2 distinct anchored partners —
+                # one FP glue edge is trivially "unanimous"
+                if len(tcs) == 1 and (sub_t or len(glue_partners) >= 2):
+                    newly[n] = min(tcs)
                 continue
             best = None
             for p, o, c, al, mg in lst:
@@ -889,7 +794,7 @@ def _subsumption_aware_driver(
         comp.update(newly)
     # mutual-floater families (comp-absent OR rung-pruned glue singletons
     # on both sides): refine among themselves
-    anc = anchored_names(comp) if singleton_attach else set(comp)
+    anc = anchored_names(comp)
     residual = [
         (a, b, p, c, al, mg)
         for a, b, p, c, al, mg in sub
@@ -901,23 +806,13 @@ def _subsumption_aware_driver(
                 residual,
                 max_component,
                 ladder,
-                final_louvain,
                 louvain_max_edges,
-                evidence=(evidence_min_cosine, evidence_max_align)
-                if evidence_rung
-                else None,
+                evidence=evidence,
                 evidence_min_size=evidence_min_size,
             )
         )
     return comp
 
-
-# Evidence-rung defaults (shared with the pipeline's checkpoint params):
-# an edge may glue an OVERSIZED component only if cosine_sim >= the min
-# (a shared IDF-weighted informative token) or align_edit <= the max
-# (near-exact string relation: typo / merge / designator variant).
-EVIDENCE_MIN_COSINE = 0.05
-EVIDENCE_MAX_ALIGN = 1.0
 
 # Anchors for the scale-adaptive ladder cap under a SHORT ladder (no
 # margin rung above MARGIN_RUNG_MIN_PROB): the THREE-fixture knob sweep
@@ -983,10 +878,8 @@ def refined_components(
     prob_col: str = "probability",
     max_component: int = 100,
     ladder: tuple[float, ...] = (0.90, 0.95, 0.99),
-    final_louvain: bool = True,
     driver_max_edges: int = 1_000_000,
     louvain_max_edges: int = 1_000_000,
-    evidence_rung: bool = True,
     evidence_min_cosine: float = EVIDENCE_MIN_COSINE,
     evidence_max_align: float = EVIDENCE_MAX_ALIGN,
     evidence_min_size: int | None = None,
@@ -1012,9 +905,9 @@ def refined_components(
        singletons;
     3. repeat up the ladder until every component fits the cap or the
        ladder is exhausted;
-    3b. EVIDENCE rung (``evidence_rung=True``, needs ``cosine_sim`` /
-       ``align_edit`` columns on ``matches`` — the scorer always emits
-       them): probability saturates on corpus-scale confusable webs (the
+    3b. EVIDENCE rung (needs ``cosine_sim`` / ``align_edit`` columns on
+       ``matches`` — the scorer always emits them; skipped on bare edge
+       frames without them): probability saturates on corpus-scale confusable webs (the
        GBM emits 1.0000 for thousands of cross-entity pairs), so inside
        still-oversized components an edge survives only with distinctive
        shared evidence — an IDF-weighted shared token (cosine) or a
@@ -1028,10 +921,10 @@ def refined_components(
        genuinely-confusable high-probability aliases (shared surnames,
        initial forms, org cores differing only in designators) — exactly
        the structure the reference's Louvain step slices along community
-       boundaries.  With ``final_louvain=True`` (default) those residual
-       components are re-clustered by the per-component distributed
-       Louvain (operators/louvain.py), cutting the weak ties between
-       dense alias cliques that transitive closure cannot.
+       boundaries.  Those residual components are re-clustered by the
+       per-component distributed Louvain (operators/louvain.py), cutting
+       the weak ties between dense alias cliques that transitive closure
+       cannot.
 
     Each rung runs CC on a strictly smaller edge set, so the extra cost
     is bounded by ``len(ladder)`` CC runs plus one Louvain pass over the
@@ -1071,9 +964,7 @@ def refined_components(
     # the distributed path (parity-tested).  The gate probe is a
     # limit-count — no materialization of the full edge list just to
     # count it.
-    has_evidence = evidence_rung and {"cosine_sim", "align_edit"} <= set(
-        matches.columns
-    )
+    has_evidence = {"cosine_sim", "align_edit"} <= set(matches.columns)
     ev_cols = (
         [F.col("cosine_sim").alias("c"), F.col("align_edit").alias("al")]
         if has_evidence
@@ -1103,7 +994,6 @@ def refined_components(
             rows,
             max_component,
             ladder,
-            final_louvain,
             louvain_max_edges,
             evidence=(evidence_min_cosine, evidence_max_align)
             if has_evidence
@@ -1192,56 +1082,55 @@ def refined_components(
             | (F.col("align_edit") <= F.lit(evidence_max_align)),
             bound=evidence_min_size,
         )
-    if final_louvain:
-        sizes = comp.groupBy("component").agg(F.count("*").alias("n"))
-        big = sizes.where(F.col("n") > max_component).select("component")
-        if big.limit(1).count() > 0:
-            from name_matching_spark.operators.louvain import louvain_communities
+    sizes = comp.groupBy("component").agg(F.count("*").alias("n"))
+    big = sizes.where(F.col("n") > max_component).select("component")
+    if big.limit(1).count() > 0:
+        from name_matching_spark.operators.louvain import louvain_communities
 
-            # Louvain eligibility: partition the internal subgraph (base
-            # edges among residual-big members) by ITS OWN connected
-            # components — the same unit louvain_communities gates on —
-            # and send only components whose edge count fits the gate.
-            # Oversized webs keep their ladder labels; the guard never
-            # raises.  Ladder components stay atomic under the name-level
-            # swap: each one is internally connected, so it lies wholly
-            # inside one internal-graph component.
-            big_names = _ckpt(comp.join(big, "component", "left_semi"))
-            bn = big_names.select("name")
-            internal = _ckpt(
-                _canon_edges(
-                    edges.join(
-                        bn.withColumnRenamed("name", "src"), "src", "left_semi"
-                    ).join(bn.withColumnRenamed("name", "dst"), "dst", "left_semi"),
-                    "src",
-                    "dst",
-                ).select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
-            )
-            icc = _ckpt(connected_components(internal))
-            ic = internal.join(
-                icc.select(F.col("name").alias("src"), F.col("component").alias("gid")),
+        # Louvain eligibility: partition the internal subgraph (base
+        # edges among residual-big members) by ITS OWN connected
+        # components — the same unit louvain_communities gates on —
+        # and send only components whose edge count fits the gate.
+        # Oversized webs keep their ladder labels; the guard never
+        # raises.  Ladder components stay atomic under the name-level
+        # swap: each one is internally connected, so it lies wholly
+        # inside one internal-graph component.
+        big_names = _ckpt(comp.join(big, "component", "left_semi"))
+        bn = big_names.select("name")
+        internal = _ckpt(
+            _canon_edges(
+                edges.join(
+                    bn.withColumnRenamed("name", "src"), "src", "left_semi"
+                ).join(bn.withColumnRenamed("name", "dst"), "dst", "left_semi"),
                 "src",
-            )
-            ok_gids = (
-                ic.groupBy("gid")
-                .agg(F.count("*").alias("ne"))
-                .where(F.col("ne") <= louvain_max_edges)
-                .select("gid")
-            )
-            elig_edges = _ckpt(
-                ic.join(ok_gids, "gid", "left_semi").select("src", "dst")
-            )
-            elig_names = icc.join(
-                ok_gids.withColumnRenamed("gid", "component"), "component", "left_semi"
-            ).select("name")
-            sub = louvain_communities(elig_edges, max_edges=louvain_max_edges)
-            singles = (
-                elig_names.join(sub.select("name"), "name", "left_anti")
-                .select("name", F.col("name").alias("component"))
-            )
-            comp = _ckpt(
-                comp.join(elig_names, "name", "left_anti")
-                .unionByName(sub)
-                .unionByName(singles)
-            )
+                "dst",
+            ).select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
+        )
+        icc = _ckpt(connected_components(internal))
+        ic = internal.join(
+            icc.select(F.col("name").alias("src"), F.col("component").alias("gid")),
+            "src",
+        )
+        ok_gids = (
+            ic.groupBy("gid")
+            .agg(F.count("*").alias("ne"))
+            .where(F.col("ne") <= louvain_max_edges)
+            .select("gid")
+        )
+        elig_edges = _ckpt(
+            ic.join(ok_gids, "gid", "left_semi").select("src", "dst")
+        )
+        elig_names = icc.join(
+            ok_gids.withColumnRenamed("gid", "component"), "component", "left_semi"
+        ).select("name")
+        sub = louvain_communities(elig_edges, max_edges=louvain_max_edges)
+        singles = (
+            elig_names.join(sub.select("name"), "name", "left_anti")
+            .select("name", F.col("name").alias("component"))
+        )
+        comp = _ckpt(
+            comp.join(elig_names, "name", "left_anti")
+            .unionByName(sub)
+            .unionByName(singles)
+        )
     return _done(comp)

@@ -15,6 +15,7 @@ Decision semantics preserved from the reference: probability rounded to
 
 from __future__ import annotations
 
+import hashlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -41,9 +42,18 @@ EVIDENCE_COLS = ("cosine_sim", "align_edit", "token_weakest_link")
 _ARTIFACT_CACHE: dict = {}
 
 
-def _artifacts(model_json: str, tfidf_json: str):
-    # Stable content-derived key (ids differ across task deserializations).
-    key = (len(model_json), model_json[:64], len(tfidf_json), tfidf_json[:64])
+def _artifact_key(model_json: str, tfidf_json: str) -> tuple:
+    """Cache key: a digest of the FULL content (ids differ across task
+    deserializations), so a refitted vocabulary of the same length is not
+    served stale from a reused python worker.  Computed once on the
+    driver and shipped with the JSON, so tasks do not re-hash it."""
+    return (
+        hashlib.blake2b(model_json.encode(), digest_size=16).digest(),
+        hashlib.blake2b(tfidf_json.encode(), digest_size=16).digest(),
+    )
+
+
+def _artifacts(key: tuple, model_json: str, tfidf_json: str):
     hit = _ARTIFACT_CACHE.get(key)
     if hit is None:
         from name_matching_spark.functions.tfidf import TfidfModel
@@ -72,8 +82,9 @@ def make_scorer_udf(model_json: str, tfidf_json: str, spark=None, feature_cols=N
     schema = ", ".join(
         f"{c} double" for c in [*out_cols, "probability", "margin"]
     )
+    key = _artifact_key(model_json, tfidf_json)
     if spark is not None:
-        bc = spark.sparkContext.broadcast((model_json, tfidf_json))
+        bc = spark.sparkContext.broadcast((key, model_json, tfidf_json))
 
         def _get():
             return _artifacts(*bc.value)
@@ -81,7 +92,7 @@ def make_scorer_udf(model_json: str, tfidf_json: str, spark=None, feature_cols=N
     else:
 
         def _get():
-            return _artifacts(model_json, tfidf_json)
+            return _artifacts(key, model_json, tfidf_json)
 
     def _score(
         it: Iterator[tuple[pd.Series, pd.Series]],

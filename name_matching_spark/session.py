@@ -46,11 +46,10 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         # The pipeline overlaps independent stages (TF-IDF fit / blocking /
-        # metrics) from separate threads; FAIR keeps a later-submitted
-        # critical-path job from queueing behind a background job's tasks
-        # (single-job workloads are unaffected — one job owns every slot
-        # under either policy).  Measured on the overlapped ER pipeline:
-        # window med 4.49 -> 3.77 s, same min.
+        # metrics) from two threads.  No pools are defined.  Measured on
+        # the perfbench batch_er workload (200 entities, local[4]):
+        # dropping this setting made er_wall_s slower in 4 of 4 alternated
+        # pairs, by 0.3 to 1.7 s (seeds 21-24).
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

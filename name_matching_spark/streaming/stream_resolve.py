@@ -37,6 +37,11 @@ from pyspark.sql.types import (
 from name_matching_spark.functions.normalize import normalize_text_col
 from name_matching_spark.operators.scoring import score_pairs
 
+# Shortest token that blocks a stream name against an entity: the index
+# side and the micro-batch side must apply the same rule, or a name's
+# token can never meet the entity token it would have matched.
+MIN_TOKEN_LEN = 2
+
 
 def stream_canonical_names(
     stream: DataFrame,
@@ -175,14 +180,13 @@ class EntityTokenIndex:
     def __init__(
         self,
         entities: DataFrame,
-        min_token_len: int = 2,
         broadcast_max_rows: int = 2_000_000,
     ):
         et = (
             entities.select("entity_key", F.col("resolved_name").alias("cand"))
             .dropDuplicates(["entity_key"])
             .withColumn("tok", F.explode(F.split(F.col("cand"), " ")))
-            .where(F.length("tok") >= min_token_len)
+            .where(F.length("tok") >= MIN_TOKEN_LEN)
         )
         self.index = et.localCheckpoint()  # eager: explode runs here, once
         self.n_rows = self.index.count()  # cheap over the checkpointed RDD
@@ -231,7 +235,7 @@ def assign_stream_batch(
     nn = nn.join(exact.select("conv_id", "name"), ["conv_id", "name"], "left_anti")
     nt = nn.select(
         "conv_id", "name", F.explode(F.split("name", " ")).alias("tok")
-    ).where(F.length("tok") >= 2)
+    ).where(F.length("tok") >= MIN_TOKEN_LEN)
     cands = (
         nt.join(idx.join_side(), "tok")
         .select("conv_id", "name", "entity_key", "cand")

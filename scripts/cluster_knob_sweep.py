@@ -1,11 +1,11 @@
 """Sweep clustering-refinement knobs on a fixed scored-edge set.
 
 Runs the pipeline ONCE on a bench fixture (blocking + scoring reused
-across variants), then recomputes refined_components -> entities ->
-resolved under each knob combination and reports ground-truth pair
+across variants), then recomputes subsumption_aware_components ->
+entities -> resolved under each knob combination and reports ground-truth pair
 precision / recall / F1.  Pure measurement — no product code touched.
 
-Usage: python scripts/cluster_knob_sweep.py [n_entities]
+Usage: python scripts/cluster_knob_sweep.py [n_entities [caps [lm2]]]
 """
 
 from __future__ import annotations
@@ -26,7 +26,6 @@ from pyspark.sql import functions as F  # noqa: E402
 
 def main() -> None:
     from name_matching_spark.operators.clustering import (
-        refined_components,
         subsumption_aware_components,
     )
     from name_matching_spark.operators.resolve import entity_table, resolve_records
@@ -69,30 +68,19 @@ def main() -> None:
         _LM3 = _L + (0.9999, 0.99999, 0.999999)
         if len(sys.argv) > 2:
             # cap-only sweep: `python scripts/cluster_knob_sweep.py 300000 5,6,7,8
-            # [lm2|lm2vg]` — optional third arg switches to the margin-rung
-            # ladder (the third-scale-point validation of refine_max_component
-            # ="auto" — VERDICT r4 item 7; lm2 re-anchors it for round 5's
-            # extended default); the "vg" suffix additionally turns on the
-            # glue-edge singleton unanimity vote (singleton_vote_glue).
+            # [lm2]` — optional third arg switches to the margin-rung
+            # ladder (the pipeline default) to re-anchor
+            # refine_max_component="auto".
             mode = sys.argv[3] if len(sys.argv) > 3 else ""
-            lad = _LM2 if mode.startswith("lm2") else _L
-            vg = "vg" in mode
-            av = "av" in mode  # absent_attach="vote" (component-level vote)
+            lad = _LM2 if mode == "lm2" else _L
             grid = [
-                {"max_component": int(c), "ladder": lad, "subsume": True,
-                 "evidence_min_size": 2,
-                 **({"singleton_vote_glue": True} if vg else {}),
-                 **({"absent_attach": "vote"} if av else {})}
+                {"max_component": int(c), "ladder": lad, "evidence_min_size": 2}
                 for c in sys.argv[2].split(",")
             ]
         else:
             grid = _default_grid(_L, _LM1, _LM2, _LM3)
         for knobs in grid:
-            kw = {k: v for k, v in knobs.items() if k != "subsume"}
-            if knobs["subsume"]:
-                comp = subsumption_aware_components(matches, **kw)
-            else:
-                comp = refined_components(matches, **kw)
+            comp = subsumption_aware_components(matches, **knobs)
             entities = entity_table(comp, names)
             resolved = resolve_records(conv, entities, ["name"])
             m = pair_f1(spark, resolved, truth_path)
@@ -104,25 +92,17 @@ def main() -> None:
 
 def _default_grid(_L, _LM1, _LM2, _LM3):
     return [
-            {"max_component": 5, "ladder": _L, "subsume": True,
-             "evidence_min_size": 2},
-            {"max_component": 5, "ladder": _LM1, "subsume": True,
-             "evidence_min_size": 2},
-            {"max_component": 5, "ladder": _LM2, "subsume": True,
-             "evidence_min_size": 2},
-            {"max_component": 5, "ladder": _LM3, "subsume": True,
-             "evidence_min_size": 2},
-            {"max_component": 4, "ladder": _LM2, "subsume": True,
-             "evidence_min_size": 2},
-            {"max_component": 6, "ladder": _LM2, "subsume": True,
-             "evidence_min_size": 2},
-            # evidence bound 1: HALF of final clusters are 2-name; bound 2
-            # exempts them from the evidence rung entirely, and the 100k
-            # FP mass now sits in small mixed clusters
-            {"max_component": 5, "ladder": _L, "subsume": True,
-             "evidence_min_size": 1},
-            {"max_component": 5, "ladder": _LM2, "subsume": True,
-             "evidence_min_size": 1},
+        {"max_component": 5, "ladder": _L, "evidence_min_size": 2},
+        {"max_component": 5, "ladder": _LM1, "evidence_min_size": 2},
+        {"max_component": 5, "ladder": _LM2, "evidence_min_size": 2},
+        {"max_component": 5, "ladder": _LM3, "evidence_min_size": 2},
+        {"max_component": 4, "ladder": _LM2, "evidence_min_size": 2},
+        {"max_component": 6, "ladder": _LM2, "evidence_min_size": 2},
+        # evidence bound 1: HALF of final clusters are 2-name; bound 2
+        # exempts them from the evidence rung entirely, and the 100k
+        # FP mass now sits in small mixed clusters
+        {"max_component": 5, "ladder": _L, "evidence_min_size": 1},
+        {"max_component": 5, "ladder": _LM2, "evidence_min_size": 1},
     ]
 
 

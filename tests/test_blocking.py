@@ -1,4 +1,4 @@
-"""Blocking: recall on the labeled positive pairs, purge cap, pair shape."""
+"""Blocking: recall on the labeled positive pairs, hot-block cap, pair shape."""
 
 import pandas as pd
 import pytest
@@ -6,7 +6,11 @@ from pyspark.sql import functions as F
 
 from name_matching_spark.model.train import POS_CSV
 from name_matching_spark.functions.normalize import preprocess_name
-from name_matching_spark.operators.blocking import block_stats, candidate_pairs
+from name_matching_spark.operators.blocking import (
+    block_stats,
+    blocking_keys,
+    candidate_pairs,
+)
 
 
 @pytest.fixture(scope="module")
@@ -102,12 +106,21 @@ def test_hot_block_subblocking_recovers_recall(spark):
     got = {(r["name_x"], r["name_y"]) for r in sub.collect()}
     recall = len(want & got) / len(want)
     assert recall >= 0.85, f"sub-blocking recall {recall:.3f}"
-    # the purge semantics lose most of these pairs (soundex collisions of
-    # random cores are the only non-hot route left)
-    purged = candidate_pairs(names_df, sub_block=False, **kw)
-    got_purge = {(r["name_x"], r["name_y"]) for r in purged.collect()}
-    assert len(want & got_purge) / len(want) < 0.25
-    assert len(want & got_purge) < len(want & got)
+
+
+def test_candidate_pairs_rejects_keys_frame_missing_columns(spark):
+    """A prebuilt keys frame without the block sizes or the sub-block
+    signature must fail loudly: falling back silently would give NULL
+    sub-keys that merge every hot-block member into one bucket."""
+    names = spark.createDataFrame(
+        [("JOHN WICK",), ("JON WICK",), ("J WICK",)], ["name"]
+    )
+    bare = blocking_keys(names)
+    with pytest.raises(ValueError, match="block_size"):
+        candidate_pairs(names, keys=bare)
+    sizes = bare.groupBy("key").agg(F.count("*").alias("block_size"))
+    with pytest.raises(ValueError, match="_ss"):
+        candidate_pairs(names, keys=bare.drop("_ss").join(sizes, "key"))
 
 
 def test_hot_block_pair_volume_stays_linear(spark):

@@ -362,10 +362,9 @@ def test_singleton_reattach_unanimous_evidence(spark):
 
 
 def test_singleton_vote_glue_reattach(spark):
-    """singleton_vote_glue=True (opt-in): a glue singleton isolated by a
-    rung may re-attach via its evidence-bearing GLUE edges — unanimity
-    over the union of sub + glue evidence edges; conflicting targets
-    still abstain; default-off output is byte-identical without it."""
+    """A glue singleton isolated by a rung may re-attach via its
+    evidence-bearing GLUE edges — unanimity over the union of sub + glue
+    evidence edges; conflicting targets still abstain."""
     from name_matching_spark.operators.clustering import (
         subsumption_aware_components,
     )
@@ -398,34 +397,28 @@ def test_singleton_vote_glue_reattach(spark):
         ladder=(0.92, 0.96, 0.99, 0.995, 0.999, 0.9999, 0.99999),
         evidence_min_size=2,
     )
-    for vg in (False, True):
-        fast = {
-            r["name"]: r["component"]
-            for r in subsumption_aware_components(
-                m, singleton_vote_glue=vg, **kw
-            ).collect()
-        }
-        dist = {
-            r["name"]: r["component"]
-            for r in subsumption_aware_components(
-                m, singleton_vote_glue=vg, driver_max_edges=0, **kw
-            ).collect()
-        }
-        assert fast == dist
-        assert fast["A0"] == fast["A1"] == fast["A2"]
-        assert fast["B0"] == fast["B1"] == fast["B2"] != fast["A0"]
-        assert fast["V"] == "V" and fast["W"] == "W"
-        assert fast["Y"] == "Y"
-        assert fast["S"] == (fast["A0"] if vg else "S")
+    fast = {
+        r["name"]: r["component"]
+        for r in subsumption_aware_components(m, **kw).collect()
+    }
+    dist = {
+        r["name"]: r["component"]
+        for r in subsumption_aware_components(
+            m, driver_max_edges=0, **kw
+        ).collect()
+    }
+    assert fast == dist
+    assert fast["A0"] == fast["A1"] == fast["A2"]
+    assert fast["B0"] == fast["B1"] == fast["B2"] != fast["A0"]
+    assert fast["V"] == "V" and fast["W"] == "W"
+    assert fast["Y"] == "Y"
+    assert fast["S"] == fast["A0"]
 
 
 def test_absent_attach_vote(spark):
-    """absent_attach="vote" (opt-in): a comp-absent floater attaches to
-    the component with the MOST distinct anchored partners, not the one
-    best-probability edge — inside probability-saturated webs the single
-    1.0000 edge is a coin flip while the true entity anchors several
-    alias forms.  Driver and distributed paths must agree in both modes;
-    default "best" output is unchanged."""
+    """A comp-absent floater attaches to the component of its single
+    best-probability anchored partner, even when another component holds
+    more of its partners.  Driver and distributed paths must agree."""
     from name_matching_spark.operators.clustering import (
         subsumption_aware_components,
     )
@@ -439,7 +432,7 @@ def test_absent_attach_vote(spark):
     rows.append(("F", "A0", 1.0, 0.0, 4.0, 1.0, 9.0))
     rows.append(("F", "B0", 0.99, 0.0, 4.0, 1.0, 8.0))
     rows.append(("F", "B1", 0.99, 0.0, 4.0, 1.0, 8.0))
-    # floater G: single edge either way — both modes pick the best edge
+    # floater G: a single edge
     rows.append(("G", "A1", 0.98, 0.0, 4.0, 1.0, 7.0))
     m = spark.createDataFrame(
         rows,
@@ -447,22 +440,103 @@ def test_absent_attach_vote(spark):
         "align_edit double, token_weakest_link double, margin double",
     )
     kw = dict(max_component=6, ladder=(0.90, 0.95))
-    for mode, want in (("best", "A0"), ("vote", "B0")):
-        fast = {
-            r["name"]: r["component"]
-            for r in subsumption_aware_components(
-                m, absent_attach=mode, **kw
-            ).collect()
-        }
-        dist = {
-            r["name"]: r["component"]
-            for r in subsumption_aware_components(
-                m, absent_attach=mode, driver_max_edges=0, **kw
-            ).collect()
-        }
-        assert fast == dist
-        assert fast["F"] == fast[want]
-        assert fast["G"] == fast["A1"]
+    fast = {
+        r["name"]: r["component"]
+        for r in subsumption_aware_components(m, **kw).collect()
+    }
+    dist = {
+        r["name"]: r["component"]
+        for r in subsumption_aware_components(
+            m, driver_max_edges=0, **kw
+        ).collect()
+    }
+    assert fast == dist
+    assert fast["F"] == fast["A0"]
+    assert fast["G"] == fast["A1"]
+
+
+@pytest.mark.slow
+def test_subsumption_aware_twins_agree_at_shipped_settings(spark, tmp_path):
+    """Both clustering twins, fed the scored matches of a 60-entity
+    fixture with the pipeline's own arguments (auto cap, default ladder,
+    evidence_min_size=2), must give the same labels.
+
+    At this scale the graph reaches the evidence rung, the
+    subsumption-edge singleton vote and the residual families.  It does
+    not reach the glue-edge vote and its min-vote rule, the comp-absent
+    margin tie-break, the margin rungs or Louvain: the hand-built parity
+    tests above cover those."""
+    import os
+
+    from name_matching_spark.datagen import write_fixture
+    from name_matching_spark.operators.clustering import (
+        resolve_auto_cap,
+        subsumption_aware_components,
+        subsumption_edge_cond,
+    )
+    from name_matching_spark.pipeline import EntityResolutionPipeline
+
+    fixture = str(tmp_path / "fx_twins")
+    write_fixture(fixture, n_entities=60, convs_per_entity=4, seed=123)
+    pipe = EntityResolutionPipeline(spark, str(tmp_path / "wh_twins"))
+    stages = pipe.run(
+        spark.read.parquet(os.path.join(fixture, "transcripts.parquet"))
+    )
+    m = stages["scored_pairs"].where(F.col("prediction") == 1).select(
+        F.col("name_x").alias("src"),
+        F.col("name_y").alias("dst"),
+        "probability",
+        "cosine_sim",
+        "align_edit",
+        "token_weakest_link",
+        "margin",
+    )
+    # the fixture exercises both edge kinds
+    assert m.where(subsumption_edge_cond()).count() > 0
+    assert m.where(~subsumption_edge_cond()).count() > 0
+    kw = dict(
+        max_component=resolve_auto_cap(stages["names"].count(), pipe.refine_ladder),
+        ladder=pipe.refine_ladder,
+        evidence_min_size=2,
+    )
+    assert pipe.refine_max_component == "auto"
+    assert pipe.refine_evidence_min_size == 2
+
+    def labels(df):
+        return {r["name"]: r["component"] for r in df.collect()}
+
+    fast = labels(subsumption_aware_components(m, **kw))
+    dist = labels(subsumption_aware_components(m, driver_max_edges=0, **kw))
+    assert dist == fast
+    # refinement and attachment changed something: not plain CC
+    assert fast != labels(connected_components(m.select("src", "dst")))
+
+
+@pytest.mark.parametrize(
+    "retired",
+    [
+        {"absent_attach": "vote"},
+        {"singleton_attach": False},
+        {"singleton_vote_glue": False},
+        {"final_louvain": False},
+        {"evidence_rung": False},
+    ],
+)
+def test_subsumption_aware_rejects_retired_options(spark, retired):
+    """A retired experiment option fails on the driver path (a graph far
+    under ``driver_max_edges``) just as on the distributed path, instead
+    of being silently ignored."""
+    from name_matching_spark.operators.clustering import (
+        subsumption_aware_components,
+    )
+
+    m = spark.createDataFrame(
+        [("A", "B", 0.9, 0.5, 2, 0.5, 0.1)],
+        "src string, dst string, probability double, cosine_sim double, "
+        "align_edit int, token_weakest_link double, margin double",
+    )
+    with pytest.raises(TypeError):
+        subsumption_aware_components(m, **retired)
 
 
 def test_resolve_auto_cap_rule():

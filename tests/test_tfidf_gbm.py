@@ -367,3 +367,24 @@ def test_load_artifacts_rejects_reordered_feature_cols(tmp_path):
     m.feature_cols = list(FEATURE_COLS[:5])
     bad.write_text(m.to_json())
     load_artifacts(str(bad), TFIDF_PATH)
+
+
+def test_scorer_artifact_cache_keys_on_full_content():
+    """The scorer's per-worker artifact cache serves a parsed model only
+    for the exact JSON it was parsed from: a refitted vocabulary of the
+    same length (two idf values swapped past the first 64 characters)
+    is a different model, not a cache hit."""
+    from name_matching_spark.model.train import load_artifacts
+    from name_matching_spark.operators.scoring import _artifact_key, _artifacts
+
+    model_json = load_artifacts()[0].to_json()
+    vocab = {f"term{i}": i for i in range(8)}
+    idf = 1.0 + 0.125 * np.arange(8)
+    swapped = idf.copy()
+    swapped[[6, 7]] = idf[[7, 6]]
+    a = TfidfModel(vocab, idf).to_json()
+    b = TfidfModel(vocab, swapped).to_json()
+    assert len(a) == len(b) and a[:64] == b[:64] and a != b
+    for tfidf_json, want in ((a, idf), (b, swapped)):
+        key = _artifact_key(model_json, tfidf_json)
+        assert np.array_equal(_artifacts(key, model_json, tfidf_json)[1].idf, want)
