@@ -38,6 +38,47 @@ from pyspark.sql import functions as F
 EVIDENCE_MIN_COSINE = 0.05
 EVIDENCE_MAX_ALIGN = 1.0
 
+# The shipped refinement configuration: the defaults of
+# refined_components and subsumption_aware_components, and the
+# components-stage fingerprint in the pipeline.  Measured by the
+# three-scale knob sweep (scripts/cluster_knob_sweep.py, BENCH/QUALITY.md):
+# - LADDER ends in two margin rungs (above MARGIN_RUNG_MIN_PROB a rung
+#   compares the GBM's raw margin against logit(t), because the 4dp
+#   probability saturates there).  Pair F1 .852/.734/.763 at 10k/100k/300k
+#   entities, against .851/.720/.704 for the 5-rung short ladder
+#   (0.92 ... 0.999) with its best cap at each scale.
+# - MAX_COMPONENT 4 (about one entity's alias fan-out) is the F1-best cap
+#   under LADDER at all three scales (10k: beats 2,3,5,6; 100k: 3,5,6;
+#   300k: 3,5,6,8,12,16).  Recall is cap-invariant: the attach recovers
+#   what a tighter cap sheds, so the cap buys precision only.
+# - EVIDENCE_MIN_SIZE 2 puts every multi-name component through the
+#   evidence rung: the fixture-scale FP mass sits in small mixed clusters
+#   glued by evidence-free 0.95-0.99 edges (10k F1 .793 -> .826, 100k
+#   .704 -> .736 against applying the rung only at the cap).
+LADDER = (0.92, 0.96, 0.99, 0.995, 0.999, 0.9999, 0.99999)
+MAX_COMPONENT = 4
+EVIDENCE_MIN_SIZE = 2
+
+
+def _check_ladder(ladder) -> None:
+    if list(ladder) != sorted(ladder):
+        raise ValueError(
+            "ladder must ascend: a descending rung would re-merge components "
+            f"the previous rung split ({tuple(ladder)})"
+        )
+
+
+def _unpersist(frames, keep: DataFrame | None = None) -> None:
+    """Release retired ``localCheckpoint`` frames, except ``keep``; a frame
+    that cannot be released only holds executor storage until the session
+    ends, so the error is ignored."""
+    for df in frames:
+        if df is not keep:
+            try:
+                df.unpersist()
+            except Exception:
+                pass
+
 
 def _canon_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     return (
@@ -193,15 +234,10 @@ def connected_components(
     retired = [e]
 
     def _finish_on_driver(cur_e: DataFrame) -> DataFrame:
-        labels = _driver_union_find(
-            (r["lo"], r["hi"]) for r in cur_e.toLocalIterator()
-        )
+        # the checksum just counted cur_e within the bound
+        labels = _driver_union_find(_collect_bounded(cur_e, driver_max_edges))
         out = _labels_df(labels, cur_e.schema["lo"].dataType)
-        for df in retired:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        _unpersist(retired)
         return out
 
     prev = _checksum(e)
@@ -220,11 +256,7 @@ def connected_components(
             break
         prev = cur
     if not converged and prev[0] > 0:
-        for df in retired:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        _unpersist(retired)
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} rounds"
         )
@@ -247,11 +279,7 @@ def connected_components(
         .distinct()
     )
     out = labels.localCheckpoint()
-    for df in retired:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+    _unpersist(retired)
     return out
 
 
@@ -548,11 +576,7 @@ def attach_subsumed(
             .unionByName(best)
             .localCheckpoint()
         )
-    for frame in (e, ge):
-        try:
-            frame.unpersist()
-        except Exception:
-            pass
+    _unpersist((e, ge))
     return comp
 
 
@@ -571,13 +595,13 @@ def subsumption_aware_components(
     dst: str = "dst",
     prob_col: str = "probability",
     attach_rounds: int = 3,
-    max_component: int = 100,
-    ladder: tuple[float, ...] = (0.90, 0.95, 0.99),
+    max_component: int = MAX_COMPONENT,
+    ladder: tuple[float, ...] = LADDER,
     driver_max_edges: int = 1_000_000,
     louvain_max_edges: int = 1_000_000,
     evidence_min_cosine: float = EVIDENCE_MIN_COSINE,
     evidence_max_align: float = EVIDENCE_MAX_ALIGN,
-    evidence_min_size: int | None = None,
+    evidence_min_size: int | None = EVIDENCE_MIN_SIZE,
 ) -> DataFrame:
     """The full subsumption-aware clustering composition:
 
@@ -610,6 +634,7 @@ def subsumption_aware_components(
 
     The keywords after ``attach_rounds`` are :func:`refined_components`'s,
     named here so an unknown option fails on both paths alike."""
+    _check_ladder(ladder)
     refine_kw = dict(
         src=src,
         dst=dst,
@@ -814,75 +839,18 @@ def _subsumption_aware_driver(
     return comp
 
 
-# Anchors for the scale-adaptive ladder cap under a SHORT ladder (no
-# margin rung above MARGIN_RUNG_MIN_PROB): the THREE-fixture knob sweep
-# (scripts/cluster_knob_sweep.py, BENCH/QUALITY.md) under the round-5
-# scorer measured pair-F1-best caps of 4 at 30,988 distinct names (10k
-# entities), 6 at 306,572 (100k) and ~12 at 927,401 (300k; flat plateau
-# 10-16) — recall is cap-invariant at every scale (the attach recovers
-# whatever a tighter cap sheds), so the cap buys precision, and the
-# ambiguity webs that need ladder room before Louvain densify
-# SUPER-log-linearly with corpus size (6 -> 12 across the last half
-# decade).  Piecewise log-linear through the anchors; past the largest
-# measured corpus the last segment extrapolates but clamps at 16, the
-# largest cap actually measured (still on the plateau).
-AUTO_CAP_ANCHORS = ((31_000, 4.0), (307_000, 6.0), (927_000, 12.0))
-AUTO_CAP_MAX = 16
-# Under a MARGIN-RUNG ladder (any rung above MARGIN_RUNG_MIN_PROB — the
-# pipeline default ends in 0.9999/0.99999) the same three-scale sweep
-# measures the F1-best cap as SCALE-INVARIANT at 4, ~ one entity's alias
-# fan-out (10k: 4 beats 2,3,5,6; 100k: 4 beats 3,5,6; 300k: 4 beats
-# 3,5,6,8,12,16 — F1 .852/.734/.763 vs the short-ladder adaptive cap's
-# .851/.720/.704).  The margin rungs rank inside the probability-
-# saturated webs that previously needed extra cap room, so the
-# scale-dependence collapses to the constant.
-AUTO_CAP_MARGIN_LADDER = 4
-
-
-def resolve_auto_cap(n_names: int, ladder: tuple[float, ...] | None = None) -> int:
-    """Scale-adaptive refinement ladder cap.
-
-    With a margin-rung ``ladder`` (any rung above
-    :data:`MARGIN_RUNG_MIN_PROB` — the pipeline default) the measured
-    optimum is scale-invariant: returns :data:`AUTO_CAP_MARGIN_LADDER`.
-    Otherwise (legacy short ladder, or no ladder supplied) piecewise
-    log-linear through the three short-ladder sweep optima (see
-    AUTO_CAP_ANCHORS), floored at the smallest anchor and ceilinged at
-    the largest measured cap.  The pipeline default
-    (``refine_max_component="auto"``) resolves through this."""
-    import math
-
-    if ladder and any(t > MARGIN_RUNG_MIN_PROB for t in ladder):
-        return AUTO_CAP_MARGIN_LADDER
-    n = max(int(n_names), 1)
-    (n0, c0) = AUTO_CAP_ANCHORS[0]
-    if n <= n0:
-        return int(c0)
-    cap = c0
-    for (n1, c1) in AUTO_CAP_ANCHORS[1:]:
-        if n <= n1:
-            f = math.log10(n / n0) / math.log10(n1 / n0)
-            return max(int(AUTO_CAP_ANCHORS[0][1]), round(c0 + f * (c1 - c0)))
-        n0, c0, cap = n1, c1, c1
-    # extrapolate the LAST segment's slope, clamped at the measured max
-    (na, ca), (nb, cb) = AUTO_CAP_ANCHORS[-2], AUTO_CAP_ANCHORS[-1]
-    slope = (cb - ca) / math.log10(nb / na)
-    cap = cb + slope * math.log10(n / nb)
-    return min(AUTO_CAP_MAX, round(cap))
-
-
 def refined_components(
     matches: DataFrame,
     src: str = "src",
     dst: str = "dst",
     prob_col: str = "probability",
-    max_component: int = 100,
-    ladder: tuple[float, ...] = (0.90, 0.95, 0.99),
+    max_component: int = MAX_COMPONENT,
+    ladder: tuple[float, ...] = LADDER,
     driver_max_edges: int = 1_000_000,
     louvain_max_edges: int = 1_000_000,
     evidence_min_cosine: float = EVIDENCE_MIN_COSINE,
     evidence_max_align: float = EVIDENCE_MAX_ALIGN,
-    evidence_min_size: int | None = None,
+    evidence_min_size: int | None = EVIDENCE_MIN_SIZE,
 ) -> DataFrame:
     """Connected components with per-component threshold refinement — the
     scale guard against transitive snowballing.
@@ -912,7 +880,7 @@ def refined_components(
        still-oversized components an edge survives only with distinctive
        shared evidence — an IDF-weighted shared token (cosine) or a
        near-exact string relation (align_edit <= 1).  ``evidence_min_size``
-       (default None = ``max_component``) lowers the size at which THIS
+       (None = ``max_component``) lowers the size at which THIS
        rung applies: the measured FP mass at fixture scale sits in
        SMALL mixed clusters (3-5 names) glued by evidence-free
        0.95-0.99 edges that never face the ladder — see
@@ -934,27 +902,17 @@ def refined_components(
     bigger than that is kept, loudly countable in the component-size
     metrics, not silently split or a stage failure.  Labels stay
     min-name (deterministic); components under the cap are byte-identical
-    to plain ``connected_components``.
+    to plain ``connected_components``.  The defaults are the shipped
+    configuration (:data:`LADDER`, :data:`MAX_COMPONENT`,
+    :data:`EVIDENCE_MIN_SIZE`).
     """
-    assert list(ladder) == sorted(ladder), (
-        "ladder must ascend: a descending rung would re-merge components "
-        f"the previous rung split ({ladder})"
-    )
+    _check_ladder(ladder)
     retired: list[DataFrame] = []
 
     def _ckpt(df: DataFrame) -> DataFrame:
         out = df.localCheckpoint()
         retired.append(out)
         return out
-
-    def _done(result: DataFrame) -> DataFrame:
-        for df in retired:
-            if df is not result:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-        return result
 
     edges = matches.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     # Size-gated driver fast path (same bound as connected_components):
@@ -1133,4 +1091,5 @@ def refined_components(
             .unionByName(sub)
             .unionByName(singles)
         )
-    return _done(comp)
+    _unpersist(retired, keep=comp)
+    return comp

@@ -1,12 +1,13 @@
-"""Louvain community detection — the reference-parity clustering option.
+"""Louvain community detection — the reference's clustering, as an operator.
 
 The reference clusters its match graph with NetworkX
 ``louvain_communities`` (entity_resolution.py:268 in
-vietexob/name-matching).  The pipeline's default here is connected
-components (the distributed-correct "transitive clustering" semantics the
-north rule names, operators/clustering.py), and on threshold-0.85 alias
-graphs — near-cliques — the two agree.  This module supplies the exact
-Louvain semantics for users who want reference parity: the standard
+vietexob/name-matching).  The pipeline here clusters with
+subsumption-aware refined connected components (operators/clustering.py);
+on threshold-0.85 alias graphs — near-cliques — CC and Louvain agree.
+This module supplies the exact Louvain semantics as an operator: the
+refinement's final step re-clusters the components still over the cap
+with it, and the ``m6b_louvain`` query runs it alone.  It is the standard
 two-phase modularity optimization (Blondel, Guillaume, Lambiotte,
 Lefebvre, "Fast unfolding of communities in large networks", J. Stat.
 Mech. 2008), implemented from scratch, made DETERMINISTIC by visiting

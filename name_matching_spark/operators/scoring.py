@@ -38,6 +38,11 @@ _SCORE_SCHEMA = ", ".join(
 # score_pairs(keep_features=False).
 EVIDENCE_COLS = ("cosine_sim", "align_edit", "token_weakest_link")
 
+# Embedding cosine at or above which a pair is a MATCH whatever its string
+# probability (score_pairs' embedding OR-rule).  The clustering evidence
+# rung reads the same value as near-exact evidence (pipeline.py).
+EMB_MATCH_COSINE = 0.95
+
 # Executor-side artifact cache: parse JSON once per python worker.
 _ARTIFACT_CACHE: dict = {}
 
@@ -145,7 +150,6 @@ def score_pairs(
     name_x: str = "name_x",
     name_y: str = "name_y",
     keep_features: bool = True,
-    emb_threshold: float = 0.95,
 ) -> DataFrame:
     """Add feature/probability/prediction columns to a pair DataFrame.
 
@@ -159,9 +163,9 @@ def score_pairs(
     cosine): when the pairs frame carries ``emb_x`` / ``emb_y`` array
     columns (user-supplied vectors joined per name), their cosine is
     computed NATIVELY (zip_with/aggregate — never enters the Python UDF)
-    and a pair whose embedding cosine reaches ``emb_threshold`` is a MATCH
-    even when the string model cannot see it ("IBM" ~ "INTERNATIONAL
-    BUSINESS MACHINES" has zero lexical overlap).  An explicit
+    and a pair whose embedding cosine reaches :data:`EMB_MATCH_COSINE` is
+    a MATCH even when the string model cannot see it ("IBM" ~
+    "INTERNATIONAL BUSINESS MACHINES" has zero lexical overlap).  An explicit
     high-precision OR-rule, not a hidden feature substitution: the GBM's
     trained feature space is untouched, rows with NULL vectors fall back
     to the string decision alone, and without the columns the output is
@@ -208,7 +212,7 @@ def score_pairs(
     if has_emb:
         emb_cos = _vec_cosine(F.col("emb_x"), F.col("emb_y"))
         cols += [emb_cos.alias("emb_cosine")]
-        emb_hit = valid & (F.coalesce(emb_cos, F.lit(-1.0)) >= F.lit(emb_threshold))
+        emb_hit = valid & (F.coalesce(emb_cos, F.lit(-1.0)) >= F.lit(EMB_MATCH_COSINE))
         decision = decision | emb_hit
         # An embedding-verified match must CARRY its confidence into the
         # persisted probability/margin, not just the prediction bit: the

@@ -8,7 +8,8 @@ Spark stages:
               --names---------> distinct normalized names
               --block---------> candidate pairs (token/phonetic/LSH keys)
               --score---------> features + probability + decision @0.85
-              --cluster-------> connected components over matched edges
+              --cluster-------> subsumption-aware refined components of
+                                the match graph (operators/clustering.py)
               --resolve-------> entity table + resolved conversations
 
 Every stage lands in the warehouse with a manifest (rows, per-partition
@@ -40,11 +41,13 @@ from name_matching_spark.operators.canonicalize import canonicalize
 from name_matching_spark.operators.clustering import (
     EVIDENCE_MAX_ALIGN,
     EVIDENCE_MIN_COSINE,
-    connected_components,
+    EVIDENCE_MIN_SIZE,
+    LADDER,
+    MAX_COMPONENT,
     subsumption_aware_components,
 )
 from name_matching_spark.operators.resolve import entity_table, resolve_records
-from name_matching_spark.operators.scoring import score_pairs
+from name_matching_spark.operators.scoring import EMB_MATCH_COSINE, score_pairs
 
 
 class EntityResolutionPipeline:
@@ -56,63 +59,11 @@ class EntityResolutionPipeline:
         max_block: int = 100,
         run_id: str | None = None,
         keep_features: bool = False,
-        clustering: str = "cc",
-        refine_max_component: int | str | None = "auto",
-        refine_ladder: tuple[float, ...] = (
-            0.92, 0.96, 0.99, 0.995, 0.999, 0.9999, 0.99999,
-        ),
-        refine_evidence_min_size: int | None = 2,
-        tfidf_mode: str = "adaptive",
-        tfidf_n_buckets: int = 1 << 20,
     ):
         self.spark = spark
         self.ckpt = CheckpointManager(spark, warehouse, run_id)
         self.threshold = threshold
         self.max_block = max_block
-        # "cc" (default): distributed connected components — the north
-        # rule's transitive clustering.  "louvain": the reference's exact
-        # community semantics (driver-side, size-gated; operators/louvain.py).
-        self.clustering = clustering
-        # Components larger than refine_max_component NAMES are re-clustered
-        # on their internal edges up the threshold ladder (clustering.py:
-        # refined_components) — the guard against transitive mega-merges at
-        # corpus scale.  None disables (pure CC at the base threshold).
-        # Default "auto" derives the cap from the corpus's distinct-name
-        # count AND the ladder shape (clustering.resolve_auto_cap).  The
-        # default LADDER now ends in two margin rungs (0.9999 / 0.99999 —
-        # above 0.999 a rung compares the GBM's raw log-odds margin against
-        # logit(t), because the 4dp probability saturates there), and under
-        # it the three-scale sweep (scripts/cluster_knob_sweep.py,
-        # BENCH/QUALITY.md) measures the F1-best cap as SCALE-INVARIANT at
-        # 4 (~ one entity's alias fan-out): F1 .852/.734/.763 at
-        # 31k/307k/927k distinct names vs .851/.720/.704 for the previous
-        # short-ladder scale-adaptive cap — the margin rungs buy the
-        # discriminating power that larger caps used to.  With a legacy
-        # short ladder (no rung above 0.999) "auto" falls back to the
-        # piecewise log-linear anchors measured for it (4/6/~12).  Recall
-        # is cap-invariant at every scale (the attach recovers whatever a
-        # tighter cap sheds), so the cap buys precision only.
-        if isinstance(refine_max_component, str) and refine_max_component != "auto":
-            raise ValueError(
-                "refine_max_component must be an int, None, or the string "
-                f"'auto'; got {refine_max_component!r}"
-            )
-        self.refine_max_component = refine_max_component
-        self.refine_ladder = tuple(refine_ladder)
-        # Size at which the EVIDENCE rung applies (None = the ladder cap;
-        # default 2 = every multi-name component).  The measured FP mass at
-        # fixture scale sits in SMALL mixed clusters (3-5 names) glued by
-        # evidence-free 0.95-0.99 edges the ladder never sees; pruning any
-        # glue edge that carries neither a shared informative token nor a
-        # near-exact string relation is the best measured precision/recall
-        # trade at BOTH quality scales (10k F1 0.793 -> 0.826, 100k
-        # 0.704 -> 0.736 — BENCH/QUALITY.md sweep).
-        self.refine_evidence_min_size = refine_evidence_min_size
-        # "adaptive": corpus-adaptive vocabulary (every term, 1M ceiling).
-        # "hashed": hashing-trick TF-IDF — O(n_buckets) memory regardless
-        # of corpus term diversity; the fit for corpora past the ceiling.
-        self.tfidf_mode = tfidf_mode
-        self.tfidf_n_buckets = int(tfidf_n_buckets)
         # keep_features=True persists every per-pair feature column in the
         # scored_pairs checkpoint (debugging/analysis); default off — at
         # scale it multiplies the Arrow + parquet volume ~15x.
@@ -149,15 +100,10 @@ class EntityResolutionPipeline:
             "corpus_md5": hashlib.md5(
                 json.dumps(corpus, sort_keys=True).encode()
             ).hexdigest(),
-            # fit config is part of the identity so a mode/cap change
-            # invalidates the sidecar — derived from the REAL parameter
-            # values, never literals, so changing n_buckets or the adaptive
-            # ceiling cannot silently serve a stale vocabulary on resume
-            "fit_cfg": (
-                f"hashed-{self.tfidf_n_buckets}"
-                if self.tfidf_mode == "hashed"
-                else f"adaptive-{ADAPTIVE_VOCAB_CEILING}"
-            ),
+            # the fit config is part of the identity, derived from the
+            # real ceiling, so changing it cannot silently serve a stale
+            # vocabulary on resume
+            "fit_cfg": f"adaptive-{ADAPTIVE_VOCAB_CEILING}",
         }
         if os.path.exists(path) and os.path.exists(meta_path):
             try:
@@ -176,29 +122,18 @@ class EntityResolutionPipeline:
             ):
                 return stored_json, stored
         t0 = time.time()
-        if self.tfidf_mode == "hashed":
-            from name_matching_spark.functions.tfidf import HashedTfidfModel
-
-            tfidf = HashedTfidfModel.fit_spark(
-                names,
-                name_col="name",
-                extra_corpus=corpus,
-                n_buckets=self.tfidf_n_buckets,
-            )
-        else:
-            tfidf = TfidfModel.fit_spark(
-                names, name_col="name", extra_corpus=corpus, max_features=None
-            )
+        tfidf = TfidfModel.fit_spark(
+            names, name_col="name", extra_corpus=corpus, max_features=None
+        )
         payload = tfidf.to_json()
         meta = {
             **fingerprint,
             "json_md5": hashlib.md5(payload.encode()).hexdigest(),
-            # EFFECTIVE fit (may differ from the requested fit_cfg: the
-            # adaptive fit auto-switches to hashed past its term ceiling).
-            # Deterministic in (corpus, input, fit_cfg) — all compared
-            # fingerprint keys — so serving a stored artifact is safe;
-            # recorded for observability and flows into the scored_pairs
-            # fingerprint via json_md5 (a mode flip re-scores).
+            # EFFECTIVE fit: the adaptive fit auto-switches to hashed past
+            # its term ceiling.  Deterministic in (corpus, input, fit_cfg)
+            # — all compared fingerprint keys — so serving a stored
+            # artifact is safe; recorded for observability and flows into
+            # the scored_pairs fingerprint via json_md5 (a switch re-scores).
             "effective_fit": (
                 f"hashed-{tfidf.n_buckets}"
                 if hasattr(tfidf, "n_buckets")
@@ -223,7 +158,7 @@ class EntityResolutionPipeline:
         PRE-COMPUTED vectors for (a subset of) normalized names — the
         reference's sentence-embedding F7 channel without the model
         dependency.  Joined per pair side before scoring; pairs whose
-        vectors reach the scorer's ``emb_threshold`` cosine match even
+        vectors reach the scorer's ``EMB_MATCH_COSINE`` cosine match even
         with zero lexical overlap (operators/scoring.py).  Names without
         a vector fall back to the string decision alone."""
         # Input fingerprint: the normalized-plan hash of the input table.
@@ -388,94 +323,53 @@ class EntityResolutionPipeline:
             # surface worker failures; completes ~with the scorer
             background["block_metrics"].result()
             matches = scored.where(F.col("prediction") == 1)
-            # Resolve the scale-adaptive ladder cap once, against the
-            # checkpointed names table, so the resolved value (not the "auto"
-            # marker) lands in the components-stage fingerprint — a corpus
-            # grown across a cap boundary invalidates the stage on resume.
-            refine_cap = self.refine_max_component
-            if refine_cap == "auto":
-                if self.clustering == "louvain":
-                    # Louvain ignores the ladder cap — don't spend a count()
-                    # job or record a misleading resolved value in the manifest.
-                    refine_cap = None
-                else:
-                    from name_matching_spark.operators.clustering import resolve_auto_cap
 
-                    # the names stage manifest already paid for this count
-                    n_names = self.ckpt.stored_rows("names")
-                    if n_names is None:
-                        n_names = names.count()
-                    refine_cap = resolve_auto_cap(n_names, self.refine_ladder)
-            if self.clustering == "louvain":
-                from name_matching_spark.operators.louvain import louvain_communities
-
-                def cluster_fn():
-                    return louvain_communities(
-                        matches.select(
-                            F.col("name_x").alias("src"), F.col("name_y").alias("dst")
-                        )
-                    )
-
-            elif refine_cap is not None:
-
-                def cluster_fn():
-                    # cosine_sim / align_edit / token_weakest_link ride along
-                    # for the evidence rung and subsumption split (score_pairs
-                    # always emits them, keep_features or not).  An
-                    # embedding-verified edge (semantic channel) counts as
-                    # near-exact evidence: without this the evidence rung would
-                    # cut exactly the zero-lexical-overlap matches the channel
-                    # exists to keep.
-                    align = F.col("align_edit")
-                    if "emb_cosine" in matches.columns:
-                        align = F.when(
-                            F.coalesce(F.col("emb_cosine"), F.lit(-1.0)) >= 0.95,
-                            F.lit(0.0),
-                        ).otherwise(align)
-                    m = matches.select(
-                        F.col("name_x").alias("src"),
-                        F.col("name_y").alias("dst"),
-                        "probability",
-                        "cosine_sim",
-                        align.alias("align_edit"),
-                        "token_weakest_link",
-                        # raw margin (when the checkpoint carries it): ladder
-                        # rungs above 0.999 and attach tie-breaks rank with it
-                        # where the 4dp probability has saturated
-                        *(["margin"] if "margin" in matches.columns else []),
-                    )
-                    # Subsumption edges (initial/diminutive/prefix-extension
-                    # forms) are pair-level matches but ambiguous CLUSTER
-                    # evidence: they attach to a cluster, never glue two
-                    # (isolated all-subsumption families still cluster
-                    # among themselves under the same cap).  Measured pair
-                    # precision at 100k entities is 0.66 with this routing
-                    # and 0.13 when they glue (ambiguous initial forms weld
-                    # 800-name mega-clusters; BENCH/QUALITY.md).
-                    return subsumption_aware_components(
-                        m,
-                        max_component=refine_cap,
-                        ladder=self.refine_ladder,
-                        evidence_min_size=self.refine_evidence_min_size,
-                    )
-
-            else:
-
-                def cluster_fn():
-                    return connected_components(
-                        matches.select(
-                            F.col("name_x").alias("src"), F.col("name_y").alias("dst")
-                        )
-                    )
+            def cluster_fn():
+                # cosine_sim / align_edit / token_weakest_link ride along
+                # for the evidence rung and subsumption split (score_pairs
+                # always emits them, keep_features or not).  An
+                # embedding-verified edge (semantic channel) counts as
+                # near-exact evidence: without this the evidence rung would
+                # cut exactly the zero-lexical-overlap matches the channel
+                # exists to keep.
+                align = F.col("align_edit")
+                if "emb_cosine" in matches.columns:
+                    align = F.when(
+                        F.coalesce(F.col("emb_cosine"), F.lit(-1.0))
+                        >= EMB_MATCH_COSINE,
+                        F.lit(0.0),
+                    ).otherwise(align)
+                m = matches.select(
+                    F.col("name_x").alias("src"),
+                    F.col("name_y").alias("dst"),
+                    "probability",
+                    "cosine_sim",
+                    align.alias("align_edit"),
+                    "token_weakest_link",
+                    # raw margin (when the checkpoint carries it): ladder
+                    # rungs above 0.999 and attach tie-breaks rank with it
+                    # where the 4dp probability has saturated
+                    *(["margin"] if "margin" in matches.columns else []),
+                )
+                # Subsumption edges (initial/diminutive/prefix-extension
+                # forms) are pair-level matches but ambiguous CLUSTER
+                # evidence: they attach to a cluster, never glue two
+                # (isolated all-subsumption families still cluster
+                # among themselves under the same cap).  Measured pair
+                # precision at 100k entities is 0.66 with this routing
+                # and 0.13 when they glue (ambiguous initial forms weld
+                # 800-name mega-clusters; BENCH/QUALITY.md).  The
+                # refinement runs its shipped configuration, the
+                # clustering module's LADDER / MAX_COMPONENT /
+                # EVIDENCE_MIN_SIZE.
+                return subsumption_aware_components(m)
 
             cluster_params = {
                 **score_params,
-                "clustering": self.clustering,
-                "refine_max_component": refine_cap,
-                "refine_cap_mode": "auto" if self.refine_max_component == "auto" else "fixed",
-                "refine_ladder": list(self.refine_ladder),
-                "refine_evidence_rung": f"cos{EVIDENCE_MIN_COSINE}|align{EVIDENCE_MAX_ALIGN}",
-                "refine_evidence_min_size": self.refine_evidence_min_size,
+                "max_component": MAX_COMPONENT,
+                "ladder": list(LADDER),
+                "evidence_rung": f"cos{EVIDENCE_MIN_COSINE}|align{EVIDENCE_MAX_ALIGN}",
+                "evidence_min_size": EVIDENCE_MIN_SIZE,
             }
             components = self._stage(
                 "components",
@@ -483,10 +377,10 @@ class EntityResolutionPipeline:
                 inputs=["scored_pairs"],
                 params=cluster_params,
             )
-            # Downstream-of-clustering stages must carry the clustering choice in
-            # their params too: otherwise a resume with clustering='louvain'
-            # recomputes components but silently serves stale entities/resolved
-            # tables built from the old CC components.
+            # Downstream-of-clustering stages carry the clustering params
+            # too: otherwise a resume after a clustering change recomputes
+            # components but silently serves stale entities/resolved
+            # tables built from the old components.
             entities = self._stage(
                 "entities",
                 lambda: entity_table(components, names),

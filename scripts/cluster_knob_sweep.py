@@ -69,8 +69,8 @@ def main() -> None:
         if len(sys.argv) > 2:
             # cap-only sweep: `python scripts/cluster_knob_sweep.py 300000 5,6,7,8
             # [lm2]` — optional third arg switches to the margin-rung
-            # ladder (the pipeline default) to re-anchor
-            # refine_max_component="auto".
+            # ladder (clustering.LADDER) to re-measure the shipped cap
+            # clustering.MAX_COMPONENT.
             mode = sys.argv[3] if len(sys.argv) > 3 else ""
             lad = _LM2 if mode == "lm2" else _L
             grid = [

@@ -15,9 +15,6 @@ the truth-x-resolved contingency counts (no pair materialization):
 
 Usage: python scripts/er_quality_at_scale.py [n_entities ...]
 (defaults: 10000 100000)
-Env: SPARK_GRAFT_TFIDF_MODE=hashed to run the hashing-trick TF-IDF
-pipeline variant instead of the adaptive vocabulary (A/B for
-BENCH/QUALITY.md).
 """
 
 from __future__ import annotations
@@ -99,9 +96,8 @@ def main() -> None:
             write_fixture(fixture, n_entities=n, convs_per_entity=5, seed=42)
         transcripts = spark.read.parquet(os.path.join(fixture, "transcripts.parquet"))
         wh = tempfile.mkdtemp(prefix="nms_quality_")
-        mode = os.environ.get("SPARK_GRAFT_TFIDF_MODE", "adaptive")
         try:
-            pipe = EntityResolutionPipeline(spark, wh, tfidf_mode=mode)
+            pipe = EntityResolutionPipeline(spark, wh)
             stages = pipe.run(transcripts)
             m = pair_f1(
                 spark,
@@ -109,7 +105,6 @@ def main() -> None:
                 os.path.join(fixture, "truth.parquet"),
             )
             m["n_entities_in"] = n
-            m["tfidf_mode"] = mode
             print(json.dumps(m), flush=True)
         finally:
             shutil.rmtree(wh, ignore_errors=True)

@@ -106,6 +106,63 @@ def test_cc_distributed_star_matches_driver_union_find(spark):
     assert star["k5"] == "k0"
 
 
+def test_cc_star_rounds_then_driver_handoff(spark, monkeypatch):
+    """With ``0 < driver_max_edges < edges`` the star alternation runs at
+    least one round, then hands the contracted graph to the driver's
+    union-find; the labels equal the driver-only run."""
+    import name_matching_spark.operators.clustering as clustering_mod
+
+    nodes = [f"n{i:02d}" for i in range(40)]
+    # a chain with chords: 114 edges, which contract toward a 39-edge star
+    edges = [
+        (nodes[i], nodes[j]) for i in range(40) for j in range(i + 1, min(i + 4, 40))
+    ]
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    driver = {r["name"]: r["component"] for r in connected_components(df).collect()}
+    calls = {"rounds": 0, "union_find": 0}
+    small_star = clustering_mod._small_star
+    union_find = clustering_mod._driver_union_find
+
+    def counting_small_star(e):
+        calls["rounds"] += 1
+        return small_star(e)
+
+    def counting_union_find(rows):
+        calls["union_find"] += 1
+        return union_find(rows)
+
+    monkeypatch.setattr(clustering_mod, "_small_star", counting_small_star)
+    monkeypatch.setattr(clustering_mod, "_driver_union_find", counting_union_find)
+    handoff = {
+        r["name"]: r["component"]
+        for r in connected_components(df, driver_max_edges=60).collect()
+    }
+    assert calls["rounds"] >= 1 and calls["union_find"] == 1, calls
+    assert handoff == driver
+    assert set(driver.values()) == {"n00"}
+
+
+@pytest.mark.parametrize("driver_max_edges", [1_000_000, 0], ids=["driver", "distributed"])
+@pytest.mark.parametrize("fn", ["refined_components", "subsumption_aware_components"])
+def test_clustering_rejects_descending_ladder(spark, fn, driver_max_edges):
+    """A descending ladder would re-merge what an earlier rung split; both
+    operators refuse it with ``ValueError`` on either path."""
+    import name_matching_spark.operators.clustering as clustering_mod
+
+    m = spark.createDataFrame(
+        [
+            ("X Y", "X Z", 0.97, 0.5, 2.0, 1.0, 3.5),
+            ("A B", "A C", 0.95, 0.5, 0.0, 0.9, 3.0),
+        ],
+        "src string, dst string, probability double, cosine_sim double, "
+        "align_edit double, token_weakest_link double, margin double",
+    )
+    with pytest.raises(ValueError, match="ascend"):
+        getattr(clustering_mod, fn)(
+            m, ladder=(0.99, 0.90), driver_max_edges=driver_max_edges
+        ).collect()
+
+
 def test_refined_components_splits_weak_bridges(spark):
     """Threshold-ladder refinement: an over-cap component is re-clustered
     on its strong internal edges; weakly-bridged groups split, members
@@ -243,7 +300,7 @@ def test_subsumption_aware_driver_matches_distributed(spark):
         "src string, dst string, probability double, cosine_sim double, "
         "align_edit double, token_weakest_link double",
     )
-    kw = dict(max_component=12, ladder=(0.90, 0.95))
+    kw = dict(max_component=12, ladder=(0.90, 0.95), evidence_min_size=None)
     fast = {
         r["name"]: r["component"]
         for r in subsumption_aware_components(m, **kw).collect()
@@ -264,11 +321,10 @@ def test_subsumption_aware_driver_matches_distributed(spark):
 
 def test_refined_components_evidence_min_size(spark):
     """``evidence_min_size`` lowers the bound at which the EVIDENCE rung
-    applies: below it (default None = the ladder cap) small mixed
-    clusters glued by evidence-free edges never face any rung.  With the
-    bound at 2, a 3-name component keeps only evidence-carrying edges;
-    2-name components stay untouched; the default leaves all of them to
-    plain CC.  Driver and distributed paths must agree."""
+    applies: below it (None = the ladder cap) small mixed clusters glued
+    by evidence-free edges never face any rung.  With the bound at 2, a
+    3-name component keeps only evidence-carrying edges; 2-name
+    components stay untouched; None leaves all of them to plain CC.  Driver and distributed paths must agree."""
     from name_matching_spark.operators.clustering import refined_components
 
     rows = [
@@ -284,9 +340,10 @@ def test_refined_components_evidence_min_size(spark):
     )
     kw = dict(max_component=10, ladder=(0.92,))
     dflt = {
-        r["name"]: r["component"] for r in refined_components(m, **kw).collect()
+        r["name"]: r["component"]
+        for r in refined_components(m, evidence_min_size=None, **kw).collect()
     }
-    # default: every component is under the cap -> plain CC, no rung runs
+    # None: every component is under the cap -> plain CC, no rung runs
     assert dflt["A"] == dflt["B"] == dflt["C"] == "A"
     assert dflt["X"] == dflt["Y"] == "X"
     ems = {
@@ -439,7 +496,7 @@ def test_absent_attach_vote(spark):
         "src string, dst string, probability double, cosine_sim double, "
         "align_edit double, token_weakest_link double, margin double",
     )
-    kw = dict(max_component=6, ladder=(0.90, 0.95))
+    kw = dict(max_component=6, ladder=(0.90, 0.95), evidence_min_size=None)
     fast = {
         r["name"]: r["component"]
         for r in subsumption_aware_components(m, **kw).collect()
@@ -458,8 +515,8 @@ def test_absent_attach_vote(spark):
 @pytest.mark.slow
 def test_subsumption_aware_twins_agree_at_shipped_settings(spark, tmp_path):
     """Both clustering twins, fed the scored matches of a 60-entity
-    fixture with the pipeline's own arguments (auto cap, default ladder,
-    evidence_min_size=2), must give the same labels.
+    fixture at the shipped settings (no configuration arguments, as the
+    pipeline calls them), must give the same labels.
 
     At this scale the graph reaches the evidence rung, the
     subsumption-edge singleton vote and the residual families.  It does
@@ -470,7 +527,6 @@ def test_subsumption_aware_twins_agree_at_shipped_settings(spark, tmp_path):
 
     from name_matching_spark.datagen import write_fixture
     from name_matching_spark.operators.clustering import (
-        resolve_auto_cap,
         subsumption_aware_components,
         subsumption_edge_cond,
     )
@@ -494,19 +550,12 @@ def test_subsumption_aware_twins_agree_at_shipped_settings(spark, tmp_path):
     # the fixture exercises both edge kinds
     assert m.where(subsumption_edge_cond()).count() > 0
     assert m.where(~subsumption_edge_cond()).count() > 0
-    kw = dict(
-        max_component=resolve_auto_cap(stages["names"].count(), pipe.refine_ladder),
-        ladder=pipe.refine_ladder,
-        evidence_min_size=2,
-    )
-    assert pipe.refine_max_component == "auto"
-    assert pipe.refine_evidence_min_size == 2
 
     def labels(df):
         return {r["name"]: r["component"] for r in df.collect()}
 
-    fast = labels(subsumption_aware_components(m, **kw))
-    dist = labels(subsumption_aware_components(m, driver_max_edges=0, **kw))
+    fast = labels(subsumption_aware_components(m))
+    dist = labels(subsumption_aware_components(m, driver_max_edges=0))
     assert dist == fast
     # refinement and attachment changed something: not plain CC
     assert fast != labels(connected_components(m.select("src", "dst")))
@@ -537,63 +586,3 @@ def test_subsumption_aware_rejects_retired_options(spark, retired):
     )
     with pytest.raises(TypeError):
         subsumption_aware_components(m, **retired)
-
-
-def test_resolve_auto_cap_rule():
-    """Scale-adaptive ladder cap.  SHORT (legacy) ladder: piecewise
-    log-linear through the THREE sweep optima (cap 4 at ~31k distinct
-    names, 6 at ~307k, 12 at ~927k — BENCH/QUALITY.md), floored at 4,
-    clamped at 16 (the largest measured cap) past the last anchor.
-    MARGIN-RUNG ladder (the pipeline default, rungs above 0.999): the
-    same sweep measures the optimum as scale-invariant at 4."""
-    from name_matching_spark.operators.clustering import resolve_auto_cap
-
-    assert resolve_auto_cap(30_988) == 4    # 10k-entity fixture anchor
-    assert resolve_auto_cap(306_572) == 6   # 100k-entity fixture anchor
-    assert resolve_auto_cap(927_401) == 12  # 300k-entity fixture anchor
-    assert resolve_auto_cap(98_000) == 5    # geometric midpoint of segment 1
-    assert resolve_auto_cap(1) == 4         # tiny corpora floor at the anchor
-    assert resolve_auto_cap(10**9) == 16    # extrapolation clamps at 16
-    caps = [resolve_auto_cap(n) for n in (10, 10**4, 10**5, 10**6, 10**8)]
-    assert caps == sorted(caps)
-    # short ladder passed explicitly behaves like no ladder
-    short = (0.92, 0.96, 0.99, 0.995, 0.999)
-    assert resolve_auto_cap(306_572, short) == 6
-    # margin-rung ladder: scale-invariant cap 4 at every measured scale
-    ext = short + (0.9999, 0.99999)
-    assert [resolve_auto_cap(n, ext) for n in (1, 30_988, 306_572, 927_401, 10**9)] == [4] * 5
-
-    from name_matching_spark.pipeline import EntityResolutionPipeline
-    import inspect
-
-    default_ladder = inspect.signature(EntityResolutionPipeline).parameters[
-        "refine_ladder"
-    ].default
-    assert any(t > 0.999 for t in default_ladder), (
-        "pipeline default ladder is expected to carry margin rungs"
-    )
-
-
-@pytest.mark.slow
-def test_pipeline_auto_cap_resolves_and_fingerprints(spark, tmp_path):
-    """refine_max_component="auto" resolves to a concrete cap from the
-    names count, and the RESOLVED integer (not the marker) lands in the
-    components-stage manifest so resume invalidates across cap changes."""
-    import json
-    import os
-
-    from name_matching_spark.datagen import write_fixture
-    from name_matching_spark.pipeline import EntityResolutionPipeline
-
-    fixture = str(tmp_path / "fixture")
-    write_fixture(fixture, n_entities=40, convs_per_entity=3, seed=7)
-    wh = str(tmp_path / "warehouse")
-    pipe = EntityResolutionPipeline(spark, wh, refine_max_component="auto")
-    transcripts = spark.read.parquet(os.path.join(fixture, "transcripts.parquet"))
-    stages = pipe.run(transcripts)
-    assert stages["resolved_conversations"].count() > 0
-    with open(pipe.ckpt.manifest_path("components")) as f:
-        params = json.load(f)["params"]
-    # ~100 names at 40 entities -> well under the 31k anchor -> floor cap 4
-    assert params["refine_max_component"] == 4
-    assert params["refine_cap_mode"] == "auto"

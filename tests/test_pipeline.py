@@ -126,6 +126,12 @@ def test_checkpoint_resume(spark, tmp_path):
         man = json.load(f)
     assert man["rows"] == len(ents2)
     assert man["partitions"] and all("rows" in p for p in man["partitions"])
+    # the components manifest records the shipped refinement configuration
+    with open(p2.ckpt.manifest_path("components")) as f:
+        params = json.load(f)["params"]
+    assert params["max_component"] == 4
+    assert params["ladder"] == [0.92, 0.96, 0.99, 0.995, 0.999, 0.9999, 0.99999]
+    assert params["evidence_min_size"] == 2
 
 
 @pytest.mark.slow
@@ -151,13 +157,15 @@ def test_checkpoint_invalidates_on_param_change(spark, tmp_path):
     # Upstream stages also resumed.
     assert json.load(open(p2.ckpt.manifest_path("conversations")))["run_id"] != p2.ckpt.run_id
 
-    # Different threshold -> scored_pairs and downstream recompute, while
-    # the input-only stages still resume.
+    # Different threshold -> scored_pairs and every stage downstream of it
+    # recompute (serving entities built from the old components would be
+    # silent staleness), while the input-only stages still resume.
     p3 = EntityResolutionPipeline(spark, wh, threshold=0.99)
     p3.run(transcripts)
-    man3 = json.load(open(p3.ckpt.manifest_path("scored_pairs")))
-    assert man3["run_id"] == p3.ckpt.run_id
-    assert man3["params"]["threshold"] == 0.99
+    for stage in ["scored_pairs", "components", "entities", "resolved_conversations"]:
+        man3 = json.load(open(p3.ckpt.manifest_path(stage)))
+        assert man3["run_id"] == p3.ckpt.run_id, f"{stage} served stale results"
+        assert man3["params"]["threshold"] == 0.99
     conv3 = json.load(open(p3.ckpt.manifest_path("conversations")))
     assert conv3["run_id"] != p3.ckpt.run_id  # untouched by the new threshold
 
@@ -205,34 +213,6 @@ def test_tfidf_sidecar_invalidates_on_input_change(spark, tmp_path):
     man = json.load(open(p3.ckpt.manifest_path("scored_pairs")))
     assert man["run_id"] == p3.ckpt.run_id
     assert man["params"]["tfidf"] == meta_b
-
-
-def test_pipeline_hashed_tfidf_mode(spark, tmp_path):
-    """tfidf_mode="hashed" runs the whole pipeline on the hashing-trick
-    model (the past-the-vocab-ceiling fit): the scorer loads it through
-    the polymorphic artifact dispatch, entities come out, and the hashed
-    fit resumes under its own fit_cfg identity."""
-    import json
-
-    fixture = str(tmp_path / "fx_h")
-    write_fixture(fixture, n_entities=20, convs_per_entity=3, seed=11)
-    wh = str(tmp_path / "wh_h")
-    transcripts = spark.read.parquet(os.path.join(fixture, "transcripts.parquet"))
-    p1 = EntityResolutionPipeline(spark, wh, tfidf_mode="hashed")
-    out = p1.run(transcripts)
-    assert out["entities"].count() > 0
-    with open(os.path.join(wh, "tfidf.json")) as f:
-        assert json.load(f)["kind"] == "hashed"
-    with open(os.path.join(wh, "tfidf.json.meta")) as f:
-        assert json.load(f)["fit_cfg"] == f"hashed-{1 << 20}"
-    # resume under the same mode serves the sidecar (no refit timing)
-    p2 = EntityResolutionPipeline(spark, wh, tfidf_mode="hashed")
-    p2.run(transcripts)
-    assert "tfidf" not in p2.timings
-    # switching mode invalidates (fit_cfg mismatch -> refit)
-    p3 = EntityResolutionPipeline(spark, wh)
-    p3.run(transcripts)
-    assert "tfidf" in p3.timings
 
 
 def test_pipeline_surfaces_worker_failure_with_main_failure(
@@ -287,33 +267,6 @@ def test_pipeline_empty_input(spark, tmp_path):
     stages = EntityResolutionPipeline(spark, str(tmp_path / "wh_empty")).run(empty)
     assert stages["entities"].count() == 0
     assert stages["resolved_conversations"].count() == 0
-
-
-@pytest.mark.slow
-def test_clustering_change_invalidates_downstream(spark, tmp_path):
-    """Resuming the same warehouse with clustering='louvain' must recompute
-    components AND the downstream entities/resolved tables — serving
-    entities built from the old CC components would be silent staleness
-    (the round-2 advisor finding)."""
-    import json
-
-    fixture = str(tmp_path / "fx3")
-    write_fixture(fixture, n_entities=12, convs_per_entity=3, seed=13)
-    wh = str(tmp_path / "wh3")
-    transcripts = spark.read.parquet(os.path.join(fixture, "transcripts.parquet"))
-    p1 = EntityResolutionPipeline(spark, wh, clustering="cc")
-    p1.run(transcripts)
-    p2 = EntityResolutionPipeline(spark, wh, clustering="louvain")
-    p2.run(transcripts)
-    for stage in ["components", "entities", "resolved_conversations"]:
-        man = json.load(open(p2.ckpt.manifest_path(stage)))
-        assert man["run_id"] == p2.ckpt.run_id, f"{stage} served stale results"
-        assert man["params"]["clustering"] == "louvain"
-    # clustering-independent upstream stages still resume
-    assert (
-        json.load(open(p2.ckpt.manifest_path("scored_pairs")))["run_id"]
-        != p2.ckpt.run_id
-    )
 
 
 def test_embedding_channel_scorer_or_rule(spark):
