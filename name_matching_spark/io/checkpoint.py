@@ -24,6 +24,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_MANIFEST.json"
 
@@ -87,10 +88,16 @@ class CheckpointManager:
     def is_complete(self, name: str) -> bool:
         return os.path.exists(self.manifest_path(name))
 
-    def read(self, name: str) -> DataFrame:
+    def read(self, name: str, schema: StructType | None = None) -> DataFrame:
+        """The stored table of a stage.  The parquet layout reads with
+        ``schema`` (default: the one the manifest recorded), so no job
+        re-infers it from the part files' footers."""
         if self.table_format == "catalog":
             return self.spark.read.table(self._table_ident(name))
-        return self.spark.read.parquet(self._stage_dir(name))
+        if schema is None:
+            schema = self._stored_schema(name)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self._stage_dir(name))
 
     def _write(self, out: DataFrame, name: str) -> None:
         if self.table_format == "catalog":
@@ -125,6 +132,12 @@ class CheckpointManager:
         except Exception:
             return None
 
+    def _stored_schema(self, name: str) -> StructType | None:
+        if not self.is_complete(name):
+            return None
+        with open(self.manifest_path(name)) as f:
+            return StructType.fromJson(json.load(f)["schema"])
+
     # -- the stage runner ------------------------------------------------------
 
     def stage(
@@ -152,7 +165,7 @@ class CheckpointManager:
         t0 = time.time()
         out = fn()
         self._write(out, name)
-        stored = self.read(name)
+        stored = self.read(name, out.schema)
         part_counts = self._partition_lineage(stored, name)
         rows = sum(p["rows"] for p in part_counts)
         manifest = {

@@ -11,16 +11,18 @@ existing entity table with the same Arrow-batched scorer the batch
 pipeline uses.
 
 Design: stream-side work is append-only and bounded per micro-batch; the
-entity table is a broadcast-joined lookup refreshed from the batch
-pipeline's warehouse.  Names that match an existing entity adopt it; the
-rest are emitted as pending singletons for the next batch-pipeline run to
-cluster (streaming transitive closure would need unbounded state, so the
-lambda split batch=clustering / stream=assignment is deliberate).
+entity table is an in-memory index (member map + token postings) built on
+the driver once per refresh of the batch pipeline's warehouse and shipped
+in one broadcast, so a micro-batch's assignment is one Spark job of one
+task.  Names that match an existing entity adopt it; the rest are emitted
+as pending singletons for the next batch-pipeline run to cluster
+(streaming transitive closure would need unbounded state, so the lambda
+split batch=clustering / stream=assignment is deliberate).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -28,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
+    BooleanType,
     IntegerType,
     StringType,
     StructField,
@@ -35,6 +38,8 @@ from pyspark.sql.types import (
 )
 
 from name_matching_spark.functions.normalize import normalize_text_col
+# Called through this module's name: perfbench's trace wraps it here to
+# count the candidate pairs of each micro-batch.
 from name_matching_spark.operators.scoring import score_pairs
 
 # Shortest token that blocks a stream name against an entity: the index
@@ -164,50 +169,88 @@ def stream_dedup(
 
 
 class EntityTokenIndex:
-    """The stream-side blocking index over the entity table: the exploded
-    ``(tok, entity_key, cand)`` rows, materialized ONCE per entity-table
-    refresh and reused by every micro-batch.
+    """The stream-side lookup over the entity table, built ONCE per
+    entity-table refresh and shipped to the workers in ONE broadcast that
+    every micro-batch reuses.
 
     The entity table only changes when the batch pipeline reruns, while
-    :func:`assign_stream_batch` fires per trigger — without this, each
-    micro-batch re-scans and re-explodes the full entity table (at design
-    scale that table is large; per-trigger recompute is the cost that
-    kills the lambda split).  ``localCheckpoint`` (eager) truncates the
-    lineage so the explode runs exactly once; when the index is small
-    enough we also attach a broadcast hint so the per-batch token join is
-    map-side, shuffling only the (tiny) micro-batch side."""
+    :func:`assign_stream_batch` fires per trigger, so the index is built
+    on the driver from one collect: the member map (name -> entity_key)
+    for the exact lookup, and the token postings (token -> entities whose
+    canonical name holds it) for blocking.  ``n_rows`` is the number of
+    (token, entity) rows the postings hold, i.e. the size of the exploded
+    token table a join-based index would materialize."""
 
-    def __init__(
-        self,
-        entities: DataFrame,
-        broadcast_max_rows: int = 2_000_000,
-    ):
-        et = (
-            entities.select("entity_key", F.col("resolved_name").alias("cand"))
-            .dropDuplicates(["entity_key"])
-            .withColumn("tok", F.explode(F.split(F.col("cand"), " ")))
-            .where(F.length("tok") >= MIN_TOKEN_LEN)
-        )
-        self.index = et.localCheckpoint()  # eager: explode runs here, once
-        self.n_rows = self.index.count()  # cheap over the checkpointed RDD
-        self.broadcastable = self.n_rows <= broadcast_max_rows
-        # Known-member lookup: the entity table is per NAME, so a stream
-        # name already clustered by the batch pipeline resolves by EXACT
-        # join — scoring it against the cluster's canonical form would
-        # re-litigate (and sometimes lose) a decision the batch already made.
+    def __init__(self, entities: DataFrame):
+        # Known members: the entity table is per NAME, so a stream name
+        # already clustered by the batch pipeline resolves by EXACT lookup
+        # — scoring it against the cluster's canonical form would
+        # re-litigate (and sometimes lose) a decision the batch already
+        # made.  Rows are sorted, so a name listed under several keys (or
+        # a key with several canonical forms) resolves to the smallest,
+        # whatever the table's partitioning.
         member_col = "name" if "name" in entities.columns else "resolved_name"
-        self.members = (
-            entities.select(F.col(member_col).alias("name"), "entity_key")
-            .dropDuplicates(["name"])
-            .localCheckpoint()
+        rows = sorted(
+            (tuple(r) for r in entities.select("entity_key", "resolved_name", member_col)
+             .where(F.col("entity_key").isNotNull()).collect()),
+            key=lambda r: (r[0], r[1] or "", r[2] or ""),
         )
-        self._members_bc = self.members.count() <= broadcast_max_rows
+        members: dict = {}
+        keys: list = []
+        cands: list = []
+        postings: dict = {}
+        for ek, cand, member in rows:
+            if member is not None:
+                members.setdefault(member, ek)
+            if cand is None or (keys and keys[-1] == ek):
+                continue
+            for tok in cand.split(" "):
+                if len(tok) >= MIN_TOKEN_LEN:
+                    postings.setdefault(tok, []).append(len(keys))
+            keys.append(ek)
+            cands.append(cand)
+        self.n_rows = sum(len(v) for v in postings.values())
+        self.key_type = entities.schema["entity_key"].dataType
+        self.broadcast = entities.sparkSession.sparkContext.broadcast(
+            (members, keys, cands, postings)
+        )
 
-    def join_side(self) -> DataFrame:
-        return F.broadcast(self.index) if self.broadcastable else self.index
 
-    def members_side(self) -> DataFrame:
-        return F.broadcast(self.members) if self._members_bc else self.members
+def _block(bc) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """The mapInPandas body over an index broadcast: one row per distinct
+    (conv_id, name) of the partition that the member map resolves
+    (``exact``), else one row per entity sharing a token with the name,
+    else one row with no candidate (the name stays pending)."""
+
+    def block(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        members, keys, cands, postings = bc.value
+        seen: set = set()
+        for pdf in batches:
+            rows = []
+            for conv_id, name in zip(pdf["conv_id"], pdf["name"]):
+                if (conv_id, name) in seen:
+                    continue
+                seen.add((conv_id, name))
+                ek = members.get(name)
+                if ek is not None:
+                    rows.append((conv_id, name, ek, None, True))
+                    continue
+                hits = sorted(
+                    {
+                        i
+                        for tok in (name or "").split(" ")
+                        if len(tok) >= MIN_TOKEN_LEN
+                        for i in postings.get(tok, ())
+                    }
+                )
+                rows += [(conv_id, name, keys[i], cands[i], False) for i in hits]
+                if not hits:
+                    rows.append((conv_id, name, None, None, False))
+            yield pd.DataFrame(
+                rows, columns=["conv_id", "name", "entity_key", "cand", "exact"]
+            )
+
+    return block
 
 
 def assign_stream_batch(
@@ -219,30 +262,36 @@ def assign_stream_batch(
 ) -> DataFrame:
     """foreachBatch body: score each new name against existing entity
     canonical names that share a token (cheap blocking), assign the best
-    match >= threshold, else mark pending.
+    match >= threshold, else mark pending.  One row per distinct
+    ``(conv_id, name)``: ``conv_id, name, entity_key, status``.
 
     entities: the batch pipeline's (entity_key, resolved_name) output, or —
     preferred for a long-running query — a prebuilt :class:`EntityTokenIndex`
-    so the entity-side explode is NOT recomputed every micro-batch."""
+    so the index is NOT rebuilt and re-broadcast every micro-batch.
+
+    The plan is one Spark job of one task.  The micro-batch is coalesced
+    to a single partition (a micro-batch is bounded by its trigger), so
+    the index's ``mapInPandas`` pass sees every copy of a name; it does
+    the exact lookup and the token blocking.  :func:`score_pairs` scores
+    the candidates with the batch pipeline's decision rule and rounding,
+    and the best pick per name aggregates in place.  Correctness does not
+    rest on the single partition: copies of a ``(conv_id, name)`` that
+    reach different partitions still collapse in the aggregate."""
     idx = entities if isinstance(entities, EntityTokenIndex) else EntityTokenIndex(entities)
-    nn = new_names.select("conv_id", "name").dropDuplicates(["name", "conv_id"])
-    # Exact-member fast path: names the batch pipeline has already
-    # clustered adopt their entity directly (broadcast hash join) — only
-    # genuinely NEW surface forms pay the token-block + scorer path.
-    exact = nn.join(
-        idx.members_side().withColumnRenamed("entity_key", "_ek"), "name"
-    )
-    nn = nn.join(exact.select("conv_id", "name"), ["conv_id", "name"], "left_anti")
-    nt = nn.select(
-        "conv_id", "name", F.explode(F.split("name", " ")).alias("tok")
-    ).where(F.length("tok") >= MIN_TOKEN_LEN)
-    cands = (
-        nt.join(idx.join_side(), "tok")
-        .select("conv_id", "name", "entity_key", "cand")
-        .dropDuplicates(["conv_id", "name", "entity_key"])
+    nn = new_names.select("conv_id", "name")
+    pairs = nn.coalesce(1).mapInPandas(
+        _block(idx.broadcast),
+        StructType(
+            [
+                *nn.schema.fields,
+                StructField("entity_key", idx.key_type),
+                StructField("cand", StringType()),
+                StructField("exact", BooleanType()),
+            ]
+        ),
     )
     scored = score_pairs(
-        cands,
+        pairs,
         model_json,
         tfidf_json,
         threshold=threshold,
@@ -250,24 +299,22 @@ def assign_stream_batch(
         name_y="cand",
         keep_features=False,
     )
-    # highest probability wins; equal probabilities tie-break to the
-    # SMALLEST entity_key — deterministic across partitionings/reruns and
-    # the same min-key direction as the batch pipeline's cluster labels
-    best = (
-        scored.where(F.col("prediction") == 1)
+    # An exact member wins outright; otherwise the highest (4-dp)
+    # probability among the matches wins, equal probabilities tie-break to
+    # the SMALLEST entity_key — deterministic across partitionings/reruns
+    # and the same min-key direction as the batch pipeline's cluster labels
+    hit = F.col("exact") | (F.col("prediction") == 1)
+    return (
+        # Spark does not carry the single partition through the Python
+        # nodes; restating it lets the aggregate run without an exchange
+        # (which would be a second job)
+        scored.coalesce(1)
         .groupBy("conv_id", "name")
         .agg(
             F.min_by(
-                "entity_key", F.struct(-F.col("probability"), F.col("entity_key"))
+                F.when(hit, F.col("entity_key")),
+                F.struct(~hit, -F.col("probability"), F.col("entity_key")),
             ).alias("entity_key")
-        )
-    )
-    return (
-        nn.join(best, ["conv_id", "name"], "left")
-        .unionByName(
-            exact.select(
-                "conv_id", "name", F.col("_ek").alias("entity_key")
-            )
         )
         .withColumn(
             "status",

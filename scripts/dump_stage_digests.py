@@ -4,9 +4,13 @@ Runs the batch pipeline with its defaults on a freshly generated fixture
 (``n_entities`` entities, 5 conversations each, ``seed``) and prints one
 JSON line per output: the md5 of the fitted ``tfidf.json``, then, for each
 stage table, its row count and the md5 of its rows' reprs in sorted order.
-Two source trees produce byte-identical default outputs on a fixture
-exactly when their printed lines are equal, so a refactor that must not
-change results is checked with
+The last line digests stream assignment the same way: the names of a
+second fixture (``seed + 1``), then the first fixture's own names, go
+through ``assign_stream_batch`` in 64-name micro-batches against an
+``EntityTokenIndex`` of the run's entities, so the exact, scored and
+pending branches all run.  Two source trees produce byte-identical
+default outputs on a fixture exactly when their printed lines are equal,
+so a refactor that must not change results is checked with
 
     python scripts/dump_stage_digests.py 200 7 > after.txt
     (cd ../other-tree && python scripts/dump_stage_digests.py 200 7) > before.txt
@@ -28,10 +32,12 @@ import tempfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+STREAM_BATCH = 64
 
-def rows_digest(df) -> tuple[int, str]:
+
+def rows_digest(rows) -> tuple[int, str]:
     """(row count, md5 over the sorted reprs of the rows)."""
-    reprs = sorted(repr(tuple(r)) for r in df.toLocalIterator())
+    reprs = sorted(repr(tuple(r)) for r in rows)
     h = hashlib.md5()
     for s in reprs:
         h.update(s.encode())
@@ -39,9 +45,44 @@ def rows_digest(df) -> tuple[int, str]:
     return len(reprs), h.hexdigest()
 
 
+def stage_digests(spark, transcripts, arrivals, wh: str) -> list[dict]:
+    """Run the pipeline on ``transcripts`` into warehouse ``wh`` and return
+    the digest records: ``tfidf.json``, every stage, then stream
+    assignment of ``arrivals``' names and the run's own names."""
+    from name_matching_spark.model.train import load_artifacts
+    from name_matching_spark.operators.canonicalize import canonicalize
+    from name_matching_spark.pipeline import EntityResolutionPipeline
+    from name_matching_spark.streaming.stream_resolve import (
+        EntityTokenIndex,
+        assign_stream_batch,
+    )
+
+    stages = EntityResolutionPipeline(spark, wh).run(transcripts)
+    with open(os.path.join(wh, "tfidf.json")) as f:
+        tfidf_json = f.read()
+    out = [{"stage": "tfidf.json", "md5": hashlib.md5(tfidf_json.encode()).hexdigest()}]
+    for name, df in stages.items():
+        rows, md5 = rows_digest(df.toLocalIterator())
+        out.append({"stage": name, "rows": rows, "md5": md5})
+
+    model_json = load_artifacts()[0].to_json()
+    index = EntityTokenIndex(stages["entities"])
+    names = [
+        tuple(r)
+        for frame in (canonicalize(arrivals), stages["conversations"])
+        for r in frame.select("conv_id", "name").orderBy("conv_id", "name").collect()
+    ]
+    assigned = []
+    for k in range(0, len(names), STREAM_BATCH):
+        batch = spark.createDataFrame(names[k : k + STREAM_BATCH], "conv_id string, name string")
+        assigned += assign_stream_batch(batch, index, model_json, tfidf_json).collect()
+    rows, md5 = rows_digest(assigned)
+    out.append({"stage": "assign_stream_batch", "rows": rows, "md5": md5})
+    return out
+
+
 def main() -> None:
     from name_matching_spark.datagen import write_fixture
-    from name_matching_spark.pipeline import EntityResolutionPipeline
     from name_matching_spark.session import get_spark
 
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 200
@@ -51,18 +92,14 @@ def main() -> None:
     spark = get_spark(app_name="stage-digests", master=master)
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        fixture = os.path.join(tmp, "fixture")
-        write_fixture(fixture, n_entities=n, convs_per_entity=5, seed=seed)
-        wh = os.path.join(tmp, "warehouse")
-        stages = EntityResolutionPipeline(spark, wh).run(
-            spark.read.parquet(os.path.join(fixture, "transcripts.parquet"))
-        )
-        with open(os.path.join(wh, "tfidf.json"), "rb") as f:
-            tfidf_md5 = hashlib.md5(f.read()).hexdigest()
-        print(json.dumps({"stage": "tfidf.json", "md5": tfidf_md5}), flush=True)
-        for name, df in stages.items():
-            rows, md5 = rows_digest(df)
-            print(json.dumps({"stage": name, "rows": rows, "md5": md5}), flush=True)
+        frames = []
+        for name, s in (("fixture", seed), ("arrivals", seed + 1)):
+            write_fixture(os.path.join(tmp, name), n_entities=n, convs_per_entity=5, seed=s)
+            frames.append(
+                spark.read.parquet(os.path.join(tmp, name, "transcripts.parquet"))
+            )
+        for rec in stage_digests(spark, *frames, os.path.join(tmp, "warehouse")):
+            print(json.dumps(rec), flush=True)
     finally:
         spark.stop()
         shutil.rmtree(tmp, ignore_errors=True)

@@ -110,7 +110,8 @@ def test_entity_token_index_built_once(spark):
     idx = EntityTokenIndex(entities)
     built = acc.value
     assert built > 0
-    assert idx.broadcastable
+    # the (token, entity) rows: JONATHAN, WICK, HOTEL, CONTINENTAL
+    assert idx.n_rows == 4
     model, tfidf = load_artifacts()
     new = spark.createDataFrame(
         [("c1", "JOHN WICK"), ("c2", "ZEBRA QUARRY")], ["conv_id", "name"]
@@ -126,6 +127,153 @@ def test_entity_token_index_built_once(spark):
         assert out["c2"]["status"] == "pending"
     # the entity-side scan + explode did NOT rerun per trigger
     assert acc.value == built
+
+
+def _wick_entities(spark):
+    return spark.createDataFrame(
+        [("JONATHAN WICK", "JONATHAN WICK"), ("HOTEL CONTINENTAL", "HOTEL CONTINENTAL")],
+        ["entity_key", "resolved_name"],
+    )
+
+
+def test_assign_stream_batch_dedups_across_partitions(spark):
+    """Copies of a (conv_id, name) that arrive in different input
+    partitions still come out as one row per distinct pair."""
+    model, tfidf = load_artifacts()
+    pairs = [("c1", "JOHN WICK"), ("c2", "ZEBRA QUARRY"), ("c3", "HOTEL CONTINENTAL")]
+    new = spark.createDataFrame(
+        spark.sparkContext.parallelize(pairs + pairs[::-1] + pairs, 3), ["conv_id", "name"]
+    )
+    parts = new.rdd.glom().collect()
+    assert all(set(map(tuple, p)) == set(pairs) for p in parts)  # every copy split
+    out = assign_stream_batch(new, _wick_entities(spark), model.to_json(), tfidf.to_json())
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("c1", "JOHN WICK", "JONATHAN WICK", "assigned"),
+        ("c2", "ZEBRA QUARRY", None, "pending"),
+        ("c3", "HOTEL CONTINENTAL", "HOTEL CONTINENTAL", "assigned"),
+    ]
+
+
+def test_assign_stream_batch_is_one_spark_job(spark):
+    """A micro-batch is one Spark job: the whole assignment runs in one
+    pass over the batch (a plan with a join or shuffle runs more)."""
+    import pandas as pd
+
+    from name_matching_spark.streaming.stream_resolve import EntityTokenIndex
+
+    model, tfidf = load_artifacts()
+    idx = EntityTokenIndex(_wick_entities(spark))
+    names = ["JOHN WICK", "ZEBRA QUARRY", "HOTEL CONTINENTAL", "JON WICK"] * 16
+    new = spark.createDataFrame(
+        pd.DataFrame({"conv_id": [f"c{i % 40}" for i in range(64)], "name": names})
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for call in range(2):
+        group = f"assign-one-job-{call}"
+        sc.setJobGroup(group, "one micro-batch")
+        try:
+            rows = assign_stream_batch(new, idx, model.to_json(), tfidf.to_json()).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(rows) == len({(f"c{i % 40}", n) for i, n in enumerate(names)})
+        assert len(tracker.getJobIdsForGroup(group)) == 1
+
+
+def _retired_join_plan(new_names, entities, model_json, tfidf_json, threshold=0.85):
+    """The join-based plan assign_stream_batch used before the one-pass
+    rewrite (exact join, anti-join, token explode + join, scorer, min_by,
+    union), kept here as the reference the pass must reproduce."""
+    from name_matching_spark.operators.scoring import score_pairs
+    from name_matching_spark.streaming.stream_resolve import MIN_TOKEN_LEN
+
+    index = (
+        entities.select("entity_key", F.col("resolved_name").alias("cand"))
+        .dropDuplicates(["entity_key"])
+        .withColumn("tok", F.explode(F.split(F.col("cand"), " ")))
+        .where(F.length("tok") >= MIN_TOKEN_LEN)
+    )
+    members = entities.select("name", F.col("entity_key").alias("_ek")).dropDuplicates(["name"])
+    nn = new_names.select("conv_id", "name").dropDuplicates(["name", "conv_id"])
+    exact = nn.join(members, "name")
+    nn = nn.join(exact.select("conv_id", "name"), ["conv_id", "name"], "left_anti")
+    nt = nn.select("conv_id", "name", F.explode(F.split("name", " ")).alias("tok")).where(
+        F.length("tok") >= MIN_TOKEN_LEN
+    )
+    cands = (
+        nt.join(index, "tok")
+        .select("conv_id", "name", "entity_key", "cand")
+        .dropDuplicates(["conv_id", "name", "entity_key"])
+    )
+    scored = score_pairs(
+        cands, model_json, tfidf_json, threshold=threshold,
+        name_x="name", name_y="cand", keep_features=False,
+    )
+    best = (
+        scored.where(F.col("prediction") == 1)
+        .groupBy("conv_id", "name")
+        .agg(
+            F.min_by(
+                "entity_key", F.struct(-F.col("probability"), F.col("entity_key"))
+            ).alias("entity_key")
+        )
+    )
+    out = nn.join(best, ["conv_id", "name"], "left").unionByName(
+        exact.select("conv_id", "name", F.col("_ek").alias("entity_key"))
+    )
+    return out.withColumn(
+        "status",
+        F.when(F.col("entity_key").isNotNull(), F.lit("assigned")).otherwise(F.lit("pending")),
+    )
+
+
+def test_assign_stream_batch_matches_retired_join_plan(spark):
+    """The one-pass assignment reproduces the join-based plan row for row
+    on a datagen entity table: exact members, aliases and typos that must
+    be scored, names no entity shares a token with, duplicate arrivals,
+    and an exact probability tie between two keys with the same canonical
+    name (the smaller key wins on both)."""
+    from name_matching_spark.datagen import generate_entities
+    from name_matching_spark.streaming.stream_resolve import EntityTokenIndex
+
+    model, tfidf = load_artifacts()
+    ents = generate_entities(60, seed=3)
+    table = [
+        (alias, ent.full_name, ent.full_name)
+        for ent in ents.itertuples()
+        for alias in ent.aliases[:2]
+    ]
+    table += [
+        # two keys, one canonical form: their probabilities tie exactly
+        ("TIE ALIAS B", "TIE KEY B", "MARGARETHE QUENNEVILLE"),
+        ("TIE ALIAS A", "TIE KEY A", "MARGARETHE QUENNEVILLE"),
+        # several matches for one name, the best under the largest key:
+        # JOHN WICK scores 0.9992 / 0.9934 / 0.9925 against them
+        ("WICK ALIAS 1", "K WICK 1", "JOHN WICKS"),
+        ("WICK ALIAS 2", "K WICK 2", "J WICK"),
+        ("WICK ALIAS 3", "K WICK 3", "JONATHAN WICK"),
+        # ACME HOLDINGS LTD scores 1.0 / 0.9211
+        ("ACME ALIAS Z", "ACME Z", "ACME HOLDINGS"),
+        ("ACME ALIAS A", "ACME A", "ACMEE HOLDINGS LTD"),
+    ]
+    entities = spark.createDataFrame(table, ["name", "entity_key", "resolved_name"])
+    names = [a for ent in ents.itertuples() for a in ent.aliases]
+    names += ["MARGARETHE QUENNEVILE", "JOHN WICK", "ACME HOLDINGS LTD", "ZEBRA QUARRY", "", "X"]
+    batch = [(f"c{i % 97}", n) for i, n in enumerate(names)]
+    new = spark.createDataFrame(batch + batch[:25], "conv_id string, name string")
+    mj, tj = model.to_json(), tfidf.to_json()
+    got = sorted(
+        tuple(r)
+        for r in assign_stream_batch(new, EntityTokenIndex(entities), mj, tj).collect()
+    )
+    want = sorted(tuple(r) for r in _retired_join_plan(new, entities, mj, tj).collect())
+    assert got == want
+    picked = {n: k for _, n, k, _ in got}
+    assert picked["MARGARETHE QUENNEVILE"] == "TIE KEY A"
+    assert picked["JOHN WICK"] == "K WICK 3"
+    assert picked["ACME HOLDINGS LTD"] == "ACME Z"
+    assert picked["ZEBRA QUARRY"] is None
+    assert {s for *_, s in got} == {"assigned", "pending"}
 
 
 @pytest.mark.slow
