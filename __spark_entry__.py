@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-Every operator from SURVEY.md §2 (plus the corpus-scale dedup / ANN /
-text-analysis extras) is exposed as a ``queries()`` entry with a matching
-DuckDB ``oracle_sql()`` where the semantics are SQL-expressible.
+Every operator from SURVEY.md §2 is exposed as a ``queries()`` entry
+with a matching DuckDB ``oracle_sql()`` where the semantics are
+SQL-expressible: 29 queries, 28 with an oracle, 1 rows-only.
 
 SURVEY §2 coverage map (operator id -> where it is exercised):
 
@@ -54,14 +54,9 @@ SURVEY §2 coverage map (operator id -> where it is exercised):
   M9  visualizations                  -> model/evaluation.py: ROC/PR curves + AUCs as data
                                          artifacts (models/eval_curves.json)
 
-Corpus-scale extras: d1 exact dedup, d2/d2b MinHash-LSH, d3 SimHash
-(+ d3b banded Hamming near-dup pairs),
-d6 composed dedup pipeline (exact -> LSH -> verify, full SQL oracle),
-d4 n-gram Jaccard, d5 embedding cosine, ann1 brute-force top-k,
-ann2 LSH ANN + ann3 IVF-flat ANN (each with a recall-vs-exact gate),
-t1-t4 text analysis,
-mm1 multimodal (real PNG/WAV/uncompressed-AVI decode; compressed video
-codecs declared out of scope -> null feature).
+The package holds the entity-resolution path only; the corpus-scale
+extras of earlier revisions (exact/MinHash/SimHash dedup, ANN top-k, text
+analysis, multimodal decode) and their queries are retired.
 """
 
 from __future__ import annotations
@@ -81,7 +76,7 @@ def _par(spark: SparkSession, df: DataFrame) -> DataFrame:
 
     The driver testdata ships each table as one parquet file with one row
     group, so the leaf scan is a single task and every narrow expression
-    chain above it (MinHash md5 folds, normalization, per-row vector math)
+    chain above it (normalization, per-row string math)
     runs on one core.  When the scan has fewer partitions than the session
     parallelism, round-robin repartition once right after the read (guide
     §2.5: "fix at the source; otherwise repartition immediately after the
@@ -139,13 +134,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from name_matching_spark.functions.normalize import normalize_text_col
-    from name_matching_spark.operators import dedup as dd
-    from name_matching_spark.operators import text_analysis as ta
     from name_matching_spark.operators.clustering import connected_components
-    from name_matching_spark.operators.similarity_search import (
-        brute_force_topk,
-        lsh_topk,
-    )
 
     def s1_scan_dedup(spark, sf):
         c = _t(spark, sf, "customer").na.drop(subset=["c_name"])
@@ -534,188 +523,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("name").alias("node"), F.col("component").alias("comm")
         )
 
-    def d1_exact_dedup(spark, sf):
-        return dd.exact_dedup(_t(spark, sf, "documents")).select(
-            F.col("doc_id").alias("key"), "dup_count"
-        )
-
-    def d2_minhash_lsh_pairs(spark, sf):
-        return dd.minhash_lsh_pairs(
-            _par(spark, _t(spark, sf, "documents")), bands=4, rows_per_band=4
-        )
-
-    def d2b_minhash_signature(spark, sf):
-        sigs = dd.minhash_signatures(
-            _par(spark, _t(spark, sf, "documents")), num_hashes=4
-        )
-        return sigs.select(
-            "key", *[F.col("sig")[i].alias(f"h{i}") for i in range(4)]
-        )
-
-    def d6_dedup_pipeline(spark, sf):
-        # the composed flow: exact dedup -> LSH candidates over survivors
-        # -> n-gram Jaccard verify -> drop list (fully oracle-checkable)
-        # no _par here: every expensive dedup stage (signatures, grams)
-        # runs AFTER the exact-dedup window shuffle, so a scan repartition
-        # adds an exchange without parallelizing anything (measured +1.5s)
-        return dd.dedup_pipeline(
-            _t(spark, sf, "documents"), bands=4, rows_per_band=4, min_jaccard=0.5
-        )
-
-    def d3_simhash(spark, sf):
-        return dd.simhash(_par(spark, _t(spark, sf, "documents")), bits=16)
-
-    def d3b_simhash_pairs(spark, sf):
-        # 32-bit signature: 16 bits saturates past ~10^4 docs (only 65k
-        # distinct signatures -> ~1% of RANDOM pairs sit at hamming<=3 and
-        # the "near-dup" set goes quadratic; measured 86M pairs on 50k
-        # docs).  At 32 bits the incidental rate is ~1.3e-6 and the output
-        # tracks the true near-dup structure at every tested scale.
-        return dd.simhash_pairs(
-            _par(spark, _t(spark, sf, "documents")), bits=32, bands=4, max_hamming=3
-        )
-
-    def d4_ngram_jaccard(spark, sf):
-        # gram compute happens after the candidate semi-join shuffle — a
-        # scan repartition would be pure overhead (cf. d6)
-        d = _t(spark, sf, "documents")
-        pairs = d.select(F.col("doc_id").alias("key_x")).withColumn(
-            "key_y", F.col("key_x") + 1
-        ).join(d.select(F.col("doc_id").alias("key_y")), "key_y")
-        return dd.ngram_jaccard_pairs(pairs, d, n=3)
-
-    def d5_embedding_cosine(spark, sf):
-        e = _par(spark, _t(spark, sf, "embeddings"))
-        pairs = e.select(F.col("vec_id").alias("key_x")).withColumn(
-            "key_y", F.col("key_x") + 1
-        ).join(e.select(F.col("vec_id").alias("key_y")), "key_y")
-        out = dd.embedding_cosine_pairs(e, pairs)
-        return out.select("key_x", "key_y", F.round("cosine", 4).alias("cosine"))
-
-    def ann1_bruteforce_topk(spark, sf):
-        e = _par(spark, _t(spark, sf, "embeddings"))
-        q = e.where(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        out = brute_force_topk(e, q, k=5)
-        return out.select(
-            "query_id", "vec_id", F.round("cosine", 4).alias("cosine"), "rank"
-        )
-
-    def ann2_lsh_topk(spark, sf):
-        e = _par(spark, _t(spark, sf, "embeddings"))
-        q = e.where(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        return lsh_topk(e, q, k=5, dim=64, bits=3, tables=8)
-
-    def ann2_recall_vs_exact(spark, sf):
-        # Quantitative gate for the ANN path, executed INSIDE the query:
-        # recall@5 of the LSH result vs the exact brute-force top-k must
-        # reach 0.9 or the query RAISES (a red correctness entry).  The
-        # returned frame is the exact side, which DuckDB reproduces — so
-        # a green hash here means both "the exact ground truth matches
-        # SQL" and "the LSH path recalled >= 0.9 of it".  (Driver-side
-        # agg of 10 query rows — bounded at any scale.  10 queries, not
-        # 3, for the same reason as ann3: the gate is a MEAN over k*nq
-        # recall slots, and at 15 slots one borderline-angle neighbor
-        # missed swings the mean below the gate — measured 0.87 at sf1
-        # with 3 queries vs 0.96 with 10, while sf0.01 holds 1.0 at
-        # both.  Small-sample variance, not an LSH scale pathology.)
-        from name_matching_spark.operators.similarity_search import recall_at_k
-
-        e = _t(spark, sf, "embeddings")
-        q = e.where(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        approx = lsh_topk(e, q, k=5, dim=64, bits=3, tables=8)
-        exact = brute_force_topk(e, q, k=5)
-        rec = (
-            recall_at_k(approx, exact, k=5)
-            .agg(F.avg("recall").alias("r"))
-            .first()["r"]
-        )
-        if rec is None or rec < 0.9:
-            raise AssertionError(f"ann2 LSH recall@5 {rec} < 0.9 vs exact")
-        return exact.select(
-            "query_id", "vec_id", F.round("cosine", 4).alias("cosine"), "rank"
-        )
-
-    def ann3_ivf_topk(spark, sf):
-        from name_matching_spark.operators.similarity_search import ivf_topk
-
-        e = _par(spark, _t(spark, sf, "embeddings"))
-        q = e.where(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        # n_probe=12/16: the driver's embeddings are isotropic noise (no
-        # cluster structure — within-label mean cosine 0.002), where IVF
-        # recall ~ probe fraction by nature (12/16 clears the 0.9 recall
-        # gate at 3 queries); on clustered data the test shows recall 1.0
-        # at n_probe=4 (tests/test_corpus_ops.py)
-        return ivf_topk(e, q, k=5, n_lists=16, n_probe=12)
-
-    def ann3_recall_vs_exact(spark, sf):
-        # IVF quality gate, same treatment as ann2: the recall assertion
-        # runs inside the query (raises below 0.9 -> red correctness
-        # entry); the returned exact side is SQL-oracled.  10 queries
-        # (ann2's gate uses 10 for the same small-sample-variance
-        # reason): on the driver table's ISOTROPIC embeddings IVF
-        # recall ~ probe fraction, so the per-query variance at 3 queries
-        # straddles the gate — the 10-query mean is stably 0.94.
-        from name_matching_spark.operators.similarity_search import (
-            ivf_topk,
-            recall_at_k,
-        )
-
-        e = _t(spark, sf, "embeddings")
-        q = e.where(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        approx = ivf_topk(e, q, k=5, n_lists=16, n_probe=12)
-        exact = brute_force_topk(e, q, k=5)
-        rec = (
-            recall_at_k(approx, exact, k=5)
-            .agg(F.avg("recall").alias("r"))
-            .first()["r"]
-        )
-        if rec is None or rec < 0.9:
-            raise AssertionError(f"ann3 IVF recall@5 {rec} < 0.9 vs exact")
-        return exact.select(
-            "query_id", "vec_id", F.round("cosine", 4).alias("cosine"), "rank"
-        )
-
-    def t1_token_count(spark, sf):
-        return ta.token_count(_par(spark, _t(spark, sf, "documents"))).select(
-            "key", "n_tokens", "n_chars"
-        )
-
-    def t2_quality_score(spark, sf):
-        return ta.quality_score(_par(spark, _t(spark, sf, "documents")))
-
-    def t3_lang_id(spark, sf):
-        return ta.lang_id(_par(spark, _t(spark, sf, "documents")))
-
-    def t4_fingerprint(spark, sf):
-        return ta.fingerprint(_par(spark, _t(spark, sf, "documents")))
-
-    def mm1_multimodal_features(spark, sf):
-        from name_matching_spark.operators.multimodal import (
-            extract_features,
-            make_media_fixture,
-        )
-
-        media = make_media_fixture(spark, n=32)
-        out = extract_features(media)
-        # real decoders for image (PNG) / audio (WAV); video is the declared
-        # stub -> null feature, reported as dim -1
-        return out.select(
-            "media_id",
-            "kind",
-            "n_bytes",
-            F.coalesce(F.size("feature"), F.lit(-1)).alias("dim"),
-        )
-
     def er_score_pairs(spark, sf):
         from name_matching_spark.functions.normalize import normalize_text_col
         from name_matching_spark.model.train import load_artifacts
@@ -791,40 +598,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "m5_edges_canonical": m5_edges_canonical,
         "m6_connected_components": m6_connected_components,
         "m6b_louvain": m6b_louvain,
-        "d1_exact_dedup": d1_exact_dedup,
-        "d2_minhash_lsh_pairs": d2_minhash_lsh_pairs,
-        "d2b_minhash_signature": d2b_minhash_signature,
-        "d6_dedup_pipeline": d6_dedup_pipeline,
-        "d3_simhash": d3_simhash,
-        "d3b_simhash_pairs": d3b_simhash_pairs,
-        "d4_ngram_jaccard": d4_ngram_jaccard,
-        "d5_embedding_cosine": d5_embedding_cosine,
-        "ann1_bruteforce_topk": ann1_bruteforce_topk,
-        "ann2_lsh_topk": ann2_lsh_topk,
-        "ann2_recall_vs_exact": ann2_recall_vs_exact,
-        "ann3_ivf_topk": ann3_ivf_topk,
-        "ann3_recall_vs_exact": ann3_recall_vs_exact,
-        "t1_token_count": t1_token_count,
-        "t2_quality_score": t2_quality_score,
-        "t3_lang_id": t3_lang_id,
-        "t4_fingerprint": t4_fingerprint,
-        "mm1_multimodal_features": mm1_multimodal_features,
         "er_score_pairs": er_score_pairs,
     }
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB equivalents.  Omitted (rows-only check): ann2_lsh_topk /
-    ann3_ivf_topk (sign-LSH bucketing / k-means quantization not
-    SQL-expressible; their quality gates run INSIDE ann2/ann3
-    _recall_vs_exact, whose exact side IS oracled below) and m6b_louvain
+    """DuckDB equivalents.  Omitted (rows-only check): m6b_louvain
     (modularity optimization not SQL-expressible; golden-cluster parity
     in tests/test_louvain.py).  er_score_pairs hashes the scorer UDF's
     lexical features against independent SQL (probability itself is gated
-    by tests/test_model_gate.py); mm1 hashes the deterministic pure-stdlib
-    decoders against a pinned golden VALUES table."""
-    md5_60 = "cast(('0x'||substr(md5({x}),1,15)) as bigint)"
-    md5_28 = "cast(('0x'||substr(md5({x}),1,7)) as bigint)"
+    by tests/test_model_gate.py)."""
     return {
         "s1_scan_dedup": """
             with d as (
@@ -1033,249 +816,6 @@ def oracle_sql() -> dict[str, str]:
             )
             select n as node, min(lbl) as comp from cc group by n
         """,
-        "d1_exact_dedup": """
-            select min(doc_id) as key, count(*) as dup_count
-            from documents group by text
-        """,
-        "d2_minhash_lsh_pairs": f"""
-            with toks as (select doc_id, string_split(text, ' ') as l from documents),
-            sh as (
-              select doc_id,
-                     case when len(l) >= 3 then
-                       list_distinct(list_transform(range(0, len(l) - 2),
-                         i -> array_to_string(l[i+1:i+3], ' ')))
-                     else [array_to_string(l, ' ')] end as shingles
-              from toks),
-            base as (select doc_id, list_transform(shingles, s -> {md5_28.format(x='s')}) as hs from sh),
-            sig as (
-              select doc_id,
-                     list_transform(range(0, 16),
-                       k -> list_min(list_transform(hs,
-                              v -> (v * (2*k + 3) + (7*k + 1)) % 2147483647))) as sig
-              from base),
-            bands as (
-              select doc_id,
-                     b.band as band,
-                     b.band::varchar || '_' ||
-                       sig[b.band*4 + 1]::varchar || '_' || sig[b.band*4 + 2]::varchar || '_' ||
-                       sig[b.band*4 + 3]::varchar || '_' || sig[b.band*4 + 4]::varchar as bucket
-              from sig cross join (select unnest(range(0, 4)) as band) b)
-            select distinct a.doc_id as key_x, c.doc_id as key_y
-            from bands a join bands c on a.bucket = c.bucket and a.doc_id < c.doc_id
-        """,
-        "d6_dedup_pipeline": f"""
-            with exact as (select min(doc_id) as keep_id from documents group by text),
-            dropped_exact as (
-              select doc_id as key, 'exact_dup' as reason from documents
-              where doc_id not in (select keep_id from exact)),
-            surv as (select * from documents where doc_id in (select keep_id from exact)),
-            toks as (select doc_id, string_split(text, ' ') as l from surv),
-            sh as (
-              select doc_id,
-                     case when len(l) >= 3 then
-                       list_distinct(list_transform(range(0, len(l) - 2),
-                         i -> array_to_string(l[i+1:i+3], ' ')))
-                     else [array_to_string(l, ' ')] end as shingles
-              from toks),
-            base as (select doc_id, list_transform(shingles, s -> {md5_28.format(x='s')}) as hs from sh),
-            sig as (
-              select doc_id,
-                     list_transform(range(0, 16),
-                       k -> list_min(list_transform(hs,
-                              v -> (v * (2*k + 3) + (7*k + 1)) % 2147483647))) as sig
-              from base),
-            bands as (
-              select doc_id,
-                     b.band::varchar || '_' ||
-                       sig[b.band*4 + 1]::varchar || '_' || sig[b.band*4 + 2]::varchar || '_' ||
-                       sig[b.band*4 + 3]::varchar || '_' || sig[b.band*4 + 4]::varchar as bucket
-              from sig cross join (select unnest(range(0, 4)) as band) b),
-            cand as (
-              select distinct a.doc_id as key_x, c.doc_id as key_y
-              from bands a join bands c on a.bucket = c.bucket and a.doc_id < c.doc_id),
-            g as (
-              select doc_id,
-                     list_distinct(list_transform(
-                       range(1, greatest(length(text) - 2, 1) + 1),
-                       i -> substring(text, i::int, 3))) as grams
-              from surv),
-            verified as (
-              select key_x, key_y,
-                     round(len(list_intersect(gx.grams, gy.grams))::double
-                           / len(list_distinct(list_concat(gx.grams, gy.grams))), 6) as j
-              from cand
-              join g gx on gx.doc_id = key_x
-              join g gy on gy.doc_id = key_y),
-            dropped_near as (
-              select distinct key_y as key, 'near_dup' as reason
-              from verified where j >= 0.5)
-            select * from dropped_exact union all select * from dropped_near
-        """,
-        "d2b_minhash_signature": f"""
-            with toks as (select doc_id, string_split(text, ' ') as l from documents),
-            sh as (
-              select doc_id,
-                     case when len(l) >= 3 then
-                       list_distinct(list_transform(range(0, len(l) - 2),
-                         i -> array_to_string(l[i+1:i+3], ' ')))
-                     else [array_to_string(l, ' ')] end as shingles
-              from toks),
-            base as (select doc_id, list_transform(shingles, s -> {md5_28.format(x='s')}) as hs from sh)
-            select doc_id as key,
-                   list_min(list_transform(hs, v -> (v * 3 + 1) % 2147483647)) as h0,
-                   list_min(list_transform(hs, v -> (v * 5 + 8) % 2147483647)) as h1,
-                   list_min(list_transform(hs, v -> (v * 7 + 15) % 2147483647)) as h2,
-                   list_min(list_transform(hs, v -> (v * 9 + 22) % 2147483647)) as h3
-            from base
-        """,
-        "d3_simhash": f"""
-            with toks as (
-              select doc_id, unnest(list_distinct(string_split_regex(text, '\\s+'))) as tok
-              from documents),
-            h as (select doc_id, {md5_60.format(x='tok')} as hv from toks),
-            votes as (
-              select doc_id, b.bit as bit,
-                     sum(case when (hv >> b.bit) & 1 = 1 then 1 else -1 end) as s
-              from h cross join (select unnest(range(0, 16)) as bit) b
-              group by doc_id, b.bit)
-            select doc_id as key,
-                   sum(case when s > 0 then (1::bigint << bit) else 0 end)::bigint as simhash
-            from votes group by doc_id
-        """,
-        "d3b_simhash_pairs": f"""
-            with toks as (
-              select doc_id, unnest(list_distinct(string_split_regex(text, '\\s+'))) as tok
-              from documents),
-            h as (select doc_id, {md5_60.format(x='tok')} as hv from toks),
-            votes as (
-              select doc_id, b.bit as bit,
-                     sum(case when (hv >> b.bit) & 1 = 1 then 1 else -1 end) as s
-              from h cross join (select unnest(range(0, 32)) as bit) b
-              group by doc_id, b.bit),
-            sim as (
-              select doc_id as key,
-                     sum(case when s > 0 then (1::bigint << bit) else 0 end)::bigint as simhash
-              from votes group by doc_id),
-            bands as (
-              select key, simhash,
-                     b.band::varchar || '_' || ((simhash >> (b.band * 8)) & 255)::varchar as bucket
-              from sim cross join (select unnest(range(0, 4)) as band) b)
-            select distinct a.key as key_x, c.key as key_y,
-                   bit_count(xor(a.simhash, c.simhash))::int as hamming
-            from bands a join bands c on a.bucket = c.bucket and a.key < c.key
-            where bit_count(xor(a.simhash, c.simhash)) <= 3
-        """,
-        "d4_ngram_jaccard": """
-            with g as (
-              select doc_id,
-                     list_distinct(list_transform(
-                       range(1, greatest(length(text) - 2, 1) + 1),
-                       i -> substring(text, i::int, 3))) as grams
-              from documents)
-            select a.doc_id as key_x, b.doc_id as key_y,
-                   round(len(list_intersect(a.grams, b.grams))::double
-                         / len(list_distinct(list_concat(a.grams, b.grams))), 6) as jaccard
-            from g a join g b on b.doc_id = a.doc_id + 1
-        """,
-        "d5_embedding_cosine": """
-            -- ordered list_sum matches Spark's left-to-right aggregate()
-            -- bit-for-bit, so the 4dp rounding can never straddle a boundary
-            with p as (select a.vec_id as key_x, b.vec_id as key_y,
-                              a.embedding va, b.embedding vb
-                       from embeddings a join embeddings b on b.vec_id = a.vec_id + 1)
-            select key_x, key_y,
-                   round(round(
-                     list_sum(list_transform(list_zip(va, vb), s -> s[1]::double * s[2]::double))
-                     / (sqrt(list_sum(list_transform(va, x -> x::double * x::double)))
-                        * sqrt(list_sum(list_transform(vb, x -> x::double * x::double)))), 6), 4) as cosine
-            from p
-        """,
-        "ann1_bruteforce_topk": """
-            with q as (select vec_id as query_id, embedding as qv from embeddings where vec_id < 3),
-            c as (select vec_id, embedding as v from embeddings),
-            s as (select query_id, vec_id,
-                         round(
-                           list_sum(list_transform(list_zip(qv, v), p -> p[1]::double * p[2]::double))
-                           / (sqrt(list_sum(list_transform(qv, x -> x::double * x::double)))
-                              * sqrt(list_sum(list_transform(v, x -> x::double * x::double)))), 6) as cos6
-                  from q cross join c)
-            select query_id, vec_id, round(cos6, 4) as cosine, rank from (
-              select query_id, vec_id, cos6,
-                     row_number() over (partition by query_id order by cos6 desc, vec_id asc) as rank
-              from s) where rank <= 5
-        """,
-        # ann2/ann3 recall gates: the Spark query asserts approx-recall >=
-        # 0.9 internally and returns the EXACT top-k, which is the same
-        # brute-force computation ann1 oracles — a green hash therefore
-        # certifies both the ground truth and the recall gate.
-        "ann2_recall_vs_exact": """
-            with q as (select vec_id as query_id, embedding as qv from embeddings where vec_id < 10),
-            c as (select vec_id, embedding as v from embeddings),
-            s as (select query_id, vec_id,
-                         round(
-                           list_sum(list_transform(list_zip(qv, v), p -> p[1]::double * p[2]::double))
-                           / (sqrt(list_sum(list_transform(qv, x -> x::double * x::double)))
-                              * sqrt(list_sum(list_transform(v, x -> x::double * x::double)))), 6) as cos6
-                  from q cross join c)
-            select query_id, vec_id, round(cos6, 4) as cosine, rank from (
-              select query_id, vec_id, cos6,
-                     row_number() over (partition by query_id order by cos6 desc, vec_id asc) as rank
-              from s) where rank <= 5
-        """,
-        "ann3_recall_vs_exact": """
-            with q as (select vec_id as query_id, embedding as qv from embeddings where vec_id < 10),
-            c as (select vec_id, embedding as v from embeddings),
-            s as (select query_id, vec_id,
-                         round(
-                           list_sum(list_transform(list_zip(qv, v), p -> p[1]::double * p[2]::double))
-                           / (sqrt(list_sum(list_transform(qv, x -> x::double * x::double)))
-                              * sqrt(list_sum(list_transform(v, x -> x::double * x::double)))), 6) as cos6
-                  from q cross join c)
-            select query_id, vec_id, round(cos6, 4) as cosine, rank from (
-              select query_id, vec_id, cos6,
-                     row_number() over (partition by query_id order by cos6 desc, vec_id asc) as rank
-              from s) where rank <= 5
-        """,
-        "mm1_multimodal_features": """
-            -- pinned golden output: the media fixture and the pure-stdlib
-            -- PNG/WAV/AVI decoders are deterministic (seeded payloads, no
-            -- floats), so the expected 32 rows ARE the oracle; dim -1 =
-            -- the two declared compressed-video stub rows
-            select * from (values
-              ('m00000','image',292,16),
-              ('m00001','audio',948,16),
-              ('m00002','video',2104,16),
-              ('m00003','image',159,16),
-              ('m00004','audio',1288,16),
-              ('m00005','video',520,16),
-              ('m00006','image',476,16),
-              ('m00007','audio',1058,16),
-              ('m00008','video',1456,16),
-              ('m00009','image',133,16),
-              ('m00010','audio',1918,16),
-              ('m00011','video',256,-1),
-              ('m00012','image',268,16),
-              ('m00013','audio',2762,16),
-              ('m00014','video',2320,16),
-              ('m00015','image',369,16),
-              ('m00016','audio',1720,16),
-              ('m00017','video',736,16),
-              ('m00018','image',803,16),
-              ('m00019','audio',914,16),
-              ('m00020','video',1972,16),
-              ('m00021','image',243,16),
-              ('m00022','audio',894,16),
-              ('m00023','video',256,-1),
-              ('m00024','image',285,16),
-              ('m00025','audio',3184,16),
-              ('m00026','video',664,16),
-              ('m00027','image',852,16),
-              ('m00028','audio',1156,16),
-              ('m00029','video',448,16),
-              ('m00030','image',224,16),
-              ('m00031','audio',2190,16))
-            as t(media_id, kind, n_bytes, dim)
-        """,
         "er_score_pairs": r"""
             -- independent SQL recomputation of the scorer UDF's lexical
             -- features over the same bounded pair plan (top-64 normalized
@@ -1320,69 +860,5 @@ def oracle_sql() -> dict[str, str]:
                          / greatest(length(sdx), length(sdy), 1), 6) as token_set_ratio,
                    abs(length(name_x) - length(name_y)) as len_diff
             from f
-        """,
-        "t1_token_count": r"""
-            select doc_id as key,
-                   len(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')) as n_tokens,
-                   length(text) as n_chars
-            from documents
-        """,
-        "t2_quality_score": r"""
-            with b as (
-              select doc_id,
-                     list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') as toks,
-                     length(text) as n_chars,
-                     length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g')) as punct
-              from documents),
-            c as (
-              select doc_id, toks, n_chars, punct,
-                     len(toks) as n_tok,
-                     len(list_filter(toks, t -> list_contains(
-                       ['the','and','of','to','in','is','that','it','was','for'], t))) as stop_hits,
-                     list_sum(list_transform(toks, t -> length(t))) as tok_chars
-              from b)
-            select doc_id as key,
-                   round(punct::double / greatest(n_chars, 1), 6) as punct_ratio,
-                   round(stop_hits::double / greatest(n_tok, 1), 6) as stopword_ratio,
-                   round(coalesce(tok_chars, 0)::double / greatest(n_tok, 1), 6) as mean_token_len,
-                   round(least(n_tok / 20.0, 1.0)
-                         * greatest(0.0, 1.0 - round(punct::double / greatest(n_chars,1), 6) * 4)
-                         * case when round(coalesce(tok_chars,0)::double / greatest(n_tok,1), 6)
-                                     between 3 and 10 then 1.0 else 0.5 end, 6) as quality
-            from c
-        """,
-        "t3_lang_id": r"""
-            with b as (
-              select doc_id,
-                     list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') as toks
-              from documents),
-            s as (
-              select doc_id,
-                     greatest(len(toks), 1) as n,
-                     len(list_filter(toks, t -> list_contains(['the','and','of','to','in','is','that','it','was','for'], t)))::double as en,
-                     len(list_filter(toks, t -> list_contains(['der','die','und','das','ist','nicht','ein','mit','von','zu'], t)))::double as de,
-                     len(list_filter(toks, t -> list_contains(['le','la','et','les','des','est','une','dans','que','pour'], t)))::double as fr,
-                     len(list_filter(toks, t -> list_contains(['el','la','de','que','los','una','es','por','con','para'], t)))::double as es
-              from b),
-            langs as (
-              select doc_id, 'en' as lang, en/n as sc from s
-              union all select doc_id, 'de', de/n from s
-              union all select doc_id, 'fr', fr/n from s
-              union all select doc_id, 'es', es/n from s),
-            best as (
-              select doc_id, lang, sc,
-                     row_number() over (partition by doc_id
-                                        order by sc desc, lang desc) as rnk
-              from langs)
-            select doc_id as key,
-                   case when sc > 0 then lang else 'und' end as lang,
-                   round(sc, 6) as lang_score
-            from best where rnk = 1
-        """,
-        "t4_fingerprint": r"""
-            select doc_id as key,
-                   md5(array_to_string(list_sort(list_distinct(
-                     list_filter(string_split_regex(lower(text), '\s+'), t -> t <> ''))), ' ')) as fingerprint
-            from documents
         """,
     }

@@ -32,11 +32,6 @@ OPERATOR_QUERIES = [
     "a7_turn_collapse",
     "j1_block_pairs",
     "j4_broadcast_lookup",
-    "d2_minhash_lsh_pairs",
-    "d6_dedup_pipeline",
-    "d3_simhash",
-    "ann1_bruteforce_topk",
-    "t2_quality_score",
     "a6_tfidf_vocab",
 ]
 

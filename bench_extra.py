@@ -3,7 +3,7 @@
 Per-query noop-sink timing (guide §1.4), formatted-plan capture
 (guide §7.2), and per-stage ER pipeline timing.  Usage:
 
-  python bench_extra.py --queries d6_dedup_pipeline,a6_tfidf_vocab
+  python bench_extra.py --queries j1_block_pairs,a6_tfidf_vocab
   python bench_extra.py --er                  # ER pipeline stage timings
   python bench_extra.py --plans before        # dump plans/r06/<q>_before.txt
   python bench_extra.py                       # all bench queries, 2 reps
@@ -33,11 +33,6 @@ BENCH_QUERIES = [
     "a7_turn_collapse",
     "j1_block_pairs",
     "j4_broadcast_lookup",
-    "d2_minhash_lsh_pairs",
-    "d6_dedup_pipeline",
-    "d3_simhash",
-    "ann1_bruteforce_topk",
-    "t2_quality_score",
     "a6_tfidf_vocab",
 ]
 

@@ -9,7 +9,8 @@ clustering) as a distributed Spark DataFrame pipeline designed for
   TF-IDF (pure numpy, Arrow-batch friendly).
 * ``model``      — pure-numpy gradient-boosted-tree classifier + training.
 * ``operators``  — canonicalize / block / score / cluster / resolve, plus
-  corpus-scale extras (dedup, ANN search, text analysis, multimodal).
+  sign-LSH candidate pairs over an optional embedding column.
+* ``streaming``  — micro-batch assignment of new names to the entity table.
 * ``io``         — stage checkpointing with manifests, lineage and metrics.
 * ``pipeline``   — the end-to-end resumable entity-resolution driver.
 

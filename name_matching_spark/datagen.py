@@ -381,7 +381,7 @@ def generate_labeled_pairs(
             rows.append({"NAME_X": a.full_name, "NAME_Y": b.full_name, "label": 0})
     # The dominant FALSE-POSITIVE edge families measured at the 10k-entity
     # resolution scale once blocking recall recovered to ~0.97
-    # (scripts/debug_merge_analysis.py — each scored 0.999+ pre-fix):
+    # (BENCH/QUALITY.md — each scored 0.999+ pre-fix):
     #
     # (a) kind-initial vs org: "H KELGRI" (a PERSON-initial surface form)
     #     against "KELGRI HOTEL ..." — the single-letter token matches the

@@ -1,15 +1,10 @@
-"""Pure-stdlib media codecs: PNG (RGB8), WAV (PCM16), AVI (raw RGB24).
+"""Pure-stdlib PNG (8-bit RGB) codec.
 
-No media libraries ship in this environment, but these container formats
-are simple published specs (PNG: RFC 2083 / ISO 15948; WAV + AVI:
-Microsoft RIFF), so the multimodal operators decode them for real with
-``zlib`` + ``struct`` + numpy — header parse, inflate, scanline
-unfiltering (all five PNG filter types), PCM sample extraction, and AVI
-``movi`` frame-chunk walking with bottom-up padded BGR DIB rows.  Video
-is supported for the uncompressed (BI_RGB 24-bit 'DIB ') subset;
-compressed codecs (H.264, MJPEG, ...) are out of scope — a decode
-attempt raises ``ValueError`` and the operator layer turns that into a
-null feature, never a batch abort.
+No imaging library ships in this environment, but PNG is a simple
+published spec (RFC 2083 / ISO 15948), so ``model/evaluation.py`` writes
+its ROC/PR curve rasters with ``zlib`` + ``struct`` + numpy, and the
+decoder (header parse, inflate, unfiltering of all five scanline filter
+types) lets the tests read them back.
 """
 
 from __future__ import annotations
@@ -118,152 +113,3 @@ def png_header(payload: bytes) -> dict:
         raise ValueError("IHDR not first chunk")
     w, h, bit_depth, color_type = struct.unpack(">IIBB", payload[16:26])
     return {"width": w, "height": h, "bit_depth": bit_depth, "color_type": color_type}
-
-
-# ---------------------------------------------------------------------------
-# WAV (RIFF / PCM16 mono or interleaved)
-# ---------------------------------------------------------------------------
-
-
-def wav_encode(samples: np.ndarray, rate: int = 8000) -> bytes:
-    """PCM16 mono RIFF/WAVE writer."""
-    pcm = np.asarray(samples, dtype=np.int16).tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(pcm)) + pcm
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def wav_decode(payload: bytes) -> tuple[int, np.ndarray]:
-    """(sample_rate, float32 samples in [-1, 1]) from a PCM16 RIFF/WAVE."""
-    if payload is None or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a WAV")
-    pos = 12
-    rate = None
-    data = None
-    while pos + 8 <= len(payload):
-        tag, length = struct.unpack("<4sI", payload[pos : pos + 8])
-        body = payload[pos + 8 : pos + 8 + length]
-        pos += 8 + length + (length & 1)  # chunks are word-aligned
-        if tag == b"fmt ":
-            audio_fmt, channels, rate, _, _, bits = struct.unpack("<HHIIHH", body[:16])
-            if audio_fmt != 1 or bits != 16:
-                raise ValueError("only PCM16 supported")
-        elif tag == b"data":
-            data = body
-    if rate is None or data is None:
-        raise ValueError("missing fmt/data chunk")
-    samples = np.frombuffer(data, dtype=np.int16).astype(np.float32) / 32768.0
-    return rate, samples
-
-
-# ---------------------------------------------------------------------------
-# AVI (RIFF, uncompressed BI_RGB 24-bit 'DIB ' frames)
-# ---------------------------------------------------------------------------
-
-
-def _dib_row_stride(w: int) -> int:
-    return (w * 3 + 3) & ~3  # DIB rows pad to 4-byte boundaries
-
-
-def avi_encode(frames: np.ndarray, fps: int = 10) -> bytes:
-    """Minimal spec-correct AVI writer for (n, h, w, 3) uint8 RGB frames:
-    RIFF 'AVI ' + hdrl (avih, strl: strh 'vids'/'DIB ' + strf
-    BITMAPINFOHEADER) + movi ('00db' uncompressed bottom-up BGR DIB
-    frames) + idx1."""
-    frames = np.asarray(frames, dtype=np.uint8)
-    n, h, w, c = frames.shape
-    assert c == 3, "RGB only"
-    stride = _dib_row_stride(w)
-    frame_bytes = []
-    for f in frames:
-        dib = np.zeros((h, stride), dtype=np.uint8)
-        dib[:, : w * 3] = f[::-1, :, ::-1].reshape(h, w * 3)  # bottom-up, BGR
-        frame_bytes.append(dib.tobytes())
-    frame_size = h * stride
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return tag + struct.pack("<I", len(body)) + body + (b"\x00" * (len(body) & 1))
-
-    def lst(kind: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", kind + body)
-
-    avih = struct.pack(
-        "<14I",
-        int(1_000_000 // fps), frame_size * fps, 0, 0x10,  # AVIF_HASINDEX
-        n, 0, 1, frame_size, w, h, 0, 0, 0, 0,
-    )
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIII4h",
-        b"vids", b"DIB ", 0, 0, 0, 0, 1, fps, 0, n, frame_size, 0, 0,
-        0, 0, w, h,
-    )
-    strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, frame_size, 0, 0, 0, 0)
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi_body = b"".join(chunk(b"00db", fb) for fb in frame_bytes)
-    movi = lst(b"movi", movi_body)
-    idx, off = b"", 4
-    for fb in frame_bytes:
-        idx += struct.pack("<4sIII", b"00db", 0x10, off, len(fb))
-        off += 8 + len(fb) + (len(fb) & 1)
-    body = b"AVI " + hdrl + movi + chunk(b"idx1", idx)
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def avi_decode(payload: bytes) -> tuple[float, np.ndarray]:
-    """(fps, (n, h, w, 3) uint8 RGB frames) from an uncompressed 24-bit
-    BI_RGB AVI.  Compressed streams raise ValueError (out of scope)."""
-    if payload is None or payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-        raise ValueError("not an AVI")
-    w = h = None
-    fps = 0.0
-    frames: list[bytes] = []
-
-    def walk(buf: bytes) -> None:
-        nonlocal w, h, fps
-        pos = 0
-        while pos + 8 <= len(buf):
-            tag, length = struct.unpack("<4sI", buf[pos : pos + 8])
-            body = buf[pos + 8 : pos + 8 + length]
-            pos += 8 + length + (length & 1)
-            if tag == b"LIST":
-                walk(body[4:])
-            elif tag == b"strh" and body[:4] == b"vids":
-                scale, rate = struct.unpack("<II", body[20:28])
-                fps = rate / scale if scale else 0.0
-            elif tag == b"strf" and w is None:
-                _, bw, bh, _, bits, compression = struct.unpack("<IiiHHI", body[:20])
-                if bits != 24 or compression != 0:
-                    raise ValueError("only uncompressed 24-bit AVI supported")
-                if bw <= 0 or bh == 0:
-                    raise ValueError("invalid frame dimensions")
-                w, h = bw, abs(bh)
-            elif tag[2:4] in (b"db", b"dc") and length > 0:
-                frames.append(body)
-
-    # Malformed/truncated headers surface from struct.unpack as
-    # struct.error, which is NOT a ValueError — normalize so the
-    # multimodal operator's null-feature fallback (which catches
-    # ValueError) holds for every corrupt payload, never a batch abort.
-    try:
-        walk(payload[12:])
-    except struct.error as exc:
-        raise ValueError(f"truncated AVI structure: {exc}") from None
-    if w is None or not frames:
-        raise ValueError("missing stream format or frames")
-    stride = _dib_row_stride(w)
-    # Validate every frame against the header-declared geometry BEFORE
-    # allocating: a corrupt header claiming huge bw/bh with tiny chunks
-    # must raise ValueError here, not MemoryError at np.zeros (which would
-    # escape the multimodal operator's null-feature catch).
-    for fb in frames:
-        if len(fb) < h * stride:
-            raise ValueError("truncated frame")
-    out = np.zeros((len(frames), h, w, 3), dtype=np.uint8)
-    for i, fb in enumerate(frames):
-        dib = np.frombuffer(fb[: h * stride], dtype=np.uint8).reshape(h, stride)
-        out[i] = dib[:, : w * 3].reshape(h, w, 3)[::-1, :, ::-1]  # top-down, RGB
-    return fps, out

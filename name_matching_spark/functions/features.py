@@ -67,7 +67,7 @@ FEATURE_COLS = [
     # matches the other side's own leading initial.  Without this column
     # the two families are featurally identical, and the corpus-scale
     # training copies tip the shared region below the 0.85 threshold
-    # (scripts/diag_initial_pair.py).
+    # (BENCH/QUALITY.md, "Final round-5 scorer").
     "kind_initial",
 ]
 

@@ -14,8 +14,9 @@ Feature map (reference -> here):
 * RATIO                -> :func:`ratio_batch`          (1 - lev/max(len))
 * SORTED_TOKEN_RATIO   -> ratio over token-sorted strings
 * TOKEN_SET_RATIO      -> ratio over sorted distinct tokens
-* PARTIAL_RATIO        -> :func:`partial_ratio_batch`  (best-window edit
-  similarity on a 0-100 int scale, reference scale contract)
+* PARTIAL_RATIO        -> :func:`partial_ratio_reference_batch`
+  (bit-equal ``fuzzywuzzy.fuzz.partial_ratio``: gestalt-scored windows on
+  the reference's 0-100 int scale)
 * COSINE_SIM           -> tfidf.py (word 1-2-gram TF-IDF cosine)
 * EMB_DISTANCE         -> :func:`ngram_cosine_batch`   (char-3-gram hashed
   cosine; the deterministic stand-in for the reference's sentence-embedding
@@ -300,55 +301,8 @@ def jaccard_batch(xs, ys) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Partial ratio (0-100 int) — best-window edit similarity
+# Partial ratio (0-100 int) — fuzzywuzzy parity
 # ---------------------------------------------------------------------------
-
-
-def partial_ratio_batch(xs, ys, max_windows: int = 64, memo: dict | None = None) -> np.ndarray:
-    """Best sliding-window similarity of the shorter string against
-    equal-length substrings of the longer, on the reference's 0-100 int
-    scale: ``round(100 * max_w (1 - lev(short, w)/len(short)))``.
-
-    All windows across the whole batch are flattened into one
-    :func:`levenshtein_batch` call, then segment-reduced — no per-row DP.
-    ``max_windows`` caps pathological long-vs-short pairs (windows are then
-    strided evenly, always including the first and last).
-    """
-    n = len(xs)
-    if n == 0:
-        return np.zeros(0, dtype=np.int64)
-    shorts, windows, seg = [], [], []
-    result = np.zeros(n, dtype=np.int64)
-    for k in range(n):
-        s, l = xs[k], ys[k]
-        if len(s) > len(l):
-            s, l = l, s
-        m = len(s)
-        if m == 0:
-            result[k] = 0
-            continue
-        n_win = len(l) - m + 1
-        if n_win <= max_windows:
-            starts = range(n_win)
-        else:
-            starts = sorted({int(round(t * (n_win - 1) / (max_windows - 1))) for t in range(max_windows)})
-        for st in starts:
-            shorts.append(s)
-            windows.append(l[st : st + m])
-            seg.append(k)
-    if not shorts:
-        return result
-    lev = levenshtein_batch(shorts, windows, memo=memo).astype(np.float64)
-    mlen = np.fromiter((len(s) for s in shorts), dtype=np.float64, count=len(shorts))
-    sims = 1.0 - lev / np.maximum(mlen, 1.0)
-    seg = np.asarray(seg)
-    best = np.zeros(n, dtype=np.float64)
-    np.maximum.at(best, seg, sims)
-    scored = np.round(100.0 * best).astype(np.int64)
-    present = np.zeros(n, dtype=bool)
-    present[seg] = True
-    result[present] = scored[present]
-    return result
 
 
 def partial_ratio_reference(x: str, y: str) -> int:
@@ -1022,11 +976,6 @@ def token_weakest_link(x: str, y: str) -> float:
     return worst
 
 
-def token_weakest_link_batch(xs, ys, memo: dict | None = None) -> np.ndarray:  # noqa: ARG001 — uniform signature
-    """Batch weakest-link (see :func:`_token_align_stats_batch`)."""
-    return _token_align_stats_batch(xs, ys)[0]
-
-
 def _token_align_stats_batch(xs, ys) -> tuple[np.ndarray, np.ndarray]:
     """(worst_sim, max_excess) per pair in ONE alignment pass.
 
@@ -1169,8 +1118,3 @@ def token_sub_excess(x: str, y: str) -> float:
         if e > worst:
             worst = e
     return min(worst, _TOKEN_EXCESS_CAP)
-
-
-def token_sub_excess_batch(xs, ys, memo: dict | None = None) -> np.ndarray:  # noqa: ARG001 — uniform signature
-    """Batch twin of :func:`token_sub_excess` (shared alignment pass)."""
-    return _token_align_stats_batch(xs, ys)[1]

@@ -266,8 +266,9 @@ def candidate_pairs(
     # Sub-blocks STILL over the cap (low-entropy shingle mass — e.g.
     # thousands of names sharing one dominant shingle) fall back to
     # linear STAR pairs around the min-name hub, the same discipline as
-    # the LSH mega-bucket cap in dedup.py: O(size) pairs, hub-mediated
-    # transitive recall, never a quadratic and never zero work.
+    # the LSH mega-bucket cap in similarity_search.py: O(size) pairs,
+    # hub-mediated transitive recall, never a quadratic and never zero
+    # work.
     shot = skeyed.where(F.col("block_size") > max_block).select("key", "name")
     hubs = shot.groupBy("key").agg(F.min("name").alias("hub"))
     star = (

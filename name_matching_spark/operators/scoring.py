@@ -124,9 +124,8 @@ def make_scorer_udf(model_json: str, tfidf_json: str, spark=None, feature_cols=N
 
 
 def _vec_cosine(a, b):
-    """Native (JVM, zip_with/aggregate) cosine of two array columns —
-    the d5 kernel (operators/dedup.py) inlined for the scorer; NULL if
-    either side is NULL or zero-norm."""
+    """Native (JVM, zip_with/aggregate) cosine of two array columns; NULL
+    if either side is NULL or zero-norm."""
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),

@@ -1,19 +1,10 @@
-"""Similarity search over an embedding column (array<float>).
+"""Semantic-channel blocking over an embedding column (array<float>).
 
-* :func:`brute_force_topk` — exact cosine top-k for a set of query vectors:
-  broadcast the (small) query side, native ``zip_with``/``aggregate`` dot
-  products, per-query ``row_number`` window.  The correctness baseline.
-* :func:`lsh_topk` — a scale path: random-hyperplane (sign) LSH buckets;
-  candidates are limited to bucket collisions across ``tables`` independent
-  hash tables, then re-ranked exactly.  Probing cost drops from O(N) per
-  query to O(N / 2^bits x tables); recall is tunable with (bits, tables).
-* :func:`ivf_topk` — the other scale path: IVF-flat (coarse k-means
-  quantizer trained on a bounded deterministic sample, one-pass native
-  list assignment, per-query n_probe-list probing with exact re-rank).
-
-Hyperplanes/centroids are derived deterministically (seeded) at
-plan-build time and shipped as ONE broadcast constant nested-array column
-(a single-row cross join) — no state, reproducible across runs, and plan
+:func:`embedding_candidates` pairs names whose embeddings collide in a
+random-hyperplane (sign) LSH bucket in any of ``tables`` independent hash
+tables.  Hyperplanes are derived deterministically (seeded) at plan-build
+time and shipped as ONE broadcast constant nested-array column (a
+single-row cross join) — no state, reproducible across runs, and plan
 node count flat in tables*bits*dim (per-element literals were a plan-size
 hazard at real embedding dims, 384+).
 """
@@ -21,54 +12,8 @@ hazard at real embedding dims, 384+).
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(c: Column) -> Column:
-    return F.sqrt(F.aggregate(c, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v))
-
-
-def cosine_col(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def brute_force_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
-    query_key_col: str = "query_id",
-) -> DataFrame:
-    """(query_id, vec_id, cosine, rank) — exact top-k by cosine.
-
-    The query side is broadcast (queries << corpus); the corpus scan is a
-    single narrow pass, the only shuffle is the per-query top-k window."""
-    q = F.broadcast(
-        queries.select(
-            F.col(query_key_col).alias("query_id"), F.col(vec_col).alias("qv")
-        )
-    )
-    scored = (
-        emb.select(F.col(key_col).alias("vec_id"), F.col(vec_col).alias("v"))
-        .crossJoin(q)
-        .withColumn("cosine", F.round(cosine_col(F.col("qv"), F.col("v")), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
 
 
 def _hyperplanes(dim: int, bits: int, tables: int, seed: int = 42) -> np.ndarray:
@@ -106,58 +51,17 @@ def _all_buckets(vec: Column, planes_col: Column, bits: int) -> Column:
             F.lit(0),
             lambda acc, pi: acc
             + F.when(
-                _dot(vec, pi["p"]) >= 0, F.pow(F.lit(2.0), pi["i"]).cast("int")
+                F.aggregate(
+                    F.zip_with(
+                        vec, pi["p"], lambda x, y: x.cast("double") * y.cast("double")
+                    ),
+                    F.lit(0.0),
+                    lambda dot, v: dot + v,
+                )
+                >= 0,
+                F.pow(F.lit(2.0), pi["i"]).cast("int"),
             ).otherwise(F.lit(0)),
         ),
-    )
-
-
-def lsh_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    dim: int = 32,
-    bits: int = 6,
-    tables: int = 4,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
-    query_key_col: str = "query_id",
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: sign-LSH bucket join then exact re-rank.
-
-    At 100TB the corpus side is partitioned by (table, bucket); each query
-    probes ``tables`` buckets instead of the full corpus."""
-    planes = _hyperplanes(dim, bits, tables, seed)
-    corpus = emb.select(F.col(key_col).alias("vec_id"), F.col(vec_col).alias("v"))
-    qs = queries.select(F.col(query_key_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    planes_type = "array<array<array<double>>>"
-    # ONE projection computing every table's bucket id; posexplode yields
-    # (table index, bucket) — a single corpus scan instead of a
-    # `tables`-way union of scans.  Planes ride as one broadcast constant.
-    c_buck = _with_constant_array(corpus, planes.tolist(), "_planes", planes_type).select(
-        "vec_id", "v",
-        F.posexplode(_all_buckets(F.col("v"), F.col("_planes"), bits)).alias(
-            "tbl", "bucket"
-        ),
-    )
-    q_buck = _with_constant_array(qs, planes.tolist(), "_planes", planes_type).select(
-        "query_id", "qv",
-        F.posexplode(_all_buckets(F.col("qv"), F.col("_planes"), bits)).alias(
-            "tbl", "bucket"
-        ),
-    )
-    cand = (
-        q_buck.join(c_buck, ["tbl", "bucket"])
-        .select("query_id", "vec_id", "qv", "v")
-        .dropDuplicates(["query_id", "vec_id"])
-        .withColumn("cosine", F.round(cosine_col(F.col("qv"), F.col("v")), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
     )
 
 
@@ -177,7 +81,7 @@ def embedding_candidates(
     never co-block on tokens/phonetics/shingles, so without this the
     scorer's embedding OR-rule would have nothing to score).  Buckets
     beyond ``max_bucket`` emit linear star pairs around the min-name hub —
-    the same mega-bucket discipline as blocking.py / dedup.py."""
+    the same mega-bucket discipline as blocking.py."""
     planes = _hyperplanes(dim, bits, tables, seed)
     rows = emb.select(F.col(name_col).alias("name"), F.col(vec_col).alias("v"))
     keyed = _with_constant_array(
@@ -208,153 +112,3 @@ def embedding_candidates(
         )
     )
     return quad.unionByName(star).dropDuplicates(["name_x", "name_y"])
-
-
-def _spherical_kmeans(vectors: np.ndarray, n_lists: int, iters: int, seed: int) -> np.ndarray:
-    """Seeded Lloyd's iterations on L2-normalized vectors (spherical
-    k-means: assign by max dot product, re-estimate as the normalized
-    mean) — the IVF coarse quantizer.  Deterministic: seeded init, fixed
-    iteration count, empty clusters keep their previous centroid."""
-    rng = np.random.default_rng(seed)
-    X = vectors / np.maximum(np.linalg.norm(vectors, axis=1, keepdims=True), 1e-12)
-    centroids = X[rng.choice(len(X), size=min(n_lists, len(X)), replace=False)].copy()
-    for _ in range(iters):
-        assign = np.argmax(X @ centroids.T, axis=1)
-        for j in range(len(centroids)):
-            members = X[assign == j]
-            if len(members):
-                centroids[j] = members.mean(axis=0)
-        centroids /= np.maximum(
-            np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12
-        )
-    return centroids
-
-
-def ivf_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    train_sample: int = 4096,
-    kmeans_iters: int = 10,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
-    query_key_col: str = "query_id",
-    seed: int = 42,
-) -> DataFrame:
-    """IVF-flat approximate top-k (the inverted-file recipe popularized by
-    faiss: coarse k-means quantizer + probe lists + exact re-rank):
-
-    1. train the coarse quantizer driver-side on a BOUNDED deterministic
-       sample (hash-filtered, key-ordered, capped at ``train_sample`` —
-       the standard practice: the quantizer needs a sample, not the
-       corpus);
-    2. assign every corpus vector to its nearest centroid list in ONE
-       narrow pass — the centroids ride as literals, the argmax is a
-       native ``array_max`` over per-centroid dot products (no UDF, no
-       shuffle);
-    3. each query probes its ``n_probe`` nearest lists and re-ranks
-       exactly within them: probing cost ~ O(N * n_probe / n_lists) per
-       query instead of O(N).
-
-    At 100 TB the assigned corpus is partitioned/bucketed by ``list_id``
-    so a probe touches only its lists' partitions.  Recall is tunable
-    with (n_lists, n_probe); the falsifiable gate is recall_at_k vs
-    brute_force_topk (tested)."""
-    corpus = emb.select(F.col(key_col).alias("vec_id"), F.col(vec_col).alias("v"))
-    n = corpus.count()
-    if n == 0:
-        # degenerate corpus: same empty answer (and schema) as
-        # brute_force_topk, not a numpy AxisError from the quantizer
-        return (
-            queries.select(F.col(query_key_col).alias("query_id"))
-            .limit(0)
-            .withColumn("vec_id", F.lit(None).cast(corpus.schema["vec_id"].dataType))
-            .withColumn("cosine", F.lit(0.0))
-            .withColumn("rank", F.lit(1).cast("int"))
-        )
-    denom = max(1, n // train_sample)
-    sample_pdf = (
-        corpus.where(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(denom)) == 0)
-        .orderBy("vec_id")
-        .limit(train_sample)
-        .toPandas()
-    )
-    vectors = np.array([np.asarray(v, dtype=np.float64) for v in sample_pdf["v"]])
-    centroids = _spherical_kmeans(vectors, n_lists, kmeans_iters, seed)
-    n_lists = len(centroids)  # may shrink if the sample was tiny
-    cent_type = "array<array<double>>"
-
-    def centroid_sims(cents: Column, vec: Column) -> Column:
-        # cosine argmax == dot argmax against unit centroids, up to the
-        # row's own norm (a positive scalar — order-preserving).  Centroids
-        # ride as one broadcast constant column: inlining n_lists*dim
-        # literals is the same plan-size hazard as the LSH planes.
-        return F.transform(cents, lambda c: _dot(vec, c))
-
-    # (2) one-pass assignment: array_max over (sim, -list_id) structs picks
-    # the highest similarity, breaking ties toward the smaller list id
-    best = F.array_max(
-        F.zip_with(
-            centroid_sims(F.col("_cents"), F.col("v")),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_lists - 1)), lambda j: -j
-            ),
-            lambda s, nj: F.struct(s.alias("s"), nj.alias("nj")),
-        )
-    )
-    assigned = (
-        _with_constant_array(corpus, centroids.tolist(), "_cents", cent_type)
-        .withColumn("list_id", (-best["nj"]).cast("int"))
-        .drop("_cents")
-    )
-
-    # (3) query probes: explode per-centroid sims, keep top n_probe
-    qs = queries.select(
-        F.col(query_key_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    q_lists = _with_constant_array(qs, centroids.tolist(), "_cents", cent_type).select(
-        "query_id", "qv",
-        F.posexplode(centroid_sims(F.col("_cents"), F.col("qv"))).alias(
-            "list_id", "sim"
-        ),
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("list_id"))
-    probes = F.broadcast(
-        q_lists.withColumn("pr", F.row_number().over(wq))
-        .where(F.col("pr") <= n_probe)
-        .select("query_id", "qv", "list_id")
-    )
-    cand = probes.join(assigned, "list_id").withColumn(
-        "cosine", F.round(cosine_col(F.col("qv"), F.col("v")), 6)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
-
-
-def recall_at_k(approx: DataFrame, exact: DataFrame, k: int) -> DataFrame:
-    """(query_id, hits, recall): fraction of the exact top-k the
-    approximate result recovered — the falsifiable quality check for the
-    LSH path (brute_force_topk is the in-repo ground truth)."""
-    ex = exact.where(F.col("rank") <= k).select("query_id", "vec_id")
-    ap = approx.where(F.col("rank") <= k).select("query_id", "vec_id")
-    hits = ex.join(ap, ["query_id", "vec_id"]).groupBy("query_id").agg(
-        F.count("*").alias("hits")
-    )
-    return (
-        ex.groupBy("query_id")
-        .agg(F.count("*").alias("n_exact"))
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("hits"), F.lit(0)).alias("hits"),
-            F.round(F.coalesce(F.col("hits"), F.lit(0)) / F.col("n_exact"), 6).alias(
-                "recall"
-            ),
-        )
-    )

@@ -145,29 +145,6 @@ def stateful_turn_collapse(stream: DataFrame) -> DataFrame:
     )
 
 
-def stream_dedup(
-    stream: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact dedup — the ingestion-side counterpart of the batch
-    ``exact_dedup`` operator: fingerprint the text (md5, the same
-    oracle-stable hash the batch ops use) and drop duplicates WITHIN the
-    event-time watermark via ``dropDuplicatesWithinWatermark``.
-
-    Plain ``dropDuplicates`` on a stream keeps every key seen forever
-    (unbounded state — the thing that dies first at 10^12-row scale);
-    the watermarked variant evicts fingerprints once the watermark
-    passes, bounding state to the late-data allowance.  Duplicates
-    arriving later than the watermark are a declared miss (they fall to
-    the batch dedup pass — the standard lambda split)."""
-    s = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp")).withColumn(
-        "fp", F.md5(F.col(text_col))
-    )
-    return s.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(["fp"])
-
-
 class EntityTokenIndex:
     """The stream-side lookup over the entity table, built ONCE per
     entity-table refresh and shipped to the workers in ONE broadcast that

@@ -112,35 +112,6 @@ def main() -> None:
         grab(q6),
     ))
 
-    # 7. SimHash: zero-shuffle narrow map (the round-3 d3 rewrite).
-    from name_matching_spark.operators.dedup import simhash
-
-    q7 = simhash(d)
-    sections.append((
-        "SimHash signature (operator d3)",
-        "NO Exchange anywhere and no Python: one per-row higher-order "
-        "aggregate over the token array folds all bit votes — a pure "
-        "narrow map (the round-2 plan shuffled 32 per-bit sum columns).",
-        grab(q7),
-    ))
-
-    # 8. IVF-flat ANN: broadcast probe join, no UDFs.
-    from name_matching_spark.operators.similarity_search import ivf_topk
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    qv = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    q8 = ivf_topk(emb, qv, k=5, n_lists=16, n_probe=10)
-    sections.append((
-        "IVF-flat ANN (operator ann3)",
-        "Centroids ride as literals; list assignment is a native "
-        "array_max projection over the corpus scan; the probe side is "
-        "BroadcastHashJoin'd; the only exchange is the per-query top-k "
-        "window.",
-        grab(q8),
-    ))
-
     out = ["# Physical plans (regenerate: `python scripts/explain_plans.py`)\n"]
     for title, props, plan in sections:
         out.append(f"## {title}\n\n{props}\n\n```\n{plan}```\n")

@@ -20,7 +20,7 @@ from name_matching_spark.session import get_spark  # noqa: E402
 # Override with ORACLE_SF_DIR to run the same gate at another scale (e.g.
 # the generated data/sf1 for the 10x scale-evidence run).
 SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+TABLES = "region nation customer supplier part orders lineitem events documents".split()
 
 
 def norm_cell(v):

@@ -2,8 +2,9 @@
 scalar spec functions exactly.
 
 The scalar implementations (``jaro_winkler``, ``monge_elkan_jw``,
-``token_weakest_link``) ARE the executable spec (they encode the reference
-semantics, build_features.py in vietexob/name-matching); the vectorized
+``token_weakest_link``, ``token_sub_excess``) ARE the executable spec
+(they encode the reference semantics, build_features.py in
+vietexob/name-matching); the vectorized
 paths exist purely for throughput inside the Arrow scorer UDF, so any
 difference — even one ulp — is a bug (the trained GBM artifact depends on
 exact feature values)."""
@@ -74,11 +75,21 @@ def test_monge_elkan_batch_matches_scalar():
 
 
 def test_token_weakest_link_batch_matches_scalar():
-    got = sim.token_weakest_link_batch(XS, YS)
+    # the scorer reads both features from one alignment pass; this is the
+    # weakest-link half
+    worst, _ = sim._token_align_stats_batch(XS, YS)
     exp = np.fromiter(
         (sim.token_weakest_link(x, y) for x, y in zip(XS, YS)), dtype=np.float64
     )
-    assert np.array_equal(got, exp)
+    assert np.array_equal(worst, exp)
+
+
+def test_token_sub_excess_batch_matches_scalar():
+    _, excess = sim._token_align_stats_batch(XS, YS)
+    exp = np.fromiter(
+        (sim.token_sub_excess(x, y) for x, y in zip(XS, YS)), dtype=np.float64
+    )
+    assert np.array_equal(excess, exp)
 
 
 def test_ngram_cosine_batch_matches_direct():
@@ -126,7 +137,8 @@ def test_batch_kernels_tiny_inputs(n):
     ys = ["BA"][:n]
     assert len(sim.jaro_winkler_batch(xs, ys)) == n
     assert len(sim.monge_elkan_jw_batch(xs, ys)) == n
-    assert len(sim.token_weakest_link_batch(xs, ys)) == n
+    worst, excess = sim._token_align_stats_batch(xs, ys)
+    assert len(worst) == len(excess) == n
 
 
 def test_myers_levenshtein_exhaustive_small():

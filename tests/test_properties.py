@@ -93,8 +93,12 @@ def test_normalize_idempotent_and_clean(t):
 @settings(max_examples=100, deadline=None)
 @given(st.lists(st.tuples(names, names), min_size=1, max_size=10))
 def test_partial_ratio_bounds_batch(pairs):
-    out = sim.partial_ratio_batch([a for a, _ in pairs], [b for _, b in pairs])
+    xs = [a for a, _ in pairs]
+    ys = [b for _, b in pairs]
+    out = sim.partial_ratio_reference_batch(xs, ys)
     assert all(0 <= v <= 100 for v in out)
+    # the batch dedups pairs and maps back: each slot is its own pair's score
+    assert list(out) == [sim.partial_ratio_reference(x, y) for x, y in pairs]
 
 
 @settings(max_examples=60, deadline=None)

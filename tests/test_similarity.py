@@ -39,11 +39,14 @@ def test_jaccard_list_length_denominator():
 
 
 def test_partial_ratio_scale_and_bounds():
-    out = sim.partial_ratio_batch(["WICK", "JOHN WICK", ""], ["JOHN WICK", "JOHN WICK", "X"])
+    out = sim.partial_ratio_reference_batch(
+        ["WICK", "JOHN WICK", "X", "JOHN"], ["JOHN WICK", "JOHN WICK", "ABC", "JOAN"]
+    )
     assert out.dtype == np.int64
     assert out[0] == 100  # exact substring
     assert out[1] == 100  # identical
-    assert out[2] == 0    # empty side
+    assert out[2] == 0    # no shared character
+    assert out[3] == 75   # one substitution in four: gestalt 2*3/8
     assert all(0 <= v <= 100 for v in out)
 
 

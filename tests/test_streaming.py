@@ -55,40 +55,6 @@ def test_assign_stream_batch(spark):
     assert out["c2"]["status"] == "pending"
 
 
-@pytest.mark.slow
-def test_stream_dedup_within_watermark(spark, tmp_path):
-    """Streaming exact dedup: duplicates inside the watermark collapse to
-    one row; state is bounded (dropDuplicatesWithinWatermark, not the
-    unbounded dropDuplicates)."""
-    import datetime as dt
-
-    from name_matching_spark.streaming.stream_resolve import stream_dedup
-
-    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-    rows = []
-    for i in range(40):
-        text = f"doc body {i % 10}"  # 10 distinct texts, 4 copies each
-        rows.append((i, t0 + dt.timedelta(seconds=i), text))
-    src = str(tmp_path / "src")
-    static = spark.createDataFrame(rows, ["doc_id", "ts", "text"])
-    static.repartition(2).write.parquet(src)
-    stream = spark.readStream.schema(static.schema).parquet(src)
-    out = stream_dedup(stream, watermark="10 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select * from dedup_stream").collect()
-    # every distinct text survives exactly once
-    assert len(got) == 10
-    assert len({r["fp"] for r in got}) == 10
-
-
 def test_entity_token_index_built_once(spark):
     """The entity-side explode must run exactly once per index build; every
     micro-batch reuses the materialized index (no per-trigger recompute)."""
