@@ -40,6 +40,23 @@ def _terms(text: str) -> list[str]:
     return toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
 
 
+def _lowered_docs(names_df, name_col: str, extra_corpus) -> list[str]:
+    """The documents a fit over a Spark name table counts: the sorted
+    distinct union of the names, lowercased in Spark and collected in one
+    Arrow transfer, and the lowercased ``extra_corpus``."""
+    from pyspark.sql import functions as F
+
+    names = (
+        names_df.select(F.lower(F.col(name_col)).alias("doc"))
+        .toArrow()
+        .column("doc")
+        .to_pylist()
+    )
+    docs = {d for d in names if d is not None}
+    docs.update(c.lower() for c in extra_corpus or ())
+    return sorted(docs)
+
+
 class TfidfModel:
     """Fitted TF-IDF vocabulary + idf weights with pairwise-cosine transform."""
 
@@ -54,8 +71,9 @@ class TfidfModel:
         cls,
         corpus,
         max_df: float = 0.9,
-        max_features: int = 10000,
+        max_features: int | None = 10000,
     ) -> "TfidfModel":
+        """``max_features=None`` keeps every term that passes ``max_df``."""
         n_docs = 0
         df: Counter = Counter()
         tf_total: Counter = Counter()
@@ -68,8 +86,10 @@ class TfidfModel:
             raise ValueError("empty corpus")
         max_df_count = max_df * n_docs
         kept = [t for t in df if df[t] <= max_df_count]
-        kept.sort(key=lambda t: (-tf_total[t], t))
-        kept = sorted(kept[:max_features])
+        if max_features is not None:
+            kept.sort(key=lambda t: (-tf_total[t], t))
+            kept = kept[:max_features]
+        kept.sort()
         vocab = {t: i for i, t in enumerate(kept)}
         idf = np.array(
             [np.log((1.0 + n_docs) / (1.0 + df[t])) + 1.0 for t in kept],
@@ -132,7 +152,7 @@ class TfidfModel:
             self._max_idf = m
         return m
 
-    # -- distributed fitting ---------------------------------------------------
+    # -- fitting a Spark name table -------------------------------------------
 
     @classmethod
     def fit_spark(
@@ -145,12 +165,14 @@ class TfidfModel:
         ceiling: int | None = None,
         overflow_n_buckets: int = 1 << 22,
     ) -> "TfidfModel | HashedTfidfModel":
-        """Fit on a (possibly huge) Spark DataFrame of names plus an optional
-        driver-side extra corpus.  The document-frequency / term-frequency
-        aggregation runs distributed; only the <= ``max_features`` vocabulary
-        rows are collected.  Tokenization mirrors :func:`_terms` exactly for
-        whitespace-normalized word-character names (which is what the
-        normalization stage guarantees).
+        """Fit on a Spark DataFrame of names plus an optional driver-side
+        extra corpus: one Arrow collect of the names, lowercased in Spark,
+        then :meth:`fit` over the sorted distinct lowered union of names
+        and corpus.  Driver memory is O(distinct names): every name comes
+        to the driver, where the earlier distributed aggregate collected
+        only its vocabulary rows (up to the 1M-term ceiling).  At the
+        pipeline's sizes the driver count is far cheaper than the jobs of
+        a Spark aggregate.
 
         ``max_features=None`` means corpus-adaptive: keep every term up to
         a 1M hard ceiling.  The 10k default mirrors the reference
@@ -162,7 +184,7 @@ class TfidfModel:
         those and scores different-core orgs as near-identical (the
         documented OOV failure mode, measured as a primary driver of
         cluster over-merge at the 100k-entity scale).  The ceiling bounds
-        the driver/broadcast artifact (~tens of MB); a corpus whose term
+        the broadcast artifact (~tens of MB); a corpus whose term
         diversity EXCEEDS the ceiling auto-switches to the hashing-trick
         fit (``overflow_n_buckets`` buckets, returns a
         :class:`HashedTfidfModel`) — truncating the adaptive vocabulary
@@ -171,122 +193,28 @@ class TfidfModel:
         0.001 F1 of adaptive (BENCH/QUALITY.md).  ``ceiling`` overrides
         :data:`ADAPTIVE_VOCAB_CEILING` (tests cross the boundary cheaply).
         """
-        from pyspark.sql import functions as F
+        docs = _lowered_docs(names_df, name_col, extra_corpus)
+        model = cls.fit(docs, max_df=max_df, max_features=max_features)
+        limit = ceiling if ceiling is not None else ADAPTIVE_VOCAB_CEILING
+        if max_features is not None or len(model.vocab) <= limit:
+            return model
+        # The adaptive mode exists to PREVENT rare-core truncation;
+        # crossing the ceiling therefore SWITCHES fits rather than
+        # truncating: the hashed model keeps a weight for every term at
+        # O(n_buckets) memory regardless of term diversity.
+        import warnings
 
-        # ONE distinct over the union (distinct(union(distinct, distinct))
-        # computes the same set through three exchanges)
-        docs = names_df.select(F.lower(F.col(name_col)).alias("doc"))
-        if extra_corpus:
-            # Arrow createDataFrame path (pandas): ~2.5x faster to ship
-            # the ~20k-doc training corpus than the pickled-row path, and
-            # it holds the driver GIL for far less time (the fit runs on
-            # a worker thread concurrent with blocking in the pipeline).
-            import pandas as pd
-
-            spark = names_df.sparkSession
-            extra = spark.createDataFrame(
-                pd.DataFrame({"doc": [c.lower() for c in extra_corpus]}),
-                "doc string",
-            )
-            docs = docs.unionByName(extra)
-        docs = docs.distinct()
-        toks = F.filter(F.split(F.col("doc"), " "), lambda t: F.length(t) >= 2)
-        n_tok = F.size(toks)
-        bigrams = F.zip_with(
-            F.slice(toks, 1, F.greatest(n_tok - 1, F.lit(0))),
-            F.slice(toks, 2, F.greatest(n_tok - 1, F.lit(0))),
-            lambda a, b: F.concat_ws(" ", a, b),
+        warnings.warn(
+            "TfidfModel.fit_spark: corpus-adaptive vocabulary exceeded "
+            f"the {limit}-term ceiling; auto-switching to hashed TF-IDF "
+            f"({overflow_n_buckets} buckets) to preserve rare "
+            "discriminating terms",
+            RuntimeWarning,
+            stacklevel=2,
         )
-        # The distinct-docs chain feeds BOTH the count and the term
-        # aggregate; un-persisted it executes twice (two actions, no CSE
-        # across jobs).  One pass + spill-graceful cache instead.
-        docs.persist()
-        n_docs = docs.count()
-        # CPU floor for the term aggregate (guide §2.5 analog of the scan
-        # floor): AQE coalesces the small distinct output to ~1 partition,
-        # serializing the tokenize+bigram+explode work on one core.
-        # Repartition BY doc (hash, not round-robin) so the downstream
-        # countDistinct(doc) keeps exploiting the doc partitioning and
-        # never shuffles doc strings into the aggregate.  Target derived
-        # from the measured corpus size (>= ~512 docs/task); at scale the
-        # cached partition count already exceeds it and this is a no-op.
-        # (.rdd probe is safe here: docs is materialized by the count.)
-        n_par = min(
-            names_df.sparkSession.sparkContext.defaultParallelism,
-            max(1, n_docs // 512),
+        return HashedTfidfModel.fit(
+            docs, max_df=max_df, n_buckets=overflow_n_buckets
         )
-        src = docs
-        if n_par > 1 and docs.rdd.getNumPartitions() < n_par:
-            src = docs.repartition(n_par, F.col("doc"))
-        with_terms = src.select(
-            "doc", F.concat(toks, bigrams).alias("terms")
-        )
-        adaptive_cap = ceiling if ceiling is not None else ADAPTIVE_VOCAB_CEILING
-        # ONE explode + ONE aggregate: tf = occurrence count, df = distinct
-        # containing docs — same values as the explode-twice-and-join shape
-        # with half the scans and no join.  explode_outer + isNotNull
-        # instead of explode: the inferred non-empty filter a plain explode
-        # generates gets pushed below the distinct and re-evaluates the
-        # whole tokenize+bigram tree twice per input row (guide §7.2).
-        agg = (
-            with_terms.select("doc", F.explode_outer("terms").alias("term"))
-            .where(F.col("term").isNotNull())
-            .groupBy("term")
-            .agg(
-                F.count("*").alias("tf"),
-                F.countDistinct("doc").alias("df"),
-            )
-            .where(F.col("df") <= max_df * n_docs)
-        )
-        if max_features is not None:
-            # frequency-truncated vocabulary: the global order IS the
-            # truncation rule, keep the sort
-            stats = agg.orderBy(F.desc("tf"), F.asc("term")).limit(
-                max_features + 1
-            ).collect()
-        else:
-            # corpus-adaptive: every surviving term is kept (up to the
-            # ceiling), so the global sort bought nothing but a full
-            # exchange + TakeOrdered heap over every term (guide §2.4:
-            # an orderBy used only to make output deterministic) — the
-            # vocabulary is re-sorted lexicographically below either way.
-            # Over-ceiling handling needs no order: the fit SWITCHES to
-            # hashed, discarding the collected rows.
-            stats = agg.limit(adaptive_cap + 1).collect()
-        docs.unpersist()
-        limit = max_features if max_features is not None else adaptive_cap
-        if len(stats) > limit:
-            stats = stats[:limit]
-            if max_features is None:
-                # The adaptive mode exists to PREVENT rare-core truncation;
-                # crossing the ceiling therefore SWITCHES fits rather than
-                # truncating: the hashed model keeps a weight for every
-                # term at O(n_buckets) memory regardless of term diversity.
-                import warnings
-
-                warnings.warn(
-                    "TfidfModel.fit_spark: corpus-adaptive vocabulary exceeded "
-                    f"the {limit}-term ceiling; auto-switching to hashed TF-IDF "
-                    f"({overflow_n_buckets} buckets) to preserve rare "
-                    "discriminating terms",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-                return HashedTfidfModel.fit_spark(
-                    names_df,
-                    name_col=name_col,
-                    extra_corpus=extra_corpus,
-                    max_df=max_df,
-                    n_buckets=overflow_n_buckets,
-                )
-        kept = sorted(r["term"] for r in stats)
-        dfmap = {r["term"]: r["df"] for r in stats}
-        vocab = {t: i for i, t in enumerate(kept)}
-        idf = np.array(
-            [np.log((1.0 + n_docs) / (1.0 + dfmap[t])) + 1.0 for t in kept],
-            dtype=np.float64,
-        )
-        return cls(vocab, idf)
 
     # -- (de)serialization ----------------------------------------------------
 
@@ -302,11 +230,9 @@ class TfidfModel:
 
 
 def _md5_bucket(term: str, n_buckets: int) -> int:
-    """Stable term -> bucket: 60-bit md5 prefix mod n_buckets.  md5 (not
-    xxhash) so the Spark-side SQL expression
-    ``pmod(conv(substring(md5(t),1,15),16,10), B)`` and driver python
-    compute the identical bucket (the same trick the dedup operators use
-    for oracle-stable hashing)."""
+    """Stable term -> bucket: 60-bit md5 prefix mod n_buckets.  md5, not
+    Python's salted ``hash``, so the fit and every scorer process compute
+    the identical bucket."""
     import hashlib
 
     return int(hashlib.md5(term.encode()).hexdigest()[:15], 16) % n_buckets
@@ -316,10 +242,10 @@ class HashedTfidfModel:
     """Hashing-trick TF-IDF — the successor fit for corpora past the
     adaptive vocabulary's 1M-term ceiling.
 
-    No vocabulary is ever collected: a term maps to one of ``n_buckets``
-    md5-derived buckets and only the per-bucket idf array ships to the
-    driver/broadcast (memory O(n_buckets) REGARDLESS of corpus term
-    diversity — the property a 10^8-name corpus needs).  With
+    No vocabulary is kept: a term maps to one of ``n_buckets``
+    md5-derived buckets and only the per-bucket idf array ships in the
+    broadcast (memory O(n_buckets) REGARDLESS of corpus term
+    diversity).  With
     ``n_buckets`` far above the distinct-term count, buckets are
     singletons and the model is numerically identical to an uncapped
     :class:`TfidfModel` (tested); collisions degrade gracefully (two
@@ -343,6 +269,30 @@ class HashedTfidfModel:
         )
 
     @classmethod
+    def fit(
+        cls, corpus, max_df: float = 0.9, n_buckets: int = 1 << 20
+    ) -> "HashedTfidfModel":
+        """A bucket's df is the number of documents holding at least one
+        term that hashes to it; a bucket past ``max_df`` weighs 0, like a
+        pruned term."""
+        n_docs = 0
+        df: Counter = Counter()
+        for doc in corpus:
+            n_docs += 1
+            df.update({_md5_bucket(t, n_buckets) for t in _terms(doc)})
+        if n_docs == 0:
+            raise ValueError("empty corpus")
+        unseen = np.log(1.0 + n_docs) + 1.0  # df=0
+        idf = np.full(n_buckets, unseen, dtype=np.float64)
+        max_df_count = max_df * n_docs
+        for b, n in df.items():
+            if n <= max_df_count:
+                idf[b] = np.log((1.0 + n_docs) / (1.0 + n)) + 1.0
+            else:
+                idf[b] = 0.0  # stop-bucket, same rule as max_df terms
+        return cls(idf, n_buckets, default_idf=unseen)
+
+    @classmethod
     def fit_spark(
         cls,
         names_df,
@@ -351,59 +301,13 @@ class HashedTfidfModel:
         max_df: float = 0.9,
         n_buckets: int = 1 << 20,
     ) -> "HashedTfidfModel":
-        from pyspark.sql import functions as F
-
-        # ONE distinct over the union (distinct(union(distinct, distinct))
-        # computes the same set through three exchanges)
-        docs = names_df.select(F.lower(F.col(name_col)).alias("doc"))
-        if extra_corpus:
-            # Arrow createDataFrame path (pandas): ~2.5x faster to ship
-            # the ~20k-doc training corpus than the pickled-row path, and
-            # it holds the driver GIL for far less time (the fit runs on
-            # a worker thread concurrent with blocking in the pipeline).
-            import pandas as pd
-
-            spark = names_df.sparkSession
-            extra = spark.createDataFrame(
-                pd.DataFrame({"doc": [c.lower() for c in extra_corpus]}),
-                "doc string",
-            )
-            docs = docs.unionByName(extra)
-        docs = docs.distinct()
-        toks = F.filter(F.split(F.col("doc"), " "), lambda t: F.length(t) >= 2)
-        n_tok = F.size(toks)
-        bigrams = F.zip_with(
-            F.slice(toks, 1, F.greatest(n_tok - 1, F.lit(0))),
-            F.slice(toks, 2, F.greatest(n_tok - 1, F.lit(0))),
-            lambda a, b: F.concat_ws(" ", a, b),
+        """:meth:`fit` over the same documents as
+        :meth:`TfidfModel.fit_spark` (one Arrow collect of the names)."""
+        return cls.fit(
+            _lowered_docs(names_df, name_col, extra_corpus),
+            max_df=max_df,
+            n_buckets=n_buckets,
         )
-        docs.persist()
-        n_docs = docs.count()
-        bucket = F.pmod(
-            F.conv(F.substring(F.md5(F.col("term")), 1, 15), 16, 10).cast("long"),
-            F.lit(n_buckets),
-        )
-        stats = (
-            docs.select("doc", F.concat(toks, bigrams).alias("terms"))
-            .select("doc", F.explode_outer("terms").alias("term"))
-            .where(F.col("term").isNotNull())  # see fit_spark: avoids the
-            # inferred non-empty filter re-tokenizing below the distinct
-            .select("doc", bucket.alias("b"))
-            .groupBy("b")
-            .agg(F.countDistinct("doc").alias("df"))
-            .collect()  # <= distinct-bucket rows, bounded by n_buckets
-        )
-        docs.unpersist()
-        idf = np.full(
-            n_buckets, np.log((1.0 + n_docs) / 1.0) + 1.0, dtype=np.float64
-        )
-        max_df_count = max_df * n_docs
-        for r in stats:
-            if r["df"] <= max_df_count:
-                idf[int(r["b"])] = np.log((1.0 + n_docs) / (1.0 + r["df"])) + 1.0
-            else:
-                idf[int(r["b"])] = 0.0  # stop-bucket, same rule as max_df terms
-        return cls(idf, n_buckets, default_idf=np.log(1.0 + n_docs) + 1.0)
 
     def _doc_weights(self, text: str) -> dict[int, float]:
         c = Counter(_terms(text))

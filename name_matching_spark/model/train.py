@@ -291,7 +291,7 @@ def train(
 
     # NB on the cosine feature: the reference fits TF-IDF once on the
     # training corpus; at resolution time this module refits on the corpus
-    # being resolved (distributed fit, operators/tfidf_fit.py), so the
+    # being resolved (TfidfModel.fit_spark), so the
     # feature stays in-distribution for out-of-vocabulary names.  Training
     # therefore uses the train-corpus fit exactly as the reference does.
 

@@ -179,6 +179,9 @@ class EntityResolutionPipeline:
             inputs=["conversations"],
             params=in_fp,
         )
+        # Corpus-adaptive TF-IDF over training ∪ resolution names, fitted
+        # on the driver from one collect of the names checkpoint.
+        tfidf_json, tfidf_meta = self._tfidf_stage(names, in_fp)
         block_params = {**in_fp, "max_block": self.max_block}
         # candidate_pairs and block_metrics consume the SAME blocking-key
         # table (metaphone UDF + MinHash signatures over every name — the
@@ -193,239 +196,175 @@ class EntityResolutionPipeline:
                 _keys_cache.append(materialized_blocking_keys(names))
             return _keys_cache[0]
 
-        # Corpus-adaptive TF-IDF: distributed fit over training ∪ resolution
-        # names (checkpointed like any stage — only the 10k-term vocab is
-        # collected/stored, never the name table).  The fit and the blocking
-        # stages both depend ONLY on the materialized names checkpoint and
-        # neither reads the other's output, so the fit runs on a worker
-        # thread while blocking runs on this one (guide §2.6 overlap
-        # independent jobs): both are driver-coordination-bound at bench
-        # scale and neither saturates the executor, so the scheduler
-        # interleaves their jobs instead of idling between round trips.
-        # Results are unchanged by construction — each thread's computation
-        # is internally deterministic and reads only the shared immutable
-        # checkpoint — and the future is joined (exceptions re-raised)
-        # before anything downstream consumes the vocabulary.  Measured
-        # against the sequential order at 200 entities on a 4-core host:
-        # median 6.91 s overlapped vs 8.13 s sequential (6 alternated
-        # runs each).  A failure on either thread surfaces with the other's
-        # attached (_note_background_failures).
-        from concurrent.futures import ThreadPoolExecutor
+        pairs = self._stage(
+            "candidate_pairs",
+            lambda: candidate_pairs(
+                names, max_block=self.max_block, keys=blocking_keys_once()
+            ),
+            inputs=["names"],
+            params=block_params,
+        )
+        self._stage(
+            "block_metrics",
+            lambda: block_stats(
+                names, max_block=self.max_block, keys=blocking_keys_once()
+            ),
+            inputs=["names"],
+            params=block_params,
+        )
+        # Repartition before the Arrow-UDF scorer: the checkpointed pair
+        # table is small on disk and AQE would coalesce it to a few
+        # partitions, starving the (CPU-bound) scorer of parallelism.
+        # 1x parallelism, not 2x: each task pays a Python-worker Arrow
+        # round-trip, and the measured sweet spot is one ~20k-row Arrow
+        # batch per core (32 parts 3.10s / 64 parts 3.29s / 128 parts
+        # 4.27s on the 230k-pair bench stage).
+        n_part = self.spark.sparkContext.defaultParallelism
+        # Artifact identity rides in the params: a scored_pairs checkpoint
+        # produced with an older model or TF-IDF vocabulary must not be
+        # served after either artifact changes.
+        score_params = {
+            **block_params,
+            "threshold": self.threshold,
+            "keep_features": self.keep_features,
+            "model_md5": hashlib.md5(self._model_json.encode()).hexdigest(),
+            "tfidf": tfidf_meta,
+            # plan-hash of the optional embedding channel: a changed or
+            # newly-supplied vector table must invalidate scored_pairs
+            "embeddings": embeddings.semanticHash() if embeddings is not None else None,
+        }
 
-        _pool = ThreadPoolExecutor(max_workers=1)
-        background: dict = {}
-        try:
-            background["tfidf"] = _pool.submit(self._tfidf_stage, names, in_fp)
-            pairs = self._stage(
-                "candidate_pairs",
-                lambda: candidate_pairs(
-                    names, max_block=self.max_block, keys=blocking_keys_once()
-                ),
-                inputs=["names"],
-                params=block_params,
-            )
-
-            def _block_metrics_stage():
-                return self._stage(
-                    "block_metrics",
-                    lambda: block_stats(
-                        names, max_block=self.max_block, keys=blocking_keys_once()
-                    ),
-                    inputs=["names"],
-                    params=block_params,
+        def _score_stage():
+            p = pairs.repartition(n_part)
+            if embeddings is not None:
+                from name_matching_spark.operators.similarity_search import (
+                    embedding_candidates,
                 )
 
-            # The metrics side-output is consumed by nothing downstream;
-            # queue it on the worker (after the fit — max_workers=1) so it
-            # overlaps the scorer stage instead of sitting between
-            # candidate_pairs and scored_pairs on the critical path.
-            # candidate_pairs has already populated the keys cache on this
-            # thread, so the worker only reads the materialized frame (no
-            # keys race).  The pool is NOT a context manager here: its
-            # shutdown join happens in the finally below, so the queued
-            # metrics job keeps running while the main thread proceeds
-            # into the scorer stage.
-            background["block_metrics"] = _pool.submit(_block_metrics_stage)
-            tfidf_json, tfidf_meta = background["tfidf"].result()
-            # Repartition before the Arrow-UDF scorer: the checkpointed pair
-            # table is small on disk and AQE would coalesce it to a few
-            # partitions, starving the (CPU-bound) scorer of parallelism.
-            # 1x parallelism, not 2x: each task pays a Python-worker Arrow
-            # round-trip, and the measured sweet spot is one ~20k-row Arrow
-            # batch per core (32 parts 3.10s / 64 parts 3.29s / 128 parts
-            # 4.27s on the 230k-pair bench stage).
-            n_part = self.spark.sparkContext.defaultParallelism
-            # Artifact identity rides in the params: a scored_pairs checkpoint
-            # produced with an older model or TF-IDF vocabulary must not be
-            # served after either artifact changes.
-            score_params = {
-                **block_params,
-                "threshold": self.threshold,
-                "keep_features": self.keep_features,
-                "model_md5": hashlib.md5(self._model_json.encode()).hexdigest(),
-                "tfidf": tfidf_meta,
-                # plan-hash of the optional embedding channel: a changed or
-                # newly-supplied vector table must invalidate scored_pairs
-                "embeddings": embeddings.semanticHash() if embeddings is not None else None,
-            }
-
-            def _score_stage():
-                p = pairs.repartition(n_part)
-                if embeddings is not None:
-                    from name_matching_spark.operators.similarity_search import (
-                        embedding_candidates,
-                    )
-
-                    e = embeddings.select(
-                        F.col("name"), F.col("embedding").alias("_v")
-                    )
-                    dim_row = embeddings.select(
-                        F.size("embedding").alias("d")
-                    ).first()
-                    # Zero-lexical-overlap aliases never co-block on strings:
-                    # the semantic channel contributes its own LSH candidates.
-                    sem = embedding_candidates(
-                        embeddings, dim=int(dim_row["d"]) if dim_row else 32
-                    )
-                    p = p.unionByName(sem).dropDuplicates(["name_x", "name_y"])
-                    p = (
-                        p.join(
-                            e.withColumnRenamed("name", "name_x").withColumnRenamed(
-                                "_v", "emb_x"
-                            ),
-                            "name_x",
-                            "left",
-                        ).join(
-                            e.withColumnRenamed("name", "name_y").withColumnRenamed(
-                                "_v", "emb_y"
-                            ),
-                            "name_y",
-                            "left",
-                        )
-                    )
-                scored = score_pairs(
-                    p,
-                    self._model_json,
-                    tfidf_json,
-                    threshold=self.threshold,
-                    keep_features=self.keep_features,
+                e = embeddings.select(
+                    F.col("name"), F.col("embedding").alias("_v")
                 )
-                # vectors themselves never persist into the checkpoint — only
-                # their cosine and the decision they influenced
-                return scored.drop("emb_x", "emb_y")
-
-            scored = self._stage(
-                "scored_pairs",
-                _score_stage,
-                inputs=["candidate_pairs", "tfidf"],
-                params=score_params,
-            )
-            # surface worker failures; completes ~with the scorer
-            background["block_metrics"].result()
-            matches = scored.where(F.col("prediction") == 1)
-
-            def cluster_fn():
-                # cosine_sim / align_edit / token_weakest_link ride along
-                # for the evidence rung and subsumption split (score_pairs
-                # always emits them, keep_features or not).  An
-                # embedding-verified edge (semantic channel) counts as
-                # near-exact evidence: without this the evidence rung would
-                # cut exactly the zero-lexical-overlap matches the channel
-                # exists to keep.
-                align = F.col("align_edit")
-                if "emb_cosine" in matches.columns:
-                    align = F.when(
-                        F.coalesce(F.col("emb_cosine"), F.lit(-1.0))
-                        >= EMB_MATCH_COSINE,
-                        F.lit(0.0),
-                    ).otherwise(align)
-                m = matches.select(
-                    F.col("name_x").alias("src"),
-                    F.col("name_y").alias("dst"),
-                    "probability",
-                    "cosine_sim",
-                    align.alias("align_edit"),
-                    "token_weakest_link",
-                    # raw margin (when the checkpoint carries it): ladder
-                    # rungs above 0.999 and attach tie-breaks rank with it
-                    # where the 4dp probability has saturated
-                    *(["margin"] if "margin" in matches.columns else []),
+                dim_row = embeddings.select(
+                    F.size("embedding").alias("d")
+                ).first()
+                # Zero-lexical-overlap aliases never co-block on strings:
+                # the semantic channel contributes its own LSH candidates.
+                sem = embedding_candidates(
+                    embeddings, dim=int(dim_row["d"]) if dim_row else 32
                 )
-                # Subsumption edges (initial/diminutive/prefix-extension
-                # forms) are pair-level matches but ambiguous CLUSTER
-                # evidence: they attach to a cluster, never glue two
-                # (isolated all-subsumption families still cluster
-                # among themselves under the same cap).  Measured pair
-                # precision at 100k entities is 0.66 with this routing
-                # and 0.13 when they glue (ambiguous initial forms weld
-                # 800-name mega-clusters; BENCH/QUALITY.md).  The
-                # refinement runs its shipped configuration, the
-                # clustering module's LADDER / MAX_COMPONENT /
-                # EVIDENCE_MIN_SIZE.
-                return subsumption_aware_components(m)
-
-            cluster_params = {
-                **score_params,
-                "max_component": MAX_COMPONENT,
-                "ladder": list(LADDER),
-                "evidence_rung": f"cos{EVIDENCE_MIN_COSINE}|align{EVIDENCE_MAX_ALIGN}",
-                "evidence_min_size": EVIDENCE_MIN_SIZE,
-            }
-            components = self._stage(
-                "components",
-                cluster_fn,
-                inputs=["scored_pairs"],
-                params=cluster_params,
+                p = p.unionByName(sem).dropDuplicates(["name_x", "name_y"])
+                p = (
+                    p.join(
+                        e.withColumnRenamed("name", "name_x").withColumnRenamed(
+                            "_v", "emb_x"
+                        ),
+                        "name_x",
+                        "left",
+                    ).join(
+                        e.withColumnRenamed("name", "name_y").withColumnRenamed(
+                            "_v", "emb_y"
+                        ),
+                        "name_y",
+                        "left",
+                    )
+                )
+            scored = score_pairs(
+                p,
+                self._model_json,
+                tfidf_json,
+                threshold=self.threshold,
+                keep_features=self.keep_features,
             )
-            # Downstream-of-clustering stages carry the clustering params
-            # too: otherwise a resume after a clustering change recomputes
-            # components but silently serves stale entities/resolved
-            # tables built from the old components.
-            entities = self._stage(
-                "entities",
-                lambda: entity_table(components, names),
-                inputs=["components", "names"],
-                params=cluster_params,
-            )
-            resolved = self._stage(
-                "resolved_conversations",
-                lambda: resolve_records(conv, entities, ["name"]),
-                inputs=["conversations", "entities"],
-                params=cluster_params,
-            )
-            return {
-                "conversations": conv,
-                "names": names,
-                "candidate_pairs": pairs,
-                "scored_pairs": scored,
-                "components": components,
-                "entities": entities,
-                "resolved_conversations": resolved,
-            }
-        except BaseException as err:
-            _note_background_failures(err, background)
-            raise
-        finally:
-            _pool.shutdown(wait=True)
+            # vectors themselves never persist into the checkpoint — only
+            # their cosine and the decision they influenced
+            return scored.drop("emb_x", "emb_y")
 
+        scored = self._stage(
+            "scored_pairs",
+            _score_stage,
+            inputs=["candidate_pairs", "tfidf"],
+            params=score_params,
+        )
+        matches = scored.where(F.col("prediction") == 1)
 
-def _note_background_failures(err: BaseException, background: dict) -> None:
-    """Cancel the still-queued background stages, wait for the running
-    one, and attach each failure other than ``err`` itself to ``err`` as
-    a note — otherwise the pool's shutdown join would drop it."""
-    import traceback
-
-    for fut in background.values():
-        fut.cancel()
-    for name, fut in background.items():
-        if fut.cancelled():
-            continue
-        exc = fut.exception()
-        if exc is not None and exc is not err:
-            err.add_note(
-                f"background stage {name!r} also failed:\n"
-                + "".join(traceback.format_exception(exc)).rstrip()
+        def cluster_fn():
+            # cosine_sim / align_edit / token_weakest_link ride along
+            # for the evidence rung and subsumption split (score_pairs
+            # always emits them, keep_features or not).  An
+            # embedding-verified edge (semantic channel) counts as
+            # near-exact evidence: without this the evidence rung would
+            # cut exactly the zero-lexical-overlap matches the channel
+            # exists to keep.
+            align = F.col("align_edit")
+            if "emb_cosine" in matches.columns:
+                align = F.when(
+                    F.coalesce(F.col("emb_cosine"), F.lit(-1.0))
+                    >= EMB_MATCH_COSINE,
+                    F.lit(0.0),
+                ).otherwise(align)
+            m = matches.select(
+                F.col("name_x").alias("src"),
+                F.col("name_y").alias("dst"),
+                "probability",
+                "cosine_sim",
+                align.alias("align_edit"),
+                "token_weakest_link",
+                # raw margin (when the checkpoint carries it): ladder
+                # rungs above 0.999 and attach tie-breaks rank with it
+                # where the 4dp probability has saturated
+                *(["margin"] if "margin" in matches.columns else []),
             )
+            # Subsumption edges (initial/diminutive/prefix-extension
+            # forms) are pair-level matches but ambiguous CLUSTER
+            # evidence: they attach to a cluster, never glue two
+            # (isolated all-subsumption families still cluster
+            # among themselves under the same cap).  Measured pair
+            # precision at 100k entities is 0.66 with this routing
+            # and 0.13 when they glue (ambiguous initial forms weld
+            # 800-name mega-clusters; BENCH/QUALITY.md).  The
+            # refinement runs its shipped configuration, the
+            # clustering module's LADDER / MAX_COMPONENT /
+            # EVIDENCE_MIN_SIZE.
+            return subsumption_aware_components(m)
+
+        cluster_params = {
+            **score_params,
+            "max_component": MAX_COMPONENT,
+            "ladder": list(LADDER),
+            "evidence_rung": f"cos{EVIDENCE_MIN_COSINE}|align{EVIDENCE_MAX_ALIGN}",
+            "evidence_min_size": EVIDENCE_MIN_SIZE,
+        }
+        components = self._stage(
+            "components",
+            cluster_fn,
+            inputs=["scored_pairs"],
+            params=cluster_params,
+        )
+        # Downstream-of-clustering stages carry the clustering params
+        # too: otherwise a resume after a clustering change recomputes
+        # components but silently serves stale entities/resolved
+        # tables built from the old components.
+        entities = self._stage(
+            "entities",
+            lambda: entity_table(components, names),
+            inputs=["components", "names"],
+            params=cluster_params,
+        )
+        resolved = self._stage(
+            "resolved_conversations",
+            lambda: resolve_records(conv, entities, ["name"]),
+            inputs=["conversations", "entities"],
+            params=cluster_params,
+        )
+        return {
+            "conversations": conv,
+            "names": names,
+            "candidate_pairs": pairs,
+            "scored_pairs": scored,
+            "components": components,
+            "entities": entities,
+            "resolved_conversations": resolved,
+        }
 
 
 def run_pipeline(

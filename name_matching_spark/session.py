@@ -45,16 +45,6 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
-        # The pipeline overlaps independent stages (TF-IDF fit / blocking /
-        # metrics) from two threads.  No pools are defined, but in FAIR
-        # mode Spark builds one "default" pool whose own scheduling mode is
-        # FAIR (sc._jsc.sc().getAllPools() on Spark 4.1), so the two
-        # threads' jobs share that pool's slots fairly instead of the
-        # first-submitted job taking them all.  Measured on the perfbench
-        # batch_er workload (200 entities, local[4]): dropping this setting
-        # made er_wall_s slower in 4 of 4 alternated pairs, by 0.3 to 1.7 s
-        # (seeds 21-24).
-        .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

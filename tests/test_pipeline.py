@@ -215,44 +215,26 @@ def test_tfidf_sidecar_invalidates_on_input_change(spark, tmp_path):
     assert man["params"]["tfidf"] == meta_b
 
 
-def test_pipeline_surfaces_worker_failure_with_main_failure(
-    spark, tmp_path, monkeypatch
-):
-    """When blocking fails on the main thread while the TF-IDF fit fails
-    on the worker thread, run() must return and raise with BOTH errors
-    visible to the caller — the worker's must not be dropped at pool
-    shutdown."""
-    import threading
-
-    import name_matching_spark.pipeline as pipeline_mod
+def test_pipeline_tfidf_fit_failure_stops_the_run(spark, tmp_path, monkeypatch):
+    """A TF-IDF fit that raises must make run() raise with its message,
+    and no stage after the fit (candidate_pairs onward) may write a
+    manifest: the run is one thread, so nothing keeps going past it."""
     from name_matching_spark.functions.tfidf import TfidfModel
 
-    fit_started = threading.Event()
-
     def failing_fit(*args, **kwargs):
-        fit_started.set()
         raise RuntimeError("tfidf fit exploded")
 
-    def failing_pairs(*args, **kwargs):
-        fit_started.wait(timeout=60)
-        raise RuntimeError("blocking exploded")
-
     monkeypatch.setattr(TfidfModel, "fit_spark", staticmethod(failing_fit))
-    monkeypatch.setattr(pipeline_mod, "candidate_pairs", failing_pairs)
-    monkeypatch.setattr(pipeline_mod, "materialized_blocking_keys", lambda names: None)
     fixture = str(tmp_path / "fx_fail")
     write_fixture(fixture, n_entities=5, convs_per_entity=2, seed=3)
     transcripts = spark.read.parquet(os.path.join(fixture, "transcripts.parquet"))
     pipe = EntityResolutionPipeline(spark, str(tmp_path / "wh_fail"))
-    with pytest.raises(RuntimeError) as info:
+    with pytest.raises(RuntimeError, match="tfidf fit exploded"):
         pipe.run(transcripts)
-    seen, exc = [], info.value
-    while exc is not None:
-        seen.append(str(exc))
-        seen.extend(getattr(exc, "__notes__", []))
-        exc = exc.__cause__ or exc.__context__
-    text = "\n".join(seen)
-    assert "blocking exploded" in text and "tfidf fit exploded" in text, text
+    assert pipe.ckpt.is_complete("names")
+    for stage in ["candidate_pairs", "block_metrics", "scored_pairs",
+                  "components", "entities", "resolved_conversations"]:
+        assert not pipe.ckpt.is_complete(stage), stage
 
 
 def test_pipeline_empty_input(spark, tmp_path):

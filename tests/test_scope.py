@@ -103,3 +103,48 @@ def test_package_modules_reachable_from_entry_modules():
 
     unreached = sorted(all_mods - seen)
     assert not unreached, f"modules no entry module imports: {unreached}"
+
+
+def test_package_runs_on_one_thread():
+    """The pipeline runs its stages in order on the caller's thread: no
+    package module imports a thread pool or threads."""
+    offenders = []
+    for root, _dirs, files in os.walk(os.path.join(REPO, PKG)):
+        rel = os.path.relpath(root, REPO).replace(os.sep, ".")
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            mod = rel if f == "__init__.py" else f"{rel}.{f[:-3]}"
+            offenders += [
+                (mod, name) for name in _imported(mod)
+                if name.split(".")[0] in ("concurrent", "threading")
+            ]
+    assert not offenders, offenders
+
+
+def test_session_sets_no_scheduler_mode(monkeypatch):
+    """``get_spark`` leaves Spark's job scheduler at its default (FIFO):
+    with one submitting thread a scheduler mode has nothing to share."""
+    from name_matching_spark import session
+
+    conf = {}
+
+    class Builder:
+        def __getattr__(self, _name):
+            return lambda *args: self
+
+        def config(self, key, value):
+            conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            return None
+
+    class FakeSession:
+        builder = Builder()
+
+    monkeypatch.setattr(session, "SparkSession", FakeSession)
+    monkeypatch.setattr(session, "_tune_malloc_env", lambda: None)
+    session.get_spark(master="local[2]", extra_conf={})
+    assert "spark.sql.adaptive.enabled" in conf
+    assert not [k for k in conf if k.startswith("spark.scheduler.mode")]

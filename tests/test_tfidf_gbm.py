@@ -48,6 +48,24 @@ def test_tfidf_spark_fit_extra_corpus(spark):
     m = TfidfModel.fit_spark(names, extra_corpus=["jane doe"])
     assert "wick" in m.vocab and "doe" in m.vocab
 
+    # the documents are the distinct lowered union of names and corpus: a
+    # name equal to a corpus doc after lowering counts once in df
+    names = spark.createDataFrame(
+        [("JOHN WICK",), ("JANE DOE",), ("HOTEL CONTINENTAL",)], ["name"]
+    )
+    corpus = ["jane doe", "John Smith", "john smith", "winston scott"]
+    m = TfidfModel.fit_spark(names, extra_corpus=corpus, max_features=None)
+    union = sorted(
+        {"john wick", "jane doe", "hotel continental"}
+        | {c.lower() for c in corpus}
+    )
+    assert len(union) == 5
+    ref = TfidfModel.fit(union, max_features=None)
+    assert m.vocab == ref.vocab
+    assert np.array_equal(m.idf, ref.idf)
+    # "jane" is in 1 of 5 docs, not 2 of 6
+    assert m.idf[m.vocab["jane"]] == np.log(6 / 2) + 1.0
+
 
 def test_gbm_learns_and_roundtrips():
     rng = np.random.default_rng(1)
