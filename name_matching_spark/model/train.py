@@ -411,14 +411,22 @@ def train(
 
 
 def _resolve(path: str) -> str:
-    """Resolve an artifact path robustly: as given, else relative to the
-    cwd (the spark-submit case, where the package loads from a --py-files
-    zip and __file__-derived paths point inside the archive)."""
+    """Resolve an artifact path robustly: as given, else under the cwd's
+    ``models/``, else where spark-submit ``--files`` puts it: the cwd in
+    cluster mode, the driver's SparkFiles directory in client mode (the
+    package then loads from a --py-files zip and __file__-derived paths
+    point inside the archive)."""
     if os.path.exists(path):
         return path
-    alt = os.path.join(os.getcwd(), "models", os.path.basename(path))
-    if os.path.exists(alt):
-        return alt
+    from pyspark import SparkContext, SparkFiles
+
+    dirs = [os.path.join(os.getcwd(), "models"), os.getcwd()]
+    if SparkContext._active_spark_context is not None:
+        dirs.append(SparkFiles.getRootDirectory())
+    for d in dirs:
+        alt = os.path.join(d, os.path.basename(path))
+        if os.path.exists(alt):
+            return alt
     return path
 
 

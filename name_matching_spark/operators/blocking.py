@@ -215,7 +215,9 @@ def candidate_pairs(
     Catalyst reuses the exchange; AQE handles residual skew at runtime.
     ``keys``: a pre-materialized :func:`materialized_blocking_keys` frame
     to reuse (must have been built with the same blocking parameters);
-    raises ``ValueError`` when it lacks ``block_size`` or ``_ss``.
+    raises ``ValueError`` when it lacks ``block_size`` or ``_ss``, and the
+    job fails when a hot block's ``_ss`` holds fewer than :data:`SUB_ROWS`
+    entries.
     """
     if keys is None:
         keys = materialized_blocking_keys(
@@ -242,7 +244,16 @@ def candidate_pairs(
     # survives with 1-(1-J)^r — recall degrades gracefully instead of
     # zeroing out when a whole key family goes hot (measured 0.502
     # truth-pair recall at 100k entities when hot blocks were purged).
-    hot = keys.where(F.col("block_size") > max_block)
+    # A short or NULL signature would read as NULL entries, which concat_ws
+    # drops: every member of the block would share one sub-key.  Fail.
+    hot = keys.where(F.col("block_size") > max_block).withColumn(
+        "_ss",
+        F.when(F.size("_ss") >= SUB_ROWS, F.col("_ss")).otherwise(
+            F.raise_error(
+                F.lit(f"keys frame _ss is NULL or under SUB_ROWS={SUB_ROWS} entries")
+            )
+        ),
+    )
     sub_key = F.array(
         *[
             F.concat_ws(

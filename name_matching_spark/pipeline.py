@@ -50,6 +50,27 @@ from name_matching_spark.operators.resolve import entity_table, resolve_records
 from name_matching_spark.operators.scoring import EMB_MATCH_COSINE, score_pairs
 
 
+def input_fingerprint(df: DataFrame) -> str:
+    """A key for ``df``'s plan and input that two processes compute alike:
+    the md5 of its canonicalized analyzed plan (which tells a filtered read
+    from a plain one) and of its sorted input files with each one's length
+    and modification time, so a file rewritten in place changes the key (no
+    job runs).  ``semanticHash()`` differs between processes reading the
+    same parquet, so it is used only for a plan that reads no files, whose
+    canonical string omits its in-memory rows."""
+    files = sorted(df.inputFiles())
+    if not files:
+        return str(df.semanticHash())
+    sc = df.sparkSession.sparkContext
+    hadoop_conf = sc._jsc.hadoopConfiguration()
+    parts = [df._jdf.queryExecution().analyzed().canonicalized().toString()]
+    for f in files:
+        path = sc._jvm.org.apache.hadoop.fs.Path(f)
+        st = path.getFileSystem(hadoop_conf).getFileStatus(path)
+        parts.append(f"{f} {st.getLen()} {st.getModificationTime()}")
+    return hashlib.md5("\n".join(parts).encode()).hexdigest()
+
+
 class EntityResolutionPipeline:
     def __init__(
         self,
@@ -161,11 +182,10 @@ class EntityResolutionPipeline:
         vectors reach the scorer's ``EMB_MATCH_COSINE`` cosine match even
         with zero lexical overlap (operators/scoring.py).  Names without
         a vector fall back to the string decision alone."""
-        # Input fingerprint: the normalized-plan hash of the input table.
-        # Recorded in every stage manifest so a resume against a different
-        # transcripts table (or different stage parameters) recomputes
-        # instead of silently serving stale results.
-        in_fp = {"input": transcripts.semanticHash()}
+        # Input fingerprint, recorded in every stage manifest so a resume
+        # against a different transcripts table (or different stage
+        # parameters) recomputes instead of silently serving stale results.
+        in_fp = {"input": input_fingerprint(transcripts)}
         conv = self._stage(
             "conversations", lambda: canonicalize(transcripts), params=in_fp
         )
@@ -229,9 +249,11 @@ class EntityResolutionPipeline:
             "keep_features": self.keep_features,
             "model_md5": hashlib.md5(self._model_json.encode()).hexdigest(),
             "tfidf": tfidf_meta,
-            # plan-hash of the optional embedding channel: a changed or
+            # fingerprint of the optional embedding channel: a changed or
             # newly-supplied vector table must invalidate scored_pairs
-            "embeddings": embeddings.semanticHash() if embeddings is not None else None,
+            "embeddings": (
+                input_fingerprint(embeddings) if embeddings is not None else None
+            ),
         }
 
         def _score_stage():

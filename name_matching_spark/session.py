@@ -2,7 +2,13 @@
 
 One place to set the knobs the north rule requires to be explicit:
 shuffle-partition sizing, AQE (+ skew-join splitting), Arrow batching for
-the pandas-UDF scorer.
+the pandas-UDF scorer, and the Python worker daemon
+(``spark.python.daemon.module``): :mod:`name_matching_spark.worker_daemon`,
+whose workers skip the per-task re-read of unchanged zip archives.  Its
+workers import it before any task, so it is set only when the package
+loads from a directory (on their Python path through the driver's
+working directory or ``PYTHONPATH``); a package shipped as a --py-files
+archive keeps pyspark's stock daemon.
 """
 
 from __future__ import annotations
@@ -10,6 +16,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from name_matching_spark import worker_daemon
 
 
 def _tune_malloc_env() -> None:
@@ -53,6 +61,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if os.path.isfile(worker_daemon.__file__):
+        # Spark imports the daemon before any task runs, so before a
+        # --py-files archive reaches the workers' sys.path: a package
+        # loaded from an archive keeps pyspark's stock daemon.
+        builder = builder.config("spark.python.daemon.module", worker_daemon.__name__)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

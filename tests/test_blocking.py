@@ -7,9 +7,11 @@ from pyspark.sql import functions as F
 from name_matching_spark.model.train import POS_CSV
 from name_matching_spark.functions.normalize import preprocess_name
 from name_matching_spark.operators.blocking import (
+    SUB_ROWS,
     block_stats,
     blocking_keys,
     candidate_pairs,
+    materialized_blocking_keys,
 )
 
 
@@ -121,6 +123,29 @@ def test_candidate_pairs_rejects_keys_frame_missing_columns(spark):
     sizes = bare.groupBy("key").agg(F.count("*").alias("block_size"))
     with pytest.raises(ValueError, match="_ss"):
         candidate_pairs(names, keys=bare.drop("_ss").join(sizes, "key"))
+
+
+def test_candidate_pairs_rejects_short_sub_block_signature(spark):
+    """A hot block whose prebuilt keys frame carries fewer than SUB_ROWS
+    signature entries (or none) must fail, whatever the ANSI setting:
+    read as NULL, the missing entries would collapse every member into
+    one sub-block."""
+    names = spark.createDataFrame(
+        [(f"{first} WICK",) for first in ("JOHN", "JON", "JANE", "JACK", "JILL")],
+        ["name"],
+    )
+    keys = materialized_blocking_keys(names)
+    short = keys.withColumn("_ss", F.slice("_ss", 1, SUB_ROWS - 1))
+    null = keys.withColumn("_ss", F.lit(None).cast(keys.schema["_ss"].dataType))
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            for bad in (short, null):
+                with pytest.raises(Exception, match="_ss"):
+                    candidate_pairs(names, max_block=2, keys=bad).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
 
 
 def test_hot_block_pair_volume_stays_linear(spark):

@@ -2,6 +2,8 @@
 transcripts cluster agreement, checkpoint resume."""
 
 import os
+import subprocess
+import sys
 from collections import defaultdict
 
 import pytest
@@ -14,7 +16,7 @@ from name_matching_spark.operators.blocking import candidate_pairs
 from name_matching_spark.operators.clustering import connected_components
 from name_matching_spark.operators.resolve import entity_table
 from name_matching_spark.operators.scoring import score_pairs
-from name_matching_spark.pipeline import EntityResolutionPipeline
+from name_matching_spark.pipeline import EntityResolutionPipeline, input_fingerprint
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -132,6 +134,57 @@ def test_checkpoint_resume(spark, tmp_path):
     assert params["max_component"] == 4
     assert params["ladder"] == [0.92, 0.96, 0.99, 0.995, 0.999, 0.9999, 0.99999]
     assert params["evidence_min_size"] == 2
+
+
+@pytest.mark.slow
+def test_input_fingerprint_survives_a_new_process(spark, tmp_path):
+    """Every stage manifest keys on the input fingerprint, so a resume from
+    a new process must compute the same value for the same parquet read,
+    and a different one for a filtered read of it or for the same path
+    rewritten with other rows."""
+    fixture = str(tmp_path / "fx_fp")
+    write_fixture(fixture, n_entities=5, convs_per_entity=2, seed=3)
+    path = os.path.join(fixture, "transcripts.parquet")
+    code = (
+        "import sys\n"
+        "from name_matching_spark.pipeline import input_fingerprint\n"
+        "from name_matching_spark.session import get_spark\n"
+        "spark = get_spark(master='local[1]')\n"
+        "print('fp', input_fingerprint(spark.read.parquet(sys.argv[1])))\n"
+        "spark.stop()\n"
+    )
+    env = {**os.environ, "PYTHONPATH": REPO, "SPARK_DRIVER_MEMORY": "512m"}
+    out = subprocess.run(
+        [sys.executable, "-c", code, path],
+        capture_output=True, text=True, env=env, timeout=600, check=True,
+    ).stdout
+    theirs = [ln.split()[1] for ln in out.splitlines() if ln.startswith("fp ")]
+
+    transcripts = spark.read.parquet(path)
+    assert theirs == [input_fingerprint(transcripts)]
+    col = transcripts.columns[0]
+    assert input_fingerprint(transcripts.where(F.col(col).isNotNull())) != theirs[0]
+
+    write_fixture(fixture, n_entities=6, convs_per_entity=2, seed=4)
+    rewritten = spark.read.parquet(path)
+    assert rewritten.inputFiles() == transcripts.inputFiles()
+    assert input_fingerprint(rewritten) != theirs[0]
+
+
+@pytest.mark.slow
+def test_submit_script_runs_outside_the_repo(tmp_path):
+    """``scripts/submit.sh`` ships the package only as a --py-files zip and
+    the model artifacts as --files.  Run from another directory, with the
+    package on no Python path, the pipeline must still resolve both."""
+    write_fixture(str(tmp_path / "fx"), n_entities=20, convs_per_entity=3, seed=5)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_MASTER"] = "local[2]"
+    run = subprocess.run(
+        [os.path.join(REPO, "scripts", "submit.sh"), "fx/transcripts.parquet", "wh"],
+        cwd=tmp_path, capture_output=True, text=True, env=env, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert "entities: 20" in run.stdout.splitlines()
 
 
 @pytest.mark.slow

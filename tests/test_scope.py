@@ -124,8 +124,13 @@ def test_package_runs_on_one_thread():
 
 def test_session_sets_no_scheduler_mode(monkeypatch):
     """``get_spark`` leaves Spark's job scheduler at its default (FIFO):
-    with one submitting thread a scheduler mode has nothing to share."""
-    from name_matching_spark import session
+    with one submitting thread a scheduler mode has nothing to share.  It
+    names the package's worker daemon, and importing that module patches
+    nothing in the importing process."""
+    import runpy
+    import zipimport
+
+    from name_matching_spark import session, worker_daemon
 
     conf = {}
 
@@ -148,3 +153,18 @@ def test_session_sets_no_scheduler_mode(monkeypatch):
     session.get_spark(master="local[2]", extra_conf={})
     assert "spark.sql.adaptive.enabled" in conf
     assert not [k for k in conf if k.startswith("spark.scheduler.mode")]
+    assert conf["spark.python.daemon.module"] == worker_daemon.__name__
+
+    # loaded from a --py-files archive, which workers see only at task time
+    conf.clear()
+    zipped = os.path.join("/deploy/nms.zip", *worker_daemon.__name__.split("."))
+    monkeypatch.setattr(worker_daemon, "__file__", zipped + ".py")
+    session.get_spark(master="local[2]", extra_conf={})
+    assert "spark.sql.adaptive.enabled" in conf
+    assert "spark.python.daemon.module" not in conf
+    monkeypatch.undo()
+
+    stock = zipimport.zipimporter.invalidate_caches
+    runpy.run_path(worker_daemon.__file__, run_name=worker_daemon.__name__)
+    assert zipimport.zipimporter.invalidate_caches is stock
+    assert stock.__module__ == "zipimport"
