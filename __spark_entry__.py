@@ -13,7 +13,7 @@ SURVEY §2 coverage map (operator id -> where it is exercised):
   S5  model artifact load/save        -> model/train.py JSON artifacts + broadcast (er_score_pairs)
   S6  REST serving                    -> replaced by batch scorer per north star; incremental
                                          path = streaming/stream_resolve.py: watermarked
-                                         windows + applyInPandasWithState stateful collapse
+                                         session windows + broadcast-index assignment
   S7  LLM/Faker data generators       -> replaced by datagen.py (deterministic, offline)
   P1  process_text_standard           -> p1_normalize_text (+ byte-parity tests)
   P2  uppercasing                     -> p2_upper
@@ -28,7 +28,7 @@ SURVEY §2 coverage map (operator id -> where it is exercised):
   J4  resolved-name lookup            -> j4_broadcast_lookup (+ resolve_records broadcast join)
   A1  distinct union of name columns  -> a1_distinct_union
   A2  pair dedup                      -> a2_pair_dedup
-  A3  count/metrics                   -> a3_stage_counts (+ checkpoint metrics tables)
+  A3  count/metrics                   -> a3_stage_counts (+ checkpoint manifest row counts)
   A4  max-by longest name             -> a4_max_by_longest (+ entity_table canonical name)
   A5  max entity id                   -> a5_max_id
   A6  TF-IDF vocabulary fit           -> a6_tfidf_vocab (+ TfidfModel.fit_spark tests)
@@ -190,7 +190,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # materialized ONCE with localCheckpoint: Catalyst does not CSE
         # across subplans, and the un-materialized shape re-planned the
         # documents scan + split 28 times (50 Exchanges in the formatted
-        # plan; 12 after — see plans/r06/j1_block_pairs_*.txt).
+        # plan; 12 after — see plans/r06/j1_block_pairs_*.txt at commit
+        # 7b04cf0).
         d = (
             _t(spark, sf, "documents")
             .select(

@@ -1,75 +1,39 @@
-"""Stage checkpointing with manifests, per-partition lineage and metrics.
+"""Stage checkpointing with manifests and per-partition lineage.
 
 Every pipeline stage writes its output table plus a ``_MANIFEST.json``
 recording row counts, per-partition lineage, timing, and upstream stage
 manifests.  A rerun finds a complete manifest and **resumes** from the
 stored table instead of recomputing — the resumability the north rule
-demands.  Metrics accumulate in ``<warehouse>/_metrics`` (one row per
-stage per run).
+demands.
 
 The storage layer is parquet-on-directory with the same write-once,
 snapshot-complete semantics an Iceberg catalog would give (manifest file =
-commit marker).  On a cluster with an Iceberg catalog the ``_write``/
-``_read`` pair swaps for ``df.writeTo(table).createOrReplace()`` /
-``spark.read.table(table)`` with no other changes — the sandbox ships no
-Iceberg runtime jar, so the file layout stands in.
+commit marker); a deployment with Iceberg swaps ``_write``/``read`` for
+``df.writeTo(table).createOrReplace()``/``spark.read.table(table)``.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 MANIFEST = "_MANIFEST.json"
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """Probe for the Iceberg Spark runtime on the JVM classpath.  The
-    sandbox ships none (this returns False there — test-documented); a
-    cluster with ``iceberg-spark-runtime`` on the classpath and a catalog
-    configured flips the CheckpointManager to real catalog tables."""
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001 — classpath probe
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
-
-
 class CheckpointManager:
-    """``table_format="parquet"`` (default) stores each stage as a parquet
-    directory; ``table_format="catalog"`` stores it through the DataSourceV2
-    ``df.writeTo(...)`` / ``spark.read.table(...)`` path — with an Iceberg
-    catalog that is a real Iceberg table, and the same code runs against the
-    session catalog with ``table_provider="parquet"`` (how the sandbox tests
-    exercise the branch).  Manifests live in the warehouse dir either way."""
+    """Stores each stage as a parquet directory under ``warehouse``, with
+    its manifest inside it."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        warehouse: str,
-        run_id: str | None = None,
-        table_format: str = "parquet",
-        namespace: str = "default",
-        table_provider: str | None = None,
-    ):
+    def __init__(self, spark: SparkSession, warehouse: str, run_id: str | None = None):
         self.spark = spark
         self.warehouse = warehouse
         self.run_id = run_id or uuid.uuid4().hex[:12]
-        self.table_format = table_format
-        self.namespace = namespace
-        # Iceberg catalogs imply the iceberg provider; the session catalog
-        # (the jar-less fallback) needs an explicit file provider.
-        self.table_provider = table_provider or (
-            "iceberg" if iceberg_available(spark) else "parquet"
-        )
         os.makedirs(warehouse, exist_ok=True)
 
     # -- paths ---------------------------------------------------------------
@@ -77,42 +41,23 @@ class CheckpointManager:
     def _stage_dir(self, name: str) -> str:
         return os.path.join(self.warehouse, name)
 
-    def _table_ident(self, name: str) -> str:
-        return f"{self.namespace}.{name}"
-
     def manifest_path(self, name: str) -> str:
-        if self.table_format == "catalog":
-            return os.path.join(self.warehouse, f"{name}.{MANIFEST}")
         return os.path.join(self._stage_dir(name), MANIFEST)
 
     def is_complete(self, name: str) -> bool:
         return os.path.exists(self.manifest_path(name))
 
     def read(self, name: str, schema: StructType | None = None) -> DataFrame:
-        """The stored table of a stage.  The parquet layout reads with
-        ``schema`` (default: the one the manifest recorded), so no job
-        re-infers it from the part files' footers."""
-        if self.table_format == "catalog":
-            return self.spark.read.table(self._table_ident(name))
+        """The stored table of a stage, read with ``schema`` (default: the
+        one the manifest recorded), so no job re-infers it from the part
+        files' footers."""
         if schema is None:
             schema = self._stored_schema(name)
         reader = self.spark.read if schema is None else self.spark.read.schema(schema)
         return reader.parquet(self._stage_dir(name))
 
     def _write(self, out: DataFrame, name: str) -> None:
-        if self.table_format == "catalog":
-            writer = out.writeTo(self._table_ident(name)).using(self.table_provider)
-            try:
-                writer.createOrReplace()
-            except Exception:
-                # V1 session catalog (no Iceberg jar) rejects REPLACE TABLE;
-                # drop + create gives the same write-once snapshot semantics.
-                self.spark.sql(
-                    f"DROP TABLE IF EXISTS {self._table_ident(name)}"
-                )
-                writer.create()
-        else:
-            out.write.mode("overwrite").parquet(self._stage_dir(name))
+        out.write.mode("overwrite").parquet(self._stage_dir(name))
 
     def stored_rows(self, name: str) -> int | None:
         """Row count recorded in a completed stage's manifest (None when
@@ -166,12 +111,11 @@ class CheckpointManager:
         out = fn()
         self._write(out, name)
         stored = self.read(name, out.schema)
-        part_counts = self._partition_lineage(stored, name)
-        rows = sum(p["rows"] for p in part_counts)
+        part_counts = self._partition_lineage(name)
         manifest = {
             "stage": name,
             "run_id": self.run_id,
-            "rows": rows,
+            "rows": sum(p["rows"] for p in part_counts),
             "partitions": part_counts,
             "inputs": inputs or [],
             "params": params,
@@ -181,64 +125,24 @@ class CheckpointManager:
         }
         with open(self.manifest_path(name), "w") as f:
             json.dump(manifest, f)
-        self._append_metric(name, rows, manifest["duration_sec"])
         return stored
 
-    def _partition_lineage(self, stored: DataFrame, name: str) -> list[dict]:
-        """Row count per physical partition of the stored stage table.
+    def _partition_lineage(self, name: str) -> list[dict]:
+        """Row count per part file of the stored stage table, read from the
+        parquet footers (one metadata read per file, no Spark job): the
+        write produced exactly one file per output partition.  A footer
+        that cannot be read raises, so the stage gets no manifest and the
+        next run recomputes it."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-        For the parquet layout the counts come straight from the parquet
-        FOOTERS (one metadata read per part file, no Spark job) — the
-        write just produced exactly one file per output partition, so the
-        lineage is identical to the old ``groupBy(spark_partition_id)``
-        job minus one full read-back of every stage per pipeline run
-        (guide §1.2: don't recompute what the storage layer already
-        knows).  The catalog layout keeps the job: table files are the
-        catalog's concern there."""
-        if self.table_format != "catalog":
-            try:
-                import glob
-
-                import pyarrow.parquet as pq
-
-                files = sorted(
-                    glob.glob(os.path.join(self._stage_dir(name), "part-*"))
-                )
-                return [
-                    {
-                        "partition": i,
-                        "rows": int(pq.ParquetFile(f).metadata.num_rows),
-                    }
-                    for i, f in enumerate(files)
-                ]
-            except Exception:
-                pass  # fall back to the Spark job below
-        return [
-            {"partition": int(r["pid"]), "rows": int(r["rows"])}
-            for r in stored.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        ]
-
-    def _append_metric(self, stage: str, rows: int, duration: float) -> None:
-        mdir = os.path.join(self.warehouse, "_metrics")
-        os.makedirs(mdir, exist_ok=True)
-        rec = {
-            "run_id": self.run_id,
-            "stage": stage,
-            "rows": rows,
-            "duration_sec": duration,
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        with open(os.path.join(mdir, f"{self.run_id}_{stage}.json"), "w") as f:
-            json.dump(rec, f)
-
-    def metrics(self) -> list[dict]:
-        mdir = os.path.join(self.warehouse, "_metrics")
-        if not os.path.isdir(mdir):
-            return []
-        out = []
-        for fn in sorted(os.listdir(mdir)):
-            with open(os.path.join(mdir, fn)) as f:
-                out.append(json.load(f))
-        return out
+        files = sorted(glob.glob(os.path.join(self._stage_dir(name), "part-*")))
+        try:
+            return [
+                {"partition": i, "rows": int(pq.ParquetFile(f).metadata.num_rows)}
+                for i, f in enumerate(files)
+            ]
+        except (OSError, pa.ArrowException) as e:
+            raise RuntimeError(
+                f"stage {name!r}: cannot read the parquet footers of its table"
+            ) from e

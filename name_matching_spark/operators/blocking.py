@@ -85,12 +85,6 @@ def lsh_band_keys_from_sig(sig: Column, bands: int = 8, rows_per_band: int = 1) 
     return F.array(*keys)
 
 
-def lsh_band_keys(col: Column, bands: int = 8, rows_per_band: int = 1) -> Column:
-    """Convenience single-expression form (fine for small inputs/tests)."""
-    sig = minhash_signature(col, bands * rows_per_band)
-    return lsh_band_keys_from_sig(sig, bands, rows_per_band)
-
-
 # Secondary MinHash rows per hot-block member (hash family offset 101,
 # disjoint from the LSH bands): the key builder emits them as ``_ss`` and
 # :func:`candidate_pairs` re-keys hot blocks by them.

@@ -27,15 +27,7 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import BooleanType, StringType, StructField, StructType
 
 from name_matching_spark.functions.normalize import normalize_text_col
 # Called through this module's name: perfbench's trace wraps it here to
@@ -77,72 +69,6 @@ def stream_canonical_names(
         "conv_id",
         normalize_text_col(F.col("name_raw"), upper=True).alias("name"),
     ).where(F.col("name").isNotNull() & (F.length("name") > 0))
-
-
-_COLLAPSE_STATE = StructType(
-    [
-        StructField("turn_idx", ArrayType(IntegerType())),
-        StructField("turn_text", ArrayType(StringType())),
-    ]
-)
-
-_COLLAPSE_OUT = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("canonical_text", StringType()),
-        StructField("n_turns", IntegerType()),
-    ]
-)
-
-
-def stateful_turn_collapse(stream: DataFrame) -> DataFrame:
-    """Custom stateful operator (``applyInPandasWithState``): per-conversation
-    turn accumulation with an explicit state schema.
-
-    Unlike the watermarked window aggregation in
-    :func:`stream_canonical_names` (which emits once, after the watermark
-    closes), this maintains each conversation's turns as GroupState and
-    emits a REFRESHED canonical snapshot in every micro-batch that touches
-    the conversation (``update`` mode) — turns may arrive out of order
-    across batches and the snapshot stays sorted by ``turn_idx``.  The
-    final snapshot per conversation equals the batch pipeline's
-    ``canonicalize`` output for the same rows (tested).
-    """
-
-    def _update(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (conv_id,) = key
-        if state.exists:
-            idxs, txts = state.get
-            idxs, txts = list(idxs), list(txts)
-        else:
-            idxs, txts = [], []
-        for pdf in pdfs:
-            idxs.extend(int(i) for i in pdf["turn_idx"])
-            txts.extend(str(t) for t in pdf["text_norm"])
-        state.update((idxs, txts))
-        order = sorted(range(len(idxs)), key=lambda i: idxs[i])
-        yield pd.DataFrame(
-            {
-                "conv_id": [conv_id],
-                "canonical_text": [" ".join(txts[i] for i in order)],
-                "n_turns": [len(idxs)],
-            }
-        )
-
-    t = stream.select(
-        "conv_id",
-        "turn_idx",
-        normalize_text_col(F.col("text"), upper=True).alias("text_norm"),
-    )
-    return t.groupBy("conv_id").applyInPandasWithState(
-        _update,
-        outputStructType=_COLLAPSE_OUT,
-        stateStructType=_COLLAPSE_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 class EntityTokenIndex:

@@ -35,7 +35,7 @@ def main() -> None:
 
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000
     fixture = os.path.join(REPO, "data", f"bench_transcripts_e{n}")
-    spark = get_spark(app_name="knob-sweep", master="local[32]", shuffle_partitions=64)
+    spark = get_spark(app_name="knob-sweep")
     spark.sparkContext.setLogLevel("ERROR")
     transcripts = spark.read.parquet(os.path.join(fixture, "transcripts.parquet"))
     truth_path = os.path.join(fixture, "truth.parquet")

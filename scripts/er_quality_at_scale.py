@@ -77,7 +77,7 @@ def main() -> None:
     from name_matching_spark.session import get_spark
 
     sizes = [int(x) for x in sys.argv[1:]] or [10_000, 100_000]
-    spark = get_spark(app_name="er-quality", master="local[32]", shuffle_partitions=64)
+    spark = get_spark(app_name="er-quality")
     spark.sparkContext.setLogLevel("ERROR")
     for n in sizes:
         fixture = os.path.join(REPO, "data", f"bench_transcripts_e{n}")

@@ -26,7 +26,7 @@ ENTRY_MODULES = [
 
 def _list_literal(path: str, name: str) -> list:
     """The literal value of a module-level ``name = [...]`` in ``path``,
-    read without importing the script (the bench scripts set process-wide
+    read without importing the script (``bench.py`` sets process-wide
     environment defaults at import time)."""
     tree = ast.parse(open(path).read())
     for node in tree.body:
@@ -50,11 +50,9 @@ def test_entry_contract_queries_and_oracles():
     assert rows_only == {"m6b_louvain"}
     assert all(callable(f) for f in queries.values())
 
-    for script, name in [("bench.py", "OPERATOR_QUERIES"),
-                         ("bench_extra.py", "BENCH_QUERIES")]:
-        listed = _list_literal(os.path.join(REPO, script), name)
-        missing = [q for q in listed if q not in queries]
-        assert not missing, f"{script} {name} names unknown queries: {missing}"
+    listed = _list_literal(os.path.join(REPO, "bench.py"), "OPERATOR_QUERIES")
+    missing = [q for q in listed if q not in queries]
+    assert not missing, f"bench.py OPERATOR_QUERIES names unknown queries: {missing}"
 
 
 def _path(mod: str) -> str | None:

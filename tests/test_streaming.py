@@ -243,56 +243,6 @@ def test_assign_stream_batch_matches_retired_join_plan(spark):
 
 
 @pytest.mark.slow
-def test_stateful_turn_collapse_matches_batch(spark, tmp_path):
-    """applyInPandasWithState: the final per-conversation snapshot must
-    equal the batch canonicalize() text, with state surviving across
-    micro-batches (maxFilesPerTrigger=1 forces several)."""
-    from name_matching_spark.operators.canonicalize import canonicalize
-    from name_matching_spark.streaming.stream_resolve import stateful_turn_collapse
-
-    fixture = str(tmp_path / "fx_state")
-    write_fixture(fixture, n_entities=8, convs_per_entity=2, seed=11)
-    src = os.path.join(fixture, "transcripts.parquet")
-    static = spark.read.parquet(src)
-    # re-write as several files so availableNow runs multiple micro-batches
-    multi = str(tmp_path / "multi")
-    static.repartition(4).write.parquet(multi)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(multi)
-    )
-    out = stateful_turn_collapse(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("state_collapse")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql("select * from state_collapse").collect()
-    assert len(rows) > 0
-    # final snapshot per conversation = the one with all turns accumulated
-    # (n_turns grows monotonically, so max picks it order-independently)
-    last = {}
-    for r in rows:
-        if r["conv_id"] not in last or r["n_turns"] > last[r["conv_id"]]["n_turns"]:
-            last[r["conv_id"]] = r
-    want = {
-        r["conv_id"]: (r["canonical_text"], r["n_turns"])
-        for r in canonicalize(static).collect()
-    }
-    got = {c: (r["canonical_text"], r["n_turns"]) for c, r in last.items()}
-    assert set(got) == set(want)
-    assert got == want
-    # state genuinely crossed micro-batches: some conversation was
-    # snapshotted more than once with growing n_turns
-    assert len(rows) > len(got)
-
-
-@pytest.mark.slow
 def test_stream_vs_batch_agreement_10k(spark, tmp_path):
     """End-to-end lambda split at bench scale: batch pipeline resolves the
     10k-entity fixture; the SAME transcripts then replay as a stream in
