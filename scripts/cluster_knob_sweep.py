@@ -19,8 +19,6 @@ import tempfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
-
 from pyspark.sql import functions as F  # noqa: E402
 
 

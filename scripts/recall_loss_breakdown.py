@@ -40,8 +40,6 @@ import pandas as pd
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
-
 from pyspark.sql import functions as F  # noqa: E402
 
 
@@ -63,7 +61,7 @@ def main() -> None:
     from name_matching_spark.session import get_spark
 
     sizes = [int(x) for x in sys.argv[1:]] or [10_000]
-    spark = get_spark(app_name="recall-loss", master="local[32]", shuffle_partitions=64)
+    spark = get_spark(app_name="recall-loss")
     spark.sparkContext.setLogLevel("ERROR")
     for n in sizes:
         fixture = os.path.join(REPO, "data", f"bench_transcripts_e{n}")

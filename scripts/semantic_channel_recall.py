@@ -143,8 +143,7 @@ def main() -> None:
     emb_rows = [(nm, _name_vec(eid, nm)) for nm, eid in sorted(name_ent.items())]
     print(f"{len(inject_ids)} injected entities, {len(emb_rows)} embedded names")
 
-    spark = get_spark(app_name="semantic-recall", master="local[32]",
-                      shuffle_partitions=64)
+    spark = get_spark(app_name="semantic-recall")
     spark.sparkContext.setLogLevel("ERROR")
     sdf = spark.createDataFrame(
         aug, "conv_id string, turn_idx int, role string, text string, "

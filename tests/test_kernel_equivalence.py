@@ -13,7 +13,8 @@ import numpy as np
 import pytest
 
 from name_matching_spark.functions import similarity as sim
-from name_matching_spark.model.gbm import GBMClassifier
+from name_matching_spark.functions.features import FEATURE_COLS
+from name_matching_spark.model.gbm import _CHUNK, GBMClassifier, _Tree
 
 EDGE = ["", "A", "B", "AB", "BA", "A B", "AA", " ", "ABCD", "DCBA",
         "JOHN WICK", "J WICK", "JONATHAN WICK", "WICK", "X Y Z", "ZYX"]
@@ -129,6 +130,76 @@ def test_gbm_roundtrip_predict_identical():
     model = GBMClassifier(n_estimators=20, max_depth=3).fit(X, y)
     clone = GBMClassifier.from_json(model.to_json())
     assert np.array_equal(model.predict_proba(X), clone.predict_proba(X))
+
+
+def _per_tree_margin(model, X):
+    margin = np.full(len(X), model.base_score)
+    for tree in model.trees:
+        margin += model.learning_rate * tree.predict(X)
+    return margin
+
+
+@pytest.fixture(scope="module")
+def shipped_gbm():
+    from name_matching_spark.model.train import MODEL_PATH
+
+    with open(MODEL_PATH) as fh:
+        return GBMClassifier.from_json(fh.read())
+
+
+@pytest.mark.parametrize("n", [0, 1, _CHUNK - 1, _CHUNK, _CHUNK + 1, 2 * _CHUNK + 7])
+def test_gbm_forest_descent_matches_per_tree_on_shipped_model(shipped_gbm, n):
+    """The lock-step descent over the shipped forest equals the per-tree
+    sum bit for bit: on values drawn from the forest's own thresholds (the
+    ``<=`` boundary and its float neighbours), on uniform values, and with
+    NaN cells and all-NaN rows (NaN goes right), across chunk edges."""
+    model = shipped_gbm
+    n_feat = len(FEATURE_COLS)
+    rng = np.random.default_rng(n)
+    X = rng.uniform(-0.5, 1.5, (n, n_feat)) * rng.choice([1.0, 100.0], n_feat)
+    for f in range(n_feat):
+        thr = np.array([t.threshold[i] for t in model.trees
+                        for i, g in enumerate(t.feature) if g == f])
+        if len(thr):
+            pick = rng.choice(thr, n)
+            step = np.nextafter(pick, rng.choice([-np.inf, np.inf], n))
+            pick = np.where(rng.random(n) < 0.5, pick, step)
+            X[:, f] = np.where(rng.random(n) < 0.7, pick, X[:, f])
+    X[rng.random((n, n_feat)) < 0.05] = np.nan
+    X[rng.random(n) < 0.02] = np.nan
+    assert np.array_equal(model.predict_margin(X), _per_tree_margin(model, X))
+
+
+def _tree(feature, threshold, left, right, value):
+    t = _Tree()
+    t.feature, t.threshold, t.left, t.right, t.value = feature, threshold, left, right, value
+    return t
+
+
+def test_gbm_forest_descent_single_leaf_tree_and_no_trees():
+    """A single-leaf tree (depth 0) beside deeper trees adds its value to
+    every row, NaN rows included; a model with no trees returns
+    ``base_score``."""
+    model = GBMClassifier(learning_rate=0.3)
+    model.base_score = -0.7
+    model.trees = [
+        _tree([1, 0, -1, -1, -1], [0.5, 0.25, 0, 0, 0], [1, 3, -1, -1, -1],
+              [2, 4, -1, -1, -1], [0.0, 0.0, 1.5, -2.0, 0.75]),
+        _tree([-1], [0.0], [-1], [-1], [0.1]),
+        # children listed before their parent: ids need not be pre-order
+        _tree([-1, -1, 2], [0, 0, 0.5], [-1, -1, 0], [-1, -1, 1], [0.2, -0.4, 0.0]),
+    ]
+    rng = np.random.default_rng(3)
+    X = rng.random((50, 3))
+    X[::7] = np.nan
+    X[1] = [0.25, 0.5, 0.5]  # every test on its threshold
+    assert np.array_equal(model.predict_margin(X), _per_tree_margin(model, X))
+    model.trees = [model.trees[1]]
+    assert np.array_equal(model.predict_margin(X), _per_tree_margin(model, X))
+    model.trees = []
+    for n in (0, 1, 5):
+        got = model.predict_margin(np.zeros((n, 3)))
+        assert got.shape == (n,) and np.array_equal(got, np.full(n, -0.7))
 
 
 @pytest.mark.parametrize("n", [0, 1])

@@ -406,3 +406,40 @@ def test_scorer_artifact_cache_keys_on_full_content():
     for tfidf_json, want in ((a, idf), (b, swapped)):
         key = _artifact_key(model_json, tfidf_json)
         assert np.array_equal(_artifacts(key, model_json, tfidf_json)[1].idf, want)
+
+
+def test_score_pairs_builds_one_scorer_per_artifacts(spark, monkeypatch):
+    """Repeated ``score_pairs`` calls on the same artifacts reuse one
+    scorer and its one broadcast; a refit vocabulary gets a new broadcast,
+    and its scores use the new vocabulary."""
+    from name_matching_spark.model.train import load_artifacts
+    from name_matching_spark.operators.scoring import score_pairs
+
+    # a trailing space makes strings no other test's scorer was built on
+    model_json = load_artifacts()[0].to_json() + " "
+    tfidf_json = TfidfModel.fit(CORPUS).to_json()
+    refit_json = TfidfModel.fit(CORPUS + ["smith wick"]).to_json()
+    sc = spark.sparkContext
+    made = []
+    broadcast = sc.broadcast
+
+    def recording(value):
+        bc = broadcast(value)
+        made.append(bc._jbroadcast.id())
+        return bc
+
+    monkeypatch.setattr(sc, "broadcast", recording)
+    pairs = spark.createDataFrame(
+        [("john smith", "jon smith"), ("john wick", "smith wick")],
+        "name_x string, name_y string",
+    )
+
+    def cosines(tfidf):
+        rows = score_pairs(pairs, model_json, tfidf).orderBy("name_x").collect()
+        return [r["cosine_sim"] for r in rows]
+
+    first = cosines(tfidf_json)
+    assert cosines(tfidf_json) == first and len(made) == 1
+    refit = cosines(refit_json)
+    assert len(made) == 2 and made[0] != made[1]
+    assert refit != first
