@@ -91,7 +91,9 @@ def make_scorer_udf(model_json: str, tfidf_json: str, spark, feature_cols=None):
 
 # One entry: ``score_pairs`` runs once per stream micro-batch, and building
 # a scorer (hash the 1.1 MB of artifact JSON, broadcast it, wrap a UDF)
-# costs about 28 ms and 25 py4j round trips.
+# costs about 20-30 ms and 7 py4j round trips, and its first call about 50
+# more (the JVM side of the UDF).  That call is made once per projection,
+# in ``_score_projection``.
 @functools.lru_cache(maxsize=1)
 def _scorer_udf(sc, model_json: str, tfidf_json: str, out_cols: tuple):
     out_idx = [FEATURE_COLS.index(c) for c in out_cols]
@@ -180,7 +182,28 @@ def score_pairs(
         # 15 float64 columns across the Python boundary just to drop them
         feature_cols=None if keep_features else EVIDENCE_COLS,
     )
-    scored = pairs.withColumn("_s", scorer(F.col(name_x), F.col(name_y)))
+    call, projection = _score_projection(
+        scorer, name_x, name_y, threshold, keep_features, tuple(pairs.columns)
+    )
+    return pairs.withColumn("_s", call).select(*projection)
+
+
+# Eight entries: the batch pipeline and the stream path each score with
+# their own column names and threshold.  The key holds the cached scorer
+# rather than widening ``_scorer_udf``'s own key, so a new threshold does
+# not re-broadcast the artifacts.
+@functools.lru_cache(maxsize=8)
+def _score_projection(
+    scorer, name_x: str, name_y: str, threshold: float, keep_features: bool,
+    columns: tuple,
+) -> tuple:
+    """The scorer call and the output projection of :func:`score_pairs`
+    over a frame with ``columns`` (which also say whether the embedding
+    columns are there), built once per key.  Each ``F.col``/``F.when``/
+    ``F.lit`` costs py4j round trips: the tree costs about 380, where a
+    warm ``score_pairs`` call makes about 20.  The Columns are unresolved,
+    so every plan that reuses them resolves them against its own input."""
+    call = scorer(F.col(name_x), F.col(name_y))
     # Decision from the RAW probability; rounding is display-only — exactly
     # the reference's split (predict_model.py:176-187 thresholds the raw
     # probability and rounds only the persisted column).  Thresholding the
@@ -190,7 +213,7 @@ def score_pairs(
     valid = (F.length(F.coalesce(F.col(name_x), F.lit(""))) > 0) & (
         F.length(F.coalesce(F.col(name_y), F.lit(""))) > 0
     )
-    cols = [c for c in pairs.columns]
+    cols = [F.col(c) for c in columns]
     if keep_features:
         cols += [F.col(f"_s.{f}").alias(f) for f in FEATURE_COLS]
     else:
@@ -204,7 +227,7 @@ def score_pairs(
         cols += [F.col("_s.cosine_sim").alias("cosine_sim"),
                  F.col("_s.align_edit").alias("align_edit"),
                  F.col("_s.token_weakest_link").alias("token_weakest_link")]
-    has_emb = {"emb_x", "emb_y"} <= set(pairs.columns)
+    has_emb = {"emb_x", "emb_y"} <= set(columns)
     decision = valid & (prob_raw >= F.lit(threshold))
     # The raw margin always rides along: refinement ladder rungs above
     # prob 0.99 operate where the sigmoid has flattened thousands of
@@ -236,9 +259,6 @@ def score_pairs(
         margin.alias("margin"),
         prob.alias("probability"),
         F.when(decision, F.lit(1)).otherwise(F.lit(0)).alias("prediction"),
+        F.when(decision, F.lit("MATCH")).otherwise(F.lit("NO_MATCH")).alias("match_label"),
     ]
-    scored = scored.select(*cols).withColumn(
-        "match_label",
-        F.when(F.col("prediction") == 1, F.lit("MATCH")).otherwise(F.lit("NO_MATCH")),
-    )
-    return scored
+    return call, tuple(cols)

@@ -1,6 +1,7 @@
 """Structured-streaming surface: streaming canonicalization + incremental
 entity assignment (the batch-clustering / stream-assignment lambda split)."""
 
+import gc
 import os
 
 import pytest
@@ -144,6 +145,107 @@ def test_assign_stream_batch_is_one_spark_job(spark):
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert len(rows) == len({(f"c{i % 40}", n) for i, n in enumerate(names)})
         assert len(tracker.getJobIdsForGroup(group)) == 1
+
+
+def _round_trips(spark, build) -> tuple:
+    """``build()`` and the py4j round trips the driver made for it.  The
+    cyclic GC is held off, so a collection of unrelated JavaObjects
+    cannot add its deletes to the count."""
+    client = type(spark.sparkContext._gateway._gateway_client)
+    send = client.send_command
+    calls = []
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return send(self, *args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    client.send_command = counting
+    try:
+        out = build()
+    finally:
+        client.send_command = send
+        gc.enable()
+    return len(calls), out
+
+
+def test_stream_plan_round_trip_budget(spark):
+    """A warm micro-batch builds its plan from expressions made once:
+    only the new input frame changes from one call to the next.  Making
+    every Column tree anew per call cost 637 round trips per plan, 385 of
+    them in ``score_pairs``."""
+    from name_matching_spark.operators.scoring import score_pairs
+    from name_matching_spark.streaming.stream_resolve import EntityTokenIndex
+
+    model, tfidf = load_artifacts()
+    mj, tj = model.to_json(), tfidf.to_json()
+    idx = EntityTokenIndex(_wick_entities(spark))
+
+    for _ in range(2):  # the second call is warm
+        new = spark.createDataFrame(
+            [("c1", "JOHN WICK"), ("c2", "ZEBRA QUARRY")], "conv_id string, name string"
+        )
+        trips, plan = _round_trips(spark, lambda: assign_stream_batch(new, idx, mj, tj))
+    assert trips <= 150
+    assert len(plan.collect()) == 2
+
+    pairs = spark.createDataFrame(
+        [("JOHN WICK", "JONATHAN WICK")], "name string, cand string"
+    )
+    kwargs = dict(name_x="name", name_y="cand", keep_features=False)
+    score_pairs(pairs, mj, tj, **kwargs)
+    trips, _ = _round_trips(spark, lambda: score_pairs(pairs, mj, tj, **kwargs))
+    assert trips <= 60
+
+
+def test_assign_stream_batch_scores_one_candidate_frame_per_batch(spark, monkeypatch):
+    """The traced benchmark run reads each micro-batch's candidate pairs
+    by wrapping this module's ``score_pairs``: a micro-batch calls it
+    exactly once, on a frame with one row per exact hit, per candidate
+    and per name without a candidate."""
+    import name_matching_spark.streaming.stream_resolve as stream_mod
+    from name_matching_spark.streaming.stream_resolve import EntityTokenIndex
+
+    model, tfidf = load_artifacts()
+    entities = spark.createDataFrame(
+        [
+            ("E1", "JONATHAN WICK", "JONATHAN WICK"),
+            ("E1", "JONATHAN WICK", "JOHNNY WICK"),
+            ("E2", "HOTEL CONTINENTAL", "HOTEL CONTINENTAL"),
+            ("E3", "WICK ENTERPRISES", "WICK ENTERPRISES"),
+        ],
+        ["entity_key", "resolved_name", "name"],
+    )
+    idx = EntityTokenIndex(entities)
+    frames = []
+    score_orig = stream_mod.score_pairs
+
+    def recording(pairs, *args, **kwargs):
+        frames.append(pairs)
+        return score_orig(pairs, *args, **kwargs)
+
+    monkeypatch.setattr(stream_mod, "score_pairs", recording)
+    batches = [
+        # JOHNNY WICK and HOTEL CONTINENTAL are members (2 exact hits);
+        # WICK blocks JOHN WICK to E1 and E3, twice (c2 arrives twice);
+        # ZEBRA QUARRY shares no token
+        [("c1", "JOHNNY WICK"), ("c2", "JOHN WICK"), ("c3", "ZEBRA QUARRY"),
+         ("c4", "HOTEL CONTINENTAL"), ("c2", "JOHN WICK"), ("c5", "JOHN WICK")],
+        [("c6", "ZEBRA QUARRY")],
+    ]
+    want = [(2, 4, 1), (0, 0, 1)]
+    for k, batch in enumerate(batches):
+        new = spark.createDataFrame(batch, "conv_id string, name string")
+        rows = assign_stream_batch(new, idx, model.to_json(), tfidf.to_json()).collect()
+        assert len(frames) == k + 1
+        pairs = frames[k].toPandas()
+        exact = int(pairs["exact"].sum())
+        cands = int((~pairs["exact"] & pairs["cand"].notna()).sum())
+        bare = int(pairs["cand"].isna().sum()) - exact
+        assert (exact, cands, bare) == want[k]
+        assert frames[k].count() == sum(want[k])
+        assert len(rows) == len(set(batch))
 
 
 def _retired_join_plan(new_names, entities, model_json, tfidf_json, threshold=0.85):

@@ -443,3 +443,86 @@ def test_score_pairs_builds_one_scorer_per_artifacts(spark, monkeypatch):
     refit = cosines(refit_json)
     assert len(made) == 2 and made[0] != made[1]
     assert refit != first
+
+
+def test_score_pairs_reused_projection_keys_on_its_inputs(spark):
+    """``score_pairs`` reuses one scorer call and output projection per
+    (scorer, column names, threshold, keep_features, input columns).  A
+    new threshold, column pair, feature choice or embedding column gets
+    its own, and two outputs of one reused projection resolve apart in a
+    join and in a union."""
+    from pyspark.sql import functions as F
+
+    from name_matching_spark.functions.features import FEATURE_COLS
+    from name_matching_spark.model.train import load_artifacts
+    from name_matching_spark.operators.scoring import (
+        EMB_MATCH_COSINE,
+        EVIDENCE_COLS,
+        _score_projection,
+        score_pairs,
+    )
+
+    model, tfidf = load_artifacts()
+    mj, tj = model.to_json(), tfidf.to_json()
+    # raw probabilities 1.0, 0.65, 0.002 and 0.91: 0.5 and 0.85 split them
+    names = [
+        ("JOHN SMITH", "JOHN SMITH"),
+        ("JOHN SMYTHE", "J SMITH"),
+        ("JANE SMITH", "JOHN SMITH"),
+        ("J SMITH", "JOHN SMITH"),
+    ]
+    # the third pair's vectors agree, so the embedding rule makes it a MATCH
+    vectors = [([1.0, 0.0], [0.0, 1.0]), ([1.0, 0.0], [0.0, 1.0]),
+               ([0.6, 0.8], [0.6, 0.8]), (None, None)]
+    for x, y in (("name_x", "name_y"), ("name", "cand")):
+        for has_emb in (False, True):
+            if has_emb:
+                pairs = spark.createDataFrame(
+                    [(*n, *v) for n, v in zip(names, vectors)],
+                    f"{x} string, {y} string, emb_x array<double>, emb_y array<double>",
+                )
+            else:
+                pairs = spark.createDataFrame(names, f"{x} string, {y} string")
+            for keep in (True, False):
+                predicted = set()
+                for threshold in (0.85, 0.5):
+                    out = score_pairs(
+                        pairs, mj, tj, threshold=threshold, name_x=x, name_y=y,
+                        keep_features=keep,
+                    )
+                    assert out.columns == [
+                        *pairs.columns,
+                        *(FEATURE_COLS if keep else EVIDENCE_COLS),
+                        *(["emb_cosine"] if has_emb else []),
+                        "margin", "probability", "prediction", "match_label",
+                    ]
+                    rows = out.orderBy(x).collect()
+                    for r in rows:
+                        emb_hit = has_emb and (r["emb_cosine"] or -1.0) >= EMB_MATCH_COSINE
+                        # the margin is raw unless the embedding rule lifted it
+                        raw = 1.0 / (1.0 + np.exp(-r["margin"]))
+                        assert r["prediction"] == int(emb_hit or raw >= threshold)
+                        assert r["match_label"] == ("MATCH" if r["prediction"] else "NO_MATCH")
+                    predicted.add(tuple(r["prediction"] for r in rows))
+                assert len(predicted) == 2  # the threshold changed a decision
+
+    # two frames with the same columns share one projection
+    pairs = spark.createDataFrame(names, "name_x string, name_y string")
+    a = score_pairs(pairs, mj, tj)
+    hits = _score_projection.cache_info().hits
+    b = score_pairs(pairs.where(F.col("name_x") != "JANE SMITH"), mj, tj)
+    assert _score_projection.cache_info().hits == hits + 1
+    want = {(r["name_x"], r["name_y"]): r for r in a.collect()}
+    joined = a.alias("a").join(b.alias("b"), ["name_x", "name_y"]).select(
+        "name_x", "name_y", "a.probability", "b.probability", "a.margin", "b.margin"
+    )
+    got = joined.collect()
+    assert len(got) == 3
+    for r in got:
+        w = want[(r[0], r[1])]
+        assert (r[2], r[4]) == (r[3], r[5]) == (w["probability"], w["margin"])
+    union = sorted(tuple(r) for r in a.unionByName(b).collect())
+    assert union == sorted(
+        [tuple(r) for r in want.values()]
+        + [tuple(r) for k, r in want.items() if k[0] != "JANE SMITH"]
+    )
