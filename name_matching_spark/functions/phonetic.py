@@ -14,8 +14,8 @@ soundex / double-metaphone codes, and MinHash-LSH bands.  Spark's native
   *stable* and *recall-preserving* (two spellings of the same name should
   collide), which is measured directly by the blocking-recall test against
   the labeled positive pairs.
-* :func:`double_metaphone_udf` — Arrow-batched pandas UDF emitting both
-  codes as an array<string>.
+* :func:`metaphone_name_codes_udf` — Arrow-batched pandas UDF emitting
+  the codes of every token of a name as one array<string>.
 """
 
 from __future__ import annotations
@@ -180,15 +180,6 @@ def double_metaphone(word: str, max_len: int = 6) -> tuple[str, str]:
     p = "".join(prim)[:max_len]
     s = "".join(sec)[:max_len]
     return p, s
-
-
-def double_metaphone_udf():
-    """pandas UDF: token -> array(primary, secondary) metaphone codes."""
-
-    def _batch(s: pd.Series) -> pd.Series:
-        return s.map(lambda v: list(double_metaphone(v)) if v is not None else None)
-
-    return F.pandas_udf(_batch, ArrayType(StringType()))
 
 
 def metaphone_name_codes_udf(min_token_len: int = 2):

@@ -30,6 +30,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from name_matching_spark.functions.phonetic import metaphone_name_codes_udf
+
+# The blocking configuration: a token keys a name (and its soundex and
+# metaphone codes) when it has at least MIN_TOKEN_LEN characters, and the
+# LSH keys are LSH_BANDS bands of LSH_ROWS_PER_BAND MinHash rows each.
+# The stream path's token blocking applies the same MIN_TOKEN_LEN.
+MIN_TOKEN_LEN = 2
+LSH_BANDS = 8
+LSH_ROWS_PER_BAND = 1
+
 # Affine universal-hash family for MinHash (derived, fixed seed): values
 # stay < 2^31 so v*a+b stays well inside int64 — ANSI-mode safe (Spark 4
 # raises on long overflow instead of wrapping).
@@ -71,16 +81,16 @@ def minhash_signature(col: Column, num_hashes: int = 16, offset: int = 0) -> Col
     return F.aggregate(base, init, step)
 
 
-def lsh_band_keys_from_sig(sig: Column, bands: int = 8, rows_per_band: int = 1) -> Column:
-    """array<string> of LSH band keys from a *materialized* signature
-    column.  Callers must bind the signature with ``withColumn`` first —
-    passing the raw expression would re-inline the whole MinHash aggregate
-    once per band (CollapseProject does not duplicate expensive
-    expressions referenced through a named column, which is exactly the
-    behavior this two-step shape relies on)."""
+def lsh_band_keys_from_sig(sig: Column) -> Column:
+    """array<string> of the :data:`LSH_BANDS` band keys from a
+    *materialized* signature column.  Callers must bind the signature with
+    ``withColumn`` first — passing the raw expression would re-inline the
+    whole MinHash aggregate once per band (CollapseProject does not
+    duplicate expensive expressions referenced through a named column,
+    which is exactly the behavior this two-step shape relies on)."""
     keys = []
-    for b in range(bands):
-        band = [sig[b * rows_per_band + r] for r in range(rows_per_band)]
+    for b in range(LSH_BANDS):
+        band = [sig[b * LSH_ROWS_PER_BAND + r] for r in range(LSH_ROWS_PER_BAND)]
         keys.append(F.concat_ws(":", F.lit(f"lsh{b}"), F.hash(*band).cast("string")))
     return F.array(*keys)
 
@@ -91,15 +101,9 @@ def lsh_band_keys_from_sig(sig: Column, bands: int = 8, rows_per_band: int = 1) 
 SUB_ROWS = 4
 
 
-def blocking_keys(
-    names: DataFrame,
-    name_col: str = "name",
-    min_token_len: int = 2,
-    bands: int = 8,
-    rows_per_band: int = 1,
-    use_metaphone: bool = True,
-) -> DataFrame:
-    """(key, name, _ss) rows: one per (blocking key, name) membership.
+def blocking_keys(names: DataFrame) -> DataFrame:
+    """(key, name, _ss) rows: one per (blocking key, name) membership of
+    the ``name`` column of ``names``.
 
     ``_ss`` is the :data:`SUB_ROWS` secondary MinHash signature the
     hot-block sub-blocking in :func:`candidate_pairs` consumes.  It is a
@@ -118,54 +122,35 @@ def blocking_keys(
     name rows are deduplicated first (name-level, far narrower than the
     old key-level distinct) so duplicate input rows keep the old
     semantics."""
-    c = F.col(name_col)
-    uniq = names.select(c.alias("name")).dropDuplicates(["name"])
+    uniq = names.select("name").dropDuplicates(["name"])
+    empty = F.array().cast("array<string>")
     toks = F.coalesce(
-        F.filter(F.split(F.col("name"), " "), lambda t: F.length(t) >= min_token_len),
-        F.array().cast("array<string>"),
+        F.filter(F.split(F.col("name"), " "), lambda t: F.length(t) >= MIN_TOKEN_LEN),
+        empty,
     )
+    mp = metaphone_name_codes_udf(MIN_TOKEN_LEN)(F.col("name"))
     fams = [
         F.transform(toks, lambda t: F.concat(F.lit("tok:"), t)),
         F.transform(toks, lambda t: F.concat(F.lit("sx:"), F.soundex(t))),
+        F.transform(F.coalesce(mp, empty), lambda m: F.concat(F.lit("mp:"), m)),
     ]
-    if use_metaphone:
-        from name_matching_spark.functions.phonetic import metaphone_name_codes_udf
-
-        mp = metaphone_name_codes_udf(min_token_len)(F.col("name"))
-        fams.append(
-            F.transform(
-                F.coalesce(mp, F.array().cast("array<string>")),
-                lambda m: F.concat(F.lit("mp:"), m),
-            )
+    # signature bound as a named column so the band keys read it once
+    # (see lsh_band_keys_from_sig)
+    d = (
+        uniq.select("name", *[f.alias(f"_f{i}") for i, f in enumerate(fams)])
+        .withColumn(
+            "_sig", minhash_signature(F.col("name"), LSH_BANDS * LSH_ROWS_PER_BAND)
         )
-    d = uniq.select(
-        "name", *[f.alias(f"_f{i}") for i, f in enumerate(fams)]
+        .withColumn("_lsh", lsh_band_keys_from_sig(F.col("_sig")))
+        .withColumn(
+            "_ss", minhash_signature(F.col("name"), num_hashes=SUB_ROWS, offset=101)
+        )
     )
-    if bands > 0:
-        # signature bound as a named column so the band keys read it once
-        # (see lsh_band_keys_from_sig)
-        d = d.withColumn(
-            "_sig", minhash_signature(F.col("name"), bands * rows_per_band)
-        ).withColumn(
-            "_lsh",
-            lsh_band_keys_from_sig(
-                F.col("_sig"), bands=bands, rows_per_band=rows_per_band
-            ),
-        )
-        all_keys = F.concat(
-            *[F.col(f"_f{i}") for i in range(len(fams))], F.col("_lsh")
-        )
-    else:
-        all_keys = F.concat(*[F.col(f"_f{i}") for i in range(len(fams))])
-    d = d.withColumn(
-        "_ss", minhash_signature(F.col("name"), num_hashes=SUB_ROWS, offset=101)
-    )
+    all_keys = F.concat(*[F.col(f"_f{i}") for i in range(len(fams))], F.col("_lsh"))
     return d.select(F.explode(F.array_distinct(all_keys)).alias("key"), "name", "_ss")
 
 
-def materialized_blocking_keys(
-    names: DataFrame, name_col: str = "name", **kw
-) -> DataFrame:
+def materialized_blocking_keys(names: DataFrame) -> DataFrame:
     """:func:`blocking_keys` with the sub-block signature and the per-key
     ``block_size``, eagerly materialized (``localCheckpoint``).
 
@@ -179,22 +164,16 @@ def materialized_blocking_keys(
     inside the one materialization job, so the pair job and the
     sub-block job both start from an already-sized, already
     key-partitioned table."""
-    k = blocking_keys(names, name_col=name_col, **kw)
+    k = blocking_keys(names)
     sizes = k.groupBy("key").agg(F.count("*").alias("block_size"))
     return k.join(sizes, "key").localCheckpoint()
 
 
 def candidate_pairs(
-    names: DataFrame,
-    name_col: str = "name",
-    max_block: int = 100,
-    min_token_len: int = 2,
-    bands: int = 8,
-    rows_per_band: int = 1,
-    use_metaphone: bool = True,
-    keys: DataFrame | None = None,
+    names: DataFrame, max_block: int = 100, keys: DataFrame | None = None
 ) -> DataFrame:
-    """Distinct candidate pairs (name_x < name_y) from the blocked self-join.
+    """Distinct candidate pairs (name_x < name_y) from the blocked self-join
+    of the ``name`` column of ``names``.
 
     Blocks within ``[2, max_block]`` pair quadratically (bounded at
     max_block^2/2 per block).  HOT blocks (> max_block) are NOT dropped:
@@ -208,20 +187,12 @@ def candidate_pairs(
     The key->size join and the self-join share the ``key`` partitioning, so
     Catalyst reuses the exchange; AQE handles residual skew at runtime.
     ``keys``: a pre-materialized :func:`materialized_blocking_keys` frame
-    to reuse (must have been built with the same blocking parameters);
-    raises ``ValueError`` when it lacks ``block_size`` or ``_ss``, and the
-    job fails when a hot block's ``_ss`` holds fewer than :data:`SUB_ROWS`
-    entries.
+    of ``names`` to reuse; raises ``ValueError`` when it lacks
+    ``block_size`` or ``_ss``, and the job fails when a hot block's
+    ``_ss`` holds fewer than :data:`SUB_ROWS` entries.
     """
     if keys is None:
-        keys = materialized_blocking_keys(
-            names,
-            name_col=name_col,
-            min_token_len=min_token_len,
-            bands=bands,
-            rows_per_band=rows_per_band,
-            use_metaphone=use_metaphone,
-        )
+        keys = materialized_blocking_keys(names)
     missing = [c for c in ("block_size", "_ss") if c not in keys.columns]
     if missing:
         raise ValueError(
@@ -295,21 +266,13 @@ def _join_pairs(keyed: DataFrame) -> DataFrame:
     )
 
 
-def block_stats(
-    names: DataFrame,
-    name_col: str = "name",
-    max_block: int = 100,
-    keys: DataFrame | None = None,
-    **kw,
-) -> DataFrame:
+def block_stats(keys: DataFrame, max_block: int = 100) -> DataFrame:
     """Per-key block sizes with a hot flag (size > max_block: the block was
     routed through MinHash sub-blocking / star capping rather than paired
     quadratically) — the lineage/metrics side output for the blocking
-    stage.  Pass the same materialized ``keys`` frame as
-    :func:`candidate_pairs` to avoid recomputing the metaphone + MinHash
-    key table for the metrics pass."""
-    if keys is None:
-        keys = blocking_keys(names, name_col=name_col, **kw)
+    stage.  ``keys`` is the :func:`materialized_blocking_keys` frame that
+    :func:`candidate_pairs` paired, so the metrics pass does not recompute
+    the metaphone + MinHash key table."""
     return keys.groupBy("key").agg(
         F.count("*").alias("block_size"),
         (F.count("*") > max_block).alias("hot"),

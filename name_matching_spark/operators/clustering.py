@@ -59,6 +59,12 @@ LADDER = (0.92, 0.96, 0.99, 0.995, 0.999, 0.9999, 0.99999)
 MAX_COMPONENT = 4
 EVIDENCE_MIN_SIZE = 2
 
+# Star-alternation rounds connected_components runs before it raises, and
+# the attach passes attach_subsumed makes (a chain of subsumed forms
+# resolves one link per pass).
+MAX_CC_ROUNDS = 25
+ATTACH_ROUNDS = 3
+
 
 def _check_ladder(ladder) -> None:
     if list(ladder) != sorted(ladder):
@@ -80,11 +86,11 @@ def _unpersist(frames, keep: DataFrame | None = None) -> None:
                 pass
 
 
-def _canon_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+def _canon_edges(edges: DataFrame) -> DataFrame:
     return (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("lo"),
-            F.greatest(F.col(src), F.col(dst)).alias("hi"),
+            F.least(F.col("src"), F.col("dst")).alias("lo"),
+            F.greatest(F.col("src"), F.col("dst")).alias("hi"),
         )
         .where(F.col("lo") != F.col("hi"))
         .dropDuplicates(["lo", "hi"])
@@ -197,14 +203,11 @@ def _driver_union_find(rows) -> list[tuple[str, str]]:
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iterations: int = 25,
-    driver_max_edges: int = 1_000_000,
+    edges: DataFrame, driver_max_edges: int = 1_000_000
 ) -> DataFrame:
-    """(name, component) for every node in ``edges``; ``component`` is the
-    lexicographically smallest node name in the connected component.
+    """(name, component) for every node of the (src, dst) ``edges``;
+    ``component`` is the lexicographically smallest node name in the
+    connected component.
 
     Size-adaptive execution: when the deduplicated edge set fits the
     ``driver_max_edges`` bound (one count job decides), a driver-side
@@ -217,10 +220,10 @@ def connected_components(
     collect is explicitly size-gated, never unbounded.)
 
     Raises ``RuntimeError`` if the star alternation has not reached its
-    fixed point within ``max_iterations`` rounds (silently returning
+    fixed point within :data:`MAX_CC_ROUNDS` rounds (silently returning
     partial labels would split entities)."""
     spark = edges.sparkSession
-    canon = _canon_edges(edges, src, dst)
+    canon = _canon_edges(edges)
 
     def _labels_df(labels, node_t) -> DataFrame:
         return labels_frame(spark, labels, node_t)
@@ -244,7 +247,7 @@ def connected_components(
     if prev[0] <= driver_max_edges:
         return _finish_on_driver(e)
     converged = False
-    for _ in range(max_iterations):
+    for _ in range(MAX_CC_ROUNDS):
         nxt = _small_star(_large_star(e)).localCheckpoint()
         cur = _checksum(nxt)
         retired.append(nxt)
@@ -258,7 +261,7 @@ def connected_components(
     if not converged and prev[0] > 0:
         _unpersist(retired)
         raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} rounds"
+            f"connected_components did not converge in {MAX_CC_ROUNDS} rounds"
         )
     # Exact star-property verification: every leaf hangs off exactly one
     # center and no node is both center and leaf (the checksum alone is a
@@ -289,30 +292,35 @@ def _logit(t: float) -> float:
     return math.log(t / (1.0 - t))
 
 
-# Probability rungs above this use the RAW MARGIN (when available): the
+# Probability rungs above this use the RAW MARGIN: the
 # persisted probability column is rounded to 4 decimals, so every edge
 # past 0.99995 is literally equal there — the sigmoid-free margin still
 # ranks them (margin >= logit(t) == raw prob >= t, exactly).
 MARGIN_RUNG_MIN_PROB = 0.999
 
 
+def _ev(c, al) -> bool:
+    """The evidence rung's edge test (NULL-safe: a None side never
+    qualifies, as a NULL fails the SQL comparison)."""
+    return (c is not None and c >= EVIDENCE_MIN_COSINE) or (
+        al is not None and al <= EVIDENCE_MAX_ALIGN
+    )
+
+
 def _refine_driver(
     rows: list,
     max_component: int,
     ladder: tuple[float, ...],
-    louvain_max_edges: int = 1_000_000,
-    evidence: tuple[float, float] | None = None,
-    evidence_min_size: int | None = None,
+    louvain_max_edges: int,
+    evidence_min_size: int | None,
 ) -> dict:
     """Driver-side twin of the distributed refinement: identical labels
     (min-name CC, same ladder semantics, same Louvain with the subgraph's
     own 2m).  ``rows`` is the collected (src, dst, prob, cosine, align,
-    margin) edge list (evidence/margin entries None when the frame has no
-    such columns); ``evidence`` is (min_cosine, max_align) or None to skip
-    the rung.  Ladder rungs above :data:`MARGIN_RUNG_MIN_PROB` compare the
-    margin against logit(t) when a margin is present — identical decision
-    to raw-probability >= t, immune to the 4dp rounding of the persisted
-    probability column."""
+    margin) edge list, a NULL value read as None.  Ladder rungs above
+    :data:`MARGIN_RUNG_MIN_PROB` compare the margin against logit(t) —
+    identical decision to raw-probability >= t, immune to the 4dp rounding
+    of the persisted probability column."""
     from collections import Counter
 
     def cc_local(pairs) -> dict:
@@ -348,10 +356,8 @@ def _refine_driver(
         if t > MARGIN_RUNG_MIN_PROB:
             lt = _logit(t)
 
-            def keep(p, c, al, mg, t=t, lt=lt):
-                if mg is not None:
-                    return mg >= lt
-                return p is not None and p >= t
+            def keep(p, c, al, mg, lt=lt):
+                return mg is not None and mg >= lt
 
         else:
 
@@ -361,14 +367,9 @@ def _refine_driver(
         comps = split_big(comps, keep)
         if comps is prev:
             break
-    if evidence is not None:
-        cmin, amax = evidence
-        comps = split_big(
-            comps,
-            lambda p, c, al, mg: (c is not None and c >= cmin)
-            or (al is not None and al <= amax),
-            bound=evidence_min_size,
-        )
+    comps = split_big(
+        comps, lambda p, c, al, mg: _ev(c, al), bound=evidence_min_size
+    )
     sizes = Counter(comps.values())
     big = {lab for lab, c in sizes.items() if c > max_component}
     if big:
@@ -416,15 +417,7 @@ def subsumption_edge_cond(
 
 
 def attach_subsumed(
-    comp: DataFrame,
-    sub_edges: DataFrame,
-    glue_edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    prob_col: str = "probability",
-    rounds: int = 3,
-    evidence_min_cosine: float | None = None,
-    evidence_max_align: float | None = None,
+    comp: DataFrame, sub_edges: DataFrame, glue_edges: DataFrame
 ) -> DataFrame:
     """Post-clustering attachment of subsumption-only names.
 
@@ -443,9 +436,9 @@ def attach_subsumed(
       the name sat inside a confusable web, so its prior of ambiguity is
       exactly why the rung isolated it): attach ONLY on a UNANIMOUS
       evidence vote — every evidence-bearing edge (``cosine_sim`` >=
-      ``evidence_min_cosine`` or ``align_edit`` <= ``evidence_max_align``,
-      when those columns ride on the edges) to an anchored partner must
-      point at ONE component.  The vote pools the subsumption edges and
+      :data:`EVIDENCE_MIN_COSINE` or ``align_edit`` <=
+      :data:`EVIDENCE_MAX_ALIGN`) to an anchored partner must point at
+      ONE component.  The vote pools the subsumption edges and
       the rung-cut glue edges; glue-only votes need >= 2 distinct
       anchored partners (one FP glue edge is trivially "unanimous").
       Best-p attach here crashed 100k pair precision 0.76 -> 0.59 (an
@@ -455,53 +448,43 @@ def attach_subsumed(
 
     Targets are anchored names only, so attachment maps names INTO
     multi-name components and can never weld two components — and two
-    mutual floaters cannot swap singleton labels.  ``rounds`` passes let
-    chains of subsumed forms ("H KASDRE" whose best partner is the
-    also-subsumed "HELI KASDRE") resolve: an attached floater is anchored
+    mutual floaters cannot swap singleton labels.  :data:`ATTACH_ROUNDS`
+    passes let chains of subsumed forms ("H KASDRE" whose best partner is
+    the also-subsumed "HELI KASDRE") resolve: an attached floater is anchored
     for the next round.  Floaters with no (transitively) anchored partner
     are left for the caller (mutual-floater FAMILIES — an entity observed
     only as full + initial + diminutive forms — cluster among themselves
-    in :func:`subsumption_aware_components`)."""
-    has_cos = "cosine_sim" in sub_edges.columns
-    has_al = "align_edit" in sub_edges.columns
-    null_d = F.lit(None).cast("double")
+    in :func:`subsumption_aware_components`).  Both edge frames carry the
+    scorer's columns (``src, dst, probability, margin, cosine_sim,
+    align_edit``)."""
 
     def _side(frame: DataFrame, a: str, b: str) -> DataFrame:
-        cols = frame.columns
         return frame.select(
             F.col(a).alias("name"),
             F.col(b).alias("other"),
-            F.col(prob_col).alias("p"),
-            (F.col("cosine_sim") if "cosine_sim" in cols else null_d).alias("c"),
-            (F.col("align_edit") if "align_edit" in cols else null_d).alias("al"),
-            (F.col("margin") if "margin" in cols else null_d).alias("mg"),
+            F.col("probability").alias("p"),
+            F.col("cosine_sim").alias("c"),
+            F.col("align_edit").alias("al"),
+            F.col("margin").alias("mg"),
         )
 
     def _both_sides(frame: DataFrame) -> DataFrame:
         return (
-            _side(frame, src, dst)
-            .unionByName(_side(frame, dst, src))
+            _side(frame, "src", "dst")
+            .unionByName(_side(frame, "dst", "src"))
             .localCheckpoint()
         )
 
     e = _both_sides(sub_edges)
     ge = _both_sides(glue_edges)
     # NULL-safe disjunction (a NULL side never qualifies), byte-matching
-    # the driver twin's `_ev`; with no evidence columns or thresholds at
-    # all the gate is inert (every edge votes).
-    gate_active = (evidence_min_cosine is not None or evidence_max_align is not None) and (
-        has_cos or has_al
+    # the driver twin's `_ev`
+    ev_cond = F.coalesce(
+        (F.col("c") >= F.lit(EVIDENCE_MIN_COSINE))
+        | (F.col("al") <= F.lit(EVIDENCE_MAX_ALIGN)),
+        F.lit(False),
     )
-    if gate_active:
-        ev_cond = F.lit(False)
-        if evidence_min_cosine is not None:
-            ev_cond = ev_cond | (F.col("c") >= F.lit(evidence_min_cosine))
-        if evidence_max_align is not None:
-            ev_cond = ev_cond | (F.col("al") <= F.lit(evidence_max_align))
-        ev_cond = F.coalesce(ev_cond, F.lit(False))
-    else:
-        ev_cond = F.lit(True)
-    for _ in range(max(rounds, 1)):
+    for _ in range(ATTACH_ROUNDS):
         anchored = _anchored(comp)
         floaters = (
             e.select("name")
@@ -591,16 +574,10 @@ def _anchored(comp: DataFrame) -> DataFrame:
 
 def subsumption_aware_components(
     matches: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    prob_col: str = "probability",
-    attach_rounds: int = 3,
     max_component: int = MAX_COMPONENT,
     ladder: tuple[float, ...] = LADDER,
     driver_max_edges: int = 1_000_000,
     louvain_max_edges: int = 1_000_000,
-    evidence_min_cosine: float = EVIDENCE_MIN_COSINE,
-    evidence_max_align: float = EVIDENCE_MAX_ALIGN,
     evidence_min_size: int | None = EVIDENCE_MIN_SIZE,
 ) -> DataFrame:
     """The full subsumption-aware clustering composition:
@@ -610,8 +587,8 @@ def subsumption_aware_components(
     2. :func:`attach_subsumed`: subsumption-only names attach to their
        best clustered partner's component, and rung-isolated glue
        singletons re-attach on a unanimous evidence vote over their
-       subsumption AND glue edges (``attach_rounds`` passes so chains
-       resolve);
+       subsumption AND glue edges (:data:`ATTACH_ROUNDS` passes so
+       chains resolve);
     3. residual subsumption families whose members have NO clustered
        partner anywhere (an entity observed only as full + initial +
        diminutive forms has no glue-shaped pair at all) are clustered
@@ -632,36 +609,25 @@ def subsumption_aware_components(
     of pure scheduling overhead on a graph that fits in memory.  Labels
     are identical (the driver twin mirrors each step's tie-breaks).
 
-    The keywords after ``attach_rounds`` are :func:`refined_components`'s,
-    named here so an unknown option fails on both paths alike."""
+    ``matches`` is the scorer's match frame as the pipeline builds it:
+    ``src, dst, probability, margin, cosine_sim, align_edit,
+    token_weakest_link``.  The keywords are :func:`refined_components`'s."""
     _check_ladder(ladder)
     refine_kw = dict(
-        src=src,
-        dst=dst,
-        prob_col=prob_col,
         max_component=max_component,
         ladder=ladder,
         driver_max_edges=driver_max_edges,
         louvain_max_edges=louvain_max_edges,
-        evidence_min_cosine=evidence_min_cosine,
-        evidence_max_align=evidence_max_align,
         evidence_min_size=evidence_min_size,
     )
-    if not {"token_weakest_link", "align_edit"} <= set(matches.columns):
-        # no subsumption evidence on this frame — plain refinement
-        return refined_components(matches, **refine_kw)
     m = matches.select(
-        F.col(src).alias("src"),
-        F.col(dst).alias("dst"),
-        F.col(prob_col).alias("p"),
-        F.col("cosine_sim").alias("c") if "cosine_sim" in matches.columns
-        else F.lit(None).cast("double").alias("c"),
+        "src",
+        "dst",
+        F.col("probability").alias("p"),
+        F.col("cosine_sim").alias("c"),
         F.col("align_edit").alias("al"),
         F.col("token_weakest_link").alias("twl"),
-        (
-            F.col("margin") if "margin" in matches.columns
-            else F.lit(None).cast("double")
-        ).alias("mg"),
+        F.col("margin").alias("mg"),
     )
     collected = _collect_bounded(m, driver_max_edges)
     if collected is not None:
@@ -671,10 +637,7 @@ def subsumption_aware_components(
             max_component=max_component,
             ladder=tuple(ladder),
             louvain_max_edges=louvain_max_edges,
-            evidence_min_cosine=evidence_min_cosine,
-            evidence_max_align=evidence_max_align,
             evidence_min_size=evidence_min_size,
-            attach_rounds=attach_rounds,
         )
         node_t = m.schema["src"].dataType
         return labels_frame(
@@ -684,25 +647,15 @@ def subsumption_aware_components(
     glue = matches.where(~is_sub)
     sub = matches.where(is_sub)
     comp = refined_components(glue, **refine_kw)
-    comp = attach_subsumed(
-        comp,
-        sub,
-        glue,
-        src=src,
-        dst=dst,
-        prob_col=prob_col,
-        rounds=attach_rounds,
-        evidence_min_cosine=evidence_min_cosine,
-        evidence_max_align=evidence_max_align,
-    )
+    comp = attach_subsumed(comp, sub, glue)
     # Mutual-floater families: subsumption edges both of whose endpoints
     # stayed un-anchored through every attach round (comp-absent OR glue
     # singletons) cluster among THEMSELVES under the same refinement
     # discipline, replacing any singleton labels they held.
     anames = _anchored(comp).select("name")
     residual = sub.join(
-        anames.withColumnRenamed("name", src), src, "left_anti"
-    ).join(anames.withColumnRenamed("name", dst), dst, "left_anti")
+        anames.withColumnRenamed("name", "src"), "src", "left_anti"
+    ).join(anames.withColumnRenamed("name", "dst"), "dst", "left_anti")
     if residual.limit(1).count() > 0:
         rlab = refined_components(residual, **refine_kw)
         comp = comp.join(rlab.select("name"), "name", "left_anti").unionByName(
@@ -722,10 +675,7 @@ def _subsumption_aware_driver(
     max_component: int,
     ladder: tuple[float, ...],
     louvain_max_edges: int,
-    evidence_min_cosine: float,
-    evidence_max_align: float,
-    attach_rounds: int,
-    evidence_min_size: int | None = None,
+    evidence_min_size: int | None,
 ) -> dict:
     """Driver twin of the distributed composition.  ``rows``:
     (src, dst, p, cosine, align, twl, margin) tuples, self-loops
@@ -736,14 +686,8 @@ def _subsumption_aware_driver(
             if not _is_sub_row(twl, al)]
     sub = [(a, b, p, c, al, mg) for a, b, p, c, al, twl, mg in rows
            if _is_sub_row(twl, al)]
-    evidence = (evidence_min_cosine, evidence_max_align)
     comp = _refine_driver(
-        glue,
-        max_component,
-        ladder,
-        louvain_max_edges,
-        evidence=evidence,
-        evidence_min_size=evidence_min_size,
+        glue, max_component, ladder, louvain_max_edges, evidence_min_size
     )
     # attach rounds (driver twin of attach_subsumed): anchored = member of
     # a >= 2-name component; comp-absent floaters attach to the best
@@ -754,11 +698,6 @@ def _subsumption_aware_driver(
     def anchored_names(c: dict) -> set:
         sz = Counter(c.values())
         return {n for n, lab in c.items() if sz[lab] >= 2}
-
-    def _ev(c, al) -> bool:
-        return (c is not None and c >= evidence_min_cosine) or (
-            al is not None and al <= evidence_max_align
-        )
 
     adj: dict = defaultdict(list)
     for a, b, p, c, al, mg in sub:
@@ -775,7 +714,7 @@ def _subsumption_aware_driver(
         gadj[a].append((p, b, c, al, mg))
         gadj[b].append((p, a, c, al, mg))
     _NEG_INF = float("-inf")
-    for _ in range(max(attach_rounds, 1)):
+    for _ in range(ATTACH_ROUNDS):
         anc = anchored_names(comp)
         newly = {}
         for n in set(adj) | set(gadj):
@@ -828,12 +767,7 @@ def _subsumption_aware_driver(
     if residual:
         comp.update(
             _refine_driver(
-                residual,
-                max_component,
-                ladder,
-                louvain_max_edges,
-                evidence=evidence,
-                evidence_min_size=evidence_min_size,
+                residual, max_component, ladder, louvain_max_edges, evidence_min_size
             )
         )
     return comp
@@ -841,15 +775,10 @@ def _subsumption_aware_driver(
 
 def refined_components(
     matches: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    prob_col: str = "probability",
     max_component: int = MAX_COMPONENT,
     ladder: tuple[float, ...] = LADDER,
     driver_max_edges: int = 1_000_000,
     louvain_max_edges: int = 1_000_000,
-    evidence_min_cosine: float = EVIDENCE_MIN_COSINE,
-    evidence_max_align: float = EVIDENCE_MAX_ALIGN,
     evidence_min_size: int | None = EVIDENCE_MIN_SIZE,
 ) -> DataFrame:
     """Connected components with per-component threshold refinement — the
@@ -873,16 +802,15 @@ def refined_components(
        singletons;
     3. repeat up the ladder until every component fits the cap or the
        ladder is exhausted;
-    3b. EVIDENCE rung (needs ``cosine_sim`` / ``align_edit`` columns on
-       ``matches`` — the scorer always emits them; skipped on bare edge
-       frames without them): probability saturates on corpus-scale confusable webs (the
-       GBM emits 1.0000 for thousands of cross-entity pairs), so inside
-       still-oversized components an edge survives only with distinctive
-       shared evidence — an IDF-weighted shared token (cosine) or a
-       near-exact string relation (align_edit <= 1).  ``evidence_min_size``
-       (None = ``max_component``) lowers the size at which THIS
-       rung applies: the measured FP mass at fixture scale sits in
-       SMALL mixed clusters (3-5 names) glued by evidence-free
+    3b. EVIDENCE rung: probability saturates on corpus-scale confusable
+       webs (the GBM emits 1.0000 for thousands of cross-entity pairs), so
+       inside still-oversized components an edge survives only with
+       distinctive shared evidence — an IDF-weighted shared token
+       (``cosine_sim`` >= :data:`EVIDENCE_MIN_COSINE`) or a near-exact
+       string relation (``align_edit`` <= :data:`EVIDENCE_MAX_ALIGN`).
+       ``evidence_min_size`` (None = ``max_component``) lowers the size
+       at which THIS rung applies: the measured FP mass at fixture scale
+       sits in SMALL mixed clusters (3-5 names) glued by evidence-free
        0.95-0.99 edges that never face the ladder — see
        BENCH/QUALITY.md;
     4. components STILL over the cap after the top rung are dense webs of
@@ -905,6 +833,9 @@ def refined_components(
     to plain ``connected_components``.  The defaults are the shipped
     configuration (:data:`LADDER`, :data:`MAX_COMPONENT`,
     :data:`EVIDENCE_MIN_SIZE`).
+
+    ``matches`` is the scorer's match frame as the pipeline builds it
+    (``src, dst, probability, margin, cosine_sim, align_edit`` are read).
     """
     _check_ladder(ladder)
     retired: list[DataFrame] = []
@@ -914,7 +845,7 @@ def refined_components(
         retired.append(out)
         return out
 
-    edges = matches.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    edges = matches.select("src", "dst")
     # Size-gated driver fast path (same bound as connected_components):
     # each ladder rung is otherwise several Spark jobs over what is, below
     # the gate, a tiny graph — fixed scheduling overhead dominated the
@@ -922,41 +853,23 @@ def refined_components(
     # the distributed path (parity-tested).  The gate probe is a
     # limit-count — no materialization of the full edge list just to
     # count it.
-    has_evidence = {"cosine_sim", "align_edit"} <= set(matches.columns)
-    ev_cols = (
-        [F.col("cosine_sim").alias("c"), F.col("align_edit").alias("al")]
-        if has_evidence
-        else [F.lit(None).cast("double").alias("c"), F.lit(None).cast("double").alias("al")]
-    )
-    has_margin = "margin" in matches.columns
-    mg_col = (
-        F.col("margin") if has_margin else F.lit(None).cast("double")
-    ).alias("mg")
     m = matches.select(
-        F.col(src).alias("src"),
-        F.col(dst).alias("dst"),
-        F.col(prob_col).alias("p"),
-        *ev_cols,
-        mg_col,
+        "src",
+        "dst",
+        F.col("probability").alias("p"),
+        F.col("cosine_sim").alias("c"),
+        F.col("align_edit").alias("al"),
+        F.col("margin").alias("mg"),
     )
     collected = _collect_bounded(m, driver_max_edges)
     if collected is not None:
         # Degenerate-edge parity with the distributed path: _canon_edges
-        # drops self-loops (src == dst) before CC, and the ladder's
-        # `prob >= t` column comparison silently drops NULL probabilities —
-        # mirror both here so the two paths agree byte-for-byte on unclean
-        # public-operator inputs (a NULL prob would otherwise TypeError in
-        # Python's `p >= t`, and a self-loop would get a driver-only label).
+        # drops self-loops (src == dst) before CC, and a rung's column
+        # comparison drops an edge whose value is NULL; the driver twin
+        # mirrors both (its rung tests read None as failing).
         rows = [t for t in collected if t[0] != t[1]]
         labels = _refine_driver(
-            rows,
-            max_component,
-            ladder,
-            louvain_max_edges,
-            evidence=(evidence_min_cosine, evidence_max_align)
-            if has_evidence
-            else None,
-            evidence_min_size=evidence_min_size,
+            rows, max_component, ladder, louvain_max_edges, evidence_min_size
         )
         spark = matches.sparkSession
         node_t = m.schema["src"].dataType
@@ -983,7 +896,7 @@ def refined_components(
         # what the ladder separated.
         strong = (
             matches.where(cond)
-            .select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+            .select("src", "dst")
             .join(
                 big_names.select(
                     F.col("name").alias("src"), F.col("component").alias("_cs")
@@ -1015,12 +928,12 @@ def refined_components(
         )
 
     for t in ladder:
-        if t > MARGIN_RUNG_MIN_PROB and has_margin:
+        if t > MARGIN_RUNG_MIN_PROB:
             # identical decision to raw-prob >= t; the persisted
             # probability is 4dp-rounded and saturates at 1.0
             rung_cond = F.col("margin") >= F.lit(_logit(t))
         else:
-            rung_cond = F.col(prob_col) >= t
+            rung_cond = F.col("probability") >= t
         comp, had_big = _split_big(comp, rung_cond)
         if not had_big:
             break
@@ -1031,15 +944,12 @@ def refined_components(
     # evidence: a shared informative token (cosine_sim — IDF-weighted, so
     # generic designators/kind words do not count) or a near-exact string
     # relation (align_edit <= 1: typo / merge / designator variants).
-    # Skipped transparently when the matches frame carries no evidence
-    # columns (public operator use on bare (src, dst, prob) edges).
-    if has_evidence:
-        comp, _ = _split_big(
-            comp,
-            (F.col("cosine_sim") >= F.lit(evidence_min_cosine))
-            | (F.col("align_edit") <= F.lit(evidence_max_align)),
-            bound=evidence_min_size,
-        )
+    comp, _ = _split_big(
+        comp,
+        (F.col("cosine_sim") >= F.lit(EVIDENCE_MIN_COSINE))
+        | (F.col("align_edit") <= F.lit(EVIDENCE_MAX_ALIGN)),
+        bound=evidence_min_size,
+    )
     sizes = comp.groupBy("component").agg(F.count("*").alias("n"))
     big = sizes.where(F.col("n") > max_component).select("component")
     if big.limit(1).count() > 0:
@@ -1059,9 +969,7 @@ def refined_components(
             _canon_edges(
                 edges.join(
                     bn.withColumnRenamed("name", "src"), "src", "left_semi"
-                ).join(bn.withColumnRenamed("name", "dst"), "dst", "left_semi"),
-                "src",
-                "dst",
+                ).join(bn.withColumnRenamed("name", "dst"), "dst", "left_semi")
             ).select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
         )
         icc = _ckpt(connected_components(internal))

@@ -177,7 +177,7 @@ def louvain_communities(
 
     import pandas as pd
 
-    comp = connected_components(e, src="lo", dst="hi")
+    comp = connected_components(e.toDF("src", "dst"))
     m2 = 2.0 * n  # every deduplicated edge has weight 1
     ec = e.join(
         comp.select(F.col("name").alias("lo"), F.col("component").alias("cid")),

@@ -226,9 +226,7 @@ class EntityResolutionPipeline:
         )
         self._stage(
             "block_metrics",
-            lambda: block_stats(
-                names, max_block=self.max_block, keys=blocking_keys_once()
-            ),
+            lambda: block_stats(blocking_keys_once(), max_block=self.max_block),
             inputs=["names"],
             params=block_params,
         )
@@ -331,10 +329,10 @@ class EntityResolutionPipeline:
                 "cosine_sim",
                 align.alias("align_edit"),
                 "token_weakest_link",
-                # raw margin (when the checkpoint carries it): ladder
-                # rungs above 0.999 and attach tie-breaks rank with it
-                # where the 4dp probability has saturated
-                *(["margin"] if "margin" in matches.columns else []),
+                # raw margin: ladder rungs above 0.999 and attach
+                # tie-breaks rank with it where the 4dp probability has
+                # saturated
+                "margin",
             )
             # Subsumption edges (initial/diminutive/prefix-extension
             # forms) are pair-level matches but ambiguous CLUSTER

@@ -30,14 +30,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StringType, StructField, StructType
 
 from name_matching_spark.functions.normalize import normalize_text_col
+# Shortest token that blocks a stream name against an entity: the batch
+# blocking rule, applied alike on the index side and the micro-batch side.
+from name_matching_spark.operators.blocking import MIN_TOKEN_LEN
 # Called through this module's name: perfbench's trace wraps it here to
 # count the candidate pairs of each micro-batch.
 from name_matching_spark.operators.scoring import score_pairs
-
-# Shortest token that blocks a stream name against an entity: the index
-# side and the micro-batch side must apply the same rule, or a name's
-# token can never meet the entity token it would have matched.
-MIN_TOKEN_LEN = 2
 
 
 def stream_canonical_names(
@@ -82,7 +80,10 @@ class EntityTokenIndex:
     for the exact lookup, and the token postings (token -> entities whose
     canonical name holds it) for blocking.  ``n_rows`` is the number of
     (token, entity) rows the postings hold, i.e. the size of the exploded
-    token table a join-based index would materialize."""
+    token table a join-based index would materialize.
+
+    ``entities`` is the batch pipeline's entity table: one row per member
+    ``name`` with its ``entity_key`` and the entity's ``resolved_name``."""
 
     def __init__(self, entities: DataFrame):
         # Known members: the entity table is per NAME, so a stream name
@@ -92,9 +93,8 @@ class EntityTokenIndex:
         # made.  Rows are sorted, so a name listed under several keys (or
         # a key with several canonical forms) resolves to the smallest,
         # whatever the table's partitioning.
-        member_col = "name" if "name" in entities.columns else "resolved_name"
         rows = sorted(
-            (tuple(r) for r in entities.select("entity_key", "resolved_name", member_col)
+            (tuple(r) for r in entities.select("entity_key", "resolved_name", "name")
              .where(F.col("entity_key").isNotNull()).collect()),
             key=lambda r: (r[0], r[1] or "", r[2] or ""),
         )
@@ -178,7 +178,7 @@ def _block(bc) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
 
 def assign_stream_batch(
     new_names: DataFrame,
-    entities: DataFrame | EntityTokenIndex,
+    index: EntityTokenIndex,
     model_json: str,
     tfidf_json: str,
     threshold: float = 0.85,
@@ -188,9 +188,9 @@ def assign_stream_batch(
     match >= threshold, else mark pending.  One row per distinct
     ``(conv_id, name)``: ``conv_id, name, entity_key, status``.
 
-    entities: the batch pipeline's (entity_key, resolved_name) output, or —
-    preferred for a long-running query — a prebuilt :class:`EntityTokenIndex`
-    so the index is NOT rebuilt and re-broadcast every micro-batch.
+    index: the :class:`EntityTokenIndex` of the batch pipeline's entity
+    table, built once per refresh of that table and reused by every
+    micro-batch.
 
     The plan is one Spark job of one task.  The micro-batch is coalesced
     to a single partition (a micro-batch is bounded by its trigger), so
@@ -207,14 +207,13 @@ def assign_stream_batch(
     is made once, by the index and by :func:`score_pairs`' cached
     projection, so only the input frame is new.  Most of the rest is the
     ``mapInPandas`` UDF, built anew per call (about 33 round trips)."""
-    idx = entities if isinstance(entities, EntityTokenIndex) else EntityTokenIndex(entities)
-    nn = new_names.select(*idx.name_cols)
+    nn = new_names.select(*index.name_cols)
     pairs = nn.coalesce(1).mapInPandas(
-        _block(idx.broadcast),
+        _block(index.broadcast),
         StructType(
             [
                 *nn.schema.fields,
-                StructField("entity_key", idx.key_type),
+                StructField("entity_key", index.key_type),
                 StructField("cand", StringType()),
                 StructField("exact", BooleanType()),
             ]
@@ -232,4 +231,4 @@ def assign_stream_batch(
     # Spark does not carry the single partition through the Python nodes;
     # restating it lets the aggregate (the index's pick and status) run
     # without an exchange (which would be a second job)
-    return scored.coalesce(1).groupBy(*idx.name_cols).agg(*idx.pick_cols)
+    return scored.coalesce(1).groupBy(*index.name_cols).agg(*index.pick_cols)

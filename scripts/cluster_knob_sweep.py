@@ -54,7 +54,7 @@ def main() -> None:
                 "cosine_sim",
                 "align_edit",
                 "token_weakest_link",
-                *(["margin"] if "margin" in sp.columns else []),
+                "margin",
             )
             .localCheckpoint()
         )

@@ -72,7 +72,7 @@ def test_block_hot_cap(spark):
         for _ in range(150)
     ]
     names = spark.createDataFrame(rows, ["name"])
-    stats = block_stats(names, max_block=100)
+    stats = block_stats(materialized_blocking_keys(names), max_block=100)
     hot = {r["key"] for r in stats.where(F.col("hot")).collect()}
     assert "tok:LLC" in hot
     # no non-hot block exceeds the cap
@@ -82,11 +82,11 @@ def test_block_hot_cap(spark):
 
 
 def test_hot_block_subblocking_recovers_recall(spark):
-    # The corpus-scale regime in miniature (bands=0 / no metaphone to
-    # isolate it — at small n the LSH band buckets stay small and would
-    # catch every pair through a non-hot route, which is exactly what
-    # stops happening at 100k names): each typo pair's ONLY shared key is
-    # the hot token block.  The old purge semantics dropped such pairs
+    # The corpus-scale regime in miniature (only the token keys are
+    # paired, to isolate it — at small n the LSH band buckets stay small
+    # and would catch every pair through a non-hot route, which is exactly
+    # what stops happening at 100k names): each typo pair's ONLY shared
+    # key is the hot token block.  The old purge semantics dropped such pairs
     # entirely (recall ~0 here); MinHash sub-blocking must recover the
     # overwhelming majority (a true pair shares most full-name shingles,
     # so at least one of the 4 secondary rows agrees w.p. 1-(1-J)^4).
@@ -103,8 +103,10 @@ def test_hot_block_subblocking_recovers_recall(spark):
         names += [(a,), (b,)]
         want.add((min(a, b), max(a, b)))
     names_df = spark.createDataFrame(names, ["name"])
-    kw = dict(max_block=5, bands=0, use_metaphone=False)
-    sub = candidate_pairs(names_df, **kw)
+    # block_size is per key, so it survives the filter: tok:LLC stays hot
+    keys = materialized_blocking_keys(names_df)
+    tok_keys = keys.where(F.col("key").startswith("tok:"))
+    sub = candidate_pairs(names_df, max_block=5, keys=tok_keys)
     got = {(r["name_x"], r["name_y"]) for r in sub.collect()}
     recall = len(want & got) / len(want)
     assert recall >= 0.85, f"sub-blocking recall {recall:.3f}"

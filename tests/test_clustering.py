@@ -1,5 +1,7 @@
 """Connected components + entity assignment semantics."""
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,6 +14,29 @@ def _cc(spark, edges):
     return {
         r["name"]: r["component"] for r in connected_components(df).collect()
     }
+
+
+# The scorer's match frame, as pipeline.cluster_fn builds it.
+MATCH_SCHEMA = (
+    "src string, dst string, probability double, cosine_sim double, "
+    "align_edit double, token_weakest_link double, margin double"
+)
+
+
+def _matches(spark, rows):
+    """A match frame from ``(src, dst, probability, *rest)`` rows whose
+    missing trailing columns take inert values: cosine_sim 1.0 and
+    align_edit 0 pass the evidence rung, token_weakest_link 0.5 marks no
+    subsumption edge, and margin is logit(probability), so a margin rung
+    or tie-break decides as the probability does."""
+    inert = (1.0, 0.0, 0.5)
+    full = []
+    for src, dst, p, *rest in rows:
+        rest = [*rest, *inert[len(rest):]]
+        if len(rest) == 3:
+            rest.append(math.log(p / (1 - p)))
+        full.append((src, dst, float(p), *map(float, rest)))
+    return spark.createDataFrame(full, MATCH_SCHEMA)
 
 
 def test_cc_two_components(spark):
@@ -183,7 +208,7 @@ def test_refined_components_splits_weak_bridges(spark):
         # small strong pair, under the cap: untouched
         ("X", "Y", 0.99),
     ]
-    m = spark.createDataFrame(rows, ["src", "dst", "probability"])
+    m = _matches(spark, rows)
     out = {
         r["name"]: r["component"]
         for r in refined_components(m, max_component=3, ladder=(0.90,)).collect()
@@ -225,7 +250,7 @@ def test_refined_components_driver_matches_distributed(spark):
     for _ in range(60):
         a, b = rng.sample(nodes, 2)
         rows.append((min(a, b), max(a, b), 0.85 + 0.14 * rng.random()))
-    m = spark.createDataFrame(rows, ["src", "dst", "probability"])
+    m = _matches(spark, rows)
     kw = dict(max_component=25, ladder=(0.90, 0.95))
     fast = {
         r["name"]: r["component"] for r in refined_components(m, **kw).collect()
@@ -246,7 +271,7 @@ def test_refined_components_oversized_web_kept_not_raised(spark):
 
     clique = [f"W{i:02d}" for i in range(30)]
     rows = [(a, b, 0.99) for i, a in enumerate(clique) for b in clique[i + 1 :]]
-    m = spark.createDataFrame(rows, ["src", "dst", "probability"])
+    m = _matches(spark, rows)
     kw = dict(max_component=10, ladder=(0.95,), louvain_max_edges=100)
     fast = {r["name"]: r["component"] for r in refined_components(m, **kw).collect()}
     dist = {
@@ -295,11 +320,7 @@ def test_subsumption_aware_driver_matches_distributed(spark):
     # isolated all-subsumption family (no glue partner anywhere)
     sub("ISO1", "ISO2", 0.95)
     sub("ISO2", "ISO3", 0.94)
-    m = spark.createDataFrame(
-        rows,
-        "src string, dst string, probability double, cosine_sim double, "
-        "align_edit double, token_weakest_link double",
-    )
+    m = _matches(spark, rows)
     kw = dict(max_component=12, ladder=(0.90, 0.95), evidence_min_size=None)
     fast = {
         r["name"]: r["component"]
@@ -335,9 +356,7 @@ def test_refined_components_evidence_min_size(spark):
         # 2-name evidence-free component: at or below the bound, untouched
         ("X", "Y", 0.95, 0.00, 4.0),
     ]
-    m = spark.createDataFrame(
-        rows, ["src", "dst", "probability", "cosine_sim", "align_edit"]
-    )
+    m = _matches(spark, rows)
     kw = dict(max_component=10, ladder=(0.92,))
     dflt = {
         r["name"]: r["component"]
@@ -398,11 +417,7 @@ def test_singleton_reattach_unanimous_evidence(spark):
     sub("U", B[0], 0.98, 0.4, 2.0)
     # T: only an evidence-free sub edge -> no votes at all
     sub("T", A[0], 0.99, 0.0, 3.0)
-    m = spark.createDataFrame(
-        rows,
-        "src string, dst string, probability double, cosine_sim double, "
-        "align_edit double, token_weakest_link double",
-    )
+    m = _matches(spark, rows)
     kw = dict(max_component=12, ladder=(0.90,), evidence_min_size=2)
     fast = {
         r["name"]: r["component"]
@@ -569,6 +584,9 @@ def test_subsumption_aware_twins_agree_at_shipped_settings(spark, tmp_path):
         {"singleton_vote_glue": False},
         {"final_louvain": False},
         {"evidence_rung": False},
+        {"prob_col": "p"},
+        {"evidence_min_cosine": 0.1},
+        {"attach_rounds": 1},
     ],
 )
 def test_subsumption_aware_rejects_retired_options(spark, retired):

@@ -166,3 +166,47 @@ def test_session_sets_no_scheduler_mode(monkeypatch):
     runpy.run_path(worker_daemon.__file__, run_name=worker_daemon.__name__)
     assert zipimport.zipimporter.invalidate_caches is stock
     assert stock.__module__ == "zipimport"
+
+
+# The keyword options (parameters with a default) of the ER path's entry
+# points.  Each stage runs the configuration its module fixes, so a new
+# option here is a new configuration to carry and test: add it on purpose.
+ER_OPTIONS = {
+    "pipeline.EntityResolutionPipeline": {
+        "threshold", "max_block", "run_id", "keep_features",
+    },
+    "operators.blocking.blocking_keys": set(),
+    "operators.blocking.materialized_blocking_keys": set(),
+    "operators.blocking.candidate_pairs": {"max_block", "keys"},
+    "operators.blocking.block_stats": {"max_block"},
+    "operators.clustering.connected_components": {"driver_max_edges"},
+    "operators.clustering.refined_components": {
+        "max_component", "ladder", "driver_max_edges", "louvain_max_edges",
+        "evidence_min_size",
+    },
+    "operators.clustering.attach_subsumed": set(),
+    "operators.clustering.subsumption_aware_components": {
+        "max_component", "ladder", "driver_max_edges", "louvain_max_edges",
+        "evidence_min_size",
+    },
+    "operators.scoring.score_pairs": {
+        "threshold", "name_x", "name_y", "keep_features",
+    },
+    "streaming.stream_resolve.EntityTokenIndex": set(),
+    "streaming.stream_resolve.assign_stream_batch": {"threshold"},
+}
+
+
+def test_er_entry_points_keyword_options():
+    import importlib
+    import inspect
+
+    got = {}
+    for path in ER_OPTIONS:
+        mod, name = path.rsplit(".", 1)
+        obj = getattr(importlib.import_module(f"{PKG}.{mod}"), name)
+        params = inspect.signature(obj).parameters.values()
+        assert not [p for p in params if p.kind is p.VAR_KEYWORD], path
+        got[path] = {p.name for p in params if p.default is not p.empty}
+    assert got == ER_OPTIONS
+    assert sum(len(v) for v in got.values()) == 23

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from name_matching_spark.datagen import write_fixture
 from name_matching_spark.model.train import load_artifacts
 from name_matching_spark.streaming.stream_resolve import (
+    EntityTokenIndex,
     assign_stream_batch,
     stream_canonical_names,
 )
@@ -41,15 +42,11 @@ def test_stream_canonicalize_file_source(spark, tmp_path):
 
 def test_assign_stream_batch(spark):
     model, tfidf = load_artifacts()
-    entities = spark.createDataFrame(
-        [("JONATHAN WICK", "JONATHAN WICK"), ("HOTEL CONTINENTAL", "HOTEL CONTINENTAL")],
-        ["entity_key", "resolved_name"],
-    )
     new = spark.createDataFrame(
         [("c1", "JOHN WICK"), ("c2", "ZEBRA QUARRY")], ["conv_id", "name"]
     )
     out = {r["conv_id"]: r for r in assign_stream_batch(
-        new, entities, model.to_json(), tfidf.to_json()
+        new, EntityTokenIndex(_wick_entities(spark)), model.to_json(), tfidf.to_json()
     ).collect()}
     assert out["c1"]["status"] == "assigned"
     assert out["c1"]["entity_key"] == "JONATHAN WICK"
@@ -61,8 +58,6 @@ def test_entity_token_index_built_once(spark):
     micro-batch reuses the materialized index (no per-trigger recompute)."""
     from pyspark.sql.types import StringType
 
-    from name_matching_spark.streaming.stream_resolve import EntityTokenIndex
-
     acc = spark.sparkContext.accumulator(0)
 
     def bump(s):
@@ -70,10 +65,9 @@ def test_entity_token_index_built_once(spark):
         return s
 
     bump_udf = F.udf(bump, StringType()).asNondeterministic()
-    entities = spark.createDataFrame(
-        [("JONATHAN WICK", "JONATHAN WICK"), ("HOTEL CONTINENTAL", "HOTEL CONTINENTAL")],
-        ["entity_key", "resolved_name"],
-    ).withColumn("resolved_name", bump_udf("resolved_name"))
+    entities = _wick_entities(spark).withColumn(
+        "resolved_name", bump_udf("resolved_name")
+    )
     idx = EntityTokenIndex(entities)
     built = acc.value
     assert built > 0
@@ -97,9 +91,13 @@ def test_entity_token_index_built_once(spark):
 
 
 def _wick_entities(spark):
+    """Two single-member entities, in the entity table's columns."""
     return spark.createDataFrame(
-        [("JONATHAN WICK", "JONATHAN WICK"), ("HOTEL CONTINENTAL", "HOTEL CONTINENTAL")],
-        ["entity_key", "resolved_name"],
+        [
+            ("JONATHAN WICK", "JONATHAN WICK", "JONATHAN WICK"),
+            ("HOTEL CONTINENTAL", "HOTEL CONTINENTAL", "HOTEL CONTINENTAL"),
+        ],
+        ["entity_key", "resolved_name", "name"],
     )
 
 
@@ -113,7 +111,8 @@ def test_assign_stream_batch_dedups_across_partitions(spark):
     )
     parts = new.rdd.glom().collect()
     assert all(set(map(tuple, p)) == set(pairs) for p in parts)  # every copy split
-    out = assign_stream_batch(new, _wick_entities(spark), model.to_json(), tfidf.to_json())
+    idx = EntityTokenIndex(_wick_entities(spark))
+    out = assign_stream_batch(new, idx, model.to_json(), tfidf.to_json())
     assert sorted(tuple(r) for r in out.collect()) == [
         ("c1", "JOHN WICK", "JONATHAN WICK", "assigned"),
         ("c2", "ZEBRA QUARRY", None, "pending"),
@@ -125,8 +124,6 @@ def test_assign_stream_batch_is_one_spark_job(spark):
     """A micro-batch is one Spark job: the whole assignment runs in one
     pass over the batch (a plan with a join or shuffle runs more)."""
     import pandas as pd
-
-    from name_matching_spark.streaming.stream_resolve import EntityTokenIndex
 
     model, tfidf = load_artifacts()
     idx = EntityTokenIndex(_wick_entities(spark))
@@ -176,7 +173,6 @@ def test_stream_plan_round_trip_budget(spark):
     every Column tree anew per call cost 637 round trips per plan, 385 of
     them in ``score_pairs``."""
     from name_matching_spark.operators.scoring import score_pairs
-    from name_matching_spark.streaming.stream_resolve import EntityTokenIndex
 
     model, tfidf = load_artifacts()
     mj, tj = model.to_json(), tfidf.to_json()
@@ -205,7 +201,6 @@ def test_assign_stream_batch_scores_one_candidate_frame_per_batch(spark, monkeyp
     exactly once, on a frame with one row per exact hit, per candidate
     and per name without a candidate."""
     import name_matching_spark.streaming.stream_resolve as stream_mod
-    from name_matching_spark.streaming.stream_resolve import EntityTokenIndex
 
     model, tfidf = load_artifacts()
     entities = spark.createDataFrame(
@@ -302,7 +297,6 @@ def test_assign_stream_batch_matches_retired_join_plan(spark):
     and an exact probability tie between two keys with the same canonical
     name (the smaller key wins on both)."""
     from name_matching_spark.datagen import generate_entities
-    from name_matching_spark.streaming.stream_resolve import EntityTokenIndex
 
     model, tfidf = load_artifacts()
     ents = generate_entities(60, seed=3)
@@ -352,10 +346,7 @@ def test_stream_vs_batch_agreement_10k(spark, tmp_path):
     chunk, and every conversation's streamed assignment must agree with
     the batch assignment for >= 0.99 of conversations (exact-member fast
     path + scored fallback, streaming canonicalization included)."""
-    import tempfile
-
     from name_matching_spark.pipeline import EntityResolutionPipeline
-    from name_matching_spark.streaming.stream_resolve import EntityTokenIndex
 
     REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     fixture = os.path.join(REPO, "data", "bench_transcripts_e10000")
@@ -367,7 +358,7 @@ def test_stream_vs_batch_agreement_10k(spark, tmp_path):
         fx = str(tmp_path / "fx10k")
         write_fixture(fx, n_entities=1000, convs_per_entity=3, seed=77)
         transcripts = spark.read.parquet(os.path.join(fx, "transcripts.parquet"))
-    wh = tempfile.mkdtemp(prefix="nms_stream10k_")
+    wh = str(tmp_path / "wh10k")
     stages = EntityResolutionPipeline(spark, wh).run(transcripts)
     batch_keys = {
         r["conv_id"]: r["name_entity_key"]
