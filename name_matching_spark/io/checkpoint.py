@@ -90,19 +90,18 @@ class CheckpointManager:
         name: str,
         fn,
         inputs: list[str] | None = None,
-        force: bool = False,
         params: dict | None = None,
     ) -> DataFrame:
         """Run ``fn() -> DataFrame`` checkpointed under ``name``.
 
-        If a complete manifest exists (and not ``force``), the stored table
-        is returned without recomputation — but only when the recorded
-        ``params`` (stage configuration + input fingerprint) match the
-        current ones: rerunning into an existing warehouse with a different
-        threshold or a different input table must recompute, not silently
-        serve results produced under the old configuration.
+        If a complete manifest exists, the stored table is returned
+        without recomputation — but only when the recorded ``params``
+        (stage configuration + input fingerprint) match the current ones:
+        rerunning into an existing warehouse with a different threshold or
+        a different input table must recompute, not silently serve results
+        produced under the old configuration.
         """
-        if self.is_complete(name) and not force:
+        if self.is_complete(name):
             stored = self._stored_params(name)
             current = json.loads(json.dumps(params)) if params is not None else None
             if params is None or stored == current:

@@ -27,8 +27,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Modularity resolution: networkx ``louvain_communities``' default, which
+# the reference runs with.
+RESOLUTION = 1.0
 
-def _louvain_one_level(adj: dict, m2: float, resolution: float) -> dict:
+
+def _louvain_one_level(adj: dict, m2: float) -> dict:
     """One local-move phase: returns {node: community} at a local optimum.
     ``adj``: {node: {nbr: weight}}; ``m2`` = 2 * total edge weight."""
     nodes = sorted(adj)
@@ -51,9 +55,9 @@ def _louvain_one_level(adj: dict, m2: float, resolution: float) -> dict:
             # detach u
             sigma_tot[cu] -= ku
             best_c, best_gain = cu, 0.0
-            base = w_to.get(cu, 0.0) - resolution * sigma_tot[cu] * ku / m2
+            base = w_to.get(cu, 0.0) - RESOLUTION * sigma_tot[cu] * ku / m2
             for c in sorted(w_to):
-                gain = (w_to[c] - resolution * sigma_tot[c] * ku / m2) - base
+                gain = (w_to[c] - RESOLUTION * sigma_tot[c] * ku / m2) - base
                 if gain > best_gain + 1e-12 or (
                     abs(gain - best_gain) <= 1e-12 and best_gain > 0 and c < best_c
                 ):
@@ -79,7 +83,7 @@ def _aggregate(adj: dict, comm: dict) -> dict:
 
 
 def louvain_driver(
-    edge_list, resolution: float = 1.0, max_levels: int = 20, m2: float | None = None
+    edge_list, max_levels: int = 20, m2: float | None = None
 ) -> dict:
     """{node: community-min-node-label} for an undirected edge list of
     (a, b) pairs (weight 1 each; parallel edges accumulate).
@@ -105,7 +109,7 @@ def louvain_driver(
     mapping = {u: u for u in adj}
     level_adj = adj
     for _ in range(max_levels):
-        comm = _louvain_one_level(level_adj, m2, resolution)
+        comm = _louvain_one_level(level_adj, m2)
         if all(comm[u] == u for u in comm):
             break
         n_before = len(set(mapping.values()))
@@ -122,16 +126,10 @@ def louvain_driver(
     return {u: by_comm[c] for u, c in mapping.items()}
 
 
-def louvain_communities(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    resolution: float = 1.0,
-    max_edges: int = 1_000_000,
-) -> DataFrame:
-    """(name, component) via Louvain; same output contract as
-    connected_components so the two are drop-in interchangeable in
-    entity_table.
+def louvain_communities(edges: DataFrame, max_edges: int = 1_000_000) -> DataFrame:
+    """(name, component) via Louvain over the ``src``/``dst`` edges of
+    ``edges``; same output contract as connected_components so the two
+    are drop-in interchangeable in entity_table.
 
     Size-adaptive: at or under ``max_edges`` the whole (deduplicated)
     graph runs on the driver.  Above it, the graph is first partitioned by
@@ -144,14 +142,13 @@ def louvain_communities(
     honest scale unit: a modularity cluster is at most a component."""
     from pyspark.sql.types import StructField, StructType
 
-    canon = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("lo"),
-            F.greatest(F.col(src), F.col(dst)).alias("hi"),
-        )
-        .where(F.col("lo") != F.col("hi"))
-        .dropDuplicates(["lo", "hi"])
+    from name_matching_spark.operators.clustering import (
+        _canon_edges,
+        _collect_bounded,
+        labels_frame,
     )
+
+    canon = _canon_edges(edges)
     spark = edges.sparkSession
     node_t = canon.schema["lo"].dataType
     out_schema = StructType(
@@ -160,14 +157,9 @@ def louvain_communities(
     # Driver fast path, single job: bounded Arrow collect (no
     # localCheckpoint / count / row-iterator jobs when the graph fits —
     # same pattern as clustering._collect_bounded).
-    from name_matching_spark.operators.clustering import (
-        _collect_bounded,
-        labels_frame,
-    )
-
     first = _collect_bounded(canon, max_edges)
     if first is not None:
-        labels = louvain_driver(iter(first), resolution=resolution)
+        labels = louvain_driver(iter(first))
         return labels_frame(spark, sorted(labels.items()), node_t)
     e = canon.localCheckpoint()
     n = e.count()
@@ -191,9 +183,7 @@ def louvain_communities(
                 f"per-component gate {max_edges}; raise max_edges or use "
                 f"connected_components"
             )
-        labels = louvain_driver(
-            zip(pdf["lo"], pdf["hi"]), resolution=resolution, m2=m2
-        )
+        labels = louvain_driver(zip(pdf["lo"], pdf["hi"]), m2=m2)
         items = sorted(labels.items())
         return pd.DataFrame(
             {"name": [u for u, _ in items], "component": [c for _, c in items]}

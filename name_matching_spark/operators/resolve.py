@@ -26,7 +26,9 @@ def entity_table(components: DataFrame, all_names: DataFrame) -> DataFrame:
     name in ``all_names`` (column ``name``), including singletons.
 
     ``components`` is the (name, component) output of
-    :func:`~name_matching_spark.operators.clustering.connected_components`.
+    :func:`~name_matching_spark.operators.clustering.subsumption_aware_components`
+    (one row per name).  ``all_names`` must hold each name once: it is not
+    deduplicated again, and a repeated name repeats its entity row.
     """
     canon = components.groupBy("component").agg(
         F.max_by("name", F.struct(F.length("name"), F.col("name"))).alias(
@@ -40,7 +42,6 @@ def entity_table(components: DataFrame, all_names: DataFrame) -> DataFrame:
     )
     singles = (
         all_names.select("name")
-        .distinct()
         .join(components, "name", "left_anti")
         .select(
             "name",

@@ -5,12 +5,17 @@ Re-architects the reference's 10-stage pandas flow
 Spark stages:
 
   transcripts --canonicalize--> conversations (turn collapse + mention)
-              --names---------> distinct normalized names
-              --block---------> candidate pairs (token/phonetic/LSH keys)
-              --score---------> features + probability + decision @0.85
-              --cluster-------> subsumption-aware refined components of
-                                the match graph (operators/clustering.py)
-              --resolve-------> entity table + resolved conversations
+              --names---------> names (distinct normalized names)
+              --block---------> candidate_pairs (token/phonetic/LSH keys)
+                                and block_metrics
+              --score---------> scored_pairs (probability + decision @0.85)
+              --cluster+assign> entities: subsumption-aware refined
+                                components of the match graph, plus
+                                unmatched names as singletons
+              --resolve-------> resolved_conversations
+
+``run`` also returns ``components``, a (name, component) view of the
+matched names' entities that is never written.
 
 Every stage lands in the warehouse with a manifest (rows, per-partition
 lineage, timing); a rerun resumes from the last complete stage.  Shuffle
@@ -354,20 +359,13 @@ class EntityResolutionPipeline:
             "evidence_rung": f"cos{EVIDENCE_MIN_COSINE}|align{EVIDENCE_MAX_ALIGN}",
             "evidence_min_size": EVIDENCE_MIN_SIZE,
         }
-        components = self._stage(
-            "components",
-            cluster_fn,
-            inputs=["scored_pairs"],
-            params=cluster_params,
-        )
-        # Downstream-of-clustering stages carry the clustering params
-        # too: otherwise a resume after a clustering change recomputes
-        # components but silently serves stale entities/resolved
-        # tables built from the old components.
+        # Clustering and entity assignment are one stage; it and the
+        # stage after it carry the clustering params, so a clustering
+        # change recomputes both instead of serving stale entities.
         entities = self._stage(
             "entities",
-            lambda: entity_table(components, names),
-            inputs=["components", "names"],
+            lambda: entity_table(cluster_fn(), names),
+            inputs=["scored_pairs", "names"],
             params=cluster_params,
         )
         resolved = self._stage(
@@ -381,7 +379,13 @@ class EntityResolutionPipeline:
             "names": names,
             "candidate_pairs": pairs,
             "scored_pairs": scored,
-            "components": components,
+            # the clusterer labels exactly the nodes of the match edges,
+            # and a clustered name's entity_key is its label
+            "components": entities.join(
+                matches.select(F.explode(F.array("name_x", "name_y")).alias("name")),
+                "name",
+                "left_semi",
+            ).select("name", F.col("entity_key").alias("component")),
             "entities": entities,
             "resolved_conversations": resolved,
         }

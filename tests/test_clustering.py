@@ -572,6 +572,10 @@ def test_subsumption_aware_twins_agree_at_shipped_settings(spark, tmp_path):
     fast = labels(subsumption_aware_components(m))
     dist = labels(subsumption_aware_components(m, driver_max_edges=0))
     assert dist == fast
+    # both paths label exactly the nodes of the edges: the pipeline's
+    # components view (entities of the matched names) relies on it
+    nodes = {n for r in m.select("src", "dst").collect() for n in r}
+    assert set(fast) == set(dist) == nodes
     # refinement and attachment changed something: not plain CC
     assert fast != labels(connected_components(m.select("src", "dst")))
 

@@ -114,7 +114,7 @@ def test_checkpoint_resume(spark, tmp_path):
     # present), results identical.
     p2 = EntityResolutionPipeline(spark, wh)
     for stage in ["conversations", "names", "candidate_pairs", "scored_pairs",
-                  "components", "entities", "resolved_conversations"]:
+                  "entities", "resolved_conversations"]:
         assert p2.ckpt.is_complete(stage), stage
     second = p2.run(transcripts)
     ents2 = sorted(
@@ -128,12 +128,50 @@ def test_checkpoint_resume(spark, tmp_path):
         man = json.load(f)
     assert man["rows"] == len(ents2)
     assert man["partitions"] and all("rows" in p for p in man["partitions"])
-    # the components manifest records the shipped refinement configuration
-    with open(p2.ckpt.manifest_path("components")) as f:
-        params = json.load(f)["params"]
+    # the entities manifest records the shipped refinement configuration
+    params = man["params"]
     assert params["max_component"] == 4
     assert params["ladder"] == [0.92, 0.96, 0.99, 0.995, 0.999, 0.9999, 0.99999]
     assert params["evidence_min_size"] == 2
+
+
+@pytest.mark.slow
+def test_clustering_writes_no_stage_of_its_own(spark, tmp_path):
+    """The entities stage clusters the matches itself: the warehouse holds
+    seven stage tables and no ``components`` table, and the returned
+    ``components`` view has the clusterer's rows over the scored
+    matches."""
+    from name_matching_spark.io.checkpoint import MANIFEST
+    from name_matching_spark.operators.clustering import (
+        subsumption_aware_components,
+    )
+
+    fixture = str(tmp_path / "fx_fused")
+    write_fixture(fixture, n_entities=20, convs_per_entity=3, seed=99)
+    wh = str(tmp_path / "wh_fused")
+    stages = EntityResolutionPipeline(spark, wh).run(
+        spark.read.parquet(os.path.join(fixture, "transcripts.parquet"))
+    )
+    tables = sorted(d for d in os.listdir(wh) if os.path.isdir(os.path.join(wh, d)))
+    assert tables == sorted([
+        "conversations", "names", "candidate_pairs", "block_metrics",
+        "scored_pairs", "entities", "resolved_conversations",
+    ])
+    assert all(os.path.exists(os.path.join(wh, t, MANIFEST)) for t in tables)
+
+    m = stages["scored_pairs"].where(F.col("prediction") == 1).select(
+        F.col("name_x").alias("src"),
+        F.col("name_y").alias("dst"),
+        "probability",
+        "cosine_sim",
+        "align_edit",
+        "token_weakest_link",
+        "margin",
+    )
+    want = sorted(tuple(r) for r in subsumption_aware_components(m).collect())
+    got = sorted(tuple(r) for r in stages["components"].collect())
+    assert stages["components"].columns == ["name", "component"]
+    assert want and got == want
 
 
 @pytest.mark.slow
@@ -215,7 +253,7 @@ def test_checkpoint_invalidates_on_param_change(spark, tmp_path):
     # silent staleness), while the input-only stages still resume.
     p3 = EntityResolutionPipeline(spark, wh, threshold=0.99)
     p3.run(transcripts)
-    for stage in ["scored_pairs", "components", "entities", "resolved_conversations"]:
+    for stage in ["scored_pairs", "entities", "resolved_conversations"]:
         man3 = json.load(open(p3.ckpt.manifest_path(stage)))
         assert man3["run_id"] == p3.ckpt.run_id, f"{stage} served stale results"
         assert man3["params"]["threshold"] == 0.99
@@ -286,7 +324,7 @@ def test_pipeline_tfidf_fit_failure_stops_the_run(spark, tmp_path, monkeypatch):
         pipe.run(transcripts)
     assert pipe.ckpt.is_complete("names")
     for stage in ["candidate_pairs", "block_metrics", "scored_pairs",
-                  "components", "entities", "resolved_conversations"]:
+                  "entities", "resolved_conversations"]:
         assert not pipe.ckpt.is_complete(stage), stage
 
 
