@@ -510,9 +510,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def m6b_louvain(spark, sf):
         # Reference-parity clustering semantics (entity_resolution.py:268
         # uses networkx louvain_communities); from-scratch deterministic
-        # Louvain, driver-side + size-gated.  No SQL oracle (modularity
-        # optimization is not SQL-expressible); golden-cluster parity and
-        # CC-agreement are pytest-gated (tests/test_louvain.py).
+        # Louvain, on the driver under the clustering edge ceiling.  No
+        # SQL oracle (modularity optimization is not SQL-expressible);
+        # golden-cluster parity and CC-agreement are pytest-gated
+        # (tests/test_louvain.py).
         from name_matching_spark.operators.louvain import louvain_communities
 
         li = _t(spark, sf, "lineitem").where(F.col("l_orderkey") < 200)

@@ -14,22 +14,22 @@ Mech. 2008), implemented from scratch, made DETERMINISTIC by visiting
 nodes in sorted order and breaking gain ties toward the smaller community
 label.
 
-Scale position: Louvain is inherently iterative, but it composes at scale
-per connected component.  At or under the size gate the whole graph runs
-on the driver; above it, distributed CC partitions the graph and Louvain
-runs inside each component in parallel (``applyInPandas``) with the
-global 2m normalizer — exactly equivalent to global Louvain (communities
-never span components).  The gate then bounds the largest single
-component, with a loud raise if one exceeds it."""
+Scale position: like the reference, Louvain runs in memory in one
+process.  :func:`louvain_communities` collects the graph to the driver
+under the clustering ceiling (``clustering.MAX_EDGES``) and raises above
+it."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # Modularity resolution: networkx ``louvain_communities``' default, which
 # the reference runs with.
 RESOLUTION = 1.0
+
+# The most aggregation levels louvain_driver runs; it stops sooner once a
+# level merges no community.
+MAX_LEVELS = 20
 
 
 def _louvain_one_level(adj: dict, m2: float) -> dict:
@@ -82,17 +82,9 @@ def _aggregate(adj: dict, comm: dict) -> dict:
     return out
 
 
-def louvain_driver(
-    edge_list, max_levels: int = 20, m2: float | None = None
-) -> dict:
+def louvain_driver(edge_list) -> dict:
     """{node: community-min-node-label} for an undirected edge list of
-    (a, b) pairs (weight 1 each; parallel edges accumulate).
-
-    ``m2`` overrides the 2x-total-weight normalizer: the per-component
-    distributed path passes the WHOLE graph's 2m so each component's local
-    moves compute exactly the same modularity gains the global algorithm
-    would (communities never span components — every other term in the
-    gain formula is component-local)."""
+    (a, b) pairs (weight 1 each; parallel edges accumulate)."""
     adj: dict = {}
     for a, b in edge_list:
         if a == b:
@@ -103,12 +95,11 @@ def louvain_driver(
         rb[a] = rb.get(a, 0.0) + 1.0
     if not adj:
         return {}
-    if m2 is None:
-        m2 = sum(sum(nbrs.values()) for nbrs in adj.values())  # = 2m
+    m2 = sum(sum(nbrs.values()) for nbrs in adj.values())  # = 2m
     # node -> community, refined level by level
     mapping = {u: u for u in adj}
     level_adj = adj
-    for _ in range(max_levels):
+    for _ in range(MAX_LEVELS):
         comm = _louvain_one_level(level_adj, m2)
         if all(comm[u] == u for u in comm):
             break
@@ -126,67 +117,20 @@ def louvain_driver(
     return {u: by_comm[c] for u, c in mapping.items()}
 
 
-def louvain_communities(edges: DataFrame, max_edges: int = 1_000_000) -> DataFrame:
+def louvain_communities(edges: DataFrame) -> DataFrame:
     """(name, component) via Louvain over the ``src``/``dst`` edges of
     ``edges``; same output contract as connected_components so the two
-    are drop-in interchangeable in entity_table.
-
-    Size-adaptive: at or under ``max_edges`` the whole (deduplicated)
-    graph runs on the driver.  Above it, the graph is first partitioned by
-    distributed connected components, then Louvain runs INSIDE each
-    component in parallel (``applyInPandas``) with the global 2m passed
-    down — mathematically identical to global Louvain, because communities
-    never span components and the global normalizer is the only non-local
-    term in the gain formula.  ``max_edges`` then bounds the largest
-    single COMPONENT (a loud raise, never a truncation), which is the
-    honest scale unit: a modularity cluster is at most a component."""
-    from pyspark.sql.types import StructField, StructType
-
+    are drop-in interchangeable in entity_table.  The deduplicated
+    undirected graph is collected to the driver; above
+    ``clustering.MAX_EDGES`` edges it raises ``ValueError``."""
     from name_matching_spark.operators.clustering import (
         _canon_edges,
-        _collect_bounded,
+        _collect_edges,
         labels_frame,
     )
 
     canon = _canon_edges(edges)
-    spark = edges.sparkSession
-    node_t = canon.schema["lo"].dataType
-    out_schema = StructType(
-        [StructField("name", node_t), StructField("component", node_t)]
+    labels = louvain_driver(_collect_edges(canon))
+    return labels_frame(
+        edges.sparkSession, sorted(labels.items()), canon.schema["lo"].dataType
     )
-    # Driver fast path, single job: bounded Arrow collect (no
-    # localCheckpoint / count / row-iterator jobs when the graph fits —
-    # same pattern as clustering._collect_bounded).
-    first = _collect_bounded(canon, max_edges)
-    if first is not None:
-        labels = louvain_driver(iter(first))
-        return labels_frame(spark, sorted(labels.items()), node_t)
-    e = canon.localCheckpoint()
-    n = e.count()
-
-    # Distributed path: CC partitions the graph, Louvain runs per component.
-    from name_matching_spark.operators.clustering import connected_components
-
-    import pandas as pd
-
-    comp = connected_components(e.toDF("src", "dst"))
-    m2 = 2.0 * n  # every deduplicated edge has weight 1
-    ec = e.join(
-        comp.select(F.col("name").alias("lo"), F.col("component").alias("cid")),
-        "lo",
-    )
-
-    def _run(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_edges:
-            raise ValueError(
-                f"louvain component with {len(pdf)} edges exceeds the "
-                f"per-component gate {max_edges}; raise max_edges or use "
-                f"connected_components"
-            )
-        labels = louvain_driver(zip(pdf["lo"], pdf["hi"]), m2=m2)
-        items = sorted(labels.items())
-        return pd.DataFrame(
-            {"name": [u for u, _ in items], "component": [c for _, c in items]}
-        )
-
-    return ec.groupBy("cid").applyInPandas(_run, schema=out_schema)

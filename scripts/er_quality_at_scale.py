@@ -13,14 +13,22 @@ the truth-x-resolved contingency counts (no pair materialization):
   recall    = TP / sum over truth entities pairs(n_truth)
   precision = TP / sum over resolved keys pairs(n_resolved)
 
+Each line also carries the clustering's cost and size: the match-edge
+count clustering collected (``clustering.MAX_EDGES`` bounds it), the
+``entities`` stage wall time, the driver Python process's peak RSS so
+far, and an md5 over the sorted entity rows, so two source trees
+cluster identically exactly when their digests are equal.
+
 Usage: python scripts/er_quality_at_scale.py [n_entities ...]
 (defaults: 10000 100000)
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import resource
 import shutil
 import sys
 import tempfile
@@ -103,6 +111,16 @@ def main() -> None:
                 os.path.join(fixture, "truth.parquet"),
             )
             m["n_entities_in"] = n
+            m["match_edges"] = (
+                stages["scored_pairs"].where(F.col("prediction") == 1).count()
+            )
+            m["entities_s"] = pipe.timings["entities"]
+            # ru_maxrss is in KiB on Linux
+            m["driver_peak_rss_mb"] = round(
+                resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
+            )
+            rows = sorted(repr(tuple(r)) for r in stages["entities"].collect())
+            m["entities_md5"] = hashlib.md5("\n".join(rows).encode()).hexdigest()
             print(json.dumps(m), flush=True)
         finally:
             shutil.rmtree(wh, ignore_errors=True)

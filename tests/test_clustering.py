@@ -5,7 +5,9 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from name_matching_spark.operators import clustering
 from name_matching_spark.operators.clustering import connected_components
+from name_matching_spark.operators.louvain import louvain_communities
 from name_matching_spark.operators.resolve import entity_table, resolve_records
 
 
@@ -103,14 +105,13 @@ def test_resolve_records_broadcast_join(spark):
     assert out["r2"]["nm_entity_key"] == "MISSING"
 
 
-def test_cc_distributed_star_matches_driver_union_find(spark):
-    """The size-gated driver fast path and the distributed star alternation
-    must label identically (driver_max_edges=0 forces the star path)."""
+def test_cc_shuffled_chains_and_clique(spark):
+    """Five 12-node chains, a 6-clique and an isolated pair, in shuffled
+    row order: each component takes its minimum member as label."""
     import random
 
     rng = random.Random(17)
     edges = []
-    # several chains + a clique + isolated pair
     for c in range(5):
         base = [f"c{c}n{i:02d}" for i in range(12)]
         edges += list(zip(base, base[1:]))
@@ -118,60 +119,57 @@ def test_cc_distributed_star_matches_driver_union_find(spark):
     edges += [(a, b) for a in clique for b in clique if a < b]
     edges += [("solo_a", "solo_b")]
     rng.shuffle(edges)
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    driver = {
-        r["name"]: r["component"] for r in connected_components(df).collect()
-    }
-    star = {
+    comp = _cc(spark, edges)
+    assert comp["c3n11"] == "c3n00"
+    assert comp["k5"] == "k0"
+    assert comp["solo_b"] == "solo_a"
+    assert len(set(comp.values())) == 7
+
+
+def test_labels_frame_is_one_partition(spark):
+    """A driver label list becomes a one-partition frame: fanning a few
+    hundred rows out to ``defaultParallelism`` partitions only adds tasks
+    to every stage that reads the labels."""
+    from pyspark.sql.types import StringType
+
+    from name_matching_spark.operators.clustering import labels_frame
+
+    labels = [(f"n{i:03d}", "n000") for i in range(600)]
+    frame = labels_frame(spark, labels, StringType())
+    assert frame.rdd.getNumPartitions() == 1
+    assert sorted(tuple(r) for r in frame.collect()) == labels
+
+
+@pytest.mark.parametrize(
+    "fn",
+    [
+        connected_components,
+        louvain_communities,
+        clustering.refined_components,
+        clustering.subsumption_aware_components,
+    ],
+    ids=lambda fn: fn.__name__,
+)
+def test_clustering_raises_above_max_edges(spark, monkeypatch, fn):
+    """Every clusterer collects its edge frame to the driver under one
+    ceiling, ``MAX_EDGES``: a graph above it raises ``ValueError`` naming
+    its edge count and the bound, and a graph exactly at it clusters."""
+    monkeypatch.setattr(clustering, "MAX_EDGES", 6)
+    clique = [(f"n{i}", f"n{j}", 0.99) for i in range(4) for j in range(i + 1, 4)]
+    above = _matches(spark, clique + [("n3", "n4", 0.99)])
+    with pytest.raises(ValueError, match=r"7 edges.*MAX_EDGES = 6"):
+        fn(above)
+    at_ceiling = {
         r["name"]: r["component"]
-        for r in connected_components(df, driver_max_edges=0).collect()
+        for r in fn(_matches(spark, clique)).collect()
     }
-    assert driver == star
-    assert driver["c3n11"] == "c3n00"
-    assert star["k5"] == "k0"
+    assert at_ceiling == {f"n{i}": "n0" for i in range(4)}
 
 
-def test_cc_star_rounds_then_driver_handoff(spark, monkeypatch):
-    """With ``0 < driver_max_edges < edges`` the star alternation runs at
-    least one round, then hands the contracted graph to the driver's
-    union-find; the labels equal the driver-only run."""
-    import name_matching_spark.operators.clustering as clustering_mod
-
-    nodes = [f"n{i:02d}" for i in range(40)]
-    # a chain with chords: 114 edges, which contract toward a 39-edge star
-    edges = [
-        (nodes[i], nodes[j]) for i in range(40) for j in range(i + 1, min(i + 4, 40))
-    ]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    driver = {r["name"]: r["component"] for r in connected_components(df).collect()}
-    calls = {"rounds": 0, "union_find": 0}
-    small_star = clustering_mod._small_star
-    union_find = clustering_mod._driver_union_find
-
-    def counting_small_star(e):
-        calls["rounds"] += 1
-        return small_star(e)
-
-    def counting_union_find(rows):
-        calls["union_find"] += 1
-        return union_find(rows)
-
-    monkeypatch.setattr(clustering_mod, "_small_star", counting_small_star)
-    monkeypatch.setattr(clustering_mod, "_driver_union_find", counting_union_find)
-    handoff = {
-        r["name"]: r["component"]
-        for r in connected_components(df, driver_max_edges=60).collect()
-    }
-    assert calls["rounds"] >= 1 and calls["union_find"] == 1, calls
-    assert handoff == driver
-    assert set(driver.values()) == {"n00"}
-
-
-@pytest.mark.parametrize("driver_max_edges", [1_000_000, 0], ids=["driver", "distributed"])
 @pytest.mark.parametrize("fn", ["refined_components", "subsumption_aware_components"])
-def test_clustering_rejects_descending_ladder(spark, fn, driver_max_edges):
+def test_clustering_rejects_descending_ladder(spark, fn):
     """A descending ladder would re-merge what an earlier rung split; both
-    operators refuse it with ``ValueError`` on either path."""
+    operators refuse it with ``ValueError``."""
     import name_matching_spark.operators.clustering as clustering_mod
 
     m = spark.createDataFrame(
@@ -183,9 +181,7 @@ def test_clustering_rejects_descending_ladder(spark, fn, driver_max_edges):
         "align_edit double, token_weakest_link double, margin double",
     )
     with pytest.raises(ValueError, match="ascend"):
-        getattr(clustering_mod, fn)(
-            m, ladder=(0.99, 0.90), driver_max_edges=driver_max_edges
-        ).collect()
+        getattr(clustering_mod, fn)(m, ladder=(0.99, 0.90)).collect()
 
 
 def test_refined_components_splits_weak_bridges(spark):
@@ -229,65 +225,10 @@ def test_refined_components_splits_weak_bridges(spark):
     assert all_cc == plain
 
 
-def test_refined_components_driver_matches_distributed(spark):
-    """The size-gated driver fast path must produce byte-identical labels
-    to the distributed refinement on the same randomized graph."""
-    import random
-
-    from name_matching_spark.operators.clustering import refined_components
-
-    rng = random.Random(17)
-    nodes = [f"N{i:03d}" for i in range(120)]
-    rows = []
-    # dense strong cliques with weak bridges between them, plus noise
-    for c in range(6):
-        block = nodes[c * 20 : (c + 1) * 20]
-        for i in range(len(block)):
-            for j in range(i + 1, min(i + 4, len(block))):
-                rows.append((block[i], block[j], 0.97 + 0.03 * rng.random()))
-        if c:
-            rows.append((nodes[c * 20 - 1], nodes[c * 20], 0.86))
-    for _ in range(60):
-        a, b = rng.sample(nodes, 2)
-        rows.append((min(a, b), max(a, b), 0.85 + 0.14 * rng.random()))
-    m = _matches(spark, rows)
-    kw = dict(max_component=25, ladder=(0.90, 0.95))
-    fast = {
-        r["name"]: r["component"] for r in refined_components(m, **kw).collect()
-    }
-    dist = {
-        r["name"]: r["component"]
-        for r in refined_components(m, driver_max_edges=0, **kw).collect()
-    }
-    assert fast == dist
-
-
-def test_refined_components_oversized_web_kept_not_raised(spark):
-    """A residual component whose internal edge count exceeds the Louvain
-    gate keeps its ladder labels — the guard must never raise from inside
-    louvain_communities' per-component limit — identically on the driver
-    and distributed paths."""
-    from name_matching_spark.operators.clustering import refined_components
-
-    clique = [f"W{i:02d}" for i in range(30)]
-    rows = [(a, b, 0.99) for i, a in enumerate(clique) for b in clique[i + 1 :]]
-    m = _matches(spark, rows)
-    kw = dict(max_component=10, ladder=(0.95,), louvain_max_edges=100)
-    fast = {r["name"]: r["component"] for r in refined_components(m, **kw).collect()}
-    dist = {
-        r["name"]: r["component"]
-        for r in refined_components(m, driver_max_edges=0, **kw).collect()
-    }
-    # 435 internal edges > gate 100: the web is kept intact under "W00"
-    assert fast == dist
-    assert set(fast.values()) == {"W00"} and len(fast) == 30
-
-
-def test_subsumption_aware_driver_matches_distributed(spark):
-    """subsumption_aware_components: the driver fast path (split + refine
-    + attach rounds + residual) must label identically to the distributed
-    composition on a graph mixing glue cliques, subsumption hubs whose
-    best partners differ, chained subsumed forms, and an isolated
+def test_subsumption_aware_hub_chain_and_isolated_family(spark):
+    """subsumption_aware_components (split + refine + attach rounds +
+    residual) on a graph mixing glue cliques, a subsumption hub whose best
+    partners differ, chained subsumed forms, and an isolated
     all-subsumption family."""
     import random
 
@@ -326,11 +267,6 @@ def test_subsumption_aware_driver_matches_distributed(spark):
         r["name"]: r["component"]
         for r in subsumption_aware_components(m, **kw).collect()
     }
-    dist = {
-        r["name"]: r["component"]
-        for r in subsumption_aware_components(m, driver_max_edges=0, **kw).collect()
-    }
-    assert fast == dist
     # hub attached to exactly one clique (its higher-prob partner's)
     assert fast["HUB"] == fast[A[0]]
     assert fast[A[0]] != fast[B[0]]
@@ -345,7 +281,7 @@ def test_refined_components_evidence_min_size(spark):
     applies: below it (None = the ladder cap) small mixed clusters glued
     by evidence-free edges never face any rung.  With the bound at 2, a
     3-name component keeps only evidence-carrying edges; 2-name
-    components stay untouched; None leaves all of them to plain CC.  Driver and distributed paths must agree."""
+    components stay untouched; None leaves all of them to plain CC."""
     from name_matching_spark.operators.clustering import refined_components
 
     rows = [
@@ -372,13 +308,6 @@ def test_refined_components_evidence_min_size(spark):
     assert ems["A"] == ems["B"] == "A"
     assert ems["C"] == "C"  # evidence-free edge pruned -> singleton
     assert ems["X"] == ems["Y"] == "X"  # size 2 never faces the rung
-    dist = {
-        r["name"]: r["component"]
-        for r in refined_components(
-            m, evidence_min_size=2, driver_max_edges=0, **kw
-        ).collect()
-    }
-    assert dist == ems
 
 
 def test_singleton_reattach_unanimous_evidence(spark):
@@ -386,7 +315,7 @@ def test_singleton_reattach_unanimous_evidence(spark):
     through its subsumption edges ONLY when every evidence-bearing edge to
     an anchored partner points at one component: unanimity attaches S,
     ambiguity (U: evidence into two cliques) and evidence-free edges (T)
-    stay singletons.  Driver and distributed paths must agree."""
+    stay singletons."""
     from name_matching_spark.operators.clustering import (
         subsumption_aware_components,
     )
@@ -423,11 +352,6 @@ def test_singleton_reattach_unanimous_evidence(spark):
         r["name"]: r["component"]
         for r in subsumption_aware_components(m, **kw).collect()
     }
-    dist = {
-        r["name"]: r["component"]
-        for r in subsumption_aware_components(m, driver_max_edges=0, **kw).collect()
-    }
-    assert fast == dist
     assert fast["S"] == fast["A0"] == fast["A1"] == fast["A2"]
     assert fast["B0"] == fast["B1"] == fast["B2"] != fast["A0"]
     assert fast["T"] == "T" and fast["U"] == "U"
@@ -473,13 +397,6 @@ def test_singleton_vote_glue_reattach(spark):
         r["name"]: r["component"]
         for r in subsumption_aware_components(m, **kw).collect()
     }
-    dist = {
-        r["name"]: r["component"]
-        for r in subsumption_aware_components(
-            m, driver_max_edges=0, **kw
-        ).collect()
-    }
-    assert fast == dist
     assert fast["A0"] == fast["A1"] == fast["A2"]
     assert fast["B0"] == fast["B1"] == fast["B2"] != fast["A0"]
     assert fast["V"] == "V" and fast["W"] == "W"
@@ -490,7 +407,7 @@ def test_singleton_vote_glue_reattach(spark):
 def test_absent_attach_vote(spark):
     """A comp-absent floater attaches to the component of its single
     best-probability anchored partner, even when another component holds
-    more of its partners.  Driver and distributed paths must agree."""
+    more of its partners."""
     from name_matching_spark.operators.clustering import (
         subsumption_aware_components,
     )
@@ -516,40 +433,35 @@ def test_absent_attach_vote(spark):
         r["name"]: r["component"]
         for r in subsumption_aware_components(m, **kw).collect()
     }
-    dist = {
-        r["name"]: r["component"]
-        for r in subsumption_aware_components(
-            m, driver_max_edges=0, **kw
-        ).collect()
-    }
-    assert fast == dist
     assert fast["F"] == fast["A0"]
     assert fast["G"] == fast["A1"]
 
 
 @pytest.mark.slow
-def test_subsumption_aware_twins_agree_at_shipped_settings(spark, tmp_path):
-    """Both clustering twins, fed the scored matches of a 60-entity
-    fixture at the shipped settings (no configuration arguments, as the
-    pipeline calls them), must give the same labels.
+def test_subsumption_aware_at_shipped_settings(spark, tmp_path):
+    """The clusterer, fed the scored matches of a 60-entity fixture at the
+    shipped settings (no configuration arguments, as the pipeline calls
+    it), labels exactly the nodes of the match edges, refines away from
+    plain connected components, and gives the same labels whatever order
+    the match rows arrive in.
 
     At this scale the graph reaches the evidence rung, the
     subsumption-edge singleton vote and the residual families.  It does
     not reach the glue-edge vote and its min-vote rule, the comp-absent
-    margin tie-break, the margin rungs or Louvain: the hand-built parity
-    tests above cover those."""
+    margin tie-break, the margin rungs or Louvain: the hand-built tests
+    above cover those."""
     import os
 
     from name_matching_spark.datagen import write_fixture
     from name_matching_spark.operators.clustering import (
+        _is_sub_row,
         subsumption_aware_components,
-        subsumption_edge_cond,
     )
     from name_matching_spark.pipeline import EntityResolutionPipeline
 
-    fixture = str(tmp_path / "fx_twins")
+    fixture = str(tmp_path / "fx_shipped")
     write_fixture(fixture, n_entities=60, convs_per_entity=4, seed=123)
-    pipe = EntityResolutionPipeline(spark, str(tmp_path / "wh_twins"))
+    pipe = EntityResolutionPipeline(spark, str(tmp_path / "wh_shipped"))
     stages = pipe.run(
         spark.read.parquet(os.path.join(fixture, "transcripts.parquet"))
     )
@@ -563,21 +475,23 @@ def test_subsumption_aware_twins_agree_at_shipped_settings(spark, tmp_path):
         "margin",
     )
     # the fixture exercises both edge kinds
-    assert m.where(subsumption_edge_cond()).count() > 0
-    assert m.where(~subsumption_edge_cond()).count() > 0
+    kinds = {
+        _is_sub_row(r["token_weakest_link"], r["align_edit"]) for r in m.collect()
+    }
+    assert kinds == {True, False}
 
     def labels(df):
         return {r["name"]: r["component"] for r in df.collect()}
 
-    fast = labels(subsumption_aware_components(m))
-    dist = labels(subsumption_aware_components(m, driver_max_edges=0))
-    assert dist == fast
-    # both paths label exactly the nodes of the edges: the pipeline's
-    # components view (entities of the matched names) relies on it
+    got = labels(subsumption_aware_components(m))
+    # the pipeline's components view (entities of the matched names)
+    # relies on the clusterer labelling exactly the nodes of the edges
     nodes = {n for r in m.select("src", "dst").collect() for n in r}
-    assert set(fast) == set(dist) == nodes
+    assert set(got) == nodes
     # refinement and attachment changed something: not plain CC
-    assert fast != labels(connected_components(m.select("src", "dst")))
+    assert got != labels(connected_components(m.select("src", "dst")))
+    reordered = m.orderBy(F.col("dst").desc(), F.col("src").desc())
+    assert labels(subsumption_aware_components(reordered)) == got
 
 
 @pytest.mark.parametrize(
@@ -591,12 +505,13 @@ def test_subsumption_aware_twins_agree_at_shipped_settings(spark, tmp_path):
         {"prob_col": "p"},
         {"evidence_min_cosine": 0.1},
         {"attach_rounds": 1},
+        {"driver_max_edges": 1_000_000},
+        {"louvain_max_edges": 1_000_000},
     ],
 )
 def test_subsumption_aware_rejects_retired_options(spark, retired):
-    """A retired experiment option fails on the driver path (a graph far
-    under ``driver_max_edges``) just as on the distributed path, instead
-    of being silently ignored."""
+    """A retired experiment or size option fails with ``TypeError``
+    instead of being silently ignored."""
     from name_matching_spark.operators.clustering import (
         subsumption_aware_components,
     )

@@ -85,28 +85,20 @@ def test_louvain_golden_txns_parity(spark):
     assert got == want
 
 
-def test_louvain_distributed_per_component(spark):
-    """Total edges above the gate but every component under it: the
-    distributed path (CC partition -> per-component applyInPandas with the
-    global 2m) must resolve WITHOUT raising and agree exactly with the
-    driver path on the same graph."""
-    edges = []
-    for g in range(4):
-        m = [f"g{g}n{i}" for i in range(4)]
-        edges += [(a, b) for a in m for b in m if a < b]  # 6 edges each
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    dist = louvain_communities(df, max_edges=10)  # 24 total > 10, 6/component
-    drv = louvain_communities(df, max_edges=1_000_000)
-    assert _clusters(dist.collect()) == _clusters(drv.collect())
-
-
-def test_louvain_per_component_gate_raises(spark):
-    """A single component larger than the gate must raise loudly (inside
-    the applyInPandas task), never truncate."""
+def test_louvain_raises_above_max_edges(spark, monkeypatch):
+    """Louvain counts the deduplicated undirected edges against the
+    clustering ceiling: a 15-edge clique, listed in both directions, runs
+    at ``MAX_EDGES`` 15 and raises ``ValueError`` at 14, never truncating
+    the graph."""
     import pytest
 
+    import name_matching_spark.operators.clustering as clustering_mod
+
     m = [f"n{i}" for i in range(6)]
-    edges = [(a, b) for a in m for b in m if a < b]  # one 15-edge clique
+    edges = [(a, b) for a in m for b in m if a != b]  # one clique, 30 rows
     df = spark.createDataFrame(edges, ["src", "dst"])
-    with pytest.raises(Exception, match="per-component gate"):
-        louvain_communities(df, max_edges=10).collect()
+    monkeypatch.setattr(clustering_mod, "MAX_EDGES", 15)
+    assert _clusters(louvain_communities(df).collect()) == [frozenset(m)]
+    monkeypatch.setattr(clustering_mod, "MAX_EDGES", 14)
+    with pytest.raises(ValueError, match=r"15 edges.*MAX_EDGES = 14"):
+        louvain_communities(df)

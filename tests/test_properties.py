@@ -180,3 +180,71 @@ def test_louvain_partition_properties(edge_ints):
     cc_labels = dict(_driver_union_find(edges))
     for n, c in labels.items():
         assert cc_labels[n] == cc_labels[c]  # label is inside n's component
+
+
+# A scored match edge: ``(src, dst, probability, cosine_sim, align_edit,
+# token_weakest_link, margin)``.  The draws reach every refinement rung
+# (probability and margin across the ladder, evidence present or not)
+# and both edge kinds (token_weakest_link 1 with align_edit >= 1 marks a
+# subsumption edge).
+_match_edges = st.lists(
+    st.tuples(
+        st.integers(0, 15),
+        st.integers(0, 15),
+        st.sampled_from([0.86, 0.93, 0.97, 0.995, 0.9999]),
+        st.sampled_from([0.0, 0.4]),
+        st.sampled_from([0.0, 1.0, 4.0]),
+        st.sampled_from([0.5, 1.0]),
+        st.floats(-1.0, 1.0),
+    ).filter(lambda e: e[0] != e[1]),
+    min_size=1,
+    max_size=40,
+)
+MATCH_SCHEMA = (
+    "src string, dst string, probability double, cosine_sim double, "
+    "align_edit double, token_weakest_link double, margin double"
+)
+
+
+@settings(max_examples=15, deadline=None)
+@given(_match_edges, st.randoms(use_true_random=False))
+def test_driver_clustering_properties(spark, draws, rng):
+    """Both refining clusterers, at their shipped settings, on random
+    match graphs: every match node gets a label that names a member of
+    its cluster (for refinement without attachment, the minimum member),
+    no cluster spans two connected components of the match graph, and
+    the labels do not depend on the order the rows are collected in."""
+    import math
+    from collections import defaultdict
+
+    from name_matching_spark.operators.clustering import (
+        _driver_union_find,
+        refined_components,
+        subsumption_aware_components,
+    )
+
+    rows = [
+        (f"n{a:02d}", f"n{b:02d}", p, c, al, twl, math.log(p / (1 - p)) + dm)
+        for a, b, p, c, al, twl, dm in draws
+    ]
+    shuffled = list(rows)
+    rng.shuffle(shuffled)
+    frames = [
+        spark.createDataFrame(rows, MATCH_SCHEMA),
+        spark.createDataFrame(shuffled, MATCH_SCHEMA).repartition(3),
+    ]
+    cc = dict(_driver_union_find([r[:2] for r in rows]))
+    for fn in (refined_components, subsumption_aware_components):
+        labels, reordered = (
+            {r["name"]: r["component"] for r in fn(m).collect()} for m in frames
+        )
+        assert labels == reordered
+        assert set(labels) == set(cc)
+        members = defaultdict(set)
+        for n, lab in labels.items():
+            members[lab].add(n)
+            assert cc[n] == cc[lab]  # never spans two components
+        for lab, ms in members.items():
+            assert lab in ms
+            if fn is refined_components:
+                assert lab == min(ms)

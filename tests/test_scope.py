@@ -179,15 +179,12 @@ ER_OPTIONS = {
     "operators.blocking.materialized_blocking_keys": set(),
     "operators.blocking.candidate_pairs": {"max_block", "keys"},
     "operators.blocking.block_stats": {"max_block"},
-    "operators.clustering.connected_components": {"driver_max_edges"},
+    "operators.clustering.connected_components": set(),
     "operators.clustering.refined_components": {
-        "max_component", "ladder", "driver_max_edges", "louvain_max_edges",
-        "evidence_min_size",
+        "max_component", "ladder", "evidence_min_size",
     },
-    "operators.clustering.attach_subsumed": set(),
     "operators.clustering.subsumption_aware_components": {
-        "max_component", "ladder", "driver_max_edges", "louvain_max_edges",
-        "evidence_min_size",
+        "max_component", "ladder", "evidence_min_size",
     },
     "operators.scoring.score_pairs": {
         "threshold", "name_x", "name_y", "keep_features",
@@ -196,17 +193,24 @@ ER_OPTIONS = {
     "streaming.stream_resolve.assign_stream_batch": {"threshold"},
 }
 
+# Operators outside the ER path that run one fixed configuration.
+ZERO_OPTION_OPERATORS = [
+    "operators.louvain.louvain_communities",
+    "operators.louvain.louvain_driver",
+]
+
 
 def test_er_entry_points_keyword_options():
     import importlib
     import inspect
 
     got = {}
-    for path in ER_OPTIONS:
+    for path in [*ER_OPTIONS, *ZERO_OPTION_OPERATORS]:
         mod, name = path.rsplit(".", 1)
         obj = getattr(importlib.import_module(f"{PKG}.{mod}"), name)
         params = inspect.signature(obj).parameters.values()
         assert not [p for p in params if p.kind is p.VAR_KEYWORD], path
         got[path] = {p.name for p in params if p.default is not p.empty}
-    assert got == ER_OPTIONS
-    assert sum(len(v) for v in got.values()) == 23
+    assert got == {**ER_OPTIONS, **dict.fromkeys(ZERO_OPTION_OPERATORS, set())}
+    assert len(ER_OPTIONS) == 11
+    assert sum(len(v) for v in ER_OPTIONS.values()) == 18

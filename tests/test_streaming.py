@@ -3,6 +3,7 @@ entity assignment (the batch-clustering / stream-assignment lambda split)."""
 
 import gc
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -147,13 +148,18 @@ def test_assign_stream_batch_is_one_spark_job(spark):
 def _round_trips(spark, build) -> tuple:
     """``build()`` and the py4j round trips the driver made for it.  The
     cyclic GC is held off, so a collection of unrelated JavaObjects
-    cannot add its deletes to the count."""
+    cannot add its deletes to the count.  Only the calling thread's
+    commands count: py4j's finalizer thread sends the deletes of JavaObjects
+    collected earlier whenever it runs, and a batch of a few hundred of
+    them landing inside ``build()`` is not the build's work."""
     client = type(spark.sparkContext._gateway._gateway_client)
     send = client.send_command
+    caller = threading.get_ident()
     calls = []
 
     def counting(self, *args, **kwargs):
-        calls.append(1)
+        if threading.get_ident() == caller:
+            calls.append(1)
         return send(self, *args, **kwargs)
 
     gc.collect()
