@@ -1,4 +1,4 @@
-"""The 8-feature pairwise vector — single source of truth for train & serve.
+"""The 18-feature pairwise vector — single source of truth for train & serve.
 
 Column order is the load-bearing contract (mirrors the reference's fixed
 feature order, predict_model.py:58-67 in vietexob/name-matching).  The same
@@ -254,16 +254,19 @@ def idf_evidence_batch(xs, ys, tfidf) -> tuple[np.ndarray, np.ndarray]:
         shared = tx & ty
         if shared:
             out_max[k] = max(idf(t) for t in shared) / max_idf
-            union_sum = sum(idf(t) for t in tx | ty)
+            # Sum in sorted order: a set's order follows the process's
+            # string-hash seed, and float addition is not associative.
+            union_sum = sum(idf(t) for t in sorted(tx | ty))
             if union_sum > 0:
-                out_jac[k] = sum(idf(t) for t in shared) / union_sum
+                out_jac[k] = sum(idf(t) for t in sorted(shared)) / union_sum
     return out_max, out_jac
 
 
 def build_features(xs, ys, tfidf: TfidfModel) -> np.ndarray:
     """(n, len(FEATURE_COLS)) float64 feature matrix for aligned batches of
-    *normalized* names.  Inputs must be non-null; empty strings are legal
-    and score 0.
+    *normalized* names.  Inputs must be non-null; empty strings are legal:
+    an empty name against a non-empty one scores 0 in every column except
+    the two distances, ``len_diff`` and ``align_edit``.
     """
     xs = list(xs)
     ys = list(ys)

@@ -322,11 +322,16 @@ def partial_ratio_reference(x: str, y: str) -> int:
     characters of the longer side as junk and can score an exact substring
     well under 100, so long inputs fall through to the block-based path,
     which reproduces autojunk behavior exactly.
+
+    An empty name against a non-empty one scores 0, fuzzywuzzy's
+    empty-string guard (two empty names are equal and score 100).
     """
     if len(x) <= len(y):
         shorter, longer = x, y
     else:
         shorter, longer = y, x
+    if not shorter:
+        return 0 if longer else 100
     if len(longer) < 200 and shorter in longer:
         return 100
     m = SequenceMatcher(None, shorter, longer)
@@ -452,6 +457,8 @@ def _partial_ratio_fast(x: str, y: str) -> int:
     else:
         shorter, longer = y, x
     m, n = len(shorter), len(longer)
+    if not m:
+        return 0 if n else 100
     if n < 200 and shorter in longer:
         return 100
     blocks = _gestalt_blocks(shorter, longer, _gestalt_b2j(longer))

@@ -122,8 +122,11 @@ class CheckpointManager:
             "duration_sec": round(time.time() - t0, 3),
             "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-        with open(self.manifest_path(name), "w") as f:
+        # The manifest is the commit marker: write it whole or not at all.
+        path = self.manifest_path(name)
+        with open(path + ".tmp", "w") as f:
             json.dump(manifest, f)
+        os.replace(path + ".tmp", path)
         return stored
 
     def _partition_lineage(self, name: str) -> list[dict]:

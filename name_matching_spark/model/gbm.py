@@ -86,10 +86,10 @@ class GBMClassifier:
         self.min_gain = min_gain
         self.base_score = 0.0
         self.trees: list[_Tree] = []
-        # Optional serving contract: the feature-column names (in order)
-        # the model was fitted on.  Set by model.train.train() before
-        # save; load_artifacts() enforces append-only evolution against
-        # the current features.FEATURE_COLS.
+        # Serving contract: the feature-column names (in order) the model
+        # was fitted on.  Set by model.train.train() before save;
+        # load_artifacts() refuses a model whose list is not the current
+        # features.FEATURE_COLS.
         self.feature_cols: list[str] | None = None
 
     # -- training -------------------------------------------------------------

@@ -3,10 +3,10 @@
 Mirrors the reference training flow (train_model.py:383-584 in
 vietexob/name-matching): read labeled pos/neg pair CSVs -> dropna + dedup ->
 uppercase + normalize -> fit TF-IDF on the unique positive left names ->
-build the 8-feature frame -> fit the booster on a split, evaluate, then
+build the 18-feature frame -> fit the booster on a split, evaluate, then
 refit on the full frame -> persist artifacts.
 
-The labeled frame is ~45k rows x 8 features, so this is deliberately a
+The labeled frame is ~75k rows x 18 features, so this is deliberately a
 driver-side job (the reference makes the same call with sklearn/pandas);
 only inference is distributed.  Artifacts are JSON → broadcastable.
 """
@@ -455,17 +455,14 @@ def load_artifacts(model_path: str = MODEL_PATH, tfidf_path: str = TFIDF_PATH):
         return hit
     with open(model_path) as f:
         model = GBMClassifier.from_json(f.read())
-    # Append-only feature evolution: the artifact's columns must be a
-    # PREFIX of the current FEATURE_COLS (old trees simply never split on
-    # the appended columns).  A reorder/removal silently misaligns every
-    # feature the trees reference — fail loudly instead.
-    if model.feature_cols is not None and (
-        model.feature_cols != FEATURE_COLS[: len(model.feature_cols)]
-    ):
+    # The trees index features by position, so an artifact trained on any
+    # other column list (missing, reordered, shorter or longer) would read
+    # shifted columns without error: refuse it.
+    if model.feature_cols != FEATURE_COLS:
         raise ValueError(
             f"stale model artifact {model_path}: its feature_cols "
-            f"{model.feature_cols} are not a prefix of the current "
-            f"FEATURE_COLS {FEATURE_COLS}; retrain (python -m "
+            f"{model.feature_cols} are not the current FEATURE_COLS "
+            f"{FEATURE_COLS}; retrain (python -m "
             f"name_matching_spark.model.train)"
         )
     with open(tfidf_path) as f:

@@ -9,8 +9,10 @@ in vietexob/name-matching):
 * names that appear in no matched pair become singleton entities whose
   resolved name is themselves (the ``get_entity_id`` else-branch,
   :316-326), realized as a left-anti join — no stateful driver closure;
-* entity ids: the component key (min member name) is the stable string
-  key; a 64-bit ``xxhash64`` of it is exposed as ``entity_id``.  A global
+* entity ids: the clusterer's component label is the stable string key
+  (a deterministic member name: the min member name of a component, but
+  a name attached by subsumption takes its target's label, which can sort
+  after it); a 64-bit ``xxhash64`` of it is exposed as ``entity_id``.  A global
   dense-rank enumeration like the reference's would serialize on one
   partition at 10^12 scale, so it is deliberately not the default.
 """

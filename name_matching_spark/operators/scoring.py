@@ -1,4 +1,4 @@
-"""Distributed pairwise scoring: 8 features + GBM probability + decision.
+"""Distributed pairwise scoring: 18 features + GBM probability + decision.
 
 The whole scorer is ONE iterator-style Arrow-batched pandas UDF (the
 north-star-sanctioned pattern): model + TF-IDF artifacts travel as JSON in

@@ -20,7 +20,8 @@ matched names' entities that is never written.
 Every stage lands in the warehouse with a manifest (rows, per-partition
 lineage, timing); a rerun resumes from the last complete stage.  Shuffle
 boundaries: the canonicalize groupBy, the blocking key exchange, the pair
-dedup, and the CC iterations — everything else is narrow.
+dedup, and the entity-table joins — everything else is narrow, and the
+clustering runs on the driver over one collect of the match edges.
 """
 
 from __future__ import annotations

@@ -71,3 +71,28 @@ def test_unreadable_footer_fails_the_stage(spark, tmp_path, monkeypatch):
     assert ckpt.stage("footer_stage", make, params={"v": 1}).count() == 6
     assert calls["n"] == 2
     assert ckpt.stored_rows("footer_stage") == 6
+
+
+def test_manifest_write_is_atomic(spark, tmp_path, monkeypatch):
+    """A manifest write that fails midway leaves no manifest: the stage
+    reads as incomplete, not as committed with a torn marker, and the next
+    run recomputes it."""
+    import json
+
+    ckpt = CheckpointManager(spark, str(tmp_path / "wh"))
+    calls = {"n": 0}
+    make = _counted(spark, 5, calls)
+
+    def torn_dump(obj, f, *args, **kwargs):
+        f.write(json.dumps(obj)[:20])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        ckpt.stage("torn_manifest", make, params={"v": 1})
+    monkeypatch.undo()
+    assert not ckpt.is_complete("torn_manifest")
+
+    assert ckpt.stage("torn_manifest", make, params={"v": 1}).count() == 5
+    assert calls["n"] == 2
+    assert ckpt.stored_rows("torn_manifest") == 5

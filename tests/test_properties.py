@@ -125,11 +125,12 @@ def test_partial_ratio_reference_properties(pairs):
     ys = [b for _, b in pairs]
     out = sim.partial_ratio_reference_batch(xs, ys)
     assert all(0 <= v <= 100 for v in out)
-    # substring (incl. equality) always scores 100
+    # a substring (incl. equality) scores 100, except an empty name
+    # against a non-empty one, which scores 0
     for x, y, v in zip(xs, ys, out):
         s, l = (x, y) if len(x) <= len(y) else (y, x)
         if s in l:
-            assert v == 100
+            assert v == (0 if not s and l else 100)
         # fuzzywuzzy quirk preserved faithfully: the <= tie in the
         # shorter/longer pick makes EQUAL-length pairs order-dependent,
         # so symmetry only holds for unequal lengths.

@@ -52,10 +52,13 @@ def test_partial_ratio_scale_and_bounds():
 
 def _fuzzywuzzy_partial_naive(x: str, y: str) -> int:
     """Straight transliteration of the published fuzzywuzzy partial_ratio
-    (fuzz.py): no fast paths, no pruning — the parity oracle."""
+    (fuzz.py, with its empty-string guard): no fast paths, no pruning —
+    the parity oracle."""
     from difflib import SequenceMatcher
 
     shorter, longer = (x, y) if len(x) <= len(y) else (y, x)
+    if not shorter:
+        return 0 if longer else 100
     blocks = SequenceMatcher(None, shorter, longer).get_matching_blocks()
     scores = []
     for a_i, b_j, _size in blocks:
@@ -189,6 +192,18 @@ def test_feature_matrix_contract():
         assert all(0.0 <= v <= 1.0 for v in cols[name]), name
     assert all(0 <= v <= 100 for v in cols["partial_ratio"])
     assert all(v >= 0 for v in cols["len_diff"])
+
+
+def test_empty_name_scores_zero_except_distances():
+    """An empty name against a non-empty one scores 0 in every column but
+    the two distances, in either argument order."""
+    tfidf = TfidfModel.fit(["john smith", "jane doe"])
+    X = build_features(["", "JOHN SMITH"], ["JOHN SMITH", ""], tfidf)
+    distances = {"len_diff", "align_edit"}
+    for row in X:
+        cols = dict(zip(FEATURE_COLS, row))
+        assert {c for c, v in cols.items() if v != 0.0} <= distances, cols
+        assert all(cols[c] > 0 for c in distances), cols
 
 
 def test_initial_conflict_cases():

@@ -352,21 +352,20 @@ def test_pipeline_sidecar_invalidates_on_mode_flip(spark, tmp_path, monkeypatch)
 
 
 def test_gbm_feature_cols_contract_roundtrip():
-    # feature_cols survive to_json/from_json; load_artifacts enforces the
-    # append-only prefix rule.
+    # feature_cols survive to_json/from_json; load_artifacts enforces them.
     X = np.random.default_rng(0).normal(size=(50, 2))
     y = (X[:, 0] > 0).astype(float)
     m = GBMClassifier(n_estimators=5, max_depth=2).fit(X, y)
     m.feature_cols = ["a", "b"]
     m2 = GBMClassifier.from_json(m.to_json())
     assert m2.feature_cols == ["a", "b"]
-    # absent field stays None (pre-contract artifacts load fine)
+    # an absent field reads back as None (which load_artifacts refuses)
     m.feature_cols = None
     assert GBMClassifier.from_json(m.to_json()).feature_cols is None
 
 
 def test_load_artifacts_rejects_reordered_feature_cols(tmp_path):
-    import os
+    import pytest
 
     from name_matching_spark.functions.features import FEATURE_COLS
     from name_matching_spark.model.train import TFIDF_PATH, load_artifacts
@@ -374,17 +373,18 @@ def test_load_artifacts_rejects_reordered_feature_cols(tmp_path):
     X = np.zeros((20, len(FEATURE_COLS)))
     y = np.array([0.0, 1.0] * 10)
     m = GBMClassifier(n_estimators=2, max_depth=1).fit(X, y)
-    m.feature_cols = list(reversed(FEATURE_COLS))
-    bad = tmp_path / "match_gbm.json"
-    bad.write_text(m.to_json())
-    import pytest
-
-    with pytest.raises(ValueError, match="not a prefix"):
-        load_artifacts(str(bad), TFIDF_PATH)
-    # a proper prefix loads
-    m.feature_cols = list(FEATURE_COLS[:5])
-    bad.write_text(m.to_json())
-    load_artifacts(str(bad), TFIDF_PATH)
+    art = tmp_path / "match_gbm.json"
+    # reordered, missing (an artifact from before the field existed) and a
+    # prefix (an artifact whose trees would read columns shifted) all fail
+    for cols in (list(reversed(FEATURE_COLS)), None, list(FEATURE_COLS[:5])):
+        m.feature_cols = cols
+        art.write_text(m.to_json())
+        with pytest.raises(ValueError, match="not the current FEATURE_COLS"):
+            load_artifacts(str(art), TFIDF_PATH)
+    # the exact column list loads
+    m.feature_cols = list(FEATURE_COLS)
+    art.write_text(m.to_json())
+    assert load_artifacts(str(art), TFIDF_PATH)[0].feature_cols == FEATURE_COLS
 
 
 def test_scorer_artifact_cache_keys_on_full_content():
@@ -526,3 +526,34 @@ def test_score_pairs_reused_projection_keys_on_its_inputs(spark):
         [tuple(r) for r in want.values()]
         + [tuple(r) for k, r in want.items() if k[0] != "JANE SMITH"]
     )
+
+
+def test_features_do_not_depend_on_the_hash_seed():
+    """Training runs in a plain Python process, whose string-hash seed is
+    random: a feature that sums floats in set order then differs in the
+    last bits from run to run, and so does every model trained on it.
+    The feature matrix must be byte-identical under any seed."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import hashlib\n"
+        "from name_matching_spark.functions.features import build_features\n"
+        "from name_matching_spark.functions.tfidf import TfidfModel\n"
+        "from name_matching_spark.model.train import TFIDF_PATH, load_labeled_pairs\n"
+        "df = load_labeled_pairs().head(3000)\n"
+        "tfidf = TfidfModel.from_json(open(TFIDF_PATH).read())\n"
+        "X = build_features(df['name_x_norm'], df['name_y_norm'], tfidf)\n"
+        "print(hashlib.md5(X.tobytes()).hexdigest())\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    digests = {
+        subprocess.run(
+            [sys.executable, "-c", code],
+            cwd=repo, capture_output=True, text=True, check=True, timeout=300,
+            env={**os.environ, "PYTHONHASHSEED": seed},
+        ).stdout.strip()
+        for seed in ("1", "2", "3")
+    }
+    assert len(digests) == 1, digests
