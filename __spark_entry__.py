@@ -115,8 +115,8 @@ def entry(spark: SparkSession) -> DataFrame:
         .where(F.length("name") > 0)
         .distinct()
     )
-    pairs = candidate_pairs(names, max_block=100)
-    scored = score_pairs(pairs, model.to_json(), tfidf.to_json(), threshold=0.85)
+    pairs = candidate_pairs(names)
+    scored = score_pairs(pairs, model.to_json(), tfidf.to_json())
     comps = connected_components(
         scored.where(F.col("prediction") == 1).select(
             F.col("name_x").alias("src"), F.col("name_y").alias("dst")
@@ -558,9 +558,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # SQL-expressible) — they are gated by tests/test_model_gate.py
         # (pairwise F1 >= 0.99 on the reference's labeled pairs) and the
         # threshold/rounding semantics by the m3 oracle.
-        scored = score_pairs(
-            pairs, model.to_json(), tfidf.to_json(), threshold=0.85
-        )
+        scored = score_pairs(pairs, model.to_json(), tfidf.to_json())
         return scored.select(
             "name_x",
             "name_y",

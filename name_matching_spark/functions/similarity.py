@@ -49,33 +49,8 @@ def encode_batch(strs) -> tuple[np.ndarray, np.ndarray]:
 
 
 # ---------------------------------------------------------------------------
-# Levenshtein (batched Wagner-Fischer across the batch dimension)
+# Levenshtein (bit-parallel across the batch dimension)
 # ---------------------------------------------------------------------------
-
-
-def _lev_core(xs, ys) -> np.ndarray:
-    """Batched Wagner-Fischer: DP rows advanced for the whole sub-batch at
-    once; inner loops run over character positions, not rows."""
-    n = len(xs)
-    A, la = encode_batch(xs)
-    B, lb = encode_batch(ys)
-    La, Lb = int(la.max()), int(lb.max())
-    dp = np.tile(np.arange(Lb + 1, dtype=np.int32), (n, 1))
-    result = lb.astype(np.int32).copy()  # rows with la == 0
-    for i in range(1, La + 1):
-        prev_diag = dp[:, 0].copy()
-        dp[:, 0] = i
-        ai = A[:, i - 1]
-        for j in range(1, Lb + 1):
-            cur = dp[:, j].copy()
-            cost = (ai != B[:, j - 1]).astype(np.int32)
-            np.minimum(dp[:, j - 1] + 1, cur + 1, out=dp[:, j])
-            np.minimum(dp[:, j], prev_diag + cost, out=dp[:, j])
-            prev_diag = cur
-        hit = la == i
-        if hit.any():
-            result[hit] = dp[hit, lb[hit]]
-    return result
 
 
 _MYERS_MAX_M = 53  # bits must stay exact through a float64 bincount
@@ -86,9 +61,9 @@ def _lev_myers(xs, ys) -> np.ndarray:
     O(len(text)) rounds of uint64 boolean algebra instead of the
     O(len(a) x len(b)) Wagner-Fischer grid.  Requires the per-row pattern
     (the shorter string) to fit in 53 bits — the caller routes longer rows
-    to :func:`_lev_core`.  Published algorithm: G. Myers, "A fast
-    bit-vector algorithm for approximate string matching based on dynamic
-    programming", JACM 46(3), 1999 (Hyyrö 2001 formulation)."""
+    to the scalar :func:`levenshtein`.  Published algorithm: G. Myers, "A
+    fast bit-vector algorithm for approximate string matching based on
+    dynamic programming", JACM 46(3), 1999 (Hyyrö 2001 formulation)."""
     n = len(xs)
     # pattern = shorter side (fewer bits), text = longer side
     pats: list = []
@@ -154,11 +129,11 @@ def _lev_myers(xs, ys) -> np.ndarray:
 def levenshtein_batch(xs, ys, chunk: int = 8192, memo: dict | None = None) -> np.ndarray:
     """Edit distances for aligned batches of strings.
 
-    The core DP costs max_len_a x max_len_b numpy steps per sub-batch, so
-    pairs are (a) short-circuited when equal, (b) served from the optional
-    cross-call ``memo`` (the scorer's four ratio variants largely repeat
-    the same pairs), (c) sorted by size and chunked so one long outlier
-    cannot inflate the DP grid for the whole batch.
+    The bit-parallel kernel advances a sub-batch for max_len numpy
+    steps, so pairs are (a) short-circuited when equal, (b) served from
+    the optional cross-call ``memo`` (the scorer's four ratio variants
+    largely repeat the same pairs), (c) sorted by length and chunked so
+    one long outlier cannot lengthen the loop for the whole batch.
     """
     n = len(xs)
     if n == 0:
@@ -177,10 +152,10 @@ def levenshtein_batch(xs, ys, chunk: int = 8192, memo: dict | None = None) -> np
         todo.append(k)
     if not todo:
         return result
-    # Bit-parallel path for pairs whose shorter side fits in 53 bits
-    # (virtually all names); the Wagner-Fischer grid handles the rest.
+    # Bit-parallel path for pairs whose shorter side fits in 53 bits.  The
+    # rest go one by one through the scalar DP: none occur in the labeled
+    # pairs (longest name 69 characters) or in datagen's aliases.
     fast = [k for k in todo if min(len(xs[k]), len(ys[k])) <= _MYERS_MAX_M]
-    slow = [k for k in todo if min(len(xs[k]), len(ys[k])) > _MYERS_MAX_M]
     fast.sort(key=lambda k: max(len(xs[k]), len(ys[k])))
     for s in range(0, len(fast), chunk):
         part = fast[s : s + chunk]
@@ -189,14 +164,11 @@ def levenshtein_batch(xs, ys, chunk: int = 8192, memo: dict | None = None) -> np
         if memo is not None:
             for k, v in zip(part, out):
                 memo[(xs[k], ys[k])] = int(v)
-    slow.sort(key=lambda k: len(xs[k]) * len(ys[k]))
-    for s in range(0, len(slow), chunk):
-        part = slow[s : s + chunk]
-        out = _lev_core([xs[k] for k in part], [ys[k] for k in part])
-        result[part] = out
-        if memo is not None:
-            for k, v in zip(part, out):
-                memo[(xs[k], ys[k])] = int(v)
+    for k in todo:
+        if min(len(xs[k]), len(ys[k])) > _MYERS_MAX_M:
+            result[k] = levenshtein(xs[k], ys[k])
+            if memo is not None:
+                memo[(xs[k], ys[k])] = int(result[k])
     return result
 
 

@@ -28,33 +28,18 @@ import numpy as np
 
 _TOKEN_RE = re.compile(r"(?u)\b\w\w+\b")
 
-# Hard ceiling for the corpus-adaptive (max_features=None) fit: keeps the
-# collected vocabulary/artifact bounded; corpora past it should use
-# HashedTfidfModel.  Referenced by the pipeline's sidecar fingerprint so a
-# change here invalidates resumed vocabularies.
+# Hard ceiling for the corpus-adaptive fit (TfidfModel.fit_spark): keeps
+# the collected vocabulary/artifact bounded; a corpus past it is fitted
+# with HashedTfidfModel instead.  Referenced by the pipeline's sidecar
+# fingerprint so a change here invalidates resumed vocabularies.
 ADAPTIVE_VOCAB_CEILING = 1_000_000
+# Buckets of the hashed fit that a corpus past the ceiling switches to.
+OVERFLOW_N_BUCKETS = 1 << 22
 
 
 def _terms(text: str) -> list[str]:
     toks = _TOKEN_RE.findall(text.lower())
     return toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-
-
-def _lowered_docs(names_df, name_col: str, extra_corpus) -> list[str]:
-    """The documents a fit over a Spark name table counts: the sorted
-    distinct union of the names, lowercased in Spark and collected in one
-    Arrow transfer, and the lowercased ``extra_corpus``."""
-    from pyspark.sql import functions as F
-
-    names = (
-        names_df.select(F.lower(F.col(name_col)).alias("doc"))
-        .toArrow()
-        .column("doc")
-        .to_pylist()
-    )
-    docs = {d for d in names if d is not None}
-    docs.update(c.lower() for c in extra_corpus or ())
-    return sorted(docs)
 
 
 class TfidfModel:
@@ -155,48 +140,46 @@ class TfidfModel:
     # -- fitting a Spark name table -------------------------------------------
 
     @classmethod
-    def fit_spark(
-        cls,
-        names_df,
-        name_col: str = "name",
-        extra_corpus: list[str] | None = None,
-        max_df: float = 0.9,
-        max_features: int | None = 10000,
-        ceiling: int | None = None,
-        overflow_n_buckets: int = 1 << 22,
-    ) -> "TfidfModel | HashedTfidfModel":
-        """Fit on a Spark DataFrame of names plus an optional driver-side
-        extra corpus: one Arrow collect of the names, lowercased in Spark,
-        then :meth:`fit` over the sorted distinct lowered union of names
-        and corpus.  Driver memory is O(distinct names): every name comes
-        to the driver, where the earlier distributed aggregate collected
-        only its vocabulary rows (up to the 1M-term ceiling).  At the
-        pipeline's sizes the driver count is far cheaper than the jobs of
-        a Spark aggregate.
+    def fit_spark(cls, names_df, extra_corpus) -> "TfidfModel | HashedTfidfModel":
+        """The corpus-adaptive fit over the ``name`` column of a Spark
+        DataFrame plus a driver-side ``extra_corpus``: one Arrow collect of
+        the names, lowercased in Spark, then :meth:`fit` over the sorted
+        distinct lowered union of names and corpus, keeping every term
+        that passes ``max_df``.  Driver memory is O(distinct names): every
+        name comes to the driver, where the earlier distributed aggregate
+        collected only its vocabulary rows.  At the pipeline's sizes the
+        driver count is far cheaper than the jobs of a Spark aggregate.
 
-        ``max_features=None`` means corpus-adaptive: keep every term up to
-        a 1M hard ceiling.  The 10k default mirrors the reference
-        (build_features.py max_features=10000) and is right for its small
-        corpus, but at 10^5+ resolution names a frequency-truncated
-        vocabulary drops exactly the RARE core tokens that distinguish
-        entities, leaving only shared high-frequency tokens (designators,
-        common given names) in vocabulary — cosine then collapses onto
-        those and scores different-core orgs as near-identical (the
-        documented OOV failure mode, measured as a primary driver of
-        cluster over-merge at the 100k-entity scale).  The ceiling bounds
-        the broadcast artifact (~tens of MB); a corpus whose term
-        diversity EXCEEDS the ceiling auto-switches to the hashing-trick
-        fit (``overflow_n_buckets`` buckets, returns a
-        :class:`HashedTfidfModel`) — truncating the adaptive vocabulary
-        would silently reintroduce the rare-core OOV collapse the adaptive
-        mode exists to prevent, and the hashed fit is A/B-proven within
-        0.001 F1 of adaptive (BENCH/QUALITY.md).  ``ceiling`` overrides
-        :data:`ADAPTIVE_VOCAB_CEILING` (tests cross the boundary cheaply).
+        Corpus-adaptive, not the reference's 10k most frequent terms
+        (build_features.py max_features=10000): at 10^5+ resolution names
+        a frequency-truncated vocabulary drops exactly the RARE core
+        tokens that distinguish entities, leaving only shared
+        high-frequency tokens (designators, common given names) in
+        vocabulary — cosine then collapses onto those and scores
+        different-core orgs as near-identical (the documented OOV failure
+        mode, measured as a primary driver of cluster over-merge at the
+        100k-entity scale).  :data:`ADAPTIVE_VOCAB_CEILING` bounds the
+        broadcast artifact (~tens of MB); a corpus whose term diversity
+        EXCEEDS it switches to the hashing-trick fit
+        (:data:`OVERFLOW_N_BUCKETS` buckets, a :class:`HashedTfidfModel`) —
+        truncating the adaptive vocabulary would silently reintroduce the
+        rare-core OOV collapse the adaptive mode exists to prevent, and
+        the hashed fit is A/B-proven within 0.001 F1 of adaptive
+        (BENCH/QUALITY.md).
         """
-        docs = _lowered_docs(names_df, name_col, extra_corpus)
-        model = cls.fit(docs, max_df=max_df, max_features=max_features)
-        limit = ceiling if ceiling is not None else ADAPTIVE_VOCAB_CEILING
-        if max_features is not None or len(model.vocab) <= limit:
+        from pyspark.sql import functions as F
+
+        names = (
+            names_df.select(F.lower(F.col("name")).alias("doc"))
+            .toArrow()
+            .column("doc")
+            .to_pylist()
+        )
+        docs = {d for d in names if d is not None}
+        docs.update(c.lower() for c in extra_corpus)
+        docs = sorted(docs)
+        model = cls.fit(docs, max_features=None)
+        if len(model.vocab) <= ADAPTIVE_VOCAB_CEILING:
             return model
         # The adaptive mode exists to PREVENT rare-core truncation;
         # crossing the ceiling therefore SWITCHES fits rather than
@@ -206,15 +189,13 @@ class TfidfModel:
 
         warnings.warn(
             "TfidfModel.fit_spark: corpus-adaptive vocabulary exceeded "
-            f"the {limit}-term ceiling; auto-switching to hashed TF-IDF "
-            f"({overflow_n_buckets} buckets) to preserve rare "
+            f"the {ADAPTIVE_VOCAB_CEILING}-term ceiling; auto-switching to "
+            f"hashed TF-IDF ({OVERFLOW_N_BUCKETS} buckets) to preserve rare "
             "discriminating terms",
             RuntimeWarning,
             stacklevel=2,
         )
-        return HashedTfidfModel.fit(
-            docs, max_df=max_df, n_buckets=overflow_n_buckets
-        )
+        return HashedTfidfModel.fit(docs, n_buckets=OVERFLOW_N_BUCKETS)
 
     # -- (de)serialization ----------------------------------------------------
 
@@ -291,23 +272,6 @@ class HashedTfidfModel:
             else:
                 idf[b] = 0.0  # stop-bucket, same rule as max_df terms
         return cls(idf, n_buckets, default_idf=unseen)
-
-    @classmethod
-    def fit_spark(
-        cls,
-        names_df,
-        name_col: str = "name",
-        extra_corpus: list[str] | None = None,
-        max_df: float = 0.9,
-        n_buckets: int = 1 << 20,
-    ) -> "HashedTfidfModel":
-        """:meth:`fit` over the same documents as
-        :meth:`TfidfModel.fit_spark` (one Arrow collect of the names)."""
-        return cls.fit(
-            _lowered_docs(names_df, name_col, extra_corpus),
-            max_df=max_df,
-            n_buckets=n_buckets,
-        )
 
     def _doc_weights(self, text: str) -> dict[int, float]:
         c = Counter(_terms(text))

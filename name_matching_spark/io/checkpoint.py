@@ -30,10 +30,10 @@ class CheckpointManager:
     """Stores each stage as a parquet directory under ``warehouse``, with
     its manifest inside it."""
 
-    def __init__(self, spark: SparkSession, warehouse: str, run_id: str | None = None):
+    def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
         self.warehouse = warehouse
-        self.run_id = run_id or uuid.uuid4().hex[:12]
+        self.run_id = uuid.uuid4().hex[:12]
         os.makedirs(warehouse, exist_ok=True)
 
     # -- paths ---------------------------------------------------------------
@@ -97,9 +97,9 @@ class CheckpointManager:
         If a complete manifest exists, the stored table is returned
         without recomputation — but only when the recorded ``params``
         (stage configuration + input fingerprint) match the current ones:
-        rerunning into an existing warehouse with a different threshold or
-        a different input table must recompute, not silently serve results
-        produced under the old configuration.
+        rerunning into an existing warehouse with different stage
+        parameters or a different input table must recompute, not
+        silently serve results produced under the old configuration.
         """
         if self.is_complete(name):
             stored = self._stored_params(name)

@@ -2,9 +2,10 @@
 
 Mirrors the reference training flow (train_model.py:383-584 in
 vietexob/name-matching): read labeled pos/neg pair CSVs -> dropna + dedup ->
-uppercase + normalize -> fit TF-IDF on the unique positive left names ->
-build the 18-feature frame -> fit the booster on a split, evaluate, then
-refit on the full frame -> persist artifacts.
+uppercase + normalize -> fit TF-IDF on every distinct name in the labeled
+frame (the reference fits only the unique positive left names; see
+``train``) -> build the 18-feature frame -> fit the booster on a split,
+evaluate, then refit on the full frame -> persist artifacts.
 
 The labeled frame is ~75k rows x 18 features, so this is deliberately a
 driver-side job (the reference makes the same call with sklearn/pandas);
@@ -270,9 +271,9 @@ def train(
     # Corpus-scale domain randomization (see docstring): the same pairs,
     # idf features recomputed under an at-resolution-scale fit.  The fit
     # must be corpus-adaptive (no frequency truncation) to mirror
-    # TfidfModel.fit_spark(max_features=None) — a truncated vocabulary
-    # sends rare cores to the OOV max-idf path and reproduces the small-
-    # corpus regime instead of the large one.
+    # TfidfModel.fit_spark — a truncated vocabulary sends rare cores to
+    # the OOV max-idf path and reproduces the small-corpus regime instead
+    # of the large one.
     X_scale = None
     if scale_corpus_entities:
         from name_matching_spark.datagen import generate_entities
@@ -443,12 +444,23 @@ def _file_key(path: str):
     return (path, st.st_mtime_ns, st.st_size)
 
 
+def _require(path: str) -> str:
+    """``path`` resolved; a missing artifact raises rather than training
+    one (about 15 minutes on the driver, into ``MODEL_DIR`` whatever the
+    path asked for)."""
+    resolved = _resolve(path)
+    if not os.path.exists(resolved):
+        raise FileNotFoundError(
+            f"model artifact {path} not found; train it with "
+            "python -m name_matching_spark.model.train"
+        )
+    return resolved
+
+
 def load_artifacts(model_path: str = MODEL_PATH, tfidf_path: str = TFIDF_PATH):
-    """Load (model, tfidf); train on the fly if artifacts are absent."""
-    model_path = _resolve(model_path)
-    tfidf_path = _resolve(tfidf_path)
-    if not (os.path.exists(model_path) and os.path.exists(tfidf_path)):
-        train(verbose=False)
+    """Load (model, tfidf); a missing artifact raises FileNotFoundError."""
+    model_path = _require(model_path)
+    tfidf_path = _require(tfidf_path)
     cache_key = ("artifacts", _file_key(model_path), _file_key(tfidf_path))
     hit = _ARTIFACT_CACHE.get(cache_key)
     if hit is not None:
@@ -472,9 +484,7 @@ def load_artifacts(model_path: str = MODEL_PATH, tfidf_path: str = TFIDF_PATH):
 
 
 def load_train_corpus(path: str = CORPUS_PATH) -> list[str]:
-    path = _resolve(path)
-    if not os.path.exists(path):
-        train(verbose=False)
+    path = _require(path)
     cache_key = ("corpus", _file_key(path))
     hit = _ARTIFACT_CACHE.get(cache_key)
     if hit is not None:

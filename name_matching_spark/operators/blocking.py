@@ -14,11 +14,11 @@ distributed blocked self-join.  A name lands in a block for each of:
 
 Scale levers (explicit per the north rule):
 
-* **hot-block sub-blocking**: blocks larger than ``max_block`` names are
+* **hot-block sub-blocking**: blocks larger than :data:`MAX_BLOCK` names are
   never paired quadratically — their members are re-keyed by secondary
   MinHash rows (similarity-preserving sub-blocks) and residual oversized
   sub-blocks emit linear star pairs around a hub, so hot tokens ("LLC",
-  "INC") cost O(members * max_block) instead of quadratic OR zero recall.
+  "INC") cost O(members * MAX_BLOCK) instead of quadratic OR zero recall.
 * **AQE skew-join** splits residual skewed partitions at runtime (enabled in
   the session factory).
 * Pair canonicalization (``name_x < name_y``) + hash-aggregate dedup keeps
@@ -39,6 +39,9 @@ from name_matching_spark.functions.phonetic import metaphone_name_codes_udf
 MIN_TOKEN_LEN = 2
 LSH_BANDS = 8
 LSH_ROWS_PER_BAND = 1
+# The block cap: a block of up to MAX_BLOCK names pairs quadratically, a
+# larger one is sub-blocked (see candidate_pairs).
+MAX_BLOCK = 100
 
 # Affine universal-hash family for MinHash (derived, fixed seed): values
 # stay < 2^31 so v*a+b stays well inside int64 — ANSI-mode safe (Spark 4
@@ -170,7 +173,7 @@ def materialized_blocking_keys(names: DataFrame) -> DataFrame:
 
 
 def candidate_pairs(
-    names: DataFrame, max_block: int = 100, keys: DataFrame | None = None
+    names: DataFrame, max_block: int = MAX_BLOCK, keys: DataFrame | None = None
 ) -> DataFrame:
     """Distinct candidate pairs (name_x < name_y) from the blocked self-join
     of the ``name`` column of ``names``.
@@ -231,26 +234,33 @@ def candidate_pairs(
     # explode over the checkpointed keys.  At 100k entities (3,761 hot
     # keys) materializing them cost one job and saved no time.
     sub = hot.select(F.explode(sub_key).alias("key"), "name")
-    ssizes = sub.groupBy("key").agg(F.count("*").alias("block_size"))
-    skeyed = sub.join(ssizes, "key")
-    sok = skeyed.where(
+    pairs = pairs.unionByName(capped_block_pairs(sub, max_block))
+    return pairs.dropDuplicates(["name_x", "name_y"])
+
+
+def capped_block_pairs(keyed: DataFrame, max_block: int) -> DataFrame:
+    """Canonical (name_x < name_y) pairs from a (key, name) block table
+    under a block cap, not deduplicated across blocks: a block of up to
+    ``max_block`` names pairs quadratically, and a larger one (low-entropy
+    mass, e.g. thousands of names sharing one dominant shingle) pairs
+    each member with the block's min-name hub.  Every block costs
+    O(size * max_block) pairs at most, never a quadratic and never zero
+    work, and the star keeps hub-mediated transitive recall.  The hot
+    sub-blocks of :func:`candidate_pairs` and the semantic channel's LSH
+    buckets (``similarity_search.embedding_candidates``) apply it."""
+    sizes = keyed.groupBy("key").agg(F.count("*").alias("block_size"))
+    sized = keyed.join(sizes, "key")
+    ok = sized.where(
         (F.col("block_size") >= 2) & (F.col("block_size") <= max_block)
     ).select("key", "name")
-    # Sub-blocks STILL over the cap (low-entropy shingle mass — e.g.
-    # thousands of names sharing one dominant shingle) fall back to
-    # linear STAR pairs around the min-name hub, the same discipline as
-    # the LSH mega-bucket cap in similarity_search.py: O(size) pairs,
-    # hub-mediated transitive recall, never a quadratic and never zero
-    # work.
-    shot = skeyed.where(F.col("block_size") > max_block).select("key", "name")
-    hubs = shot.groupBy("key").agg(F.min("name").alias("hub"))
+    hot = sized.where(F.col("block_size") > max_block).select("key", "name")
+    hubs = hot.groupBy("key").agg(F.min("name").alias("hub"))
     star = (
-        shot.join(hubs, "key")
+        hot.join(hubs, "key")
         .where(F.col("name") != F.col("hub"))
         .select(F.col("hub").alias("name_x"), F.col("name").alias("name_y"))
     )
-    pairs = pairs.unionByName(_join_pairs(sok)).unionByName(star)
-    return pairs.dropDuplicates(["name_x", "name_y"])
+    return _join_pairs(ok).unionByName(star)
 
 
 def _join_pairs(keyed: DataFrame) -> DataFrame:
@@ -263,7 +273,7 @@ def _join_pairs(keyed: DataFrame) -> DataFrame:
     )
 
 
-def block_stats(keys: DataFrame, max_block: int = 100) -> DataFrame:
+def block_stats(keys: DataFrame, max_block: int = MAX_BLOCK) -> DataFrame:
     """Per-key block sizes with a hot flag (size > max_block: the block was
     routed through MinHash sub-blocking / star capping rather than paired
     quadratically) — the lineage/metrics side output for the blocking

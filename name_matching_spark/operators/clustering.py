@@ -35,8 +35,8 @@ EVIDENCE_MIN_COSINE = 0.05
 EVIDENCE_MAX_ALIGN = 1.0
 
 # The shipped refinement configuration: the defaults of
-# refined_components and subsumption_aware_components, and the
-# components-stage fingerprint in the pipeline.  Measured by the
+# refined_components and subsumption_aware_components, and recorded in
+# the pipeline's ``cluster_params`` (the ``entities`` stage fingerprint).  Measured by the
 # three-scale knob sweep (scripts/cluster_knob_sweep.py, BENCH/QUALITY.md):
 # - LADDER ends in two margin rungs (above MARGIN_RUNG_MIN_PROB a rung
 #   compares the GBM's raw margin against logit(t), because the 4dp

@@ -9,8 +9,9 @@ SentenceTransformer reload), and every batch is featurized by the exact
 function the trainer used, so train/serve skew is impossible.
 
 Decision semantics preserved from the reference: probability rounded to
-4 decimals in persisted outputs, prediction ``1`` iff ``prob >= threshold``
-(default 0.85), match labels ``MATCH``/``NO_MATCH``.
+4 decimals in persisted outputs, prediction ``1`` iff
+``prob >= DEFAULT_THRESHOLD`` (0.85, the one decision rule of the batch
+and the stream path), match labels ``MATCH``/``NO_MATCH``.
 """
 
 from __future__ import annotations
@@ -25,14 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from name_matching_spark.functions.features import FEATURE_COLS, build_features
-
-# Derived from FEATURE_COLS so a feature added there cannot leave the UDF
-# schema stale (all features are float64 by build_features' contract).
-# "margin" = the GBM's raw log-odds: monotone with probability but NOT
-# saturated — above prob 0.99 it is the only ranking signal left.
-_SCORE_SCHEMA = ", ".join(
-    f"{c} double" for c in [*FEATURE_COLS, "probability", "margin"]
-)
+from name_matching_spark.model.train import DEFAULT_THRESHOLD
 
 # The evidence columns that must survive even when the caller drops the
 # full feature vector (clustering refinement reads them) — see
@@ -70,32 +64,20 @@ def _artifacts(key: tuple, model_json: str, tfidf_json: str):
     return hit
 
 
-def make_scorer_udf(model_json: str, tfidf_json: str, spark, feature_cols=None):
-    """Build the scorer UDF; the artifact JSON travels as a broadcast
-    (shipped once per executor).  The last UDF built is reused while the
-    SparkContext, both artifacts and the emitted columns are the same: a
-    new context never gets a dead broadcast, and a refit vocabulary gets a
-    new scorer.
-
-    ``feature_cols``: subset of FEATURE_COLS to EMIT (order preserved);
-    None emits all.  Every feature is still computed (the GBM consumes the
-    full vector) — this only trims what crosses the Python→JVM Arrow
-    boundary, which matters when the caller immediately drops most
-    columns (guide §4.1: control how many columns cross)."""
-    if feature_cols is None:
-        out_cols = tuple(FEATURE_COLS)
-    else:
-        out_cols = tuple(c for c in FEATURE_COLS if c in set(feature_cols))
-    return _scorer_udf(spark.sparkContext, model_json, tfidf_json, out_cols)
-
-
 # One entry: ``score_pairs`` runs once per stream micro-batch, and building
 # a scorer (hash the 1.1 MB of artifact JSON, broadcast it, wrap a UDF)
 # costs about 20-30 ms and 7 py4j round trips, and its first call about 50
 # more (the JVM side of the UDF).  That call is made once per projection,
-# in ``_score_projection``.
+# in ``_score_projection``.  The key holds the SparkContext and both
+# artifacts, so a new context never gets a dead broadcast and a refit
+# vocabulary gets a new scorer.
 @functools.lru_cache(maxsize=1)
 def _scorer_udf(sc, model_json: str, tfidf_json: str, out_cols: tuple):
+    """The scorer UDF over (name_x, name_y) columns; the artifact JSON
+    travels as one broadcast.  It emits the features ``out_cols`` (a
+    subset of FEATURE_COLS), then ``probability`` and ``margin``.  The
+    GBM still computes the whole vector; ``out_cols`` only trims what
+    crosses the Python-to-JVM Arrow boundary."""
     out_idx = [FEATURE_COLS.index(c) for c in out_cols]
     schema = ", ".join(
         f"{c} double" for c in [*out_cols, "probability", "margin"]
@@ -149,7 +131,6 @@ def score_pairs(
     pairs: DataFrame,
     model_json: str,
     tfidf_json: str,
-    threshold: float = 0.85,
     name_x: str = "name_x",
     name_y: str = "name_y",
     keep_features: bool = True,
@@ -173,29 +154,23 @@ def score_pairs(
     trained feature space is untouched, rows with NULL vectors fall back
     to the string decision alone, and without the columns the output is
     byte-identical to before."""
-    scorer = make_scorer_udf(
+    scorer = _scorer_udf(
+        pairs.sparkSession.sparkContext,
         model_json,
         tfidf_json,
-        spark=pairs.sparkSession,
-        # keep_features=False callers drop everything but the evidence
-        # columns right after the UDF — don't Arrow-serialize the other
-        # 15 float64 columns across the Python boundary just to drop them
-        feature_cols=None if keep_features else EVIDENCE_COLS,
+        tuple(FEATURE_COLS) if keep_features else EVIDENCE_COLS,
     )
     call, projection = _score_projection(
-        scorer, name_x, name_y, threshold, keep_features, tuple(pairs.columns)
+        scorer, name_x, name_y, keep_features, tuple(pairs.columns)
     )
     return pairs.withColumn("_s", call).select(*projection)
 
 
 # Eight entries: the batch pipeline and the stream path each score with
-# their own column names and threshold.  The key holds the cached scorer
-# rather than widening ``_scorer_udf``'s own key, so a new threshold does
-# not re-broadcast the artifacts.
+# their own column names, input columns and feature choice.
 @functools.lru_cache(maxsize=8)
 def _score_projection(
-    scorer, name_x: str, name_y: str, threshold: float, keep_features: bool,
-    columns: tuple,
+    scorer, name_x: str, name_y: str, keep_features: bool, columns: tuple
 ) -> tuple:
     """The scorer call and the output projection of :func:`score_pairs`
     over a frame with ``columns`` (which also say whether the embedding
@@ -224,11 +199,9 @@ def _score_projection(
         # mass alone must not glue corpus-scale clusters — and whether it
         # is a SUBSUMPTION edge (token_weakest_link 1.0 purely via
         # initial/prefix credit), which attaches rather than glues.
-        cols += [F.col("_s.cosine_sim").alias("cosine_sim"),
-                 F.col("_s.align_edit").alias("align_edit"),
-                 F.col("_s.token_weakest_link").alias("token_weakest_link")]
+        cols += [F.col(f"_s.{f}").alias(f) for f in EVIDENCE_COLS]
     has_emb = {"emb_x", "emb_y"} <= set(columns)
-    decision = valid & (prob_raw >= F.lit(threshold))
+    decision = valid & (prob_raw >= F.lit(DEFAULT_THRESHOLD))
     # The raw margin always rides along: refinement ladder rungs above
     # prob 0.99 operate where the sigmoid has flattened thousands of
     # edges onto 0.9999+ — the margin still ranks them.

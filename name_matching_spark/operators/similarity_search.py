@@ -15,6 +15,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from name_matching_spark.operators.blocking import capped_block_pairs
+
 
 def _hyperplanes(dim: int, bits: int, tables: int, seed: int = 42) -> np.ndarray:
     rng = np.random.default_rng(seed)
@@ -80,8 +82,8 @@ def embedding_candidates(
     channel's analog of string blocking (zero-lexical-overlap aliases
     never co-block on tokens/phonetics/shingles, so without this the
     scorer's embedding OR-rule would have nothing to score).  Buckets
-    beyond ``max_bucket`` emit linear star pairs around the min-name hub —
-    the same mega-bucket discipline as blocking.py."""
+    are capped at ``max_bucket`` names by the rule that caps blocking's
+    hot sub-blocks (``blocking.capped_block_pairs``)."""
     planes = _hyperplanes(dim, bits, tables, seed)
     rows = emb.select(F.col(name_col).alias("name"), F.col(vec_col).alias("v"))
     keyed = _with_constant_array(
@@ -92,23 +94,6 @@ def embedding_candidates(
             "tbl", "bucket"
         ),
     ).select(F.concat_ws("_", "tbl", "bucket").alias("key"), "name")
-    sizes = keyed.groupBy("key").agg(F.count("*").alias("bs"))
-    sized = keyed.join(sizes, "key")
-    ok = sized.where(F.col("bs") <= max_bucket)
-    a, b = ok.alias("a"), ok.alias("b")
-    quad = (
-        a.join(b, "key")
-        .where(F.col("a.name") < F.col("b.name"))
-        .select(F.col("a.name").alias("name_x"), F.col("b.name").alias("name_y"))
+    return capped_block_pairs(keyed, max_bucket).dropDuplicates(
+        ["name_x", "name_y"]
     )
-    hot = sized.where(F.col("bs") > max_bucket)
-    hubs = hot.groupBy("key").agg(F.min("name").alias("hub"))
-    star = (
-        hot.join(hubs, "key")
-        .where(F.col("name") != F.col("hub"))
-        .select(
-            F.least("hub", "name").alias("name_x"),
-            F.greatest("hub", "name").alias("name_y"),
-        )
-    )
-    return quad.unionByName(star).dropDuplicates(["name_x", "name_y"])

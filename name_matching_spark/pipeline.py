@@ -37,8 +37,13 @@ import os
 
 from name_matching_spark.functions.tfidf import ADAPTIVE_VOCAB_CEILING, TfidfModel
 from name_matching_spark.io.checkpoint import CheckpointManager
-from name_matching_spark.model.train import load_artifacts, load_train_corpus
+from name_matching_spark.model.train import (
+    DEFAULT_THRESHOLD,
+    load_artifacts,
+    load_train_corpus,
+)
 from name_matching_spark.operators.blocking import (
+    MAX_BLOCK,
     block_stats,
     candidate_pairs,
     materialized_blocking_keys,
@@ -79,18 +84,10 @@ def input_fingerprint(df: DataFrame) -> str:
 
 class EntityResolutionPipeline:
     def __init__(
-        self,
-        spark: SparkSession,
-        warehouse: str,
-        threshold: float = 0.85,
-        max_block: int = 100,
-        run_id: str | None = None,
-        keep_features: bool = False,
+        self, spark: SparkSession, warehouse: str, keep_features: bool = False
     ):
         self.spark = spark
-        self.ckpt = CheckpointManager(spark, warehouse, run_id)
-        self.threshold = threshold
-        self.max_block = max_block
+        self.ckpt = CheckpointManager(spark, warehouse)
         # keep_features=True persists every per-pair feature column in the
         # scored_pairs checkpoint (debugging/analysis); default off — at
         # scale it multiplies the Arrow + parquet volume ~15x.
@@ -149,9 +146,7 @@ class EntityResolutionPipeline:
             ):
                 return stored_json, stored
         t0 = time.time()
-        tfidf = TfidfModel.fit_spark(
-            names, name_col="name", extra_corpus=corpus, max_features=None
-        )
+        tfidf = TfidfModel.fit_spark(names, corpus)
         payload = tfidf.to_json()
         meta = {
             **fingerprint,
@@ -208,7 +203,9 @@ class EntityResolutionPipeline:
         # Corpus-adaptive TF-IDF over training ∪ resolution names, fitted
         # on the driver from one collect of the names checkpoint.
         tfidf_json, tfidf_meta = self._tfidf_stage(names, in_fp)
-        block_params = {**in_fp, "max_block": self.max_block}
+        # The params record the block cap here and the decision threshold
+        # below, so a change to either recomputes every stage it feeds.
+        block_params = {**in_fp, "max_block": MAX_BLOCK}
         # candidate_pairs and block_metrics consume the SAME blocking-key
         # table (metaphone UDF + MinHash signatures over every name — the
         # expensive part of blocking).  Materialize it lazily, on first
@@ -224,15 +221,13 @@ class EntityResolutionPipeline:
 
         pairs = self._stage(
             "candidate_pairs",
-            lambda: candidate_pairs(
-                names, max_block=self.max_block, keys=blocking_keys_once()
-            ),
+            lambda: candidate_pairs(names, keys=blocking_keys_once()),
             inputs=["names"],
             params=block_params,
         )
         self._stage(
             "block_metrics",
-            lambda: block_stats(blocking_keys_once(), max_block=self.max_block),
+            lambda: block_stats(blocking_keys_once()),
             inputs=["names"],
             params=block_params,
         )
@@ -249,7 +244,7 @@ class EntityResolutionPipeline:
         # served after either artifact changes.
         score_params = {
             **block_params,
-            "threshold": self.threshold,
+            "threshold": DEFAULT_THRESHOLD,
             "keep_features": self.keep_features,
             "model_md5": hashlib.md5(self._model_json.encode()).hexdigest(),
             "tfidf": tfidf_meta,
@@ -295,11 +290,7 @@ class EntityResolutionPipeline:
                     )
                 )
             scored = score_pairs(
-                p,
-                self._model_json,
-                tfidf_json,
-                threshold=self.threshold,
-                keep_features=self.keep_features,
+                p, self._model_json, tfidf_json, keep_features=self.keep_features
             )
             # vectors themselves never persist into the checkpoint — only
             # their cosine and the decision they influenced
@@ -393,18 +384,11 @@ class EntityResolutionPipeline:
 
 
 def run_pipeline(
-    spark: SparkSession,
-    transcripts_path: str,
-    warehouse: str,
-    threshold: float = 0.85,
-    max_block: int = 100,
+    spark: SparkSession, transcripts_path: str, warehouse: str
 ) -> dict[str, DataFrame]:
     """spark-submit entry: read the transcript table, run, return stages."""
     transcripts = spark.read.parquet(transcripts_path)
-    pipe = EntityResolutionPipeline(
-        spark, warehouse, threshold=threshold, max_block=max_block
-    )
-    return pipe.run(transcripts)
+    return EntityResolutionPipeline(spark, warehouse).run(transcripts)
 
 
 if __name__ == "__main__":
@@ -415,14 +399,10 @@ if __name__ == "__main__":
     ap = argparse.ArgumentParser()
     ap.add_argument("transcripts", help="path to transcripts parquet")
     ap.add_argument("warehouse", help="warehouse directory for stage checkpoints")
-    ap.add_argument("--threshold", type=float, default=0.85)
-    ap.add_argument("--max-block", type=int, default=100)
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
     spark = get_spark(master=args.master)
-    stages = run_pipeline(
-        spark, args.transcripts, args.warehouse, args.threshold, args.max_block
-    )
+    stages = run_pipeline(spark, args.transcripts, args.warehouse)
     ents = stages["entities"]
     print(f"entities: {ents.select('entity_key').distinct().count()}")
     spark.stop()

@@ -181,12 +181,12 @@ def assign_stream_batch(
     index: EntityTokenIndex,
     model_json: str,
     tfidf_json: str,
-    threshold: float = 0.85,
 ) -> DataFrame:
     """foreachBatch body: score each new name against existing entity
     canonical names that share a token (cheap blocking), assign the best
-    match >= threshold, else mark pending.  One row per distinct
-    ``(conv_id, name)``: ``conv_id, name, entity_key, status``.
+    match at or above ``DEFAULT_THRESHOLD``, else mark pending.  One row
+    per distinct ``(conv_id, name)``: ``conv_id, name, entity_key,
+    status``.
 
     index: the :class:`EntityTokenIndex` of the batch pipeline's entity
     table, built once per refresh of that table and reused by every
@@ -223,7 +223,6 @@ def assign_stream_batch(
         pairs,
         model_json,
         tfidf_json,
-        threshold=threshold,
         name_x="name",
         name_y="cand",
         keep_features=False,

@@ -5,7 +5,7 @@ stays under input growth (measured 3.25x pairs for 10x entities).  The
 question that raises — did the purge cost recall at the larger scale? —
 is answered here directly: every same-entity pair of distinct normalized
 aliases in the fixture's truth table is checked for membership in
-``candidate_pairs`` at the pipeline's default ``max_block``.
+``candidate_pairs`` at the pipeline's block cap, ``blocking.MAX_BLOCK``.
 
 Usage: python scripts/blocking_recall_at_scale.py [n_entities ...]
 (defaults: 10000 100000 — the sf1-bench and 10x fixtures)
@@ -24,11 +24,14 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from name_matching_spark.functions.normalize import preprocess_name  # noqa: E402
-from name_matching_spark.operators.blocking import candidate_pairs  # noqa: E402
+from name_matching_spark.operators.blocking import (  # noqa: E402
+    MAX_BLOCK,
+    candidate_pairs,
+)
 from name_matching_spark.session import get_spark  # noqa: E402
 
 
-def measure(spark, fixture: str, max_block: int = 100) -> dict:
+def measure(spark, fixture: str, max_block: int = MAX_BLOCK) -> dict:
     truth = pd.read_parquet(os.path.join(fixture, "truth.parquet"))
     truth["name"] = truth["alias"].map(preprocess_name)
     ents = truth[["entity_id", "name"]].drop_duplicates()

@@ -69,7 +69,7 @@ def test_louvain_golden_txns_parity(spark):
         .distinct()
     )
     pairs = candidate_pairs(names)
-    scored = score_pairs(pairs, model.to_json(), tfidf.to_json(), threshold=0.85)
+    scored = score_pairs(pairs, model.to_json(), tfidf.to_json())
     comps = louvain_communities(
         scored.where("prediction = 1").selectExpr("name_x as src", "name_y as dst")
     )

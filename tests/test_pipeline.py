@@ -40,7 +40,7 @@ def test_golden_txns_clusters(spark):
         .distinct()
     )
     pairs = candidate_pairs(names)
-    scored = score_pairs(pairs, model.to_json(), tfidf.to_json(), threshold=0.85)
+    scored = score_pairs(pairs, model.to_json(), tfidf.to_json())
     comps = connected_components(
         scored.where("prediction = 1").selectExpr("name_x as src", "name_y as dst")
     )
@@ -233,32 +233,34 @@ def test_checkpoint_invalidates_on_param_change(spark, tmp_path):
     write_fixture(fixture, n_entities=15, convs_per_entity=3, seed=7)
     wh = str(tmp_path / "wh2")
     transcripts = spark.read.parquet(os.path.join(fixture, "transcripts.parquet"))
-    p1 = EntityResolutionPipeline(spark, wh, threshold=0.85)
+    p1 = EntityResolutionPipeline(spark, wh)
     p1.run(transcripts)
     import json
 
     with open(p1.ckpt.manifest_path("scored_pairs")) as f:
-        assert json.load(f)["params"]["threshold"] == 0.85
+        params = json.load(f)["params"]
+    # the fixed decision rule and block cap are still recorded
+    assert (params["threshold"], params["max_block"]) == (0.85, 100)
     run1_scored = json.load(open(p1.ckpt.manifest_path("scored_pairs")))["run_id"]
 
     # Same params -> resume (run_id in manifest unchanged).
-    p2 = EntityResolutionPipeline(spark, wh, threshold=0.85)
+    p2 = EntityResolutionPipeline(spark, wh)
     p2.run(transcripts)
     assert json.load(open(p2.ckpt.manifest_path("scored_pairs")))["run_id"] == run1_scored
     # Upstream stages also resumed.
     assert json.load(open(p2.ckpt.manifest_path("conversations")))["run_id"] != p2.ckpt.run_id
 
-    # Different threshold -> scored_pairs and every stage downstream of it
-    # recompute (serving entities built from the old components would be
+    # Different scoring params -> scored_pairs and every stage downstream
+    # of it recompute (serving entities built from the old scores would be
     # silent staleness), while the input-only stages still resume.
-    p3 = EntityResolutionPipeline(spark, wh, threshold=0.99)
+    p3 = EntityResolutionPipeline(spark, wh, keep_features=True)
     p3.run(transcripts)
     for stage in ["scored_pairs", "entities", "resolved_conversations"]:
         man3 = json.load(open(p3.ckpt.manifest_path(stage)))
         assert man3["run_id"] == p3.ckpt.run_id, f"{stage} served stale results"
-        assert man3["params"]["threshold"] == 0.99
+        assert man3["params"]["keep_features"] is True
     conv3 = json.load(open(p3.ckpt.manifest_path("conversations")))
-    assert conv3["run_id"] != p3.ckpt.run_id  # untouched by the new threshold
+    assert conv3["run_id"] != p3.ckpt.run_id  # untouched by the scoring params
 
 
 @pytest.mark.slow

@@ -172,9 +172,8 @@ def test_session_sets_no_scheduler_mode(monkeypatch):
 # points.  Each stage runs the configuration its module fixes, so a new
 # option here is a new configuration to carry and test: add it on purpose.
 ER_OPTIONS = {
-    "pipeline.EntityResolutionPipeline": {
-        "threshold", "max_block", "run_id", "keep_features",
-    },
+    "pipeline.EntityResolutionPipeline": {"keep_features"},
+    "pipeline.run_pipeline": set(),
     "operators.blocking.blocking_keys": set(),
     "operators.blocking.materialized_blocking_keys": set(),
     "operators.blocking.candidate_pairs": {"max_block", "keys"},
@@ -186,11 +185,9 @@ ER_OPTIONS = {
     "operators.clustering.subsumption_aware_components": {
         "max_component", "ladder", "evidence_min_size",
     },
-    "operators.scoring.score_pairs": {
-        "threshold", "name_x", "name_y", "keep_features",
-    },
+    "operators.scoring.score_pairs": {"name_x", "name_y", "keep_features"},
     "streaming.stream_resolve.EntityTokenIndex": set(),
-    "streaming.stream_resolve.assign_stream_batch": {"threshold"},
+    "streaming.stream_resolve.assign_stream_batch": set(),
 }
 
 # Operators outside the ER path that run one fixed configuration.
@@ -212,5 +209,31 @@ def test_er_entry_points_keyword_options():
         assert not [p for p in params if p.kind is p.VAR_KEYWORD], path
         got[path] = {p.name for p in params if p.default is not p.empty}
     assert got == {**ER_OPTIONS, **dict.fromkeys(ZERO_OPTION_OPERATORS, set())}
-    assert len(ER_OPTIONS) == 11
-    assert sum(len(v) for v in ER_OPTIONS.values()) == 18
+    assert len(ER_OPTIONS) == 12
+    assert sum(len(v) for v in ER_OPTIONS.values()) == 13
+
+
+def test_pipeline_cli_takes_two_paths_and_master():
+    """The pipeline CLI runs the configuration the package fixes: its
+    arguments are the two paths and ``--master``, nothing else."""
+    tree = ast.parse(open(os.path.join(REPO, PKG, "pipeline.py")).read())
+    args = [
+        node.args[0].value
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "add_argument"
+    ]
+    assert args == ["transcripts", "warehouse", "--master"]
+
+
+def test_tfidf_fit_spark_has_no_options():
+    import inspect
+
+    from name_matching_spark.functions.tfidf import TfidfModel
+
+    params = inspect.signature(TfidfModel.fit_spark).parameters.values()
+    assert [(p.name, p.default is p.empty) for p in params] == [
+        ("names_df", True),
+        ("extra_corpus", True),
+    ]

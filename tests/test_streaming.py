@@ -249,7 +249,7 @@ def test_assign_stream_batch_scores_one_candidate_frame_per_batch(spark, monkeyp
         assert len(rows) == len(set(batch))
 
 
-def _retired_join_plan(new_names, entities, model_json, tfidf_json, threshold=0.85):
+def _retired_join_plan(new_names, entities, model_json, tfidf_json):
     """The join-based plan assign_stream_batch used before the one-pass
     rewrite (exact join, anti-join, token explode + join, scorer, min_by,
     union), kept here as the reference the pass must reproduce."""
@@ -275,7 +275,7 @@ def _retired_join_plan(new_names, entities, model_json, tfidf_json, threshold=0.
         .dropDuplicates(["conv_id", "name", "entity_key"])
     )
     scored = score_pairs(
-        cands, model_json, tfidf_json, threshold=threshold,
+        cands, model_json, tfidf_json,
         name_x="name", name_y="cand", keep_features=False,
     )
     best = (

@@ -37,15 +37,15 @@ def test_tfidf_roundtrip():
 
 def test_tfidf_spark_fit_matches_driver_fit(spark):
     names = spark.createDataFrame([(c.upper(),) for c in CORPUS], ["name"])
-    m_spark = TfidfModel.fit_spark(names)
-    m_driver = TfidfModel.fit(sorted(CORPUS))
+    m_spark = TfidfModel.fit_spark(names, [])
+    m_driver = TfidfModel.fit(sorted(CORPUS), max_features=None)
     assert m_spark.vocab == m_driver.vocab
     assert np.allclose(m_spark.idf, m_driver.idf)
 
 
 def test_tfidf_spark_fit_extra_corpus(spark):
     names = spark.createDataFrame([("JOHN WICK",)], ["name"])
-    m = TfidfModel.fit_spark(names, extra_corpus=["jane doe"])
+    m = TfidfModel.fit_spark(names, ["jane doe"])
     assert "wick" in m.vocab and "doe" in m.vocab
 
     # the documents are the distinct lowered union of names and corpus: a
@@ -54,7 +54,7 @@ def test_tfidf_spark_fit_extra_corpus(spark):
         [("JOHN WICK",), ("JANE DOE",), ("HOTEL CONTINENTAL",)], ["name"]
     )
     corpus = ["jane doe", "John Smith", "john smith", "winston scott"]
-    m = TfidfModel.fit_spark(names, extra_corpus=corpus, max_features=None)
+    m = TfidfModel.fit_spark(names, corpus)
     union = sorted(
         {"john wick", "jane doe", "hotel continental"}
         | {c.lower() for c in corpus}
@@ -259,8 +259,8 @@ def test_hashed_tfidf_matches_uncapped_vocab(spark):
         "ATLAS BANK", "ATLAS BANK CO LTD",
     ]
     names_df = spark.createDataFrame([(c,) for c in corpus], ["name"])
-    dense = TfidfModel.fit_spark(names_df, max_features=None)
-    hashed = HashedTfidfModel.fit_spark(names_df, n_buckets=1 << 20)
+    dense = TfidfModel.fit_spark(names_df, [])
+    hashed = HashedTfidfModel.fit(corpus, n_buckets=1 << 20)
     xs = corpus
     ys = corpus[1:] + corpus[:1]
     np.testing.assert_allclose(
@@ -280,11 +280,12 @@ def test_hashed_tfidf_matches_uncapped_vocab(spark):
     assert a > 0.1 and b == 0.0
 
 
-def test_adaptive_tfidf_auto_switches_to_hashed_past_ceiling(spark):
+def test_adaptive_tfidf_auto_switches_to_hashed_past_ceiling(spark, monkeypatch):
     """Crossing the adaptive vocabulary ceiling must FLIP the fit to the
     hashing-trick model (not silently truncate rare terms) and warn."""
     import pytest
 
+    import name_matching_spark.functions.tfidf as tfidf_mod
     from name_matching_spark.functions.tfidf import HashedTfidfModel
 
     corpus = [
@@ -293,14 +294,15 @@ def test_adaptive_tfidf_auto_switches_to_hashed_past_ceiling(spark):
     ]
     names_df = spark.createDataFrame([(c,) for c in corpus], ["name"])
     # under the ceiling: stays adaptive
-    under = TfidfModel.fit_spark(names_df, max_features=None, ceiling=1000)
+    monkeypatch.setattr(tfidf_mod, "ADAPTIVE_VOCAB_CEILING", 1000)
+    under = TfidfModel.fit_spark(names_df, [])
     assert isinstance(under, TfidfModel)
     # over the ceiling: auto-switch, with a warning
+    monkeypatch.setattr(tfidf_mod, "ADAPTIVE_VOCAB_CEILING", 5)
     with pytest.warns(RuntimeWarning, match="auto-switching to hashed"):
-        over = TfidfModel.fit_spark(
-            names_df, max_features=None, ceiling=5, overflow_n_buckets=1 << 20
-        )
+        over = TfidfModel.fit_spark(names_df, [])
     assert isinstance(over, HashedTfidfModel)
+    assert over.n_buckets == tfidf_mod.OVERFLOW_N_BUCKETS
     # the switched model keeps EVERY term (no rare-core truncation): with
     # singleton buckets it matches the uncapped dense fit numerically
     xs, ys = corpus, corpus[1:] + corpus[:1]
@@ -387,6 +389,28 @@ def test_load_artifacts_rejects_reordered_feature_cols(tmp_path):
     assert load_artifacts(str(art), TFIDF_PATH)[0].feature_cols == FEATURE_COLS
 
 
+def test_missing_artifact_raises_instead_of_training(tmp_path, monkeypatch):
+    """A missing artifact names itself and the training command; it never
+    starts a training run (which would write into ``models/``)."""
+    import pytest
+
+    import name_matching_spark.model.train as train_mod
+
+    calls = []
+    monkeypatch.setattr(train_mod, "train", lambda *a, **k: calls.append((a, k)))
+    missing = str(tmp_path / "nms_no_such_artifact_5b1e.json")
+    hint = "python -m name_matching_spark.model.train"
+    for load in (
+        lambda: train_mod.load_artifacts(missing, train_mod.TFIDF_PATH),
+        lambda: train_mod.load_artifacts(train_mod.MODEL_PATH, missing),
+        lambda: train_mod.load_train_corpus(missing),
+    ):
+        with pytest.raises(FileNotFoundError) as err:
+            load()
+        assert missing in str(err.value) and hint in str(err.value)
+    assert calls == []
+
+
 def test_scorer_artifact_cache_keys_on_full_content():
     """The scorer's per-worker artifact cache serves a parsed model only
     for the exact JSON it was parsed from: a refitted vocabulary of the
@@ -447,14 +471,14 @@ def test_score_pairs_builds_one_scorer_per_artifacts(spark, monkeypatch):
 
 def test_score_pairs_reused_projection_keys_on_its_inputs(spark):
     """``score_pairs`` reuses one scorer call and output projection per
-    (scorer, column names, threshold, keep_features, input columns).  A
-    new threshold, column pair, feature choice or embedding column gets
-    its own, and two outputs of one reused projection resolve apart in a
-    join and in a union."""
+    (scorer, column names, keep_features, input columns).  A new column
+    pair, feature choice or embedding column gets its own, and two
+    outputs of one reused projection resolve apart in a join and in a
+    union."""
     from pyspark.sql import functions as F
 
     from name_matching_spark.functions.features import FEATURE_COLS
-    from name_matching_spark.model.train import load_artifacts
+    from name_matching_spark.model.train import DEFAULT_THRESHOLD, load_artifacts
     from name_matching_spark.operators.scoring import (
         EMB_MATCH_COSINE,
         EVIDENCE_COLS,
@@ -464,7 +488,7 @@ def test_score_pairs_reused_projection_keys_on_its_inputs(spark):
 
     model, tfidf = load_artifacts()
     mj, tj = model.to_json(), tfidf.to_json()
-    # raw probabilities 1.0, 0.65, 0.002 and 0.91: 0.5 and 0.85 split them
+    # raw probabilities 1.0, 0.65, 0.002 and 0.91: two sides of 0.85
     names = [
         ("JOHN SMITH", "JOHN SMITH"),
         ("JOHN SMYTHE", "J SMITH"),
@@ -484,27 +508,24 @@ def test_score_pairs_reused_projection_keys_on_its_inputs(spark):
             else:
                 pairs = spark.createDataFrame(names, f"{x} string, {y} string")
             for keep in (True, False):
-                predicted = set()
-                for threshold in (0.85, 0.5):
-                    out = score_pairs(
-                        pairs, mj, tj, threshold=threshold, name_x=x, name_y=y,
-                        keep_features=keep,
-                    )
-                    assert out.columns == [
-                        *pairs.columns,
-                        *(FEATURE_COLS if keep else EVIDENCE_COLS),
-                        *(["emb_cosine"] if has_emb else []),
-                        "margin", "probability", "prediction", "match_label",
-                    ]
-                    rows = out.orderBy(x).collect()
-                    for r in rows:
-                        emb_hit = has_emb and (r["emb_cosine"] or -1.0) >= EMB_MATCH_COSINE
-                        # the margin is raw unless the embedding rule lifted it
-                        raw = 1.0 / (1.0 + np.exp(-r["margin"]))
-                        assert r["prediction"] == int(emb_hit or raw >= threshold)
-                        assert r["match_label"] == ("MATCH" if r["prediction"] else "NO_MATCH")
-                    predicted.add(tuple(r["prediction"] for r in rows))
-                assert len(predicted) == 2  # the threshold changed a decision
+                out = score_pairs(
+                    pairs, mj, tj, name_x=x, name_y=y, keep_features=keep
+                )
+                assert out.columns == [
+                    *pairs.columns,
+                    *(FEATURE_COLS if keep else EVIDENCE_COLS),
+                    *(["emb_cosine"] if has_emb else []),
+                    "margin", "probability", "prediction", "match_label",
+                ]
+                rows = out.orderBy(x).collect()
+                for r in rows:
+                    emb_hit = has_emb and (r["emb_cosine"] or -1.0) >= EMB_MATCH_COSINE
+                    # the margin is raw unless the embedding rule lifted it
+                    raw = 1.0 / (1.0 + np.exp(-r["margin"]))
+                    assert r["prediction"] == int(emb_hit or raw >= DEFAULT_THRESHOLD)
+                    assert r["match_label"] == ("MATCH" if r["prediction"] else "NO_MATCH")
+                # both decisions occur
+                assert {r["prediction"] for r in rows} == {0, 1}
 
     # two frames with the same columns share one projection
     pairs = spark.createDataFrame(names, "name_x string, name_y string")
