@@ -195,7 +195,7 @@ class TfidfModel:
             RuntimeWarning,
             stacklevel=2,
         )
-        return HashedTfidfModel.fit(docs, n_buckets=OVERFLOW_N_BUCKETS)
+        return HashedTfidfModel.fit(docs)
 
     # -- (de)serialization ----------------------------------------------------
 
@@ -250,12 +250,11 @@ class HashedTfidfModel:
         )
 
     @classmethod
-    def fit(
-        cls, corpus, max_df: float = 0.9, n_buckets: int = 1 << 20
-    ) -> "HashedTfidfModel":
-        """A bucket's df is the number of documents holding at least one
-        term that hashes to it; a bucket past ``max_df`` weighs 0, like a
-        pruned term."""
+    def fit(cls, corpus, max_df: float = 0.9) -> "HashedTfidfModel":
+        """A fit over :data:`OVERFLOW_N_BUCKETS` buckets.  A bucket's df is
+        the number of documents holding at least one term that hashes to
+        it; a bucket past ``max_df`` weighs 0, like a pruned term."""
+        n_buckets = OVERFLOW_N_BUCKETS
         n_docs = 0
         df: Counter = Counter()
         for doc in corpus:

@@ -172,19 +172,17 @@ def materialized_blocking_keys(names: DataFrame) -> DataFrame:
     return k.join(sizes, "key").localCheckpoint()
 
 
-def candidate_pairs(
-    names: DataFrame, max_block: int = MAX_BLOCK, keys: DataFrame | None = None
-) -> DataFrame:
+def candidate_pairs(names: DataFrame, keys: DataFrame | None = None) -> DataFrame:
     """Distinct candidate pairs (name_x < name_y) from the blocked self-join
     of the ``name`` column of ``names``.
 
-    Blocks within ``[2, max_block]`` pair quadratically (bounded at
-    max_block^2/2 per block).  HOT blocks (> max_block) are NOT dropped:
+    Blocks within ``[2, MAX_BLOCK]`` pair quadratically (bounded at
+    MAX_BLOCK^2/2 per block).  HOT blocks (> MAX_BLOCK) are NOT dropped:
     their members are re-keyed by :data:`SUB_ROWS` secondary MinHash rows
     — similarity-preserving sub-blocks whose members pair under the same
     cap — and sub-blocks still over the cap emit linear star pairs around
     the min-name hub.  Every block's pair contribution is therefore
-    O(members * max_block) worst case, and no key family ever silently
+    O(members * MAX_BLOCK) worst case, and no key family ever silently
     contributes zero candidates.
 
     The key->size join and the self-join share the ``key`` partitioning, so
@@ -203,7 +201,7 @@ def candidate_pairs(
             "materialized_blocking_keys"
         )
     ok = keys.where(
-        (F.col("block_size") >= 2) & (F.col("block_size") <= max_block)
+        (F.col("block_size") >= 2) & (F.col("block_size") <= MAX_BLOCK)
     ).select("key", "name")
     pairs = _join_pairs(ok)
     # Secondary MinHash rows (a hash family DISJOINT from the LSH bands):
@@ -214,7 +212,7 @@ def candidate_pairs(
     # truth-pair recall at 100k entities when hot blocks were purged).
     # A short or NULL signature would read as NULL entries, which concat_ws
     # drops: every member of the block would share one sub-key.  Fail.
-    hot = keys.where(F.col("block_size") > max_block).withColumn(
+    hot = keys.where(F.col("block_size") > MAX_BLOCK).withColumn(
         "_ss",
         F.when(F.size("_ss") >= SUB_ROWS, F.col("_ss")).otherwise(
             F.raise_error(
@@ -234,7 +232,7 @@ def candidate_pairs(
     # explode over the checkpointed keys.  At 100k entities (3,761 hot
     # keys) materializing them cost one job and saved no time.
     sub = hot.select(F.explode(sub_key).alias("key"), "name")
-    pairs = pairs.unionByName(capped_block_pairs(sub, max_block))
+    pairs = pairs.unionByName(capped_block_pairs(sub, MAX_BLOCK))
     return pairs.dropDuplicates(["name_x", "name_y"])
 
 
@@ -273,8 +271,8 @@ def _join_pairs(keyed: DataFrame) -> DataFrame:
     )
 
 
-def block_stats(keys: DataFrame, max_block: int = MAX_BLOCK) -> DataFrame:
-    """Per-key block sizes with a hot flag (size > max_block: the block was
+def block_stats(keys: DataFrame) -> DataFrame:
+    """Per-key block sizes with a hot flag (size > MAX_BLOCK: the block was
     routed through MinHash sub-blocking / star capping rather than paired
     quadratically) — the lineage/metrics side output for the blocking
     stage.  ``keys`` is the :func:`materialized_blocking_keys` frame that
@@ -282,5 +280,5 @@ def block_stats(keys: DataFrame, max_block: int = MAX_BLOCK) -> DataFrame:
     the metaphone + MinHash key table."""
     return keys.groupBy("key").agg(
         F.count("*").alias("block_size"),
-        (F.count("*") > max_block).alias("hot"),
+        (F.count("*") > MAX_BLOCK).alias("hot"),
     )

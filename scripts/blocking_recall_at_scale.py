@@ -31,7 +31,7 @@ from name_matching_spark.operators.blocking import (  # noqa: E402
 from name_matching_spark.session import get_spark  # noqa: E402
 
 
-def measure(spark, fixture: str, max_block: int = MAX_BLOCK) -> dict:
+def measure(spark, fixture: str) -> dict:
     truth = pd.read_parquet(os.path.join(fixture, "truth.parquet"))
     truth["name"] = truth["alias"].map(preprocess_name)
     ents = truth[["entity_id", "name"]].drop_duplicates()
@@ -44,7 +44,7 @@ def measure(spark, fixture: str, max_block: int = MAX_BLOCK) -> dict:
     names_df = spark.createDataFrame(
         [(n,) for n in sorted(set(ents["name"]))], ["name"]
     )
-    pairs = candidate_pairs(names_df, max_block=max_block)
+    pairs = candidate_pairs(names_df)
     n_true = true_df.count()
     hits = true_df.join(pairs, ["name_x", "name_y"], "left_semi").count()
     return {
@@ -53,7 +53,7 @@ def measure(spark, fixture: str, max_block: int = MAX_BLOCK) -> dict:
         "true_pairs": n_true,
         "recalled": hits,
         "recall": round(hits / max(n_true, 1), 4),
-        "max_block": max_block,
+        "max_block": MAX_BLOCK,
     }
 
 

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from name_matching_spark.model.train import POS_CSV
 from name_matching_spark.functions.normalize import preprocess_name
+from name_matching_spark.operators import blocking as bk
 from name_matching_spark.operators.blocking import (
     SUB_ROWS,
     block_stats,
@@ -24,10 +25,11 @@ def labeled_sample():
     return pos
 
 
-def test_blocking_recall_on_labeled_positives(spark, labeled_sample):
+def test_blocking_recall_on_labeled_positives(spark, labeled_sample, monkeypatch):
+    monkeypatch.setattr(bk, "MAX_BLOCK", 200)
     names = sorted(set(labeled_sample.x) | set(labeled_sample.y))
     names_df = spark.createDataFrame([(n,) for n in names], ["name"])
-    pairs = candidate_pairs(names_df, max_block=200)
+    pairs = candidate_pairs(names_df)
     got = {
         (r["name_x"], r["name_y"]) for r in pairs.collect()
     }
@@ -54,7 +56,7 @@ def test_blocking_pairs_canonical_and_deduped(spark):
 
 def test_block_hot_cap(spark):
     # 150 otherwise-dissimilar names sharing one short hot token ("LLC"):
-    # the tok:LLC block (150 names) exceeds max_block=100 and must be
+    # the tok:LLC block (150 names) exceeds MAX_BLOCK=100 and must be
     # routed through sub-blocking, never paired quadratically — the
     # dissimilar members land in (mostly singleton) MinHash sub-blocks, so
     # total pairs stay far below the 150*149/2 = 11,175 full quadratic.
@@ -72,16 +74,17 @@ def test_block_hot_cap(spark):
         for _ in range(150)
     ]
     names = spark.createDataFrame(rows, ["name"])
-    stats = block_stats(materialized_blocking_keys(names), max_block=100)
+    assert bk.MAX_BLOCK == 100
+    stats = block_stats(materialized_blocking_keys(names))
     hot = {r["key"] for r in stats.where(F.col("hot")).collect()}
     assert "tok:LLC" in hot
     # no non-hot block exceeds the cap
     assert stats.where(~F.col("hot") & (F.col("block_size") > 100)).count() == 0
-    pairs = candidate_pairs(names, max_block=100)
+    pairs = candidate_pairs(names)
     assert pairs.count() < 6000
 
 
-def test_hot_block_subblocking_recovers_recall(spark):
+def test_hot_block_subblocking_recovers_recall(spark, monkeypatch):
     # The corpus-scale regime in miniature (only the token keys are
     # paired, to isolate it — at small n the LSH band buckets stay small
     # and would catch every pair through a non-hot route, which is exactly
@@ -106,7 +109,8 @@ def test_hot_block_subblocking_recovers_recall(spark):
     # block_size is per key, so it survives the filter: tok:LLC stays hot
     keys = materialized_blocking_keys(names_df)
     tok_keys = keys.where(F.col("key").startswith("tok:"))
-    sub = candidate_pairs(names_df, max_block=5, keys=tok_keys)
+    monkeypatch.setattr(bk, "MAX_BLOCK", 5)
+    sub = candidate_pairs(names_df, keys=tok_keys)
     got = {(r["name_x"], r["name_y"]) for r in sub.collect()}
     recall = len(want & got) / len(want)
     assert recall >= 0.85, f"sub-blocking recall {recall:.3f}"
@@ -127,7 +131,7 @@ def test_candidate_pairs_rejects_keys_frame_missing_columns(spark):
         candidate_pairs(names, keys=bare.drop("_ss").join(sizes, "key"))
 
 
-def test_candidate_pairs_rejects_short_sub_block_signature(spark):
+def test_candidate_pairs_rejects_short_sub_block_signature(spark, monkeypatch):
     """A hot block whose prebuilt keys frame carries fewer than SUB_ROWS
     signature entries (or none) must fail, whatever the ANSI setting:
     read as NULL, the missing entries would collapse every member into
@@ -139,20 +143,21 @@ def test_candidate_pairs_rejects_short_sub_block_signature(spark):
     keys = materialized_blocking_keys(names)
     short = keys.withColumn("_ss", F.slice("_ss", 1, SUB_ROWS - 1))
     null = keys.withColumn("_ss", F.lit(None).cast(keys.schema["_ss"].dataType))
+    monkeypatch.setattr(bk, "MAX_BLOCK", 2)
     ansi = spark.conf.get("spark.sql.ansi.enabled")
     try:
         for mode in ("true", "false"):
             spark.conf.set("spark.sql.ansi.enabled", mode)
             for bad in (short, null):
                 with pytest.raises(Exception, match="_ss"):
-                    candidate_pairs(names, max_block=2, keys=bad).collect()
+                    candidate_pairs(names, keys=bad).collect()
     finally:
         spark.conf.set("spark.sql.ansi.enabled", ansi)
 
 
-def test_hot_block_pair_volume_stays_linear(spark):
+def test_hot_block_pair_volume_stays_linear(spark, monkeypatch):
     # Star cap + sub-block cap: 300 members of one hot token at
-    # max_block=10 must produce pair volume linear-ish in members, not the
+    # MAX_BLOCK=10 must produce pair volume linear-ish in members, not the
     # 300*299/2 = 44,850 quadratic.
     import random
 
@@ -165,7 +170,8 @@ def test_hot_block_pair_volume_stays_linear(spark):
         for _ in range(300)
     ]
     names = spark.createDataFrame(rows, ["name"])
-    pairs = candidate_pairs(names, max_block=10)
+    monkeypatch.setattr(bk, "MAX_BLOCK", 10)
+    pairs = candidate_pairs(names)
     assert pairs.count() < 15_000
 
 
@@ -177,7 +183,6 @@ def test_pipeline_blocking_keys_computed_once(spark, tmp_path, monkeypatch):
     import os
 
     from name_matching_spark.datagen import write_fixture
-    from name_matching_spark.operators import blocking as bk
     from name_matching_spark.pipeline import EntityResolutionPipeline
 
     calls = []

@@ -176,8 +176,8 @@ ER_OPTIONS = {
     "pipeline.run_pipeline": set(),
     "operators.blocking.blocking_keys": set(),
     "operators.blocking.materialized_blocking_keys": set(),
-    "operators.blocking.candidate_pairs": {"max_block", "keys"},
-    "operators.blocking.block_stats": {"max_block"},
+    "operators.blocking.candidate_pairs": {"keys"},
+    "operators.blocking.block_stats": set(),
     "operators.clustering.connected_components": set(),
     "operators.clustering.refined_components": {
         "max_component", "ladder", "evidence_min_size",
@@ -210,7 +210,7 @@ def test_er_entry_points_keyword_options():
         got[path] = {p.name for p in params if p.default is not p.empty}
     assert got == {**ER_OPTIONS, **dict.fromkeys(ZERO_OPTION_OPERATORS, set())}
     assert len(ER_OPTIONS) == 12
-    assert sum(len(v) for v in ER_OPTIONS.values()) == 13
+    assert sum(len(v) for v in ER_OPTIONS.values()) == 11
 
 
 def test_pipeline_cli_takes_two_paths_and_master():

@@ -260,7 +260,7 @@ def test_hashed_tfidf_matches_uncapped_vocab(spark):
     ]
     names_df = spark.createDataFrame([(c,) for c in corpus], ["name"])
     dense = TfidfModel.fit_spark(names_df, [])
-    hashed = HashedTfidfModel.fit(corpus, n_buckets=1 << 20)
+    hashed = HashedTfidfModel.fit(corpus)
     xs = corpus
     ys = corpus[1:] + corpus[:1]
     np.testing.assert_allclose(
